@@ -41,61 +41,6 @@ object Scratch {
           println(s"[explain-many] wrote $outDir/$name.txt")
         }
 
-      case "pq-debug" :: rest =>
-        // stage-isolated timing of q94's pieces: encode-only vs adc-tables
-        // vs the full query — locates the slow expression (min-of-3 each)
-        val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        def t(mk: => org.apache.spark.sql.DataFrame): Double = (1 to 3).map { _ =>
-          val s = System.nanoTime(); mk.queryExecution.toRdd.count()
-          (System.nanoTime() - s) / 1e9
-        }.min
-        val enc = t(graft.ops.Similarity.pqDebugEncode(emb, "vec_id", "embedding"))
-        val adc = t(graft.ops.Similarity.pqDebugAdc(emb,
-          emb.where(col("vec_id") < 5), "vec_id", "embedding"))
-        val full = t(graft.ops.Similarity.pqTopK(
-          emb.where(col("vec_id") < 5), emb, "vec_id", "embedding", 10))
-        println(f"[pq-debug] encode=$enc%.2f adcTables=$adc%.2f full=$full%.2f")
-
-      case "candle-ab" :: rest =>
-        // does a repartition-after-read parallelize the candle partial agg
-        // enough to beat the extra exchange? (single-row-group testdata
-        // files scan as ONE task — guide §2.5 "unsplittable input")
-        val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val ev0 = SparkEntry.loadEventsFor(spark, sfDir)
-          .withColumn("symbol", concat(lit("U"), (col("user_id") % 3).cast("string")))
-        def t(mk: => org.apache.spark.sql.DataFrame): Double = (1 to 3).map { _ =>
-          val s = System.nanoTime(); mk.queryExecution.toRdd.count()
-          (System.nanoTime() - s) / 1e9
-        }.min
-        val base = t(graft.ops.EventOps.candles(ev0, 300L, Seq("symbol")))
-        val rep = t(graft.ops.EventOps.candles(ev0.repartition(8), 300L, Seq("symbol")))
-        val scanOnly = t(ev0.select(col("symbol"), col("value"), col("ts")))
-        println(f"[candle-ab] base=$base%.2f repartitioned=$rep%.2f scanOnly=$scanOnly%.2f")
-
-      case "enrich-ab" :: rest =>
-        // per-indicator cost split of q72's enrich over the SAME candle
-        // input (lazily pinned so the agg isn't re-timed), min-of-3 each
-        val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val ev0 = SparkEntry.loadEventsFor(spark, sfDir)
-          .withColumn("symbol", concat(lit("U"), (col("user_id") % 3).cast("string")))
-        val cd = graft.ops.EventOps.candles(ev0, 300L, Seq("symbol")).localCheckpoint()
-        val keys = Seq("symbol")
-        def t(mk: => org.apache.spark.sql.DataFrame): Double = (1 to 3).map { _ =>
-          val s = System.nanoTime(); mk.queryExecution.toRdd.count()
-          (System.nanoTime() - s) / 1e9
-        }.min
-        import graft.ops.Indicators
-        val c = col("close")
-        println(f"[enrich-ab] none=${t(cd)}%.2f " +
-          f"sma=${t(cd.withColumn("x", Indicators.smaCols(keys, "ts", c, 10)))}%.2f " +
-          f"ema=${t(cd.withColumn("x", Indicators.emaCols(keys, "ts", c, 10)))}%.2f " +
-          f"rsi=${t(cd.withColumn("x", Indicators.rsiCols(keys, "ts", c, 14)))}%.2f " +
-          f"atr=${t(cd.withColumn("x", Indicators.atrCols(keys, "ts", col("high"), col("low"), c, 14)))}%.2f " +
-          f"stoch=${t(cd.withColumn("x", Indicators.stochKCols(keys, "ts", col("high"), col("low"), c, 14)))}%.2f " +
-          f"vwap=${t(cd.withColumn("x", Indicators.vwapDayCols(keys, "ts", c, col("volume"))))}%.2f " +
-          f"full=${t(Indicators.enrich(cd, keys))}%.2f")
-
       case "rows" :: name :: rest =>
         // output cardinality of a SparkEntry query at a given sf dir —
         // distinguishes true-result growth from plan cost in scale probes
@@ -167,148 +112,6 @@ object Scratch {
         println("==== top 25 by shuffle-write MB ====")
         out.result().sortBy(-_._2).take(25).foreach { case (n, mb, r, sec) =>
           println(f"$n%-34s $mb%9.1f MB $r%12d rows $sec%6.2f s")
-        }
-
-      case "simhash-ab" :: rest =>
-        // head-to-head of the two signature candidate generators on the
-        // SAME host phase (the cross-run ladder confounds host speed):
-        // sign once (localCheckpoint), then time chunk blocking vs the
-        // two-half MIH join, min-of-3 alternating. Optional second arg =
-        // signature bits (default 48; r15 adds the 32-bit ladder — the
-        // chunk form's keyspace there is only 4·256, so its quadratic
-        // term bites much earlier). Optional third arg = doc limit.
-        val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val bits = rest.lift(1).map(_.toInt).getOrElse(48)
-        val limit = rest.lift(2).map(_.toInt)
-        val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-        val docs = limit.map(n => docs0.limit(n)).getOrElse(docs0)
-        val sigs = docs
-          .select(col("doc_id"), graft.ops.Dedup.simhash(col("text"), bits).as("sig"))
-          .localCheckpoint()
-        val nDocs = sigs.count()
-        def time(f: => org.apache.spark.sql.DataFrame): Double = {
-          val s = System.nanoTime(); f.queryExecution.toRdd.count()
-          (System.nanoTime() - s) / 1e9
-        }
-        val (cs, ms) = (Seq.newBuilder[Double], Seq.newBuilder[Double])
-        for (_ <- 1 to 3) {
-          cs += time(graft.ops.Dedup.simhashCandidatesFromSignatures(
-            sigs, "doc_id", "sig", 3, 100000, bits / 4))
-          ms += time(graft.ops.Dedup.simhashCandidatesMih(
-            sigs, "doc_id", "sig", 3, 100000, bits))
-        }
-        println(f"[ab] $sfDir bits=$bits n=$nDocs chunk=${cs.result().min}%.2fs mih=${ms.result().min}%.2fs (min-of-3)")
-
-      case "cap-ab" :: rest =>
-        // r14: cost of the LAZY cap form (collectCapKeys=false — broadcast
-        // joins against the lazy over-cap aggregate, what a supplied
-        // docCount buys) vs the default literal form, same host phase,
-        // min-of-3 alternating, on real documents where NO bucket is over
-        // cap (the common case — measures the pure plumbing overhead)
-        val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val sigs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), graft.ops.Dedup.simhash(col("text"), 48).as("sig"))
-          .localCheckpoint()
-        def time(f: => org.apache.spark.sql.DataFrame): Double = {
-          val s = System.nanoTime(); f.queryExecution.toRdd.count()
-          (System.nanoTime() - s) / 1e9
-        }
-        val (ls, zs) = (Seq.newBuilder[Double], Seq.newBuilder[Double])
-        for (_ <- 1 to 3) {
-          ls += time(graft.ops.Dedup.simhashCandidatesFromSignatures(
-            sigs, "doc_id", "sig", 3, 100000, 12, collectCapKeys = true))
-          zs += time(graft.ops.Dedup.simhashCandidatesFromSignatures(
-            sigs, "doc_id", "sig", 3, 100000, 12, collectCapKeys = false))
-        }
-        println(f"[cap-ab] $sfDir literal=${ls.result().min}%.2fs lazy=${zs.result().min}%.2fs (min-of-3)")
-
-      case "fuzzy-ab" :: rest =>
-        // r15: blocked all-pairs vs same-length PassJoin inside fuzzyPairs,
-        // on two corpus shapes — supplier-shaped (same length, shared
-        // prefix: PassJoin's degenerate case) and high-entropy (random
-        // hex names + 2% planted near-dups: realistic entity resolution).
-        // Locates FuzzyCrossoverRows on one host phase, min-of-3.
-        val shape = rest.headOption.getOrElse("entropy")
-        val sizes = if (rest.drop(1).isEmpty) Seq(250, 500, 1000, 2000, 4000, 8000)
-                    else rest.drop(1).map(_.toInt)
-        def names(n: Int) = {
-          import spark.implicits._
-          val rows =
-            if (shape == "supplier")
-              (0 until n).map(i => (i.toLong, f"Supplier#${i % (n / 2 + 1)}%09d"))
-            else {
-              val rnd = new scala.util.Random(42)
-              def hex(len: Int) = (0 until len).map(_ => "0123456789abcdef"(rnd.nextInt(16))).mkString
-              (0 until n).map { i =>
-                if (i % 50 == 1) { // planted near-dup of the previous name
-                  val prev = { val r2 = new scala.util.Random(42L + i - 1); (0 until 18).map(_ => "0123456789abcdef"(r2.nextInt(16))).mkString }
-                  (i.toLong, prev.updated(7, 'z').toString)
-                } else {
-                  val r2 = new scala.util.Random(42L + i)
-                  (i.toLong, (0 until 18).map(_ => "0123456789abcdef"(r2.nextInt(16))).mkString)
-                }
-              }
-            }
-          rows.toDF("id", "name").localCheckpoint()
-        }
-        def time(f: => org.apache.spark.sql.DataFrame): Double = {
-          val s = System.nanoTime(); f.queryExecution.toRdd.count()
-          (System.nanoTime() - s) / 1e9
-        }
-        for (n <- sizes) {
-          val df = names(n)
-          val base = df.select(col("id").as("_id"), col("name").as("_s"),
-            length(col("name")).as("_len")).localCheckpoint()
-          val (bs, ss) = (Seq.newBuilder[Double], Seq.newBuilder[Double])
-          for (_ <- 1 to 3) {
-            bs += time(graft.ops.Dedup.blockedFuzzyPairs(
-              base.select(col("_id"), col("_s"), col("_len").as("_blk")), 2))
-            ss += time(graft.ops.Dedup.fuzzyPairsSameLength(base, 2))
-          }
-          val routed = graft.ops.Dedup.fuzzyPairs(df, "id", "name", 2)
-            .queryExecution.analyzed.toString
-          val pick = if (routed.contains("levenshtein") && routed.contains("_blk")) "blocked" else "segmented"
-          println(f"[fuzzy-ab] n=$n%6d blocked=${bs.result().min}%.2fs segmented=${ss.result().min}%.2fs router=$pick")
-        }
-
-      case "neardup-ab" :: rest =>
-        // r15: exact all-pairs vs banded LSH near-dup on synthetic dim-64
-        // embeddings with planted near-dup pairs (cosine ~0.95+), t=0.9 —
-        // locates NearDupCrossoverRows and measures banded recall on one
-        // host phase, min-of-3 alternating
-        val sizes = if (rest.isEmpty) Seq(2000, 4000, 8000, 16000) else rest.map(_.toInt)
-        def embeddings(n: Int) = {
-          import spark.implicits._
-          val rows = (0 until n).map { i =>
-            val r = new scala.util.Random(if (i % 20 == 1) 9000L + i - 1 else 9000L + i)
-            val v = Array.fill(64)(r.nextGaussian())
-            if (i % 20 == 1) { // planted near-dup: tiny perturbation of i-1
-              val r2 = new scala.util.Random(777L + i)
-              (0 until 64).foreach(j => v(j) += 0.08 * r2.nextGaussian())
-            }
-            (i.toLong, v.map(_.toFloat).toSeq)
-          }
-          rows.toDF("vec_id", "embedding").localCheckpoint()
-        }
-        def time(f: => org.apache.spark.sql.DataFrame): Double = {
-          val s = System.nanoTime(); f.queryExecution.toRdd.count()
-          (System.nanoTime() - s) / 1e9
-        }
-        for (n <- sizes) {
-          val df = embeddings(n)
-          val (bs, ls) = (Seq.newBuilder[Double], Seq.newBuilder[Double])
-          for (_ <- 1 to 3) {
-            bs += time(graft.ops.Similarity.nearDupPairs(df, "vec_id", "embedding", 0.9,
-              exact = true))
-            ls += time(graft.ops.Similarity.lshNearDupBanded(df, "vec_id", "embedding", 0.9))
-          }
-          val exact = graft.ops.Similarity.nearDupPairs(df, "vec_id", "embedding", 0.9,
-            exact = true).select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          val banded = graft.ops.Similarity.lshNearDupBanded(df, "vec_id", "embedding", 0.9)
-            .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          val recall = if (exact.isEmpty) 1.0 else banded.intersect(exact).size.toDouble / exact.size
-          println(f"[neardup-ab] n=$n%6d exact=${bs.result().min}%.2fs banded=${ls.result().min}%.2fs " +
-            f"pairs=${exact.size} recall=$recall%.4f falsePos=${banded.diff(exact).size}")
         }
 
       case "jobs" :: name :: rest =>
@@ -396,38 +199,6 @@ object Scratch {
           def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.2f"
           println(s"[$i] build=${s(t0, t1)} plan=${s(t1, t2)} exec=${s(t2, t3)} total=${s(t0, t3)}")
         }
-      case "q28parts" :: rest =>
-        // time q28's building blocks separately (repeat 3, min) to see
-        // which stage dominates
-        val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        def time(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val ts = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            df.queryExecution.toRdd.count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"$tag%-28s min=${ts.min}%.2f all=${ts.map(t => f"$t%.2f").mkString(",")}")
-        }
-        time("counts_agg") {
-          li.where(col("l_extendedprice").isNotNull)
-            .groupBy(col("l_returnflag"), col("l_extendedprice"))
-            .agg(count(lit(1)).as("_c"))
-        }
-        time("price_p50_p90") {
-          graft.ops.Quantiles.exactInterpolated(li, Seq("l_returnflag"),
-            "l_extendedprice", Seq(0.5 -> "p50", 0.9 -> "p90"))
-        }
-        time("qty_p25") {
-          graft.ops.Quantiles.exactInterpolated(li, Seq("l_returnflag"),
-            "l_quantity", Seq(0.25 -> "qty_p25"))
-        }
-        time("q28_full") { SparkEntry.queries("q28_quantiles")(spark, sfDir) }
-        val done = graft.ops.Quantiles.exactInterpolated(li, Seq("l_returnflag"),
-          "l_extendedprice", Seq(0.5 -> "p50", 0.9 -> "p90"))
-        done.queryExecution.toRdd.count()
-        println("==== final adaptive plan (price path) ====")
-        println(done.queryExecution.executedPlan.toString)
       case _ =>
         val root = java.nio.file.Files.createTempDirectory("gappy_lake").toString
         val day = graft.sources.SynthSource.m1(spark, "BTC-USD", "2025-08-01", "2025-08-01")

@@ -1080,9 +1080,7 @@ object SparkEntry {
     // (decimal addition is associative, so the two-phase sum is
     // bit-identical to the one-phase rollup; the double cast happens last).
     "q24_rollup_revenue" -> ((s, dir) => {
-      val base = spread(s, tbl(s, dir, "lineitem")
-          .select(col("l_returnflag"), col("l_linestatus"),
-            col("l_extendedprice"), col("l_discount")))
+      val base = tbl(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
             .cast(DecimalType(28, 4))).as("_rev"),

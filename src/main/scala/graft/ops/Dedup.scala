@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Near-duplicate detection for training-data pipelines: exact hash dedup,
   * word-shingle Jaccard, MinHash+LSH, and SimHash.
@@ -76,11 +77,11 @@ object Dedup {
   /** Corpus size where the same-length PassJoin overtakes the blocked
     * all-pairs join in [[fuzzyPairs]]' default-length-blocking mode ON
     * HIGH-ENTROPY corpora — the measured same-phase A/B crossover
-    * (PLANS.md round 15, `Scratch fuzzy-ab entropy`: blocked/segmented
+    * (PLANS.md round 15, entropy corpus: blocked/segmented
     * 0.29/0.36 s at 2k rows, 0.69/0.34 at 4k, 37.9/0.53 at 32k — blocked
     * is block-quadratic, segmented flat). Routing ALSO requires the
     * [[segmentEntropyOk]] degeneracy probe: on shared-prefix corpora
-    * (`fuzzy-ab supplier`) the constant segments make PassJoin candidates
+    * (the supplier corpus) the constant segments make PassJoin candidates
     * corpus-quadratic ×15 multiplicity and it NEVER wins (measured ~9×
     * slower at every size) — there the blocked join remains optimal and
     * the quadratic cost is the corpus's true pairwise similarity, which
@@ -869,7 +870,7 @@ object Dedup {
     * its quadratic term bites past ~10⁴ docs (q27 exp 1.43 over
     * sf1→sf3). Extending MIH to 32 bits was measured and REJECTED —
     * real-text signatures concentrate per 16-bit half too, and MIH ran
-    * ~3× SLOWER at every size (`Scratch simhash-ab <dir> 32`:
+    * ~3× SLOWER at every size (PLANS.md, 32-bit A/B:
     * 0.95/3.02 s at 5k, 30.9/86.2 at 25k). The scale remedy is signature
     * WIDTH, not a different 32-bit blocking: pass `bits = 48` (the q133
     * face — same contract, exp 0.69 over the same triple decade).
@@ -1064,38 +1065,26 @@ object Dedup {
                           idCol: String = "id", srcCol: String = "src",
                           dstCol: String = "dst", maxIter: Int = 50,
                           maxLocalNodes: Int = 200000): DataFrame = {
-    // SIZE-GATED DRIVER-LOCAL FOLD (r17, guide §1.2 — the pagerank
-    // precedent): each propagation round is a driver-synchronous
-    // join+aggregate+probe (~3 jobs/round of scheduling latency at any data
-    // size), and the dedup pipelines' cluster graphs are pair-grain, not
-    // corpus-grain. When nodes AND edges provably fit on the driver
-    // (≤ maxLocalNodes rows each, integral ids of one identical type, no
-    // nulls), run union-find locally: the converged min-label fixpoint IS
-    // the component minimum, integers carry no rounding, and an edge
-    // propagates labels exactly when BOTH endpoints are in the node set
-    // (the distributed join's semantics, replicated below). Types outside
-    // integral (e.g. strings, whose UTF8-byte `least` ordering this fold
-    // does not replicate), nulls, or size over the gate fall through to the
-    // distributed loop unchanged; maxLocalNodes = 0 forces that. The gate
-    // probes with take(cap+1) — on an over-cap graph that wastes one
-    // partial scan wave, against iters×3 jobs saved whenever it fits.
-    if (maxLocalNodes > 0) {
-      val integral = Set[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-      val idT = nodes.schema(idCol).dataType
-      if (integral.contains(idT) && edges.schema(srcCol).dataType == idT &&
-          edges.schema(dstCol).dataType == idT) {
-        val nh = nodes.select(col(idCol)).take(maxLocalNodes + 1)
-        if (nh.length <= maxLocalNodes && nh.forall(!_.isNullAt(0))) {
-          val eh = edges.select(col(srcCol), col(dstCol)).take(maxLocalNodes + 1)
-          if (eh.length <= maxLocalNodes &&
-              eh.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-            return componentsLocal(nodes.sparkSession, nh, eh, idCol, idT)
-          }
-        }
-      }
-    }
+    // Driver-local union-find (LocalFold's contract): the dedup pipelines'
+    // cluster graphs are pair-grain, not corpus-grain. The converged
+    // min-label fixpoint IS the component minimum and integers carry no
+    // rounding, so the fold works in long whenever nodes and both edge
+    // endpoints share one integral id type. Other types (e.g. strings,
+    // whose UTF8-byte `least` ordering the fold does not replicate) run
+    // distributed.
+    val idT = nodes.schema(idCol).dataType
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    val local =
+      if (!integral(idT) || edges.schema(srcCol).dataType != idT ||
+          edges.schema(dstCol).dataType != idT) None
+      else for {
+        nh <- LocalFold.rows(nodes.select(col(idCol).cast("long")), maxLocalNodes)
+        eh <- LocalFold.rows(edges.select(col(srcCol).cast("long"),
+          col(dstCol).cast("long")), maxLocalNodes)
+      } yield LocalFold.frame(nodes.sparkSession, componentsLocal(nh, eh),
+        StructType(Seq(StructField(idCol, LongType), StructField("component", LongType))),
+        Seq(idT, idT))
+    if (local.isDefined) return local.get
     // materialize the edge list ONCE: in nearDupClusters its lineage is the
     // whole LSH+verify pipeline, which must not re-run every round.
     // PRE-PARTITIONED on the probe key (r16, guide §2.4): every round joins
@@ -1132,25 +1121,14 @@ object Dedup {
   }
 
   /** Driver-local union-find — called only under [[connectedComponents]]'s
-    * size gate, integral single-type ids, no nulls. Component label = the
+    * size gate, on ids cast to long, no nulls. Component label = the
     * MINIMUM member id (the propagation fixpoint); an edge links its
     * endpoints only when BOTH are in the node set (a neighbor outside
     * `labels` never contributes a label in the distributed join, and a
-    * non-node source never receives one).
+    * non-node source never receives one). Returns (id, component) rows.
     */
-  private def componentsLocal(spark: org.apache.spark.sql.SparkSession,
-                              nodeRows: Array[org.apache.spark.sql.Row],
-                              edgeRows: Array[org.apache.spark.sql.Row],
-                              idCol: String,
-                              idT: org.apache.spark.sql.types.DataType): DataFrame = {
-    def asLong(v: Any): Long = v match {
-      case b: Byte => b.toLong
-      case s: Short => s.toLong
-      case i: Int => i.toLong
-      case l: Long => l
-      case other => throw new IllegalStateException(s"non-integral id $other")
-    }
-    val ids: Array[Long] = nodeRows.map(r => asLong(r.get(0))).distinct
+  private def componentsLocal(nodeRows: Array[Row], edgeRows: Array[Row]): Seq[Row] = {
+    val ids: Array[Long] = nodeRows.map(_.getLong(0)).distinct
     val idx = new java.util.HashMap[Long, Int](ids.length * 2)
     ids.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
     val parent = Array.tabulate(ids.length)(identity)
@@ -1162,8 +1140,8 @@ object Dedup {
       r
     }
     edgeRows.foreach { r =>
-      val a = asLong(r.get(0))
-      val b = asLong(r.get(1))
+      val a = r.getLong(0)
+      val b = r.getLong(1)
       if (idx.containsKey(a) && idx.containsKey(b)) {
         val ra = find(idx.get(a))
         val rb = find(idx.get(b))
@@ -1177,19 +1155,7 @@ object Dedup {
       val cur = minOfRoot.get(r)
       if (!minOfRoot.containsKey(r) || ids(i) < cur) minOfRoot.put(r, ids(i))
     }
-    def box(v: Long): Any = idT match {
-      case org.apache.spark.sql.types.LongType => v
-      case org.apache.spark.sql.types.IntegerType => v.toInt
-      case org.apache.spark.sql.types.ShortType => v.toShort
-      case org.apache.spark.sql.types.ByteType => v.toByte
-    }
-    import scala.jdk.CollectionConverters._
-    val out: java.util.List[org.apache.spark.sql.Row] = ids.indices.map { i =>
-      org.apache.spark.sql.Row(box(ids(i)), box(minOfRoot.get(find(i))))
-    }.asJava
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol, idT),
-      org.apache.spark.sql.types.StructField("component", idT))))
+    ids.indices.map(i => Row(ids(i), minOfRoot.get(find(i))))
   }
 
   /** The full dedup endgame: LSH candidates -> exact-verified pairs ->

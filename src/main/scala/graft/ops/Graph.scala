@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
 /** Graph operators over edge-list DataFrames.
   *
@@ -71,32 +72,26 @@ object Graph {
     }, s"pagerank needs a positive INTEGRAL weight column; got " +
       s"${edges.schema(weightCol).dataType.simpleString} — a fractional " +
       "weight would truncate (scale to integers upstream)")
-    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
+    // ONE node type for both endpoints, the type Catalyst widens their
+    // union to: the distributed node set is that union, and the local fold
+    // (which keys maps by raw values) then sees one JVM type per node
+    val nodeT = edges.select(col(srcCol)).union(edges.select(col(dstCol)))
+      .schema.head.dataType
+    val e = edges.select(col(srcCol).cast(nodeT).as("_src"),
+      col(dstCol).cast(nodeT).as("_dst"),
       col(weightCol).cast("long").as("_w")).localCheckpoint()
-    // SIZE-GATED DRIVER-LOCAL FOLD (r17, guide §1.2): each power-iteration
-    // round is driver-SYNCHRONOUS — a dangling-mass aggregate, a
-    // contribution join, and a rank rebuild, ~3 jobs/round of scheduling
-    // latency regardless of data size. Edge lists reaching this operator
-    // are aggregate-grain by contract (scaladoc above), so when the edge
-    // table provably fits on the driver (≤ maxLocalEdges rows, no nulls),
-    // fold the iteration locally with the IDENTICAL arithmetic chain —
-    // java.math.BigDecimal.valueOf(x).setScale(12, HALF_UP) is bit-for-bit
-    // Catalyst's round()/cast-to-DECIMAL(38,12) on doubles, decimal sums
-    // are exact and order-free, and every double op is the same IEEE op in
-    // the same order (PagerankLocalSpec pins distributed == local on
-    // non-trivial graphs). Above the gate — or on any null src/dst/weight,
-    // whose join/sum semantics the local fold does not replicate — the
-    // distributed path runs unchanged. maxLocalEdges = 0 forces it.
-    if (maxLocalEdges > 0) {
-      val head = e.take(maxLocalEdges + 1)
-      if (head.length <= maxLocalEdges &&
-          head.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))) {
-        val nodeField = e.select(col("_src").as("node"))
-          .union(e.select(col("_dst"))).schema("node")
-        return pagerankLocal(edges.sparkSession, head, nodeField,
-          iters, damping, outScale)
-      }
-    }
+    // Driver-local fold (LocalFold's contract) with the IDENTICAL
+    // arithmetic chain — java.math.BigDecimal.valueOf(x).setScale(12,
+    // HALF_UP) is bit-for-bit Catalyst's round()/cast-to-DECIMAL(38,12) on
+    // doubles, decimal sums are exact and order-free, and every double op
+    // is the same IEEE op in the same order (PagerankLocalSpec pins
+    // distributed == local). Edge lists reaching this operator are
+    // aggregate-grain by contract (scaladoc above). A non-positive weight
+    // refuses the fold: a zero out-weight divides by zero, which only the
+    // distributed path's semantics define.
+    val local = LocalFold.rows(e, maxLocalEdges, _.getLong(2) > 0)
+    if (local.isDefined)
+      return pagerankLocal(edges.sparkSession, local.get, nodeT, iters, damping, outScale)
     // nodes / outW / trans are loop INVARIANTS — checkpoint them once
     // (r16, guide §1.2): each is consumed every round (dangling anti-join,
     // contribution join, rank restore), and un-pinned they re-ran their
@@ -167,10 +162,8 @@ object Graph {
     *  - long→double promotions (`/ col("_n")`, `_w / _ow`) are the same
     *    IEEE divisions on the same operands.
     */
-  private def pagerankLocal(spark: org.apache.spark.sql.SparkSession,
-                            edgeRows: Array[org.apache.spark.sql.Row],
-                            nodeField: org.apache.spark.sql.types.StructField,
-                            iters: Int, damping: Double,
+  private def pagerankLocal(spark: SparkSession, edgeRows: Array[Row],
+                            nodeT: DataType, iters: Int, damping: Double,
                             outScale: Int): DataFrame = {
     def rnd(x: Double, s: Int): Double =
       if (x.isNaN || x.isInfinite) x
@@ -205,13 +198,9 @@ object Graph {
           damping * (contribs.getOrElse(v, 0.0) + dm / n.toDouble), 12)
       }.toMap
     }
-    import scala.jdk.CollectionConverters._
-    val out: java.util.List[org.apache.spark.sql.Row] =
-      nodes.map(v => org.apache.spark.sql.Row(v, rnd(rank(v), outScale))).asJava
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
-      nodeField.copy(name = "node"),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.DoubleType))))
+    LocalFold.frame(spark, nodes.map(v => Row(v, rnd(rank(v), outScale))),
+      StructType(Seq(StructField("node", nodeT), StructField("rank", DoubleType))),
+      Seq(nodeT, DoubleType))
   }
 
   /** Unrolled-CTE DuckDB SQL mirroring [[pagerank]] bit-for-bit, generated

@@ -1,0 +1,48 @@
+package graft.ops
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** The size gate of a driver-local fold (guide §1.2). An iterative
+  * operator whose every round is driver-synchronous (~3 jobs of scheduling
+  * latency per round at any data size) may replace its distributed loop by
+  * a fold over the collected input when that input provably fits on the
+  * driver and the fold replicates the distributed arithmetic exactly.
+  *
+  * Contract, shared by every fold ([[Graph.pagerank]],
+  * [[Dedup.connectedComponents]]):
+  *  - Cap: the input is probed with `take(cap + 1)`; more than `cap` rows,
+  *    or `cap <= 0`, refuses the fold. On an over-cap input that wastes one
+  *    partial scan wave, against iters × 3 jobs saved whenever it fits.
+  *  - Null refusal: a row with any null field refuses the fold — the
+  *    distributed joins and aggregates give nulls semantics no fold
+  *    replicates. So does a row failing the caller's extra predicate (an
+  *    input the fold's arithmetic does not cover).
+  *  - Cast-back: the fold runs in one working type the caller picks in
+  *    Catalyst (cast before the probe), and its result reaches the caller
+  *    through a Catalyst `cast` back to the distributed path's analyzed
+  *    type, so both paths return the same schema.
+  *
+  * A refused fold means the caller's distributed path runs unchanged.
+  */
+private[graft] object LocalFold {
+
+  /** The rows of `df` when the gate admits them, else None. */
+  def rows(df: DataFrame, cap: Int, accept: Row => Boolean = _ => true): Option[Array[Row]] =
+    if (cap <= 0) None
+    else {
+      val head = df.take(cap + 1)
+      if (head.length <= cap && head.forall(r => !r.anyNull && accept(r))) Some(head)
+      else None
+    }
+
+  /** A fold's driver result (rows of working `schema`) as a DataFrame whose
+    * columns are cast to the `analyzed` types, position by position. */
+  def frame(spark: SparkSession, rows: Seq[Row], schema: StructType,
+            analyzed: Seq[DataType]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema).select(schema.zip(analyzed)
+      .map { case (f, t) => col(f.name).cast(t).as(f.name) }: _*)
+  }
+}

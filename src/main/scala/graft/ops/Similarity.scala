@@ -246,7 +246,7 @@ object Similarity {
 
   /** Corpus size where [[nearDupPairs]]' default mode routes HIGH-threshold
     * calls to the banded LSH generator ([[lshNearDupBanded]]) — measured
-    * same-phase A/B (PLANS.md round 15, `Scratch neardup-ab`). Routing
+    * same-phase A/B (PLANS.md round 15). Routing
     * additionally requires threshold >= [[NearDupLshMinThreshold]]:
     * random-hyperplane collision probability is p = 1 - arccos(t)/π, so a
     * LOW threshold collapses per-band recall (at t = 0.35, p^12 ≈ 3·10⁻³ —
@@ -642,17 +642,6 @@ object Similarity {
   private[ops] def fitPq(corpus: DataFrame, idCol: String, vecCol: String,
                     m: Int, codes: Int, dim: Int): PqModel =
     pqFromSeeds(collectPqSeeds(corpus, idCol, vecCol, codes), m, codes, dim)
-
-  /** Dev probes for Scratch pq-debug: encode-only / adc-tables-only. */
-  private[graft] def pqDebugEncode(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val pq = fitPq(corpus, idCol, vecCol, 4, 16, 64)
-    pq.withCodes(corpus.select(col(idCol), col(vecCol)), vecCol, Seq(col(idCol)))
-  }
-  private[graft] def pqDebugAdc(corpus: DataFrame, queries: DataFrame,
-                                idCol: String, vecCol: String): DataFrame = {
-    val pq = fitPq(corpus, idCol, vecCol, 4, 16, 64)
-    pq.withAdcTables(queries.select(col(idCol), col(vecCol)), vecCol, Seq(col(idCol)))
-  }
 
   def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
              vecCol: String, k: Int, m: Int = 4, codes: Int = 16,

@@ -73,4 +73,23 @@ class ComponentsLocalSpec extends AnyFunSuite {
     val m = got.collect().map(r => (r.getInt(0), r.getInt(1))).toMap
     assert(m === Map(0 -> 0, 1 -> 0, 2 -> 2, 3 -> 2, 4 -> 4, 5 -> 5))
   }
+
+  test("local path keeps short and byte id types") {
+    import org.apache.spark.sql.types.{ByteType, ShortType}
+    val inputs = Seq(
+      ShortType -> ((0 until 6).map(_.toShort).toDF("id"),
+        Seq((0, 1), (2, 3)).map(p => (p._1.toShort, p._2.toShort)).toDF("src", "dst")),
+      ByteType -> ((0 until 6).map(_.toByte).toDF("id"),
+        Seq((0, 1), (2, 3)).map(p => (p._1.toByte, p._2.toByte)).toDF("src", "dst")))
+    inputs.foreach { case (t, (n, e)) =>
+      val local = Dedup.connectedComponents(n, e)
+      val dist = Dedup.connectedComponents(n, e, maxLocalNodes = 0)
+      assert(local.schema.map(_.dataType) === Seq(t, t))
+      assert(dist.schema.map(_.dataType) === Seq(t, t))
+      val l = local.orderBy("id").collect().toSeq
+      assert(l === dist.orderBy("id").collect().toSeq)
+      assert(l.map(r => (r.get(0).toString.toInt, r.get(1).toString.toInt)) ===
+        Seq(0 -> 0, 1 -> 0, 2 -> 2, 3 -> 2, 4 -> 4, 5 -> 5))
+    }
+  }
 }

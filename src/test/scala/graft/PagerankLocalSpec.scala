@@ -76,6 +76,47 @@ class PagerankLocalSpec extends AnyFunSuite {
       dist.orderBy("node").collect().toSeq)
   }
 
+  /** One path's outcome: (node, rank bits) in node order, or the root cause
+    * of the exception it threw. `cap` None = the default gate. */
+  private def outcome(edges: org.apache.spark.sql.DataFrame,
+                      cap: Option[Int]): Either[String, Seq[(Any, Option[Long])]] =
+    try {
+      val r = cap.fold(Graph.pagerank(edges, "src", "dst", "w", iters = 4))(c =>
+        Graph.pagerank(edges, "src", "dst", "w", iters = 4, maxLocalEdges = c))
+      Right(r.orderBy("node").collect().map(row => (row.get(0),
+        Option(row.get(1)).map(v =>
+          java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])))).toSeq)
+    } catch {
+      case t: Throwable =>
+        var c = t
+        while (c.getCause != null) c = c.getCause
+        Left(s"${c.getClass.getName}: ${c.getMessage}")
+    }
+
+  test("mixed and contract-violating inputs: the gate and maxLocalEdges = 0 agree") {
+    val inputs = Seq(
+      "int src / long dst" ->
+        Seq((1, 2L, 3L), (2, 3L, 1L), (3, 1L, 2L), (1, 3L, 5L), (4, 1L, 1L), (2, 5L, 2L))
+          .toDF("src", "dst", "w"),
+      "int src / string dst" ->
+        Seq((1, "2", 3L), (2, "3", 1L), (3, "1", 2L), (1, "3", 5L), (4, "1", 1L))
+          .toDF("src", "dst", "w"),
+      "out-weight sums to 0" ->
+        Seq(("a", "b", 2L), ("a", "c", -2L), ("b", "a", 1L), ("c", "b", 1L))
+          .toDF("src", "dst", "w"),
+      "all-zero out-weight" ->
+        Seq(("a", "b", 0L), ("b", "a", 1L), ("b", "c", 2L)).toDF("src", "dst", "w"))
+    val differ = inputs.flatMap { case (name, g) =>
+      val (gated, forced) = (outcome(g, None), outcome(g, Some(0)))
+      if (gated == forced) None else Some(s"$name: $gated != $forced")
+    }
+    assert(differ.isEmpty, differ.mkString("\n"))
+    // integral endpoints of two widths widen to one node type, no crash
+    val mixed = Graph.pagerank(inputs.head._2, "src", "dst", "w", iters = 4)
+    assert(mixed.schema("node").dataType === org.apache.spark.sql.types.LongType)
+    assert(outcome(inputs.head._2, None).isRight)
+  }
+
   test("mass conservation survives the local fold (ranks sum to ~1)") {
     val r = Graph.pagerank(graph, "src", "dst", "w", iters = 10)
       .agg(sum("rank")).collect()(0).getDouble(0)

@@ -4,17 +4,20 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The size gate of a driver-local fold (guide §1.2). An iterative
-  * operator whose every round is driver-synchronous (~3 jobs of scheduling
-  * latency per round at any data size) may replace its distributed loop by
-  * a fold over the collected input when that input provably fits on the
-  * driver and the fold replicates the distributed arithmetic exactly.
+/** The size gate of a driver-local fold (guide §1.2). An operator whose
+  * cost is job count rather than data — an iterative loop whose every
+  * round is driver-synchronous (~3 jobs of scheduling latency per round at
+  * any data size), or a multi-pass pipeline of aggregates and joins over a
+  * small derived table — may replace its distributed plan by a fold over
+  * the collected input when that input provably fits on the driver and the
+  * fold replicates the distributed arithmetic exactly.
   *
   * Contract, shared by every fold ([[Graph.pagerank]],
-  * [[Dedup.connectedComponents]]):
+  * [[Dedup.connectedComponents]], [[Quantiles.madOutliers]]):
   *  - Cap: the input is probed with `take(cap + 1)`; more than `cap` rows,
-  *    or `cap <= 0`, refuses the fold. On an over-cap input that wastes one
-  *    partial scan wave, against iters × 3 jobs saved whenever it fits.
+  *    or `cap <= 0`, refuses the fold. On an over-cap input that wastes the
+  *    probe (one partial scan wave, plus the shuffle of an aggregate
+  *    probe), against the jobs saved whenever it fits.
   *  - Null refusal: a row with any null field refuses the fold — the
   *    distributed joins and aggregates give nulls semantics no fold
   *    replicates. So does a row failing the caller's extra predicate (an

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType,
+  StructField, StructType}
 
 /** Exact interpolated percentiles as a distributed plan instead of Spark's
   * `percentile()` ObjectAggregate.
@@ -262,27 +264,6 @@ object Quantiles {
     cum.groupBy(g: _*).agg(aggs.head, aggs.drop(1): _*)
   }
 
-  /** Robust (median / MAD) outlier report per group — the heavy-tail-safe
-    * twin of mean/stddev z-scoring (q59): median and the median absolute
-    * deviation are immune to the very outliers being counted, so one
-    * corrupt burst cannot widen its own acceptance band. Scaled by the
-    * standard 1.4826 normal-consistency constant; a value is an outlier
-    * outside median ± k·1.4826·MAD.
-    *
-    * Portability around a knife-edge: the band edges are computed from the
-    * ROUND-4 median/MAD (the same 4-dp contract q28 banks on for quantile
-    * parity), then one fixed IEEE chain with the k·1.4826 product embedded
-    * as a single round-trip literal — so both engines compare every value
-    * against bit-identical thresholds, and the outlier COUNTS are under
-    * the hash gate, not just the summary stats.
-    *
-    * Scale: two [[exactInterpolated]] passes (value, then |value−median|)
-    * — each one map-side-combined aggregate, no per-group value
-    * collection — plus groups-sized broadcast joins; for the 100 TB
-    * approximate path swap in [[histogramQuantiles]] medians upstream.
-    *
-    * Output: (groupCols, n, median, mad, thr_lo, thr_hi, n_outliers).
-    */
   /** Null-safe equi-join on `keys` keeping the LEFT side's key columns:
     * groupCols may legitimately hold a NULL-keyed group (the engine-wide
     * <=> convention exactInterpolated's restore join already follows) — a
@@ -323,8 +304,119 @@ object Quantiles {
     if (ck.count() <= PinBroadcastRows) broadcast(ck) else ck
   }
 
+  /** Robust (median / MAD) outlier report per group — the heavy-tail-safe
+    * twin of mean/stddev z-scoring (q59): median and the median absolute
+    * deviation are immune to the very outliers being counted, so one
+    * corrupt burst cannot widen its own acceptance band. Scaled by the
+    * standard 1.4826 normal-consistency constant; a value is an outlier
+    * outside median ± k·1.4826·MAD.
+    *
+    * Portability around a knife-edge: the band edges are computed from the
+    * ROUND-4 median/MAD (the same 4-dp contract q28 banks on for quantile
+    * parity), then one fixed IEEE chain with the k·1.4826 product embedded
+    * as a single round-trip literal — so both engines compare every value
+    * against bit-identical thresholds, and the outlier COUNTS are under
+    * the hash gate, not just the summary stats.
+    *
+    * Scale: median and MAD need only the distinct (group, value, count)
+    * table. One probe builds it (one evaluation of `df`, one
+    * map-side-combined aggregate, values cast to double) and
+    * [[LocalFold]]'s gate admits it at most `MaxLocalRows` rows, with
+    * non-null non-binary keys and finite values; the driver then folds
+    * both percentiles with [[exactInterpolated]]'s arithmetic — a few jobs
+    * where the distributed plan pays ~40 at any size. Otherwise the
+    * distributed twin runs unchanged: two [[exactInterpolated]] passes
+    * (value, then |value−median|), each one map-side-combined aggregate
+    * with no per-group value collection, two pinned groups-sized tables
+    * and broadcast joins. For the 100 TB approximate path swap in
+    * [[histogramQuantiles]] medians upstream.
+    *
+    * Output: (groupCols, n, median, mad, thr_lo, thr_hi, n_outliers).
+    */
   def madOutliers(df: DataFrame, groupCols: Seq[String], valueCol: String,
                   k: Double = 3.0): DataFrame = {
+    requireKeys(groupCols)
+    val keys = df.select(groupCols.map(col): _*).schema
+    val nk = keys.length
+    val hist = df.where(col(valueCol).isNotNull)
+      .groupBy(groupCols.map(col) :+ col(valueCol).cast("double").as("_madv"): _*)
+      .agg(count(lit(1)).as("_madc"))
+    val local =
+      if (keys.exists(f => bytesIn(f.dataType))) None
+      else LocalFold.rows(hist, MaxLocalRows, r => java.lang.Double.isFinite(r.getDouble(nk)))
+        .flatMap(madLocal(_, nk, k))
+    local match {
+      case Some(rows) =>
+        val schema = StructType(keys.fields ++ Seq(
+          StructField("n", LongType, nullable = false)) ++
+          Seq("median", "mad", "thr_lo", "thr_hi").map(StructField(_, DoubleType)) :+
+          StructField("n_outliers", LongType))
+        LocalFold.frame(df.sparkSession, rows, schema, schema.map(_.dataType))
+      case None => madOutliersDistributed(df, groupCols, valueCol, k)
+    }
+  }
+
+  /** Distinct (group, value) rows above which [[madOutliers]] runs
+    * distributed (the pagerank fold's edge cap). */
+  private val MaxLocalRows = 100000
+
+  private def requireKeys(groupCols: Seq[String]): Unit =
+    require(groupCols.nonEmpty,
+      "madOutliers: groupCols must be non-empty (a global report groups by a literal)")
+
+  /** Binary keys come back as arrays, whose equality and hash are by
+    * reference: the driver cannot group on them. */
+  private def bytesIn(t: DataType): Boolean = t match {
+    case BinaryType => true
+    case a: ArrayType => bytesIn(a.elementType)
+    case s: StructType => s.exists(f => bytesIn(f.dataType))
+    case _ => false
+  }
+
+  /** Median of a value-sorted (value, count) table with Spark's
+    * `Percentile.getPercentile` arithmetic — the same floor/ceil ranks,
+    * special cases and interpolation [[exactInterpolated]] runs in SQL. */
+  private def medianOf(tbl: Seq[(Double, Long)]): Double = {
+    val cum = tbl.scanLeft(0L)(_ + _._2).tail
+    val position = 0.5 * (cum.last - 1).toDouble
+    val lo = math.floor(position).toLong
+    val hi = math.ceil(position).toLong
+    def at(rank: Long): Double = tbl(cum.indexWhere(rank < _))._1
+    val (vf, vc) = (at(lo), at(hi))
+    if (lo == hi || vf == vc) vf else (hi - position) * vf + (position - lo) * vc
+  }
+
+  /** The driver fold of [[madOutliersDistributed]] over the probe's
+    * (keys.., value, count) rows: the same IEEE operations in the same
+    * order, round-4 as Catalyst's `round` on doubles. None (fall back)
+    * when a deviation overflows, which `BigDecimal` cannot round. */
+  private def madLocal(hist: Array[Row], nk: Int, k: Double): Option[Seq[Row]] = {
+    val c = k * 1.4826
+    def r4(x: Double): Double =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def sorted(vc: Seq[(Double, Long)]) = vc.sortBy(_._1)(Ordering.Double.TotalOrdering)
+    val out = hist.toSeq.groupBy(r => Seq.tabulate(nk)(r.get)).toSeq.map { case (key, rs) =>
+      val vc = sorted(rs.map(r => (r.getDouble(nk), r.getLong(nk + 1))))
+      val med = medianOf(vc)
+      val dev = sorted(vc.groupMapReduce(e => math.abs(e._1 - med))(_._2)(_ + _).toSeq)
+      if (dev.last._1.isInfinite) None
+      else {
+        val medr = r4(med)
+        val madr = r4(medianOf(dev))
+        val lo = medr - c * madr
+        val hi = medr + c * madr
+        val nOut = vc.iterator.filter(e => e._1 < lo || e._1 > hi).map(_._2).sum
+        Some(Row.fromSeq(key ++ Seq[Any](vc.iterator.map(_._2).sum, medr, madr, lo, hi, nOut)))
+      }
+    }
+    if (out.forall(_.isDefined)) Some(out.flatten) else None
+  }
+
+  /** [[madOutliers]]' distributed path, which runs whenever the fold's
+    * gate refuses; specs compare the two paths through it. */
+  private[graft] def madOutliersDistributed(df: DataFrame, groupCols: Seq[String],
+                                            valueCol: String, k: Double = 3.0): DataFrame = {
+    requireKeys(groupCols)
     val g = groupCols.map(col)
     val c = k * 1.4826
     // r16 (guide §1.2, §3.1): med and mad are GROUP-GRAIN (one row per

@@ -350,7 +350,7 @@ object Cli {
       val fpRow = newDocs.agg(
         count(lit(1)),
         sum(pmod(col("doc_id"), lit(P)).cast("decimal(38,0)")) % P,
-        sum(pmod(xxhash64(col("text")), lit(P)).cast("decimal(38,0)")) % P).head
+        sum(pmod(xxhash64(col("text")), lit(P)).cast("decimal(38,0)")) % P).head()
       val nNew = fpRow.getLong(0)
       val idSum = s"${Option(fpRow.get(1)).getOrElse(0)}"
       val batchId = s"n=$nNew;id=$idSum;h=${Option(fpRow.get(2)).getOrElse(0)}"

@@ -38,18 +38,7 @@ object Aggregates {
       keys :+ "market" else keys
     val agg = Resample.ohlcv(m1, tf, fullKeys)
       .withColumn("timeframe", lit(tf.code))
-    upsertInto(spark, LakeLayout.aggregatesRoot(root), agg)
-  }
-
-  private[lake] def upsertInto(spark: SparkSession, path: String, batch: DataFrame): Unit = {
-    val enforced = LakeFs.withUtcYearMonth(graft.core.CandleSchema.enforce(batch))
-    // market in the merge key, like LakeWriter.upsert (r14) — see its note
-    UpsertCore.mergeWrite(spark, path, enforced,
-      LakeLayout.partitionCols,
-      Seq("source", "market", "symbol", "timeframe", "ts"), "ts",
-      // year/month = f(ts), rest ∈ key — exchange fusion applies (see
-      // mergeWrite's partColsDeterminedByKey note)
-      partColsDeterminedByKey = true)
+    LakeWriter.upsertCandles(spark, LakeLayout.aggregatesRoot(root), agg)
   }
 
   /** Incremental materialized-view maintenance: after an upsert touches a

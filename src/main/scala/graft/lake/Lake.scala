@@ -276,7 +276,14 @@ object LakeReader {
   */
 object LakeWriter {
 
-  def upsert(spark: SparkSession, root: String, batch: DataFrame): Unit = {
+  def upsert(spark: SparkSession, root: String, batch: DataFrame): Unit =
+    upsertCandles(spark, LakeLayout.dataRoot(root), batch)
+
+  /** The candle-tree merge-dedupe upsert into `path`: the data tree's
+    * [[upsert]] and the aggregates tree ([[Aggregates.materialize]]) share
+    * it, so both trees key, partition and fuse their exchange alike.
+    */
+  private[lake] def upsertCandles(spark: SparkSession, path: String, batch: DataFrame): Unit = {
     val enforced = LakeFs.withUtcYearMonth(CandleSchema.enforce(batch))
     // market IS part of the bar's identity (r14): the readers' dedupe key
     // includes it (readRangeUnsorted/readUnified — "a market-less key
@@ -284,7 +291,7 @@ object LakeWriter {
     // merge must too — a batch carrying the same (source, symbol, tf, ts)
     // under two markets is two different instruments' bars, not a
     // duplicate to keep-last over.
-    UpsertCore.mergeWrite(spark, LakeLayout.dataRoot(root), enforced,
+    UpsertCore.mergeWrite(spark, path, enforced,
       LakeLayout.partitionCols,
       Seq("source", "market", "symbol", "timeframe", "ts"), "ts",
       // year/month = f(ts), every other partition column ∈ key — the
@@ -616,7 +623,7 @@ private[lake] object UpsertCore {
           (key ++ partCols.filterNot(key.contains)).map(col))
       else (merged, key.map(col))
     val w = Window.partitionBy(windowKeys: _*)
-      .orderBy(col("_prec").desc, struct(valueCols.map(col): _*).desc)
+      .orderBy(col("_prec").desc, struct(valueCols.toSeq.map(col): _*).desc)
     // Break the lineage BEFORE the overwrite: the batch's lineage may read
     // the very files the dynamic overwrite replaces (e.g. repair flows that
     // derive the fill from the lake itself) — without this, the write job

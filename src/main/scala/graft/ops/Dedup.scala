@@ -132,28 +132,23 @@ object Dedup {
     * (they differ only in blocking grain): over-cap bucket keys from
     * `buckets` grouped by `groupCols`, keyed by `keyOfGroup`. None = no
     * cap binds; Left(keys) = inline isin literals (≤ [[InlineKeyCap]]);
-    * Right(frame) = broadcast-join form — either the collected keys past
-    * the inline cap, or (collectKeys = false) the LAZY aggregate itself,
-    * so plan construction runs no job.
+    * Right(frame) = broadcast-join form over the collected keys past the
+    * inline cap.
     */
   private def capForm(buckets: DataFrame, groupCols: Seq[Column],
-                      keyOfGroup: Column, maxBucket: Int,
-                      collectKeys: Boolean): Option[Either[Seq[Long], DataFrame]] =
+                      keyOfGroup: Column, maxBucket: Int): Option[Either[Seq[Long], DataFrame]] =
     if (maxBucket <= 0) None
     else {
-      val aggKeys = buckets.groupBy(groupCols: _*)
+      val keys = buckets.groupBy(groupCols: _*)
         .agg(count(lit(1)).as("_bw")).where(col("_bw") > maxBucket)
         .select(keyOfGroup.as("_dropped_k"))
-      if (!collectKeys) Some(Right(aggKeys))
+        .collect().map(_.getLong(0)).toSeq
+      if (keys.isEmpty) None
+      else if (keys.size <= InlineKeyCap) Some(Left(keys))
       else {
-        val keys = aggKeys.collect().map(_.getLong(0)).toSeq
-        if (keys.isEmpty) None
-        else if (keys.size <= InlineKeyCap) Some(Left(keys))
-        else {
-          val spark = buckets.sparkSession
-          import spark.implicits._
-          Some(Right(keys.toDF("_dropped_k")))
-        }
+        val spark = buckets.sparkSession
+        import spark.implicits._
+        Some(Right(keys.toDF("_dropped_k")))
       }
     }
 
@@ -385,12 +380,10 @@ object Dedup {
     * the op is SIZE-ADAPTIVE (r15): at or above [[FuzzyCrossoverRows]]
     * rows the identical same-length pair set is generated by the
     * same-length PassJoin (segment agreement prunes inside a length
-    * block, where the blocked join is quadratic). `rowCount` skips the
-    * routing count() — but NOT the segment-entropy probe: past the
-    * crossover a one-row aggregate ALWAYS runs at construction time (a
-    * blind route onto a degenerate corpus would cost 10× the probe), so
-    * construction is eager there by design; below the crossover a
-    * supplied rowCount keeps it fully lazy. Verification uses Spark's
+    * block, where the blocked join is quadratic). The route comes from
+    * the input itself: construction runs the row count, and past the
+    * crossover a one-row segment-entropy aggregate too (a blind route onto
+    * a degenerate corpus would cost 10× the probe). Verification uses Spark's
     * THRESHOLDED levenshtein (early-exits the DP past maxDist — the
     * standard banded-DP trick, returns -1 beyond), which equals the full
     * distance whenever it qualifies, so the emitted distances are exact
@@ -399,8 +392,7 @@ object Dedup {
     * Output: (id_a, id_b, dist) with 0 <= dist <= maxDist, id_a < id_b.
     */
   def fuzzyPairs(df: DataFrame, idCol: String, strCol: String,
-                 maxDist: Int, blockKey: Option[Column] = None,
-                 rowCount: Option[Long] = None): DataFrame = {
+                 maxDist: Int, blockKey: Option[Column] = None): DataFrame = {
     require(maxDist >= 0, "need maxDist >= 0")
     // SIZE-ADAPTIVE routing (r15, the q133/MihCrossoverDocs pattern): with
     // default length blocking the all-pairs-within-a-length-block join is
@@ -411,12 +403,12 @@ object Dedup {
     // blocked is quadratic on high-entropy corpora; see FuzzyCrossoverRows
     // for both A/B tables — degenerate shared-prefix corpora stay
     // blocked, where they are ~9x cheaper). Both forms are exact within
-    // same-length pairs, so routing changes cost, never results. A
-    // supplied rowCount skips the count() (when absent it runs on a
-    // cached projection that the PassJoin route keeps and the blocked
-    // route releases — see the cache-lifecycle note below); past the
-    // crossover the one-row entropy aggregate always runs — a blind
-    // route onto a degenerate corpus would cost 10x the probe.
+    // same-length pairs, so routing changes cost, never results. The
+    // count() runs on a cached projection that the PassJoin route keeps
+    // and the blocked route releases (see the cache-lifecycle note
+    // below); past the crossover the one-row entropy aggregate runs on
+    // it too — a blind route onto a degenerate corpus would cost 10x
+    // the probe.
     // Custom blockKeys always take the blocked join: the caller chose the
     // blocking entropy, and a phonetic/q-gram key has no PassJoin twin.
     if (blockKey.isEmpty && maxDist >= 1 && maxDist <= 4) {
@@ -431,15 +423,13 @@ object Dedup {
       //  - PassJoin route keeps the cache: index and probe sides read it
       //    twice inside one plan;
       //  - the blocked route unpersists it — the projection is
-      //    re-derivable and the blocked self-join re-derives it lazily;
-      //  - below the crossover with a supplied rowCount the lazy cache is
-      //    never touched: no cache entry, no job, fully lazy construction.
-      lazy val cached = proj.cache()
-      val n = rowCount.getOrElse(cached.count())
+      //    re-derivable and the blocked self-join re-derives it lazily.
+      val cached = proj.cache()
+      val n = cached.count()
       if (n >= FuzzyCrossoverRows && segmentEntropyOk(cached, maxDist + 1, n))
         fuzzyPairsSameLength(cached, maxDist)
       else {
-        if (rowCount.isEmpty || n >= FuzzyCrossoverRows) cached.unpersist()
+        cached.unpersist()
         blockedFuzzyPairs(proj.select(col("_id"), col("_s"),
           col("_len").as("_blk")), maxDist)
       }
@@ -876,22 +866,14 @@ object Dedup {
     * face — same contract, exp 0.69 over the same triple decade).
     *
     * NOTE (eager construction): on the wide path (bits > 32, maxHamming ≤ 3)
-    * the size-adaptive routing needs the corpus row count, so building the
-    * returned DataFrame runs the scan+sign Spark job — even if the caller
-    * never executes the result. Pass `docCount` (an exact or approximate
-    * corpus size; only its position relative to the ~5·10⁴ crossover
-    * matters) to keep plan construction lazy AND to make cap-bound results
-    * corpus-size-stable: with a binding `maxBucket` the two generators'
-    * recall-under-cap sets differ, so a pinned `docCount` pins the
-    * generator (see the cap contract above). The lazy path's cap rides
-    * broadcast joins against the (lazy, keyspace-bounded) over-cap
-    * aggregate instead of inlined literals — no shuffle either way; the
-    * joins are broadcast no-ops when no bucket is over cap at runtime.
+    * the size-adaptive routing counts the corpus, so building the returned
+    * DataFrame runs the scan+sign Spark job — even if the caller never
+    * executes the result. Both generators also collect their over-cap
+    * bucket keys (a keyspace-bounded aggregate) at construction.
     */
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
                         maxHamming: Int = 3, maxBucket: Int = 100000,
-                        bits: Int = DefaultSimhashBits,
-                        docCount: Option[Long] = None): DataFrame = {
+                        bits: Int = DefaultSimhashBits): DataFrame = {
     require(bits % 4 == 0, "bits must split into 4 equal chunks")
     // self-joined below: cache the (id, sig) projection so the scan+sign
     // pipeline runs once, not once per join side (round-1 q27 hot spot)
@@ -904,28 +886,21 @@ object Dedup {
     // SIZE-ADAPTIVE below the measured crossover: MIH pays a constant
     // (1 + bits/2)× probe fan-out to suppress the quadratic term, which
     // only wins past ~5·10⁴ docs (same-phase A/B, PLANS.md round 13) —
-    // under it, chunk blocking generates fewer candidates outright. When
-    // the caller supplies no docCount the count() is ~free: it
-    // materializes the (id, sig) cache the self-join needs anyway, so the
-    // signing work is pre-paid (NOTE this makes wide-path plan
-    // CONSTRUCTION eager — it runs the scan+sign job; see the public
-    // scaladoc). A supplied docCount keeps construction fully lazy.
-    // Both generators emit the identical exact pair set whenever no
-    // blocking bucket exceeds `maxBucket`, so on uncapped corpora the
-    // switch changes cost, never results. When the cap BINDS, the
+    // under it, chunk blocking generates fewer candidates outright. The
+    // count() is ~free: it materializes the (id, sig) cache the self-join
+    // needs anyway, so the signing work is pre-paid (NOTE this makes
+    // wide-path plan CONSTRUCTION eager — it runs the scan+sign job; see
+    // the public scaladoc). Both generators emit the identical exact pair
+    // set whenever no blocking bucket exceeds `maxBucket`, so on uncapped
+    // corpora the switch changes cost, never results. When the cap BINDS, the
     // recall-under-cap sets differ — the two schemes cap at different
     // granularities (2^(bits/4)-value chunk buckets vs 2^(bits/2)-value
     // half buckets), see the scaladoc's cap contract.
-    lazy val corpusDocs = docCount.getOrElse(withSig.count())
-    // a supplied docCount promises lazy construction, so the generators'
-    // cap computation must not collect either — they take the lazy
-    // broadcast-anti-join cap form (collectCapKeys = false)
-    if (bits > 32 && maxHamming <= 3 && corpusDocs >= MihCrossoverDocs)
-      simhashCandidatesMih(withSig, idCol, "simhash", maxHamming, maxBucket,
-        bits, collectCapKeys = docCount.isEmpty)
+    if (bits > 32 && maxHamming <= 3 && withSig.count() >= MihCrossoverDocs)
+      simhashCandidatesMih(withSig, idCol, "simhash", maxHamming, maxBucket, bits)
     else
       simhashCandidatesFromSignatures(withSig, idCol, "simhash", maxHamming,
-        maxBucket, chunkBits = bits / 4, collectCapKeys = docCount.isEmpty)
+        maxBucket, chunkBits = bits / 4)
   }
 
   /** Multi-index Hamming blocking (the "MIH" scheme — Norouzi, Punjani &
@@ -961,8 +936,7 @@ object Dedup {
                            sigCol: String = "simhash",
                            maxHamming: Int = 3,
                            maxBucket: Int = 100000,
-                           bits: Int = 48,
-                           collectCapKeys: Boolean = true): DataFrame = {
+                           bits: Int = 48): DataFrame = {
     require(bits % 2 == 0 && bits >= 8 && bits <= 60, s"need even 8 <= bits <= 60, got $bits")
     require(maxHamming >= 0 && maxHamming <= 3,
       "two-half pigeonhole covers maxHamming <= 3; use the chunked form beyond")
@@ -978,15 +952,12 @@ object Dedup {
       .select(col("id_i"), col("sig_i"), col("_c.h").as("_h"), col("_c.v").as("_v"))
     // degenerate-bucket cap on the INDEX side; over-cap keys number at most
     // n/maxBucket (tiny) — probe rows aimed at a dropped bucket are
-    // filtered by the same key set. Three forms, same semantics (pinned by
+    // filtered by the same key set. Two forms, same semantics (pinned by
     // DedupCapSpec): collected keys inline as isin literals up to
     // [[InlineKeyCap]] (the common plan, join-free); past it they move out
-    // of the plan tree into a broadcast LEFT ANTI join; and with
-    // `collectCapKeys = false` the over-cap frame is never collected at
-    // all — the anti-join right side stays a lazy aggregate, so plan
-    // construction runs NO job (the [[simhashCandidates]] docCount path).
+    // of the plan tree into a broadcast LEFT ANTI join.
     val cap = capForm(idx, Seq(col("_h"), col("_v")),
-      col("_h") * span + col("_v"), maxBucket, collectCapKeys)
+      col("_h") * span + col("_v"), maxBucket)
     def surviving(df: DataFrame): DataFrame = cap match {
       case None => df
       case Some(Left(keys)) =>
@@ -1319,8 +1290,7 @@ object Dedup {
                                       sigCol: String = "simhash",
                                       maxHamming: Int = 3,
                                       maxBucket: Int = 100000,
-                                      chunkBits: Int = DefaultSimhashBits / 4,
-                                      collectCapKeys: Boolean = true): DataFrame = {
+                                      chunkBits: Int = DefaultSimhashBits / 4): DataFrame = {
     require(chunkBits >= 4 && chunkBits <= 15, s"need 4 <= chunkBits <= 15")
     val withSig = sigs.select(col(idCol), col(sigCol).as("simhash"))
     val chunks = 4
@@ -1332,19 +1302,17 @@ object Dedup {
         struct(lit(c).as("chunk"),
           shiftright(col("simhash"), c * chunkBits).bitwiseAND(mask).as("v"))): _*)).as("_c"))
       .select(col(idCol), col("simhash"), col("_c.chunk"), col("_c.v"))
-    // Survival plumbing for the capped regime — three forms, same
+    // Survival plumbing for the capped regime — two forms, same
     // semantics (pinned by DedupCapSpec). Collected over-cap keys inline
     // as isin literals up to [[InlineKeyCap]] (the common plan: join-free,
     // and the aggregate shuffles at most the fixed chunks*span keyspace at
     // any corpus size, so the collect is always driver-safe); past the cap
-    // — or with `collectCapKeys = false`, where the over-cap frame is
-    // never collected and plan construction runs NO job — the keys move
-    // into a broadcast join and each doc carries a survived-chunk BITMASK:
-    // the first-surviving-match emission rule below needs survival of
-    // EVERY zero-XOR chunk of sig_a, not just the joined chunk, so a plain
-    // anti-join on the pair frame cannot express it.
+    // the keys move into a broadcast join and each doc carries a
+    // survived-chunk BITMASK: the first-surviving-match emission rule
+    // below needs survival of EVERY zero-XOR chunk of sig_a, not just the
+    // joined chunk, so a plain anti-join on the pair frame cannot express it.
     val cap = capForm(chunked, Seq(col("chunk"), col("v")),
-      col("chunk") * span + col("v"), maxBucket, collectCapKeys)
+      col("chunk") * span + col("v"), maxBucket)
     val useMask = cap.exists(_.isRight)
     val capped = cap match {
       case None => chunked
@@ -1355,8 +1323,7 @@ object Dedup {
         // DOC grain (one per chunk, each against the tiny over-cap key
         // frame): no shuffle, no aggregate — the mask is a pure row
         // expression over the signature, so duplicate doc ids cannot
-        // corrupt it the way a per-id SUM over a window could (and an
-        // empty runtime dropped-key set makes the joins broadcast no-ops)
+        // corrupt it the way a per-id SUM over a window could
         val maskDf = (0 until chunks).foldLeft(withSig) { (df, c) =>
           df.join(broadcast(dropped.withColumnRenamed("_dropped_k", s"_dk$c")),
             lit(c * span) + shiftright(col("simhash"), c * chunkBits).bitwiseAND(mask)

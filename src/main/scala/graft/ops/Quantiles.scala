@@ -278,7 +278,7 @@ object Quantiles {
     val r = right.alias("_nsr")
     val rightVals = right.columns.filterNot(keys.contains)
     l.join(r, keys.map(c => col(s"_nsl.$c") <=> col(s"_nsr.$c")).reduce(_ && _))
-      .select(left.columns.map(c => col(s"_nsl.$c")) ++
+      .select(left.columns.toSeq.map(c => col(s"_nsl.$c")) ++
         rightVals.map(c => col(s"_nsr.$c")): _*)
   }
 
@@ -317,6 +317,14 @@ object Quantiles {
     * as a single round-trip literal — so both engines compare every value
     * against bit-identical thresholds, and the outlier COUNTS are under
     * the hash gate, not just the summary stats.
+    *
+    * Known limit: the values themselves are compared unrounded, so when a
+    * group's MAD is 0 the band collapses to [round4(median),
+    * round4(median)] and a group whose values all equal one number with
+    * more than 4 decimals flags EVERY row (a single row of 2.00025 reports
+    * n_outliers = 1 against a 2.0003 band). Both paths and q90's oracle
+    * SQL agree on this, and MadOutliersLocalSpec pins it; changing the
+    * rule changes that oracle too.
     *
     * Scale: median and MAD need only the distinct (group, value, count)
     * table. One probe builds it (one evaluation of `df`, one

@@ -60,21 +60,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact top-k neighbors of ONE query vector (given as a literal array),
-    * brute force. For a batch of queries prefer [[topKJoin]].
-    */
-  def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-                     query: Seq[Double], k: Int): DataFrame = {
-    val q = array(query.map(lit): _*)
-    corpus
-      // zero-norm guard (see pairCosine): NULL, not NaN-ranked-first
-      .withColumn("cosine", round(when(normNative(col(vecCol)) > 0,
-        cosineNative(col(vecCol), q)), 6))
-      .select(col(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Exact top-k per query row via join + window rank. `queries` and
     * `corpus` both carry (id, vec). The cross join is the exact-answer
     * cost; use [[lshTopK]] when approximate is acceptable.
@@ -292,17 +277,14 @@ object Similarity {
     * pairs AT the threshold (and higher above it — the SimilaritySpec
     * planted-pair gates, measured 1.0 at t = 0.9's defaults). Pass
     * `exact = true` to pin the brute-force face regardless of size (the
-    * oracle/ground-truth mode); pass `rowCount` to skip the routing
-    * count(). `dim` defaults to the corpus's own first-row dimension
-    * (one tiny lookup, only when actually routing — pass it to stay
-    * fully lazy); a mixed-dimension corpus fails loudly in the key
-    * kernel either way. Emitted pairs are always verified — routing can
-    * only MISS pairs (bounded by the banded recall), never invent them.
+    * oracle/ground-truth mode). Routing decides from the corpus itself: a
+    * count(), then — only past the crossover — the dimension of the first
+    * non-null vector (one tiny lookup); a mixed-dimension corpus fails
+    * loudly in the key kernel. Emitted pairs are always verified — routing
+    * can only MISS pairs (bounded by the banded recall), never invent them.
     */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-                   threshold: Double, exact: Boolean = false,
-                   rowCount: Option[Long] = None,
-                   dim: Option[Int] = None): DataFrame = {
+                   threshold: Double, exact: Boolean = false): DataFrame = {
     def brute = {
       val a = corpus.select(col(idCol).as("id_a"), col(vecCol).as("_va"),
         normNative(col(vecCol)).as("_na"))
@@ -316,50 +298,23 @@ object Similarity {
     }
     if (exact || threshold < NearDupLshMinThreshold) brute
     else {
-      lazy val n = rowCount.getOrElse(corpus.count())
-      if (n >= NearDupCrossoverRows) {
-        // infer the embedding dimension from a NON-NULL row unless supplied
-        // — the old fixed default (64) made routing a size-dependent CRASH
-        // for any other corpus width (r15 review finding), and probing the
-        // bare first row made a leading NULL vector one too (r15 ADVICE):
-        // the exact path tolerates null vectors (null cosine → pair
-        // dropped; the banded path drops them at posexplode of the null
-        // key array), so routing must not turn them into an NPE. An
-        // all-null corpus has no pairs under either face, so brute
-        // (trivially empty, and fully lazy) is the correct fallback.
-        val probed =
-          if (dim.isDefined) Array.empty[org.apache.spark.sql.Row]
-          else corpus.where(col(vecCol).isNotNull)
-            .select(size(col(vecCol))).head(1)
-        if (dim.isEmpty && probed.isEmpty) brute
-        else {
-          val d = dim.getOrElse(probed(0).getInt(0))
-          lshNearDupBanded(corpus, idCol, vecCol, threshold,
-            bands = bandsForRecall(threshold, 12), dim = d)
-        }
+      if (corpus.count() >= NearDupCrossoverRows) {
+        // infer the embedding dimension from a NON-NULL row — the old fixed
+        // default (64) made routing a size-dependent CRASH for any other
+        // corpus width (r15 review finding), and probing the bare first
+        // row made a leading NULL vector one too (r15 ADVICE): the exact
+        // path tolerates null vectors (null cosine → pair dropped; the
+        // banded path drops them at posexplode of the null key array), so
+        // routing must not turn them into an NPE. An all-null corpus has
+        // no pairs under either face, so brute (trivially empty) is the
+        // correct fallback.
+        val probed = corpus.where(col(vecCol).isNotNull)
+          .select(size(col(vecCol))).head(1)
+        if (probed.isEmpty) brute
+        else lshNearDupBanded(corpus, idCol, vecCol, threshold,
+          bands = bandsForRecall(threshold, 12), dim = probed(0).getInt(0))
       } else brute
     }
-  }
-
-  /** LSH-bucketed near-dup pairs (approximate; scale path). Each vector
-    * hashes to exactly ONE bucket, so a pair can meet in at most one
-    * bucket — output is duplicate-free by construction, no distinct needed.
-    */
-  def lshNearDup(corpus: DataFrame, idCol: String, vecCol: String,
-                 threshold: Double, nPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim)
-    val keyed = corpus.select(col(idCol).as("id"), col(vecCol).as("_v"),
-        normNative(col(vecCol)).as("_n"))
-      .withColumn("bucket", lshKey(col("_v"), planes))
-    val a = keyed.select(col("id").as("id_a"), col("_v").as("_va"),
-      col("_n").as("_na"), col("bucket"))
-    val b = keyed.select(col("id").as("id_b"), col("_v").as("_vb"),
-      col("_n").as("_nb"), col("bucket"))
-    a.join(b, "bucket")
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(pairCosine("_va", "_na", "_vb", "_nb"), 6))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
   /** Banded (OR-amplified) LSH near-dup pairs — the measured scale path
@@ -502,8 +457,8 @@ object Similarity {
         .collect()
         .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
     def assignCol: Column = {
-      val cands = cents.map { case (cid, c) =>
-        val cl = array(c.map(lit): _*)
+      val cands = cents.toSeq.map { case (cid, c) =>
+        val cl = array(c.toSeq.map(lit): _*)
         val d2 = dotNative(v, v) - lit(2.0) * dotNative(v, cl) +
           dotNative(cl, cl)
         struct(d2.as("d2"), lit(cid).as("cluster"))

@@ -56,6 +56,22 @@ object SymbolMap {
 case class RawBar(openTimeMs: Long, open: Double, high: Double, low: Double,
                   close: Double, volume: Double)
 
+private[sources] object RawBarFrame {
+  private val schema = StructType(Seq(
+    StructField("ts", TimestampType), StructField("open", DoubleType),
+    StructField("high", DoubleType), StructField("low", DoubleType),
+    StructField("close", DoubleType), StructField("volume", DoubleType)))
+
+  /** The (ts, OHLCV) frame every connector normalizes from, each bar
+    * stamped at its open time + `tsShiftMs`. Built over a parallelized RDD
+    * (not a LocalRelation), which keeps the ingest plans as they are.
+    */
+  def apply(spark: SparkSession, bars: Seq[RawBar], tsShiftMs: Long = 0L): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(bars.map(b =>
+      Row(new Timestamp(b.openTimeMs + tsShiftMs), b.open, b.high, b.low, b.close, b.volume))),
+      schema)
+}
+
 /** Binance klines connector (reference SURVEY §2.1 S6:
   * src/datalake/providers/binance/client.py:52-134 — paginated
   * /api/v3/klines, 1000 bars/request, <=10 requests per window, epoch-ms ->
@@ -146,20 +162,13 @@ class BinanceSource(fetchPage: (String, String, Long, Long, Int) => Seq[RawBar])
     }.dropWhile { case (cursor, req, _) => cursor < endMs && req < maxRequestsPerWindow }
       .next()._3
 
-    val rows = pages
-      // DELIBERATE divergence from the reference's inclusive clip
-      // (client.py:133 keeps ts <= end): we clip half-open [start, end) to
-      // normalize every source to the engine's global [from, to) read
-      // contract (api.py:13-19) — the bar AT endUtc belongs to the next
-      // window, so adjacent fetch windows never double-ingest it.
-      .filter(b => b.openTimeMs >= startMs && b.openTimeMs < endMs)
-      .map(b => Row(new Timestamp(b.openTimeMs), b.open, b.high, b.low, b.close, b.volume))
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("open", DoubleType),
-      StructField("high", DoubleType), StructField("low", DoubleType),
-      StructField("close", DoubleType), StructField("volume", DoubleType)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq), schema)
+    // DELIBERATE divergence from the reference's inclusive clip
+    // (client.py:133 keeps ts <= end): we clip half-open [start, end) to
+    // normalize every source to the engine's global [from, to) read
+    // contract (api.py:13-19) — the bar AT endUtc belongs to the next
+    // window, so adjacent fetch windows never double-ingest it.
+    val df = RawBarFrame(spark,
+      pages.filter(b => b.openTimeMs >= startMs && b.openTimeMs < endMs))
     CandleSchema.enforce(df
       .withColumn("symbol", lit(logicalSymbol))
       .withColumn("timeframe", lit(tf.code))
@@ -296,14 +305,8 @@ class IbkrSource(fetchWindow: (String, Instant, Instant) => Seq[RawBar]) {
   def fetchDay(spark: SparkSession, symbol: String, day: java.time.LocalDate,
                exchange: String = "PAXOS"): DataFrame = {
     val bars = dayChunks(day).flatMap { case (from, to) => fetchWindow(symbol, from, to) }
-    val rows = bars.map(b => Row(
-      new Timestamp(b.openTimeMs + 60000L), // bar_end shift (normalize.py:11)
-      b.open, b.high, b.low, b.close, b.volume))
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("open", DoubleType),
-      StructField("high", DoubleType), StructField("low", DoubleType),
-      StructField("close", DoubleType), StructField("volume", DoubleType)))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    // bar_end shift (normalize.py:11)
+    val df = RawBarFrame(spark, bars, tsShiftMs = 60000L)
     CandleSchema.enforce(df
       .withColumn("symbol", lit(symbol))
       .withColumn("timeframe", lit("M1"))

@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   *    executor heap (the restart matrix in StateBoundSpec runs on it).
   *  - Changelog checkpointing: each commit uploads O(changed-keys) changelog
   *    files instead of O(total-state) snapshots. Measured on this engine
-  *    (`graft.RecoveryProbe`, PLANS.md round 13): build time 10.4→5.6 s /
-  *    16.3→11.6 s at 100k/200k groups, checkpoint size 33→24 / 97→68 MB —
+  *    (PLANS.md round 13, "RocksDB changelog checkpointing"): build time
+  *    10.4→5.6 s / 16.3→11.6 s at 100k/200k groups, checkpoint size 33→24 / 97→68 MB —
   *    a 35–45% per-commit cost cut — for recovery 0.86→1.93 s (replaying
   *    changelogs since the last snapshot; bounded by
   *    `minDeltasForSnapshot`, the background snapshot cadence). Commits
@@ -39,18 +39,18 @@ object StateStores {
   val MinBatchesToRetainKey = "spark.sql.streaming.minBatchesToRetain"
 
   /** Checkpoint RETENTION, the knob that bounds changelog-checkpoint
-    * FOOTPRINT (r16, measured by `graft.RetentionProbe` on the worst
-    * changelog shape — a kmv face whose every batch touches every key):
-    * steady-state checkpoint bytes ≈ retained versions × per-commit
-    * changelog + kept snapshots, and the Spark default (100) let the r15
-    * StreamScaleProbe read 1.3→8 MB of monotone "growth" that was really
-    * unvacuumed backlog. At 120 batches: default 197 MB and still
+    * FOOTPRINT (r16, PLANS.md "Changelog checkpoint retention", measured
+    * on the worst changelog shape — a kmv face whose every batch touches
+    * every key): steady-state checkpoint bytes ≈ retained versions ×
+    * per-commit changelog + kept snapshots, and the Spark default (100)
+    * let the r15 streaming decade probe (PLANS.md) read 1.3→8 MB of
+    * monotone "growth" that was really unvacuumed backlog. At 120 batches: default 197 MB and still
     * climbing vs 51 MB settled at 20 — flat from 60 to 120 batches, the
     * bound. 20 recoverable versions is a generous restart window (restart
     * uses the LATEST committed batch; older versions serve forensics
     * only), and `minDeltasForSnapshot` stays at Spark's default 10 — the
     * sweep's 20-delta cadence settles ~8% smaller but doubles the
-    * changelogs a recovery replays (RecoveryProbe r13: ~1-2 s at 10) and
+    * changelogs a recovery replays (PLANS.md r13: ~1-2 s at 10) and
     * carries a 1.8× in-run backlog peak.
     */
   val MinBatchesToRetain = 20

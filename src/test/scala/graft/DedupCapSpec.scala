@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Dedup
@@ -79,16 +78,6 @@ class DedupCapSpec extends AnyFunSuite {
       maxHamming = 3, maxBucket = 2, chunkBits = bits / 4)) === expectedPairs)
   }
 
-  test("lazy cap mode (collectCapKeys = false): same recall-under-cap set, no collect") {
-    val mih = Dedup.simhashCandidatesMih(sigs, "doc_id", "sig",
-      maxHamming = 3, maxBucket = 2, bits = bits, collectCapKeys = false)
-    assert(mih.queryExecution.executedPlan.toString.contains("LeftAnti"))
-    assert(got(mih) === expectedPairs)
-    val chunked = Dedup.simhashCandidatesFromSignatures(sigs, "doc_id", "sig",
-      maxHamming = 3, maxBucket = 2, chunkBits = bits / 4, collectCapKeys = false)
-    assert(got(chunked) === expectedPairs)
-  }
-
   test("under-cap corpora keep the literal plan (no join/bitmask operators added)") {
     // 5 over-cap keys <= InlineKeyCap: the production plan must be untouched
     // by the round-14 branch (q27/q133's gate-scale shape)
@@ -102,27 +91,5 @@ class DedupCapSpec extends AnyFunSuite {
     assert(!plan.contains("_survMask") && !plan.contains("LeftAnti"))
     assert(got(cands) === Set.empty[(Long, Long, Int)],
       "all-triplet corpus: every bucket over cap, nothing may survive")
-  }
-
-  test("simhashCandidates with a supplied docCount builds its plan lazily (no eager scan job)") {
-    // a docs source that THROWS on scan: constructing the wide-path plan
-    // must not touch it when the caller supplies the corpus size. Built on
-    // range (not a Seq.toDF LocalRelation) so ConvertToLocalRelation can't
-    // evaluate the poison at plan-OPTIMIZATION time — the generator's
-    // cache() call optimizes (but must not execute) the plan.
-    val poisoned = spark.range(2).select(col("id").as("doc_id"),
-      when(col("id") >= 0, raise_error(lit("eager scan!")))
-        .otherwise(lit("x")).as("text"))
-    // wide path, above the crossover: routing decision comes from docCount
-    val lazyPlan = Dedup.simhashCandidates(poisoned, "doc_id", "text",
-      maxHamming = 3, bits = 48, docCount = Some(Dedup.MihCrossoverDocs + 1))
-    assert(lazyPlan.schema.fieldNames.toSeq === Seq("id_a", "id_b", "hamming"),
-      "plan construction must succeed without running a job")
-    // and executing it DOES hit the poison — proving construction alone
-    // was what stayed lazy, not that the source was never wired in
-    val ex = intercept[Throwable] { lazyPlan.collect() }
-    val chain = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
-      .map(_.toString).mkString("\n")
-    assert(chain.contains("eager scan"), s"unexpected failure: $chain")
   }
 }

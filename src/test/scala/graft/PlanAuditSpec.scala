@@ -84,7 +84,7 @@ class PlanAuditSpec extends AnyFunSuite {
   // range-shaped query that silently regresses to a nested loop fails here.
   private val declaredExactAllPairs = Set(
     "q14_sim_topk",           // exact brute-force cosine top-k (twin: q34 IVF)
-    "q15_embedding_near_dup", // exact near-dup pairs (twin: Similarity.lshNearDup)
+    "q15_embedding_near_dup", // exact near-dup pairs (twin: Similarity.lshNearDupBanded)
     "q67_hard_negatives"      // exact hard-negative miner (twin: ivfTopK + label filter)
   )
   // Queries where a BroadcastNestedLoopJoin is the INTENDED shape because the

@@ -64,40 +64,51 @@ class SimilaritySpec extends AnyFunSuite {
       e.getCause != null && e.getCause.getMessage.contains("dimension mismatch"))
   }
 
+  /** One past the router's size line: NearDupCrossoverRows + 1 random
+    * 8-dim vectors, the first of them NULL when `leadingNull`. */
+  private def pastCrossover(seed: Int, leadingNull: Boolean = false) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    (0L to Similarity.NearDupCrossoverRows).map(i =>
+      (i, if (leadingNull && i == 0L) None
+          else Some(Array.fill(8)(rnd.nextGaussian().toFloat).toSeq)))
+      .toDF("vec_id", "embedding")
+  }
+
   test("nearDupPairs routing: low threshold and exact=true pin brute force; " +
     "big high-threshold corpora take banded LSH (r15)") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val tiny = (0 until 10).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat).toSeq)).toDF("vec_id", "embedding")
+    val big = pastCrossover(11)
     def plan(d: org.apache.spark.sql.DataFrame) = d.queryExecution.analyzed.toString
     // low threshold: never routes (LSH recall collapses below ~0.8) — and
     // constructs NO job (q15's lazy-construction contract)
-    assert(!plan(Similarity.nearDupPairs(tiny, "vec_id", "embedding", 0.35))
+    assert(!plan(Similarity.nearDupPairs(big, "vec_id", "embedding", 0.35))
       .contains("posexplode"))
-    // high threshold + big rowCount hint: banded plan (dim INFERRED from
-    // the corpus — the fixed-64 default was a size-dependent crash for
-    // any other width, r15 review finding)
-    assert(plan(Similarity.nearDupPairs(tiny, "vec_id", "embedding", 0.9,
-      rowCount = Some(100000L))).contains("posexplode"))
-    // an explicitly supplied dim keeps routing construction lookup-free
-    assert(plan(Similarity.nearDupPairs(tiny, "vec_id", "embedding", 0.9,
-      rowCount = Some(100000L), dim = Some(8))).contains("posexplode"))
+    // high threshold below the size line: brute force
+    assert(!plan(Similarity.nearDupPairs(tiny, "vec_id", "embedding", 0.9))
+      .contains("posexplode"))
+    // high threshold past it: banded plan (dim INFERRED from the corpus —
+    // the fixed-64 default was a size-dependent crash for any other
+    // width, r15 review finding)
+    assert(plan(Similarity.nearDupPairs(big, "vec_id", "embedding", 0.9))
+      .contains("posexplode"))
     // exact=true pins brute force regardless of size
-    assert(!plan(Similarity.nearDupPairs(tiny, "vec_id", "embedding", 0.9,
-      exact = true, rowCount = Some(100000L))).contains("posexplode"))
+    assert(!plan(Similarity.nearDupPairs(big, "vec_id", "embedding", 0.9,
+      exact = true)).contains("posexplode"))
   }
 
   test("nearDupPairs routing tolerates null vectors: dim inferred from a " +
     "non-null row, all-null falls back to brute (r16 ADVICE)") {
     import spark.implicits._
-    val rnd = new scala.util.Random(17)
     def vec(seed: Long) = {
       val r = new scala.util.Random(seed)
       Array.fill(8)(r.nextGaussian().toFloat).toSeq
     }
-    // LEADING null vector (the r15 probe read row 0 bare → NPE), one
-    // planted near-identical pair (1,2), filler vectors
+    // LEADING null vector, one planted near-identical pair (1,2), filler
+    // vectors
     val perturbed = vec(1L).zipWithIndex.map { case (x, j) =>
       x + 0.01f * new scala.util.Random(99L + j).nextGaussian().toFloat }
     val rows: Seq[(Long, Option[Seq[Float]])] =
@@ -106,23 +117,26 @@ class SimilaritySpec extends AnyFunSuite {
     val df = rows.toDF("vec_id", "embedding").localCheckpoint()
     def pairSet(d: org.apache.spark.sql.DataFrame) =
       d.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // forced past the crossover via rowCount: routed plan must construct
-    // AND run (the null row is dropped at posexplode of its null key array)
-    val routed = Similarity.nearDupPairs(df, "vec_id", "embedding", 0.9,
-      rowCount = Some(100000L))
-    assert(routed.queryExecution.analyzed.toString.contains("posexplode"))
-    val got = pairSet(routed)
+    // the routed face runs on a null-bearing corpus (the null row is
+    // dropped at posexplode of its null key array) and matches brute
+    val got = pairSet(Similarity.lshNearDupBanded(df, "vec_id", "embedding", 0.9,
+      bands = Similarity.bandsForRecall(0.9, 12), dim = 8))
     val exact = pairSet(Similarity.nearDupPairs(df, "vec_id", "embedding", 0.9,
       exact = true))
     assert(exact.contains((1L, 2L)), "fixture degenerate: planted pair missing")
     assert(got === exact, "routed face must match brute on a null-bearing corpus")
     assert(!got.exists(p => p._1 == 0L || p._2 == 0L))
+    // past the size line the router infers dim from a NON-NULL row (the
+    // r15 probe read row 0 bare → NPE), then constructs AND runs
+    val routed = Similarity.nearDupPairs(pastCrossover(17, leadingNull = true),
+      "vec_id", "embedding", 0.9)
+    assert(routed.queryExecution.analyzed.toString.contains("posexplode"))
+    assert(!pairSet(routed).exists(p => p._1 == 0L || p._2 == 0L))
     // ALL-null corpus: no non-null row to infer from — brute fallback,
     // trivially empty, never a crash
-    val allNull = (0 until 5).map(i => (i.toLong, Option.empty[Seq[Float]]))
-      .toDF("vec_id", "embedding")
-    val fb = Similarity.nearDupPairs(allNull, "vec_id", "embedding", 0.9,
-      rowCount = Some(100000L))
+    val allNull = (0L to Similarity.NearDupCrossoverRows)
+      .map(i => (i, Option.empty[Seq[Float]])).toDF("vec_id", "embedding")
+    val fb = Similarity.nearDupPairs(allNull, "vec_id", "embedding", 0.9)
     assert(!fb.queryExecution.analyzed.toString.contains("posexplode"))
     assert(fb.count() === 0L)
   }

@@ -67,8 +67,8 @@ class StateBoundSpec extends AnyFunSuite {
     // The r15 scale probe read monotone checkpoint growth on the kmv face
     // at FLAT state: unvacuumed backlog, not a leak — every commit writes
     // an O(touched-keys) changelog and Spark's default retention (100)
-    // never triggered inside a short probe. RetentionProbe (PLANS.md r16)
-    // measured the steady state and StateStores.Recommended now pins
+    // never triggered inside a short probe. The r16 retention sweep
+    // (PLANS.md, "Changelog checkpoint retention") measured the steady state and StateStores.Recommended now pins
     // minBatchesToRetain = 20; this spec pins the INVARIANT at spec scale:
     // after maintenance settles, changelog files per partition track the
     // retention knob, not the number of batches ever run.

@@ -166,37 +166,28 @@ class TextOpsSpec extends AnyFunSuite {
     def hex18() = (0 until 18).map(_ => "0123456789abcdef"(rnd.nextInt(16))).mkString
     val entropy = (0 until 4000).map(i => (i.toLong, hex18())).toDF("id", "name")
       .localCheckpoint()
-    assert(!isBlocked(plan(graft.ops.Dedup.fuzzyPairs(entropy, "id", "name", 2,
-      rowCount = Some(4000L)))))
+    assert(!isBlocked(plan(graft.ops.Dedup.fuzzyPairs(entropy, "id", "name", 2))))
     // large DEGENERATE corpus (shared prefix collapses segment buckets) ->
     // blocked, where it is ~9x cheaper (PLANS.md r15 fuzzy-ab)
     val degen = (0 until 4000).map(i => (i.toLong, f"Supplier#$i%09d")).toDF("id", "name")
       .localCheckpoint()
-    assert(isBlocked(plan(graft.ops.Dedup.fuzzyPairs(degen, "id", "name", 2,
-      rowCount = Some(4000L)))))
+    assert(isBlocked(plan(graft.ops.Dedup.fuzzyPairs(degen, "id", "name", 2))))
   }
 
   test("fuzzyPairs cache lifecycle: only the PassJoin route keeps its routing " +
     "projection cached (r16 ADVICE)") {
     spark.catalog.clearCache()
     def cacheEmpty = spark.sharedState.cacheManager.isEmpty
-    // below the crossover with NO rowCount: the count() runs on the cached
-    // projection, but the blocked route must release it afterwards
+    // below the crossover: the count() runs on the cached projection, but
+    // the blocked route must release it afterwards
     val tiny = Seq((1L, "alpha"), (2L, "alphb"), (3L, "gamma")).toDF("id", "name")
     graft.ops.Dedup.fuzzyPairs(tiny, "id", "name", 2).collect()
     assert(cacheEmpty, "blocked route leaked its routing projection cache")
-    // below the crossover WITH rowCount: fully lazy — no cache entry and no
-    // job at construction, none after collect either
-    val lazyOut = graft.ops.Dedup.fuzzyPairs(tiny, "id", "name", 2,
-      rowCount = Some(3L))
-    assert(cacheEmpty, "lazy construction must not register a cache")
-    lazyOut.collect()
-    assert(cacheEmpty)
     // past the crossover on a DEGENERATE corpus (blocked route wins after
     // the entropy probe): probe's materialized cache is released
     val degen = (0 until 3200).map(i => (i.toLong, f"Supplier#$i%09d"))
       .toDF("id", "name").localCheckpoint()
-    graft.ops.Dedup.fuzzyPairs(degen, "id", "name", 2, rowCount = Some(3200L))
+    graft.ops.Dedup.fuzzyPairs(degen, "id", "name", 2)
     assert(cacheEmpty, "probe-then-blocked route leaked its projection cache")
     // past the crossover on an entropy corpus: the PassJoin route KEEPS the
     // cache (index + probe sides read it twice inside one plan) — the
@@ -205,7 +196,7 @@ class TextOpsSpec extends AnyFunSuite {
     def hex18() = (0 until 18).map(_ => "0123456789abcdef"(rnd.nextInt(16))).mkString
     val entropy = (0 until 3200).map(i => (i.toLong, hex18())).toDF("id", "name")
       .localCheckpoint()
-    graft.ops.Dedup.fuzzyPairs(entropy, "id", "name", 2, rowCount = Some(3200L))
+    graft.ops.Dedup.fuzzyPairs(entropy, "id", "name", 2)
     assert(!cacheEmpty, "PassJoin route must keep the shared projection cached")
     spark.catalog.clearCache()
   }
@@ -410,10 +401,11 @@ class TextOpsSpec extends AnyFunSuite {
     val vecs = (0 until 20).map(i =>
       (i.toLong, (0 until 8).map(j => if (i % 2 == 0) j.toFloat else -j.toFloat - 1f)))
       .toDF("vec_id", "embedding")
-    val pairs = Similarity.lshNearDup(vecs, "vec_id", "embedding", 0.999, nPlanes = 4, dim = 8)
+    val pairs = Similarity.lshNearDupBanded(vecs, "vec_id", "embedding", 0.999,
+      bands = 1, planesPerBand = 4, dim = 8)
     // all even ids identical to each other, all odd ids identical to each other
     assert(pairs.count() === 2 * (10 * 9 / 2))
-    // duplicate-free by construction (one bucket per vector) - no distinct
+    // no pair is emitted twice
     assert(pairs.select("id_a", "id_b").distinct().count() === pairs.count())
   }
 

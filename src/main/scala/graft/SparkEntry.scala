@@ -711,7 +711,7 @@ object SparkEntry {
     // every exec row's M5 bucket has a ctx bar and the as-of parent IS the
     // bucket bar — an equi-join Catalyst plans as a broadcast hash join with
     // no global-sort window (the round-1 plan was a single-partition
-    // WindowExec). backward()/broadcastRange() remain the general paths for
+    // WindowExec). backward()/directed() remain the general paths for
     // unaligned ctx (CandleOpsSpec proves all three agree).
     "q04_asof_mtf" -> ((s, dir) => {
       // NOT cached despite feeding both the exec side and the M5 resample:

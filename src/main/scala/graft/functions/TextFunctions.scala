@@ -151,9 +151,9 @@ object TextKernels {
   /** One-pass SimHash signature: [[tokenize]], hash each word with
     * [[polyHashStr]], accumulate the per-bit +1/-1 votes in a single array,
     * and emit the sign bits. Bit-identical to the HOF reference form
-    * [[graft.ops.Dedup.simhashHof]] (32 interpreted aggregate() passes),
-    * but one compiled pass per row — this is the inner loop of signing
-    * every document at 100 TB.
+    * `graft.ops.DedupRef.simhashHof` under src/test (32 interpreted
+    * aggregate() passes), but one compiled pass per row — this is the
+    * inner loop of signing every document at 100 TB.
     */
   def simHash(text: UTF8String, bits: Int): Long = {
     require(bits >= 1, s"simHash needs bits >= 1, got $bits") // SQL-reachable

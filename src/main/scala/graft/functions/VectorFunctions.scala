@@ -92,8 +92,9 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   * returns array<long> of length `bands`, where element b is the
   * `planesPerBand`-sign-bit bucket under hyperplane family seed+b.
   *
-  * Why an expression: the column-composition form (`lshKey` per band)
-  * inlines every plane as a 64-literal array and a [[DotProduct]] each —
+  * Why an expression: the column-composition form (`SimilarityRef.lshKey`
+  * per band, kept under src/test as this kernel's reference) inlines
+  * every plane as a 64-literal array and a [[DotProduct]] each —
   * at 32 bands × 12 planes that is 384 dot expressions whose generated
   * method exceeds the JVM's 64 KB limit, knocking the whole stage out of
   * codegen (observed r15). Here the planes live in ONE broadcast-referenced
@@ -325,7 +326,7 @@ case class PqAdcTable(child: Expression, offset: Int, sub: Int, dimTotal: Int,
 object VectorKernels {
   /** Deterministic hyperplane component: splitmix64 finalizer over
     * (seed, plane, element) mapped to [-1, 1). THE single source of the
-    * plane doubles — [[graft.ops.Similarity.hyperplanes]] and
+    * plane doubles — `graft.ops.SimilarityRef.hyperplanes` (src/test) and
     * [[BandedLshKeys]] both read it, so the composition and kernel forms
     * can never drift (the r14 affine-generator postmortem is why this is
     * centralized: decorrelation lives in exactly one place).
@@ -349,9 +350,6 @@ object VectorFunctions {
     GraftColumnBridge.toColumn(DotProduct(expr(a), expr(b)))
 
   def normNative(a: Column): Column = org.apache.spark.sql.functions.sqrt(dotNative(a, a))
-
-  def cosineNative(a: Column, b: Column): Column =
-    dotNative(a, b) / (normNative(a) * normNative(b))
 
   /** All banded LSH bucket keys in one compiled pass (see [[BandedLshKeys]]). */
   def bandedLshKeys(vec: Column, bands: Int, planesPerBand: Int, dim: Int,

@@ -33,11 +33,6 @@ object Bucketing {
     sorted.format("parquet").saveAsTable(table)
   }
 
-  /** True if the physical plan of `df` contains a shuffle exchange. */
-  def hasShuffle(df: DataFrame): Boolean =
-    df.queryExecution.executedPlan.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
-
   /** Join two bucketed tables on their bucket key. With matching bucket
     * counts this plans shuffle-free.
     */

@@ -36,16 +36,15 @@ object AsofJoin {
     * `on` and `partitionCols`) are appended to `left`; suffix them before
     * calling if names collide.
     *
-    * `chunk` (in units of `on` cast to long: seconds for timestamps, ns for
-    * raw ts_ns) is the HOT-KEY escape hatch: with chunk > 0 the window-fill
-    * runs through [[Fill]]'s two-phase chunked scan, so one dominant symbol
-    * (or an unkeyed single series) splits into per-chunk partitions plus a
-    * tiny carry join instead of pinning one reducer. Salting does not apply
-    * here — the fill is order-dependent, so the skew tool is time-range
-    * splitting, not key replication. Results are identical (CandleOpsSpec).
+    * This is the one-window plan: a single sorted partition per key. A hot
+    * key (one dominant symbol, or an unkeyed single series) pins one
+    * reducer; for that input call [[directed]] with `direction =
+    * "backward"` and a `chunk`, whose two-phase chunked fill splits the
+    * series into per-chunk partitions plus a tiny carry join. Results are
+    * identical (CandleOpsSpec).
     */
   def backward(left: DataFrame, right: DataFrame, on: String = "ts",
-               partitionCols: Seq[String] = Nil, chunk: Long = 0L): DataFrame = {
+               partitionCols: Seq[String] = Nil): DataFrame = {
     val rightVals = right.columns.toSeq.filterNot(c => c == on || partitionCols.contains(c))
     val leftCols = left.columns.toSeq
     require(rightVals.intersect(leftCols).isEmpty,
@@ -72,18 +71,11 @@ object AsofJoin {
         d.withColumn(c, lit(null).cast(lSchema(c).dataType))
       }
     val unioned = leftSide.unionByName(rightSide)
-    val filled =
-      if (chunk > 0L)
-        // chunked two-phase fill: (on, _side) ordering keeps ctx rows
-        // visible to exec rows at equal timestamps, exactly like the window
-        Fill.ffill(unioned, Seq("_asof"), partitionCols, on, chunk, tie = Some("_side"))
-      else {
-        val w = (if (partitionCols.nonEmpty) Window.partitionBy(partitionCols.map(col): _*)
-                 else Window.partitionBy())
-          .orderBy(col(on).asc, col("_side").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        unioned.withColumn("_asof", last(col("_asof"), ignoreNulls = true).over(w))
-      }
+    val w = (if (partitionCols.nonEmpty) Window.partitionBy(partitionCols.map(col): _*)
+             else Window.partitionBy())
+      .orderBy(col(on).asc, col("_side").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val filled = unioned.withColumn("_asof", last(col("_asof"), ignoreNulls = true).over(w))
     rightVals.foldLeft(filled.where(col("_side") === 1)) { (d, c) =>
       d.withColumn(c, col("_asof").getField(c))
     }.drop("_asof", "_side")
@@ -105,34 +97,6 @@ object AsofJoin {
     val l = left.withColumn("_bkt", Resample.bucket(on, ctxTf))
     val r = right.withColumnRenamed(on, "_bkt")
     l.join(broadcast(r), partitionCols :+ "_bkt", "left").drop("_bkt")
-  }
-
-  /** Broadcast range-interval as-of (J1-c): each ctx row gets a validity
-    * interval [ts, next_ts) via lead(); exec rows left-join the single
-    * covering interval. With ctx broadcast, the probe distributes over the
-    * exec partitions with NO global sort — the right shape whenever ctx is
-    * small relative to exec (a coarser timeframe always is). Unlike
-    * [[bucketJoin]] this needs no grid alignment: missing ctx buckets fall
-    * back to the previous interval exactly like [[backward]].
-    */
-  def broadcastRange(left: DataFrame, right: DataFrame, on: String = "ts",
-                     partitionCols: Seq[String] = Nil): DataFrame = {
-    val collide = right.columns.toSeq
-      .filterNot(c => c == on || partitionCols.contains(c))
-      .intersect(left.columns.toSeq)
-    require(collide.isEmpty, s"column collision: ${collide.mkString(",")}")
-    val w = (if (partitionCols.nonEmpty) Window.partitionBy(partitionCols.map(col): _*)
-             else Window.partitionBy()).orderBy(col(on))
-    val r = right
-      .withColumn("_next", lead(col(on), 1).over(w))
-      .withColumnRenamed(on, "_rts")
-    val keyCond = partitionCols.map(c => left(c) === r(c))
-    val rangeCond = left(on) >= r("_rts") && (r("_next").isNull || left(on) < r("_next"))
-    val joined = left.join(broadcast(r), (keyCond :+ rangeCond).reduce(_ && _), "left")
-    // drop the RIGHT side's key copies by Column reference — drop(String*)
-    // would remove the left side's attributes of the same name too
-    partitionCols.foldLeft(joined)((d, c) => d.drop(r(c)))
-      .drop("_rts", "_next")
   }
 
   /** Directional as-of join with an optional match tolerance — the full

@@ -792,37 +792,14 @@ object Dedup {
     * (polynomial word hash + div/mod bit extraction, no engine intrinsics).
     *
     * Computed by the native one-pass [[graft.functions.SimHash]] kernel —
-    * the HOF form ([[simhashHof]]) re-scans the word-hash array once per bit
-    * through interpreted CodegenFallback lambdas (32 passes/row), which was
-    * 56% of the round-1 bench. The kernel is the codegen'd inner loop; the
-    * HOF form is retained as the executable spec for equivalence tests.
+    * the HOF form (`DedupRef.simhashHof` under src/test) re-scans the
+    * word-hash array once per bit through interpreted CodegenFallback
+    * lambdas (32 passes/row), which was 56% of the round-1 bench. The kernel
+    * is the codegen'd inner loop; the HOF form is the executable spec for
+    * equivalence tests.
     */
   def simhash(text: Column, bits: Int = DefaultSimhashBits): Column =
     graft.functions.TextFunctions.simHash(text, bits)
-
-  /** HOF reference form of [[simhash]] (kept for kernel equivalence tests).
-    * Mirrors the kernel's vote source exactly, including the WIDE path: for
-    * bits > 32 the votes past bit 29 come from the second-level remix
-    * h2 = (h² mod P · 2654435761 + 11) mod P — the same 60-bit widening
-    * [[graft.functions.TextFunctions.simHash]] documents (bits ≤ 32 reads
-    * only h, so bits 30-31 vote constant −1 in both forms).
-    */
-  def simhashHof(text: Column, bits: Int = DefaultSimhashBits): Column = {
-    require(bits <= 60, s"simhashHof supports at most 60 bits, got $bits")
-    val wide = bits > 32
-    val ws = TextAnalysis.words(text)
-    val hashes = transform(ws, w => TextAnalysis.fingerprint(w))
-    def bitOf(h: Column, j: Int): Column =
-      if (j < 30) shiftright(h, j).bitwiseAND(1L)
-      else if (!wide) lit(0L)
-      else shiftright((h * h % P * 2654435761L + 11L) % P, j - 30).bitwiseAND(1L)
-    val bitCols = (0 until bits).map { j =>
-      val contrib = aggregate(hashes, lit(0L),
-        (acc, h) => acc + (bitOf(h, j) * 2L - 1L))
-      when(contrib > 0, lit(1L)).otherwise(lit(0L)) * lit(1L << j)
-    }
-    bitCols.reduce(_ + _)
-  }
 
   /** Hamming distance between two simhash values (bit_count of xor). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -189,17 +189,6 @@ object DedupState {
     Tables.map(t => t -> spark.read.parquet(tablePath(stateDir, cur, t))).toMap
   }
 
-  /** The batch fingerprint recorded by the CURRENT generation's commit
-    * marker, if any (legacy gen 0 and pre-batch-id markers read as None).
-    * An ingest compares this against its own batch's fingerprint to make
-    * replay-after-a-crash-past-the-marker a no-op instead of a
-    * double-merge.
-    */
-  def currentBatchId(spark: SparkSession, stateDir: String): Option[String] = {
-    val hfs = fs(spark, stateDir)
-    currentGen(hfs, stateDir).filter(_ > 0).flatMap(g => readMarker(hfs, stateDir, g))
-  }
-
   /** Fingerprints recorded by EVERY generation ever committed: archived
     * markers of vacuumed generations (oldest first), then the retained
     * generations' live markers. The replay guard must consult all of them,
@@ -294,7 +283,7 @@ object DedupState {
     // create() exposes a zero-length _COMMITTED before the fingerprint
     // bytes land, so a crash between create and close would publish the
     // generation with an EMPTY identity — committedGens sees it committed,
-    // currentBatchId reads None, and the orchestrator's re-run of the
+    // committedBatchIds omits its batch, and the orchestrator's re-run of the
     // "failed" ingest double-merges the delta (the exact corruption this
     // protocol exists to prevent). Write a tmp name, then rename: rename
     // within a directory is atomic on the local FS and HDFS, and

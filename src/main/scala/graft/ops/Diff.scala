@@ -55,12 +55,4 @@ object Diff {
         compareCols.flatMap(c => Seq(col(s"old_$c"), col(s"new_$c")))): _*)
   }
 
-  /** Summary form: one row per status with row count — the shape a
-    * migration gate asserts on ("0 removed, <1% changed") without
-    * materializing the row-level delta.
-    */
-  def snapshotDiffSummary(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String],
-                          compareCols: Seq[String]): DataFrame =
-    snapshotDiff(oldDf, newDf, keys, compareCols)
-      .groupBy(col("status")).agg(count(lit(1)).as("n_rows"))
 }

@@ -39,30 +39,30 @@ import org.apache.spark.sql.functions._
 object Fill {
 
   /** Forward-fill `cols` (last non-null wins) ordered by `ts` within `keys`
-    * groups. `ts` must be unique per key group (a resample/grid output is) —
-    * unless a `tie` column makes (ts, tie) unique, e.g. AsofJoin's side tag.
-    * With a tie column, at most ONE row per equal-(keys, ts) set may carry a
-    * non-null fill value (true for every as-of shape: only the ctx side is
-    * non-null, and ctx timestamps are unique per key) — the phase-2 carry
-    * summaries pick the boundary donor by struct min/max, which at equal ts
-    * resolves backward ties toward the SMALLEST tie while the in-chunk desc
-    * traversal resolves toward the largest; with a single donor per ts the
-    * two agree and the global-window bit-equality holds.
+    * groups. `ts` must be unique per key group (a resample/grid output is).
     * `chunkSeconds` is in the native unit of `ts` cast to long (seconds for
     * timestamps; pass ns-scaled chunks for raw ts_ns columns).
     */
   def ffill(df: DataFrame, cols: Seq[String], keys: Seq[String] = Nil,
-            ts: String = "ts", chunkSeconds: Long = 86400L,
-            tie: Option[String] = None): DataFrame =
-    biFill(df, cols, Nil, keys, ts, chunkSeconds, tie)
+            ts: String = "ts", chunkSeconds: Long = 86400L): DataFrame =
+    biFill(df, cols, Nil, keys, ts, chunkSeconds)
 
   /** Backward-fill `cols` (next non-null wins). */
   def bfill(df: DataFrame, cols: Seq[String], keys: Seq[String] = Nil,
-            ts: String = "ts", chunkSeconds: Long = 86400L,
-            tie: Option[String] = None): DataFrame =
-    biFill(df, Nil, cols, keys, ts, chunkSeconds, tie)
+            ts: String = "ts", chunkSeconds: Long = 86400L): DataFrame =
+    biFill(df, Nil, cols, keys, ts, chunkSeconds)
 
-  /** Forward-fill `fcols` AND backward-fill `bcols` in one two-phase pass. */
+  /** Forward-fill `fcols` AND backward-fill `bcols` in one two-phase pass.
+    * `ts` must be unique per key group unless a `tie` column makes (ts, tie)
+    * unique, e.g. AsofJoin's side tag. With a tie column, at most ONE row
+    * per equal-(keys, ts) set may carry a non-null fill value (true for
+    * every as-of shape: only the ctx side is non-null, and ctx timestamps
+    * are unique per key) — the phase-2 carry summaries pick the boundary
+    * donor by struct min/max, which at equal ts resolves backward ties
+    * toward the SMALLEST tie while the in-chunk desc traversal resolves
+    * toward the largest; with a single donor per ts the two agree and the
+    * global-window bit-equality holds.
+    */
   def biFill(df: DataFrame, fcols: Seq[String], bcols: Seq[String],
              keys: Seq[String] = Nil, ts: String = "ts",
              chunkSeconds: Long = 86400L, tie: Option[String] = None): DataFrame = {

@@ -144,27 +144,4 @@ object Layout {
       .drop("_z")
   }
 
-  /** [[zorderedBy]] with bounds taken from the data: ONE min/max aggregate
-    * over the two columns (map-side partials, 1-row result), then the
-    * single-pass cluster. Cost: the input is scanned twice — once for the
-    * bounds, once for the rewrite — so callers who already know the domain
-    * (partition ranges, schema contracts) should pass bounds explicitly.
-    * Degenerate domains (constant column, empty input) widen to a unit
-    * interval so `normalize`'s hi > lo contract holds.
-    */
-  def zorderedByAuto(df: DataFrame, colA: String, colB: String,
-                     targetFileBytes: Long = 128L << 20): DataFrame = {
-    val r = df.agg(
-      min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-      min(col(colB)).cast("double"), max(col(colB)).cast("double")).head()
-    def bound(loIdx: Int, hiIdx: Int): (Double, Double) = {
-      val lo = if (r.isNullAt(loIdx)) 0.0 else r.getDouble(loIdx)
-      val hi = if (r.isNullAt(hiIdx)) 1.0 else r.getDouble(hiIdx)
-      if (hi > lo) (lo, hi) else (lo, lo + 1.0)
-    }
-    val (aLo, aHi) = bound(0, 1)
-    val (bLo, bHi) = bound(2, 3)
-    zorderedBy(df, colA, aLo, aHi, colB, bLo, bHi,
-      partitionsFor(df, targetFileBytes))
-  }
 }

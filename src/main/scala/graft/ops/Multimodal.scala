@@ -523,22 +523,6 @@ object Multimodal {
       }
       Decoded(w, h, rSum, gSum, bSum)
     }
-
-    /** JPEG fixture encoder (JDK writer). Lossy by nature — fixtures built
-      * with it pin determinism and tolerance bands, never exact sums.
-      */
-    def encodeJpeg(width: Int, height: Int, pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-      require(width > 0 && height > 0, "need positive dimensions")
-      val img = new java.awt.image.BufferedImage(width, height,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until height; x <- 0 until width) {
-        val (r, g, b) = pixel(x, y)
-        img.setRGB(x, y, (r & 0xff) << 16 | (g & 0xff) << 8 | (b & 0xff))
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      require(javax.imageio.ImageIO.write(img, "jpg", bos), "no JPEG writer available")
-      bos.toByteArray
-    }
   }
 
   /** Typed row for [[extractImageFeatures]] (format-agnostic grain). */
@@ -621,28 +605,4 @@ object Multimodal {
       }
   }
 
-  /** "Resize": metadata transform only (a real impl would transcode bytes).
-    * Kept as a pure column expression — no data movement.
-    */
-  def resizeMeta(decoded: DataFrame, maxSide: Int): DataFrame = {
-    val scale = least(lit(1.0),
-      lit(maxSide.toDouble) / greatest(col("width"), col("height")))
-    decoded
-      .withColumn("out_width", greatest(lit(1), floor(col("width") * scale)).cast("int"))
-      .withColumn("out_height", greatest(lit(1), floor(col("height") * scale)).cast("int"))
-  }
-
-  /** Frame sampling for "video" blobs: every k-th fixed-size window of the
-    * byte stream becomes a frame payload — the partition/batch shape of real
-    * frame extraction, with arithmetic standing in for the codec.
-    */
-  def sampleFrames(media: DataFrame, frameBytes: Int, everyK: Int): DataFrame = {
-    media
-      .withColumn("n_frames", (length(col("media")) / frameBytes).cast("int"))
-      .withColumn("frame_idx",
-        explode(sequence(lit(0), greatest(floor((col("n_frames") - 1) / everyK).cast("int"), lit(0)))))
-      .withColumn("frame",
-        expr(s"substring(media, frame_idx * $everyK * $frameBytes + 1, $frameBytes)"))
-      .drop("media")
-  }
 }

@@ -3,19 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Row shape for the typed OR-levels variant. */
-case class OrInputRow(symbol: String, session_date: java.sql.Date,
-                      ts: java.sql.Timestamp, high: Double, low: Double, close: Double,
-                      or_start: java.sql.Timestamp, or_end: java.sql.Timestamp,
-                      in_or: Boolean, after: Boolean)
-
-case class OrLevelRow(symbol: String, session_date: java.sql.Date, tz: String,
-                      or_start: java.sql.Timestamp, or_end: java.sql.Timestamp,
-                      or_high: Double, or_low: Double, break_dir: String,
-                      break_ts: Option[java.sql.Timestamp],
-                      retest_ts: Option[java.sql.Timestamp],
-                      retest_price: Option[Double])
-
 /** Named liquidity/session profiles (reference:
   * src/datalake/liquidity_profiles.py:2-8 LIQUIDITY_PROFILES_CRYPTO /
   * DEFAULT_CRYPTO_PROFILE): a profile names the session timezone, the local
@@ -152,69 +139,5 @@ object OrLevels {
       .drop("_up_ts", "_dn_ts", "_rt_up", "_rt_dn")
       .select((keys ++ Seq("session_date", "tz", "or_start", "or_end", "or_high", "or_low",
         "break_dir", "break_ts", "retest_ts", "retest_price")).map(col): _*)
-  }
-
-  /** Typed variant (SURVEY §2.10's direct mapping of the reference's
-    * per-session loop): `groupByKey(session).flatMapGroups` with an in-group
-    * sort — the Scala analogue of applyInPandas. Semantically identical to
-    * [[build]] (an equivalence property test pins this); kept because (a) it
-    * is the natural home for per-session logic too imperative for
-    * conditional aggregation, and (b) it cross-validates the expression
-    * implementation on arbitrary data. Scale: one shuffle on (symbol,
-    * session_date); each group is one session of bars (<=1440 rows), sorted
-    * in memory per group.
-    */
-  def buildTyped(df: DataFrame, tz: String = "UTC", orWindow: String = "00:00-01:00"): DataFrame = {
-    val Array(startHm, endHm) = orWindow.split("-")
-    def hm(s: String): (Int, Int) = { val a = s.split(":"); (a(0).toInt, a(1).toInt) }
-    val (sh, sm) = hm(startHm)
-    val (eh, em) = hm(endHm)
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    val local = from_utc_timestamp(col("ts"), tz)
-    val orStartLocal = make_timestamp(year(local), month(local), dayofmonth(local), lit(sh), lit(sm), lit(0))
-    val orEndLocal = make_timestamp(year(local), month(local), dayofmonth(local), lit(eh), lit(em), lit(0))
-    val prepared = df.select(
-      col("symbol"),
-      to_date(local).as("session_date"),
-      col("ts"), col("high"), col("low"), col("close"),
-      to_utc_timestamp(orStartLocal, tz).as("or_start"),
-      to_utc_timestamp(orEndLocal, tz).as("or_end"),
-      (local >= orStartLocal && local < orEndLocal).as("in_or"),
-      (local >= orEndLocal).as("after"),
-    ).as[OrInputRow]
-
-    prepared
-      .groupByKey(r => (r.symbol, r.session_date.toString))
-      .flatMapGroups { (key: (String, String), it: Iterator[OrInputRow]) =>
-        val sym = key._1
-        val rows = it.toArray.sortBy(_.ts.getTime)
-        val orSlice = rows.filter(_.in_or)
-        if (orSlice.isEmpty) Iterator.empty
-        else {
-          val orHigh = orSlice.map(_.high).max
-          val orLow = orSlice.map(_.low).min
-          val after = rows.filter(_.after)
-          val up = after.find(_.close > orHigh).map(_.ts)
-          val dn = after.find(_.close < orLow).map(_.ts)
-          val (dir, breakTs) = (up, dn) match {
-            case (Some(u), Some(d)) => if (u.getTime <= d.getTime) ("UP", Some(u)) else ("DOWN", Some(d))
-            case (Some(u), None) => ("UP", Some(u))
-            case (None, Some(d)) => ("DOWN", Some(d))
-            case _ => ("NONE", None)
-          }
-          val retest = dir match {
-            case "UP" => after.find(_.low <= orHigh)
-            case "DOWN" => after.find(_.high >= orLow)
-            case _ => None
-          }
-          val head = rows.head
-          Iterator.single(OrLevelRow(sym, head.session_date, tz,
-            head.or_start, head.or_end, orHigh, orLow, dir, breakTs,
-            retest.map(_.ts), retest.map(_.close)))
-        }
-      }
-      .toDF()
   }
 }

@@ -30,13 +30,6 @@ object Qc {
   /** Zero-filled per-hour histogram for one day slice (reference A6). */
   def hourHistogram(df: DataFrame): DataFrame = EventOps.hourHistogram(df)
 
-  /** Monotonic-ts + dedup sanity: rows whose ts does not strictly increase
-    * within (keys) order — should be empty on a healthy partition.
-    */
-  def duplicateKeys(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
-      .where(col("n") > 1)
-
   /** Deequ-style per-column data profile: row count, null count, exact
     * distinct count, and numeric min/max (null for non-numeric columns).
     * The observability snapshot a pipeline publishes per ingest so schema

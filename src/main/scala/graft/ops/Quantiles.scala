@@ -597,7 +597,8 @@ object Quantiles {
     * The re-selected global bottom-k equals the bottom-k of the raw union
     * (lossless merge, see [[sampleQuantileState]]), so the fold touches
     * only sketch rows (≤ partitions × k per group) yet returns exactly
-    * what [[sampleQuantiles]] computes directly over the raw data —
+    * what the direct single-pass form (`QuantilesRef.sampleQuantiles`
+    * under src/test) computes over the raw data —
     * asserted bit-for-bit by PropertySpec at several partitionings.
     *
     * Output: (groupCols, n_total = exact non-null row count accumulated
@@ -622,18 +623,5 @@ object Quantiles {
     val counts = sample.groupBy(g: _*).agg(count(lit(1)).as("n_sampled"))
     val quants = exactInterpolated(sample, groupCols, "_v", specs)
     nullSafeJoin(nullSafeJoin(totals, counts, groupCols), quants, groupCols)
-  }
-
-  /** Direct (single-pass) form of the sample-quantile sketch: bottom-k
-    * sample of the whole input per group, then interpolated percentiles of
-    * the sample. Defined AS state+merge over a constant partition key so
-    * the fold-equivalence is structural, not re-derived arithmetic.
-    */
-  def sampleQuantiles(df: DataFrame, groupCols: Seq[String], idCol: String,
-                      valueCol: String, k: Int,
-                      specs: Seq[(Double, String)]): DataFrame = {
-    val st = sampleQuantileState(df.withColumn("_part", lit(0)),
-      groupCols, "_part", idCol, valueCol, k)
-    sampleQuantileMerge(st, groupCols, "_part", k, specs)
   }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.{cosineNative, dotNative, normNative}
+import graft.functions.VectorFunctions.{dotNative, normNative}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -18,8 +18,7 @@ import graft.functions.VectorFunctions.{cosineNative, dotNative, normNative}
   * Spark's higher-order functions are CodegenFallback and interpreted
   * per-element evaluation dominates pairwise similarity. Results are the
   * same sequential IEEE fold DuckDB's list_dot_product computes, so oracle
-  * parity is exact. The `dot`/`cosine` HOF forms below are kept as the
-  * portable reference implementation.
+  * parity is exact.
   */
 object Similarity {
 
@@ -28,8 +27,7 @@ object Similarity {
   /** Pairwise cosine with PRE-COMPUTED norms: inside an O(n·m) pair join the
     * per-pair cost drops from three dot products (a·b, a·a, b·b) to one —
     * the norms are computed once per ROW before the join, not once per PAIR.
-    * Bit-identical to [[graft.functions.VectorFunctions.cosineNative]]
-    * (same `dot / (normA * normB)` IEEE evaluation order), so the DuckDB
+    * The IEEE evaluation order stays `dot / (normA * normB)`, so the DuckDB
     * oracle formula still matches exactly.
     */
   /** NaN-guarded: a zero-norm vector (a failed/dead encode — realistic in
@@ -53,16 +51,9 @@ object Similarity {
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Exact top-k per query row via join + window rank. `queries` and
     * `corpus` both carry (id, vec). The cross join is the exact-answer
-    * cost; use [[lshTopK]] when approximate is acceptable.
+    * cost; use [[ivfTopK]] when approximate is acceptable.
     */
   def topKJoin(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                k: Int): DataFrame = {
@@ -90,7 +81,7 @@ object Similarity {
     * already far away). Exact form of the standard ANN-based miner.
     *
     * Same declared-exact all-pairs contract as [[topKJoin]] (and the same
-    * scale twin: run the candidate generation through [[ivfTopK]]/[[lshTopK]]
+    * scale twin: run the candidate generation through [[ivfTopK]]
     * and post-filter labels when the corpus is too big for brute force).
     * The label-mismatch predicate rides INSIDE the pair join, so same-label
     * pairs are discarded before the top-k window; per-row norms are
@@ -113,58 +104,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
       .select(col("anchor_id"), col("rank"), col("negative_id"), col("cosine"))
-  }
-
-  /** Deterministic pseudo-random hyperplanes: component j of plane p is
-    * derived from a portable integer hash, mapped to [-1, 1).
-    *
-    * The hash is the SPLITMIX64 finalizer over the flat index — the
-    * xor-shift-multiply cascade matters, not just any arithmetic: the
-    * previous affine form (`seed·K1 + idx·K2`) made plane p+1 a tiny phase
-    * shift of plane p (at dim = 64, adjacent planes differ by 64·K2 mod
-    * 2^64 ≈ 0.5% of the domain per component), so all nPlanes sign bits
-    * almost always agreed and the bucket key collapsed to ~1 effective
-    * bit — LSH degenerated to one giant bucket (r14 review finding;
-    * SimilaritySpec pins plane decorrelation via bucket dispersion).
-    */
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] =
-    (0 until nPlanes).map { p =>
-      // delegates to the ONE plane-value source (r15) so the composition
-      // form and the BandedLshKeys kernel can never drift
-      (0 until dim).map(j => graft.functions.VectorKernels.planeValue(seed, p, dim, j))
-    }
-
-  /** Random-hyperplane LSH bucket key: sign bits of dot(v, plane_p). */
-  def lshKey(vec: Column, planes: Seq[Seq[Double]]): Column = {
-    val bits = planes.zipWithIndex.map { case (plane, p) =>
-      val pl = array(plane.map(lit): _*)
-      when(dotNative(vec, pl) > 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Approximate top-k: bucket corpus and queries by LSH key, rank within
-    * the shared bucket only. Equi-join on the bucket key — scales as a
-    * shuffle on bucket keys instead of a cross product.
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-              k: Int, nPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        normNative(col(vecCol)).as("_qn"))
-      .withColumn("bucket", lshKey(col("_qv"), planes))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-        normNative(col(vecCol)).as("_cn"))
-      .withColumn("bucket", lshKey(col("_cv"), planes))
-    val scored = q.join(c, "bucket")
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(pairCosine("_qv", "_qn", "_cv", "_cn"), 6))
-      .where(col("cosine").isNotNull) // dead vectors occupy no ranks
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
   /** IVF-style ANN: assign every vector to its nearest of `nCentroids`
@@ -342,9 +281,10 @@ object Similarity {
     require(bands >= 1 && planesPerBand >= 1 && planesPerBand <= 62,
       s"need 1 <= planesPerBand <= 62 and bands >= 1, got $planesPerBand/$bands")
     // ONE compiled pass computes all band keys (graft.functions
-    // .BandedLshKeys): the per-band lshKey composition inlines bands x
-    // planes literal-array dot expressions and blows the 64 KB generated-
-    // method limit at the defaults, knocking the stage out of codegen
+    // .BandedLshKeys): the per-band composition (SimilarityRef.lshKey under
+    // src/test, the kernel's reference) inlines bands x planes literal-array
+    // dot expressions and blows the 64 KB generated-method limit at the
+    // defaults, knocking the stage out of codegen
     val keyed = corpus.select(col(idCol).as("id"), col(vecCol).as("_v"),
         normNative(col(vecCol)).as("_n"),
         graft.functions.VectorFunctions.bandedLshKeys(col(vecCol), bands,
@@ -398,7 +338,7 @@ object Similarity {
         normNative(col(vecCol)).as("_vn"))
       .join(broadcast(centArr.withColumn("_cn", normNative(col("_c")))), "label")
       // zero-norm-guarded (pairCosine — also one dot per row instead of
-      // cosineNative's three): an unguarded dead vector's NaN cosine would
+      // an unguarded cosine's three): an unguarded dead vector's NaN cosine would
       // cast to a silent NULL in the decimal sum while count(lit(1)) still
       // counted it, deflating mean_cos as if the vector scored 0. NULL +
       // a defined-cosine denominator instead: dead vectors stay visible in

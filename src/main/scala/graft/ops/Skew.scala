@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
   * key into `factor` sub-keys: the skewed (large) side gets a deterministic
   * salt derived from a row hash; the small side is replicated across all
   * salts. AQE's skew-join handling covers sort-merge joins automatically;
-  * salting is the explicit fallback for aggregations and non-SMJ plans.
+  * salting is the explicit fallback for plans AQE does not cover.
   */
 object Skew {
 
-  /** Add a deterministic salt column in [0, factor) to the large side.
+  /** Add a deterministic salt column `_salt` in [0, factor) to the large side.
     *
     * The salt hashes the ROW'S FULL CONTENT — never
     * `monotonically_increasing_id`/`rand`/`spark_partition_id`, which are
@@ -32,8 +32,7 @@ object Skew {
     * salt on the rest of its content. A frame whose EVERY column is
     * map-typed cannot be content-salted and is rejected up front.
     */
-  def saltLarge(df: DataFrame, keyCols: Seq[String], factor: Int,
-                saltCol: String = "_salt"): DataFrame = {
+  def saltLarge(df: DataFrame, keyCols: Seq[String], factor: Int): DataFrame = {
     def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: org.apache.spark.sql.types.MapType => false
       case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
@@ -43,29 +42,23 @@ object Skew {
     val cols = df.schema.fields.filter(f => hashable(f.dataType)).map(f => col(f.name))
     require(cols.nonEmpty,
       "saltLarge: every column contains a MapType — no content to hash a deterministic salt from")
-    df.withColumn(saltCol, pmod(xxhash64(cols.toIndexedSeq: _*), lit(factor)).cast("int"))
+    df.withColumn("_salt", pmod(xxhash64(cols.toIndexedSeq: _*), lit(factor)).cast("int"))
   }
 
   /** Replicate the small side across every salt value. */
-  def replicateSmall(df: DataFrame, factor: Int, saltCol: String = "_salt"): DataFrame =
-    df.withColumn(saltCol, explode(sequence(lit(0), lit(factor - 1))))
-      .withColumn(saltCol, col(saltCol).cast("int"))
+  def replicateSmall(df: DataFrame, factor: Int): DataFrame =
+    df.withColumn("_salt", explode(sequence(lit(0), lit(factor - 1))))
+      .withColumn("_salt", col("_salt").cast("int"))
 
-  /** Salted equi-join: join on keyCols + salt, then drop the salt. */
-  def saltedJoin(large: DataFrame, small: DataFrame, keyCols: Seq[String],
-                 factor: Int, joinType: String = "inner"): DataFrame =
-    saltLarge(large, keyCols, factor)
-      .join(replicateSmall(small, factor), keyCols :+ "_salt", joinType)
-      .drop("_salt")
-
-  /** Two-phase skew-safe aggregation: partial aggregate on (keys, salt),
-    * then final aggregate on keys. Caller supplies mergeable partial/final
-    * expression pairs (e.g. sum/sum, count/sum).
+  /** Salted inner equi-join: join on keyCols + salt, then drop the salt.
+    * Inner only: under an outer join each replicated small-side row that
+    * finds no match would come out once per empty salt.
     */
-  def twoPhaseCount(df: DataFrame, keyCols: Seq[String], factor: Int): DataFrame =
-    saltLarge(df, keyCols, factor)
-      .groupBy((keyCols :+ "_salt").map(col): _*).agg(count(lit(1)).as("_partial"))
-      .groupBy(keyCols.map(col): _*).agg(sum(col("_partial")).as("n"))
+  def saltedJoin(large: DataFrame, small: DataFrame, keyCols: Seq[String],
+                 factor: Int): DataFrame =
+    saltLarge(large, keyCols, factor)
+      .join(replicateSmall(small, factor), keyCols :+ "_salt")
+      .drop("_salt")
 
   /** Join-key skew diagnosis — the "should I salt this join?" report that
     * decides between a plain shuffle join and [[saltedJoin]]/AQE skew

@@ -49,17 +49,15 @@ object TextAnalysis {
 
   /** One-pass native per-document statistics struct (n_tokens,
     * mean_word_len, punct_ratio, stopword_ratio, lang_* marker hits) — the
-    * compiled kernel behind every function below. The HOF `*Hof` forms are
-    * kept as executable specs (interpreted CodegenFallback lambdas, one
-    * array scan per statistic) and pinned equal by TextOpsSpec.
+    * compiled kernel behind every function below. Its interpreted HOF twins
+    * (`TextAnalysisRef.*Hof` under src/test: CodegenFallback lambdas, one
+    * array scan per statistic) are the executable specs TextOpsSpec pins it
+    * equal to.
     */
   def stats(text: Column): Column = graft.functions.TextFunctions.textStats(text)
 
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = stats(text).getField("n_tokens")
-
-  /** HOF spec form of [[tokenCount]]. */
-  def tokenCountHof(text: Column): Column = size(words(text))
 
   /** A BPE-ish subword proxy: count of word-boundary + non-alnum splits,
     * approximating tokenizer token counts without a vocab (deterministic,
@@ -71,12 +69,6 @@ object TextAnalysis {
   /** Punctuation-character ratio. */
   def punctRatio(text: Column): Column = stats(text).getField("punct_ratio")
 
-  /** HOF spec form of [[punctRatio]]. */
-  def punctRatioHof(text: Column): Column =
-    when(length(text) > 0,
-      length(regexp_replace(text, "[^.!?,;:]", "")).cast("double") / length(text))
-      .otherwise(lit(0.0))
-
   /** Ratio of stopword tokens (tiny fixed English list — heuristic quality
     * signal, same spirit as length/punct/stopword scoring in web-scale
     * pipelines).
@@ -85,23 +77,7 @@ object TextAnalysis {
 
   def stopwordRatio(text: Column): Column = stats(text).getField("stopword_ratio")
 
-  /** HOF spec form of [[stopwordRatio]]. */
-  def stopwordRatioHof(text: Column): Column = {
-    val ws = words(text)
-    when(size(ws) > 0,
-      size(filter(ws, w => w.isInCollection(stopwords))).cast("double") / size(ws))
-      .otherwise(lit(0.0))
-  }
-
   def meanWordLen(text: Column): Column = stats(text).getField("mean_word_len")
-
-  /** HOF spec form of [[meanWordLen]]. */
-  def meanWordLenHof(text: Column): Column = {
-    val ws = words(text)
-    when(size(ws) > 0,
-      aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double") / size(ws))
-      .otherwise(lit(0.0))
-  }
 
   /** Composite quality score in [0,1]: long enough, words not degenerate,
     * not punctuation-soup. Thresholds are heuristic; the value is the
@@ -124,14 +100,6 @@ object TextAnalysis {
   def langScores(text: Column): Seq[(String, Column)] =
     langMarkers.map { case (lang, _) => lang -> stats(text).getField(s"lang_$lang") }
 
-  /** HOF spec form of [[langScores]]. */
-  def langScoresHof(text: Column): Seq[(String, Column)] = {
-    val ws = words(text)
-    langMarkers.map { case (lang, markers) =>
-      lang -> size(filter(ws, w => w.isInCollection(markers)))
-    }
-  }
-
   def langId(text: Column): Column = {
     val scores = langScores(text)
     val best = greatest(scores.map(_._2): _*)
@@ -147,13 +115,6 @@ object TextAnalysis {
     * xxhash64/md5-of-engine internals. Used as the document fingerprint.
     */
   def fingerprint(text: Column): Column = graft.functions.TextFunctions.polyHash(text)
-
-  /** HOF reference form of [[fingerprint]] (kept for kernel equivalence tests). */
-  def fingerprintHof(text: Column): Column =
-    aggregate(
-      transform(split(text, ""), c => ascii(c).cast("long")),
-      lit(0L),
-      (h, c) => (h * 31L + c) % 1000000007L)
 
   /** PII redaction patterns, applied in order (email first so its digits
     * are gone before the digit-run pattern sees them). Regexes stay inside

@@ -153,33 +153,4 @@ object DedupStream {
     if (anchor != null) state.update(anchor)
     out.iterator
   }
-
-  /** Run the stream to completion over a bounded input and return the
-    * distinct emitted candidates — the batch-parity surface used by the
-    * spec (a pair can emit from several shared buckets, exactly like the
-    * batch op before ITS distinct).
-    */
-  def anchorCandidatesFinal(docs: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int, queryName: String,
-                            bits: Int = graft.ops.Dedup.DefaultSimhashBits): DataFrame =
-    StreamRun.toCompletion(anchorCandidates(docs, idCol, textCol, maxHamming, bits),
-      "update", queryName).distinct()
-
-  /** Run the stream to completion over a bounded input and return the
-    * final registry — the batch-parity surface used by the spec. A
-    * bucket's count strictly grows across its update emissions, so the
-    * final entry per bucket is simply the max-count row.
-    */
-  def bucketsFinal(docs: DataFrame, idCol: String, textCol: String,
-                   queryName: String,
-                   bits: Int = graft.ops.Dedup.DefaultSimhashBits): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("chunk"), col("v"))
-      .orderBy(col("n_docs").desc)
-    StreamRun.toCompletion(simhashBuckets(docs, idCol, textCol, bits),
-        "update", queryName)
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-  }
 }

@@ -77,12 +77,6 @@ object Scd2Stream {
     out.result().iterator
   }
 
-  /** Run the stream to completion over a bounded input and return the
-    * CLOSED version rows — what the streaming operator itself emits.
-    */
-  def historyFinal(changes: DataFrame, queryName: String): DataFrame =
-    StreamRun.toCompletion(history(changes), "append", queryName)
-
   /** Closed rows + reconstructed open versions (valid_to NULL) = the full
     * batch-equivalent history; the parity surface used by the spec.
     *

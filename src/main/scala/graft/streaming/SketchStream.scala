@@ -148,25 +148,6 @@ object SketchStream {
     HllEstimate(group, hit, z, est)
   }
 
-  /** Run the stream to completion over a bounded input and return the final
-    * HLL estimate per group — the batch-parity surface used by the spec.
-    */
-  def hllFinal(events: DataFrame, groupCol: String, valueCol: String,
-               p: Int, queryName: String): DataFrame = {
-    // Registers only grow, so across a group's update rows n_buckets_hit
-    // only grows and z_scaled only shrinks — the final state is the row
-    // with (max hit, min z), no sink ordering assumed.
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(col("group"))
-      .orderBy(col("n_buckets_hit").desc, col("z_scaled").asc)
-    StreamRun.toCompletion(hllDistinct(events, groupCol, valueCol, p),
-        "update", queryName)
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-  }
-
   // -------------------------------------------------------------------
   // Streaming count-min
   // -------------------------------------------------------------------
@@ -206,20 +187,6 @@ object SketchStream {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Run the stream to completion over a bounded input and return the
-    * final sketch cells — the batch-parity surface used by the spec.
-    */
-  def countMinFinal(events: DataFrame, keyCol: String, depth: Int,
-                    width: Int, queryName: String): DataFrame = {
-    // Update mode re-emits a cell's row whenever its count grows; the
-    // final value per cell is simply the max count ever emitted
-    import org.apache.spark.sql.functions._
-    StreamRun.toCompletion(countMin(events, keyCol, depth, width),
-        "update", queryName)
-      .groupBy(col("row"), col("cell"))
-      .agg(max(col("cnt")).as("cnt"))
-  }
-
   // -------------------------------------------------------------------
   // Streaming bottom-k sample quantile sketch
   // -------------------------------------------------------------------
@@ -237,9 +204,10 @@ object SketchStream {
                             p50: Double, p90: Double, p99: Double)
 
   /** Streaming bottom-k sample quantile sketch — the streaming twin of the
-    * batch `Quantiles.sampleQuantiles` (q131), as [[kmvDistinct]] is of
-    * q63. The sample merges LOSSLESSLY (the global bottom-k by the total
-    * (hash, id) order is contained in the union of per-batch bottom-ks),
+    * batch `Quantiles.sampleQuantileState` sketch (q131), as
+    * [[kmvDistinct]] is of q63. The sample merges LOSSLESSLY (the global
+    * bottom-k by the total (hash, id) order is contained in the union of
+    * per-batch bottom-ks),
     * so per-group state is a fixed k (hash, id, value) triple array plus
     * one count FOREVER, and the final estimates over a bounded input are
     * BIT-IDENTICAL to the batch operator's (asserted by the parity spec):
@@ -297,43 +265,5 @@ object SketchStream {
     }
     SampleEstimate(group, st.nTotal, vs.length.toLong,
       pct(0.5), pct(0.9), pct(0.99))
-  }
-
-  /** Run the stream to completion over a bounded input and return the
-    * final estimates per group — the batch-parity surface used by the
-    * spec. n_total strictly grows across a group's update emissions, so
-    * the final row per group is the max-n_total row.
-    */
-  def sampleQuantilesFinal(events: DataFrame, groupCol: String, idCol: String,
-                           valueCol: String, k: Int,
-                           queryName: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(col("group")).orderBy(col("n_total").desc)
-    StreamRun.toCompletion(sampleQuantiles(events, groupCol, idCol, valueCol, k),
-        "update", queryName)
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-  }
-
-  /** Run the stream to completion over a bounded input and return the final
-    * estimate per group — the batch-parity surface used by the spec.
-    */
-  def kmvFinal(events: DataFrame, groupCol: String, valueCol: String,
-               k: Int, queryName: String): DataFrame = {
-    // Update mode appends a row per (micro-batch, group). The final state
-    // per group is identified by the VALUES, not sink order: n_seen only
-    // grows as the stream progresses, and at equal n_seen the kth hash
-    // only shrinks (smaller hashes displace larger ones).
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(col("group"))
-      .orderBy(col("n_seen").desc, col("kth").asc)
-    StreamRun.toCompletion(kmvDistinct(events, groupCol, valueCol, k),
-        "update", queryName)
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
   }
 }

@@ -137,32 +137,4 @@ object TransitionStream {
     last.foreach(state.update)
     out.result().iterator
   }
-
-  /** Run the attribution stream to completion over a bounded input and
-    * return (attributed, n_conversions, revenue) — q92's aggregate shape,
-    * the batch-parity surface used by the spec.
-    */
-  def attributionsFinal(events: DataFrame, gapSeconds: Long,
-                        targetType: String, queryName: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    StreamRun.toCompletion(attributions(events, gapSeconds, targetType),
-        "append", queryName)
-      .groupBy(col("attributed"))
-      .agg(count(lit(1)).as("n_conversions"),
-        sum(round(col("value"), 4)
-          .cast(org.apache.spark.sql.types.DecimalType(28, 4)))
-          .cast("double").as("revenue"))
-  }
-
-  /** Run the stream to completion over a bounded input and return the
-    * final (from_type, to_type, n) counts — the batch-parity surface used
-    * by the spec.
-    */
-  def transitionsFinal(events: DataFrame, gapSeconds: Long,
-                       queryName: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    StreamRun.toCompletion(transitions(events, gapSeconds), "append", queryName)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-  }
 }

@@ -39,9 +39,9 @@ class CandleOpsSpec extends AnyFunSuite {
 
   test("resample labels are left: first M5 00:00, last 23:55; M15 23:45; H1 23:00") {
     def lastLabel(tf: Timeframe) =
-      Resample.ohlcv(day, tf).agg(max(col("ts"))).head.getTimestamp(0).toString
+      Resample.ohlcv(day, tf).agg(max(col("ts"))).head().getTimestamp(0).toString
     def firstLabel(tf: Timeframe) =
-      Resample.ohlcv(day, tf).agg(min(col("ts"))).head.getTimestamp(0).toString
+      Resample.ohlcv(day, tf).agg(min(col("ts"))).head().getTimestamp(0).toString
     assert(firstLabel(Timeframe.M5) === "2025-08-01 00:00:00.0")
     assert(lastLabel(Timeframe.M5) === "2025-08-01 23:55:00.0")
     assert(lastLabel(Timeframe.M15) === "2025-08-01 23:45:00.0")
@@ -56,7 +56,7 @@ class CandleOpsSpec extends AnyFunSuite {
 
   test("resample semantics: M5 open is the first bar's open, volume the sum") {
     val first5 = day.orderBy("ts").limit(5).collect()
-    val m5head = Resample.ohlcv(day, Timeframe.M5).orderBy("ts").limit(1).head
+    val m5head = Resample.ohlcv(day, Timeframe.M5).orderBy("ts").limit(1).head()
     assert(m5head.getAs[Double]("open") === first5.head.getAs[Double]("open"))
     assert(m5head.getAs[Double]("close") === first5.last.getAs[Double]("close"))
     assert(m5head.getAs[Double]("high") === first5.map(_.getAs[Double]("high")).max)
@@ -71,8 +71,8 @@ class CandleOpsSpec extends AnyFunSuite {
     assert(plain.where(col("ts") === lit("2025-08-01 00:05:00")).count() === 0)
     val filled = Resample.ohlcvFfill(gappy, Timeframe.M5)
     assert(filled.count() === 288)
-    val hole = filled.where(col("ts") === lit("2025-08-01 00:05:00")).head
-    val prior = filled.where(col("ts") === lit("2025-08-01 00:00:00")).head
+    val hole = filled.where(col("ts") === lit("2025-08-01 00:05:00")).head()
+    val prior = filled.where(col("ts") === lit("2025-08-01 00:00:00")).head()
     assert(hole.getAs[Double]("close") === prior.getAs[Double]("close"))
     assert(hole.getAs[Double]("volume") === 0.0)
   }
@@ -84,8 +84,8 @@ class CandleOpsSpec extends AnyFunSuite {
       m5.select(col("ts"), col("close").as("close_m5")))
     assert(joined.count() === 1440)
     // exec bar at 00:05 must see the M5 bar labeled 00:05 (tie included)
-    val at = joined.where(col("ts") === lit("2025-08-01 00:05:00")).head
-    val m5at = m5.where(col("ts") === lit("2025-08-01 00:05:00")).head
+    val at = joined.where(col("ts") === lit("2025-08-01 00:05:00")).head()
+    val m5at = m5.where(col("ts") === lit("2025-08-01 00:05:00")).head()
     assert(at.getAs[Double]("close_m5") === m5at.getAs[Double]("close"))
     // no nulls after the first ctx ts
     assert(joined.where(col("close_m5").isNull).count() === 0)
@@ -110,40 +110,6 @@ class CandleOpsSpec extends AnyFunSuite {
     assert(general.sameElements(bucketed))
   }
 
-  test("broadcastRange asof equals backward, including across missing ctx buckets") {
-    // m5 from a gappy m1: several M5 buckets absent -> true as-of fallback
-    val gappy = day.where(!(col("ts") >= lit("2025-08-01 10:00:00") &&
-      col("ts") < lit("2025-08-01 10:30:00")))
-    val m5 = Resample.ohlcv(gappy, Timeframe.M5).select(col("ts"), col("close").as("close_m5"))
-    val exec = day.select(col("ts"), col("close"))
-    val viaWindow = AsofJoin.backward(exec, m5).orderBy("ts").collect()
-    val viaRange = AsofJoin.broadcastRange(exec, m5)
-      .select("ts", "close", "close_m5").orderBy("ts").collect()
-    assert(viaWindow.sameElements(viaRange))
-    // the 10:00-10:30 exec rows must see the 09:55 bar (general fallback,
-    // which the grid bucketJoin would get wrong)
-    val at = viaRange.find(_.getTimestamp(0).toString == "2025-08-01 10:10:00.0").get
-    val m5prev = m5.where(col("ts") === lit("2025-08-01 09:55:00")).head
-    assert(at.getAs[Double]("close_m5") === m5prev.getAs[Double]("close_m5"))
-  }
-
-  test("broadcastRange with partitionCols keeps the left key column and matches backward") {
-    // two symbols with different ctx values: a cross-symbol leak or a dropped
-    // key column both fail this test
-    val execA = day.select(lit("AAA").as("symbol"), col("ts"), col("close"))
-    val execB = day.select(lit("BBB").as("symbol"), col("ts"), (col("close") * 2).as("close"))
-    val exec = execA.unionByName(execB)
-    val m5 = Resample.ohlcv(day, Timeframe.M5)
-    val ctx = m5.select(lit("AAA").as("symbol"), col("ts"), col("close").as("close_m5"))
-      .unionByName(m5.select(lit("BBB").as("symbol"), col("ts"), (col("close") * 2).as("close_m5")))
-    val viaRange = AsofJoin.broadcastRange(exec, ctx, partitionCols = Seq("symbol"))
-    assert(viaRange.columns.count(_ == "symbol") === 1, viaRange.columns.toSeq)
-    val got = viaRange.select("symbol", "ts", "close", "close_m5").orderBy("symbol", "ts").collect()
-    val want = AsofJoin.backward(exec, ctx, partitionCols = Seq("symbol"))
-      .select("symbol", "ts", "close", "close_m5").orderBy("symbol", "ts").collect()
-    assert(got.sameElements(want))
-  }
-
   test("backward asof with chunking (hot-key split) equals the window form") {
     // m5 from a gappy m1 so chunks see empty ctx stretches; 1h chunks force
     // many carry-ins across chunk boundaries, including the equal-ts tie
@@ -152,22 +118,28 @@ class CandleOpsSpec extends AnyFunSuite {
     val m5 = Resample.ohlcv(gappy, Timeframe.M5).select(col("ts"), col("close").as("close_m5"))
     val exec = day.select(col("ts"), col("close"))
     val want = AsofJoin.backward(exec, m5).orderBy("ts").collect()
-    val got = AsofJoin.backward(exec, m5, chunk = 3600L)
+    val got = AsofJoin.directed(exec, m5, direction = "backward", chunk = 3600L)
       .select("ts", "close", "close_m5").orderBy("ts").collect()
     assert(got.sameElements(want))
+    // the exec rows inside the ctx gap see the last bar before it (09:55):
+    // the as-of fallback a grid bucketJoin would get wrong
+    val at = got.find(_.getTimestamp(0).toString == "2025-08-01 10:10:00.0").get
+    val m5prev = m5.where(col("ts") === lit("2025-08-01 09:55:00")).head()
+    assert(at.getAs[Double]("close_m5") === m5prev.getAs[Double]("close_m5"))
     // keyed variant too
     val execK = exec.withColumn("symbol", lit("AAA"))
     val m5K = m5.withColumn("symbol", lit("AAA"))
     val wantK = AsofJoin.backward(execK, m5K, partitionCols = Seq("symbol"))
       .select("symbol", "ts", "close", "close_m5").orderBy("ts").collect()
-    val gotK = AsofJoin.backward(execK, m5K, partitionCols = Seq("symbol"), chunk = 3600L)
+    val gotK = AsofJoin.directed(execK, m5K, partitionCols = Seq("symbol"),
+      direction = "backward", chunk = 3600L)
       .select("symbol", "ts", "close", "close_m5").orderBy("ts").collect()
     assert(gotK.sameElements(wantK))
   }
 
   test("bar-end shift moves 00:00 to 00:01 (reference normalize.py)") {
     val shifted = SynthSource.barEndShift(day)
-    assert(shifted.agg(min(col("ts"))).head.getTimestamp(0).toString === "2025-08-01 00:01:00.0")
+    assert(shifted.agg(min(col("ts"))).head().getTimestamp(0).toString === "2025-08-01 00:01:00.0")
     assert(shifted.count() === 1440)
   }
 
@@ -178,7 +150,7 @@ class CandleOpsSpec extends AnyFunSuite {
       (10L, 5.0, 1.0), (20L, 9.0, 1.0), (30L, 2.0, 1.0), (40L, 7.0, 1.0))
     val df = rows.toDF("ts", "price", "size").repartition(4) // force merge path
     val c = df.agg(graft.functions.CandleAgg.candle(col("ts"), col("price"), col("size")).as("c"))
-      .select("c.open", "c.high", "c.low", "c.close", "c.volume").head
+      .select("c.open", "c.high", "c.low", "c.close", "c.volume").head()
     assert(c.getDouble(0) === 5.0) // price at min ts
     assert(c.getDouble(1) === 9.0)
     assert(c.getDouble(2) === 2.0)
@@ -188,11 +160,11 @@ class CandleOpsSpec extends AnyFunSuite {
     val withNulls = Seq((1L, Some(3.0)), (2L, None), (3L, Some(4.0)))
       .toDF("ts", "price").repartition(2)
     val n = withNulls.agg(graft.functions.CandleAgg.candle(col("ts"), col("price"), lit(1.0)).as("c"))
-      .select("c.open", "c.close", "c.volume").head
+      .select("c.open", "c.close", "c.volume").head()
     assert(n.getDouble(0) === 3.0 && n.getDouble(1) === 4.0 && n.getDouble(2) === 2.0)
     val empty = Seq((1L, Option.empty[Double])).toDF("ts", "price")
       .agg(graft.functions.CandleAgg.candle(col("ts"), col("price"), lit(1.0)).as("c"))
-      .select("c").head
+      .select("c").head()
     assert(empty.isNullAt(0))
   }
 
@@ -251,12 +223,12 @@ class CandleOpsSpec extends AnyFunSuite {
     val right = Seq((100L, Option(5.0)), (200L, Option.empty[Double])).toDF("s", "v")
       .select(timestamp_seconds(col("s")).as("ts"), col("v"))
     def theV(df: org.apache.spark.sql.DataFrame): Option[Double] = {
-      val r = df.select(col("v")).head
+      val r = df.select(col("v")).head()
       if (r.isNullAt(0)) None else Some(r.getDouble(0))
     }
     assert(theV(AsofJoin.backward(left, right)) === None,
       "window-form backward must serve the matched row's null")
-    assert(theV(AsofJoin.backward(left, right, chunk = 50L)) === None,
+    assert(theV(AsofJoin.directed(left, right, direction = "backward", chunk = 50L)) === None,
       "chunked backward must serve the matched row's null (row crosses chunks)")
     assert(theV(AsofJoin.directed(left, right, tolerance = Some(50L), chunk = 100L)) === None,
       "tolerance must never admit a value from beyond it via fill-through-null")

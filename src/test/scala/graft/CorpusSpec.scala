@@ -379,7 +379,7 @@ class CorpusSpec extends AnyFunSuite {
     assert(changed.size === 1)
     // matches shuffledExport's shard for that doc
     val shard17 = Corpus.shuffledExport(df, "doc_id", 4)
-      .where(col("doc_id") === 17L).select("shard").head.getLong(0)
+      .where(col("doc_id") === 17L).select("shard").head().getLong(0)
     assert(changed.head === shard17)
   }
 

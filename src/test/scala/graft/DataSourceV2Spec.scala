@@ -49,7 +49,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(df.select("symbol").distinct().count() === 2)
     // half-open window: first minute included, end excluded
     val ts = df.where(col("symbol") === "BTC-USD").agg(
-      min(col("ts")).cast("long"), max(col("ts")).cast("long")).head
+      min(col("ts")).cast("long"), max(col("ts")).cast("long")).head()
     assert(ts.getLong(0) === java.time.Instant.parse("2025-08-01T00:00:00Z").getEpochSecond)
     assert(ts.getLong(1) === java.time.Instant.parse("2025-08-01T23:59:00Z").getEpochSecond)
   }

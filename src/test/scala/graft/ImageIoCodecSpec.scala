@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Multimodal
+import graft.ops.{ImageIoRef, Multimodal}
 import graft.ops.Multimodal.{BmpCodec, ImageIoCodec, PngCodec}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,7 +42,7 @@ class ImageIoCodecSpec extends AnyFunSuite {
     // a uniform 16x16 image: JPEG's DC-only blocks reconstruct it almost
     // exactly; per-channel error bounded by quantization of the DC term
     val w = 16; val h = 16
-    val bytes = ImageIoCodec.encodeJpeg(w, h, (_, _) => (120, 60, 200))
+    val bytes = ImageIoRef.encodeJpeg(w, h, (_, _) => (120, 60, 200))
     val d1 = ImageIoCodec.decode(bytes)
     val d2 = ImageIoCodec.decode(bytes)
     assert(d1 === d2, "same bytes, same JDK -> identical features")
@@ -71,7 +71,7 @@ class ImageIoCodecSpec extends AnyFunSuite {
       val bytes = (id % 3) match {
         case 0 => PngCodec.encode(w, h, pixel)
         case 1 => BmpCodec.encode(w, h, pixel)
-        case _ => ImageIoCodec.encodeJpeg(w, h, pixel)
+        case _ => ImageIoRef.encodeJpeg(w, h, pixel)
       }
       (id, bytes)
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, DedupState}
+import graft.ops.{Dedup, DedupRef, DedupState}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -109,7 +109,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     for (bits <- Seq(32, 48)) {
       val diff = docs.select(
         Dedup.simhash(col("text"), bits).as("k"),
-        Dedup.simhashHof(col("text"), bits).as("h"))
+        DedupRef.simhashHof(col("text"), bits).as("h"))
         .where(col("k") =!= col("h")).count()
       assert(diff === 0L, s"kernel/HOF divergence at bits=$bits")
     }
@@ -227,7 +227,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val docs = docsDf.as[(Long, String)].collect().toSeq.sortBy(_._1)
     val input = MemoryStream[(Long, String)]
     docs.grouped(math.max(1, docs.size / 4 + 1)).foreach(c => input.addData(c))
-    val streamed = graft.streaming.DedupStream
+    val streamed = graft.streaming.StreamDrains
       .anchorCandidatesFinal(input.toDF().toDF("doc_id", "text"), "doc_id",
         "text", maxHamming = 3, queryName = "anchor_cand_w48", bits = 48)
       .orderBy("doc_id", "anchor_id").as[(Long, Long, Long)].collect().toSeq

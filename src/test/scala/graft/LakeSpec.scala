@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Timeframe
 import graft.lake.{LakeProvider, LakeReader, LakeWriter}
-import graft.ops.{Gaps, OrLevels}
+import graft.ops.{Gaps, OrLevels, OrLevelsRef}
 import graft.sources.SynthSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,7 +37,7 @@ class LakeSpec extends AnyFunSuite {
       Some(ts("2025-08-01 00:00:00")), Some(ts("2025-08-02 00:00:00")))
     assert(day1.count() === 1440)
     // open upper bound: nothing from 08-02 included
-    assert(day1.agg(max(col("ts"))).head.getTimestamp(0).before(ts("2025-08-02 00:00:00")))
+    assert(day1.agg(max(col("ts"))).head().getTimestamp(0).before(ts("2025-08-02 00:00:00")))
     // re-upsert the same batch: idempotent (O8); re-read from the fresh listing
     LakeWriter.upsert(spark, root, bars)
     val again = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1",
@@ -59,12 +59,12 @@ class LakeSpec extends AnyFunSuite {
     val provider = new graft.lake.LakeProvider(spark, root)
     def m15close(day: String, hm: String): Double =
       provider.loadTf("BTC-USD", "M15", Some(ts(s"$day 00:00:00")), None)
-        .where(col("ts") === ts(s"$day $hm")).select("close").head.getDouble(0)
+        .where(col("ts") === ts(s"$day $hm")).select("close").head().getDouble(0)
     val julyOrig = bars.where(col("ts") === ts("2025-07-31 10:14:00"))
-      .select("close").head.getDouble(0) // last M1 bar of the 10:00 M15 bucket
+      .select("close").head().getDouble(0) // last M1 bar of the 10:00 M15 bucket
     assert(m15close("2025-07-31", "10:00:00") === julyOrig + 9.0) // refreshed
     val augOrig = bars.where(col("ts") === ts("2025-08-01 10:14:00"))
-      .select("close").head.getDouble(0)
+      .select("close").head().getDouble(0)
     assert(m15close("2025-08-01", "10:00:00") === augOrig) // STALE: not refreshed
     // refreshing August catches it up
     graft.lake.Aggregates.refreshMonths(spark, root, Timeframe.M15, Seq((2025, 8)))
@@ -92,15 +92,15 @@ class LakeSpec extends AnyFunSuite {
     assert(unified.count() === 1441) // 1440 batch keys + 1 fresh stream-only bar
     // the restated hour took the stream close (+7 over the batch value)
     val batchClose = bars.where(col("ts") === ts("2025-08-01 00:30:00"))
-      .select("close").head.getDouble(0)
+      .select("close").head().getDouble(0)
     val got = unified.where(col("ts") === ts("2025-08-01 00:30:00"))
-      .select("close").head.getDouble(0)
+      .select("close").head().getDouble(0)
     assert(got === batchClose + 7.0)
     // untouched bars keep the batch value
     val untouched = bars.where(col("ts") === ts("2025-08-01 12:00:00"))
-      .select("close").head.getDouble(0)
+      .select("close").head().getDouble(0)
     assert(unified.where(col("ts") === ts("2025-08-01 12:00:00"))
-      .select("close").head.getDouble(0) === untouched)
+      .select("close").head().getDouble(0) === untouched)
     // absent batch tree -> stream side alone
     val emptyRoot = Files.createTempDirectory("lake_empty").toString
     val streamAlone = LakeReader.readUnified(spark, emptyRoot, streamDir, "synth", "BTC-USD", "M1",
@@ -172,9 +172,9 @@ class LakeSpec extends AnyFunSuite {
       .map(b => Future(LakeWriter.upsert(spark, root, b)))), 180.seconds)
     val all = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(all.count() === 2880, "no month lost, no duplicate introduced")
-    assert(all.where(col("ts") === lit("2025-01-10 10:00:00")).head
+    assert(all.where(col("ts") === lit("2025-01-10 10:00:00")).head()
       .getAs[Double]("close") === 111111.0)
-    assert(all.where(col("ts") === lit("2025-02-10 10:00:00")).head
+    assert(all.where(col("ts") === lit("2025-02-10 10:00:00")).head()
       .getAs[Double]("close") === 222222.0)
   }
 
@@ -188,7 +188,7 @@ class LakeSpec extends AnyFunSuite {
     val readBack = LakeReader.readRange(spark, root, "synth", "ETH-USD", "M1",
       Some(ts("2025-08-01 00:00:00")), Some(ts("2025-08-02 00:00:00")))
     assert(readBack.count() === 1440) // no duplicate introduced
-    val row = readBack.where(col("ts") === lit("2025-08-01 10:00:00")).head
+    val row = readBack.where(col("ts") === lit("2025-08-01 10:00:00")).head()
     assert(row.getAs[Double]("close") === 123456.0)
   }
 
@@ -203,7 +203,7 @@ class LakeSpec extends AnyFunSuite {
       .unionByName(bar.withColumn("close", lit(222.0)))
     def readClose(): Double = LakeReader.readRange(spark, root, "synth",
         "BTC-USD", "M1", None, None)
-      .where(col("ts") === lit("2025-08-01 10:00:00")).head.getAs[Double]("close")
+      .where(col("ts") === lit("2025-08-01 10:00:00")).head().getAs[Double]("close")
     LakeWriter.upsert(spark, root, dupBatch)
     val first = readClose()
     LakeWriter.upsert(spark, root, dupBatch) // identical ingest re-run
@@ -248,7 +248,7 @@ class LakeSpec extends AnyFunSuite {
     val gappy = day.where(col("ts") =!= lit("2025-08-01 03:00:00"))
     val miss = graft.ops.Gaps.minuteGaps(gappy, Seq("symbol"))
     assert(miss.count() === 1, "exactly the one removed minute is missing")
-    assert(miss.head.getAs[Long]("n_missing") === 1L)
+    assert(miss.head().getAs[Long]("n_missing") === 1L)
     val filled = graft.ops.Gaps.synthFill(gappy, Seq("symbol"))
     assert(filled.count() === 1440, "no duplicate synthetic twins beside real bars")
     assert(filled.where(col("is_synth")).count() === 1)
@@ -269,8 +269,8 @@ class LakeSpec extends AnyFunSuite {
     val filled = Gaps.synthFill(gappy)
     assert(filled.count() === 1440)
     assert(filled.where(col("is_synth")).count() === 11)
-    val prior = gappy.where(col("ts") === lit("2025-08-01 02:59:00")).head.getAs[Double]("close")
-    val synth = filled.where(col("ts") === lit("2025-08-01 03:05:00")).head
+    val prior = gappy.where(col("ts") === lit("2025-08-01 02:59:00")).head().getAs[Double]("close")
+    val synth = filled.where(col("ts") === lit("2025-08-01 03:05:00")).head()
     assert(synth.getAs[Double]("close") === prior)
     assert(synth.getAs[Double]("volume") === 0.0)
   }
@@ -326,7 +326,7 @@ class LakeSpec extends AnyFunSuite {
     assert(byDate("2025-03-08") === "2025-03-08 14:30:00.0") // EST: UTC-5
     assert(byDate("2025-03-10") === "2025-03-10 13:30:00.0") // EDT: UTC-4
     // typed variant agrees through the transition
-    val typed = OrLevels.buildTyped(days, "America/New_York", "09:30-10:00")
+    val typed = OrLevelsRef.buildTyped(days, "America/New_York", "09:30-10:00")
       .orderBy("session_date").collect()
       .map(r => r.getAs[java.sql.Date]("session_date").toString ->
         r.getAs[Timestamp]("or_start").toString).toMap

@@ -99,18 +99,6 @@ class LayoutSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("zorderedByAuto: data-derived bounds preserve rows; constant column is safe") {
-    val df = spark.range(512)
-      .select((col("id") % 32).cast("double").as("a"), (col("id") / 32).cast("double").as("b"))
-    val z = Layout.zorderedByAuto(df, "a", "b", targetFileBytes = 1L << 20)
-    assert(z.count() === 512L)
-    assert(z.agg(min("a"), max("a"), min("b"), max("b")).head() ===
-      df.agg(min("a"), max("a"), min("b"), max("b")).head())
-    // constant column: degenerate [lo, lo] domain widens instead of throwing
-    val const = spark.range(16).select(lit(7.0).as("a"), col("id").cast("double").as("b"))
-    assert(Layout.zorderedByAuto(const, "a", "b").count() === 16L)
-  }
-
   test("per-file boxes: z-order layout skips most files on a b-band; linear-by-a skips none") {
     // Vanilla Spark prunes parquet at row-group level using exactly the
     // per-file/row-group min-max the writer laid down — so measure THAT:

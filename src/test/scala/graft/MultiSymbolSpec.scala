@@ -32,7 +32,7 @@ class MultiSymbolSpec extends AnyFunSuite {
       val got = LakeReader.readRange(spark, root, "synth", s, "M1",
         Some(Timestamp.valueOf("2025-08-01 00:00:00")), Some(Timestamp.valueOf("2025-08-02 00:00:00")))
       assert(got.count() === 1440, s)
-      assert(got.select("symbol").distinct().head.getString(0) === s)
+      assert(got.select("symbol").distinct().head().getString(0) === s)
     }
   }
 
@@ -56,8 +56,8 @@ class MultiSymbolSpec extends AnyFunSuite {
       Map("M5" -> m5), partitionCols = Seq("source", "symbol"))
     assert(joined.count() === 3 * 1440)
     // context for symbol B at 00:07 must equal B's own 00:05 bar
-    val at = joined.where(col("symbol") === "BBB-USD" && col("ts") === lit("2025-08-01 00:07:00")).head
-    val bBar = m5.where(col("symbol") === "BBB-USD" && col("ts") === lit("2025-08-01 00:05:00")).head
+    val at = joined.where(col("symbol") === "BBB-USD" && col("ts") === lit("2025-08-01 00:07:00")).head()
+    val bBar = m5.where(col("symbol") === "BBB-USD" && col("ts") === lit("2025-08-01 00:05:00")).head()
     assert(at.getAs[Double]("close_M5") === bBar.getAs[Double]("close"))
   }
 

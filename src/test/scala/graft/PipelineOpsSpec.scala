@@ -30,7 +30,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("piiCount does not double-count an email's digits as a digit run") {
     val df = Seq("reach 123456789@example.com now").toDF("text")
     val got = df.select(TextAnalysis.scrubPii(col("text")).as("s"),
-      TextAnalysis.piiCount(col("text")).cast("long").as("n")).head
+      TextAnalysis.piiCount(col("text")).cast("long").as("n")).head()
     assert(got.getString(0) === "reach <EMAIL> now")
     assert(got.getLong(1) === 1L)
   }
@@ -77,13 +77,13 @@ class PipelineOpsSpec extends AnyFunSuite {
       Seq(0.5 -> "p50")).isEmpty)
     val one = Seq(("a", 7.0)).toDF("g", "v")
     val q = graft.ops.Quantiles.exactInterpolated(one, Seq("g"), "v",
-      Seq(0.0 -> "p0", 0.5 -> "p50", 1.0 -> "p100")).head
+      Seq(0.0 -> "p0", 0.5 -> "p50", 1.0 -> "p100")).head()
     assert(q.getDouble(1) === 7.0 && q.getDouble(2) === 7.0 && q.getDouble(3) === 7.0)
 
     val noRows = Seq.empty[(Long, Long)].toDF("ord", "w")
     assert(graft.ops.Packing.prefixSum(noRows, Nil, "ord", "w").isEmpty)
     val oneRow = graft.ops.Packing.packByBudget(
-      Seq((5L, 100L)).toDF("ord", "w"), Nil, "ord", "w", budget = 64L).head
+      Seq((5L, 100L)).toDF("ord", "w"), Nil, "ord", "w", budget = 64L).head()
     assert(oneRow.getAs[Long]("cum_w") === 100L)
     assert(oneRow.getAs[Long]("pack_id") === 0L)
   }
@@ -132,8 +132,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       assert(math.abs(approx(k)._1 - p50) / p50 < 0.02, s"$k p50 off: ${approx(k)._1} vs $p50")
       assert(math.abs(approx(k)._2 - p90) / p90 < 0.02, s"$k p90 off: ${approx(k)._2} vs $p90")
     }
-    val exactD = li.select(countDistinct(col("l_partkey"))).head.getLong(0)
-    val approxD = li.select(approx_count_distinct(col("l_partkey"), 0.02)).head.getLong(0)
+    val exactD = li.select(countDistinct(col("l_partkey"))).head().getLong(0)
+    val approxD = li.select(approx_count_distinct(col("l_partkey"), 0.02)).head().getLong(0)
     assert(math.abs(approxD - exactD).toDouble / exactD < 0.05,
       s"HLL distinct off: $approxD vs $exactD")
   }
@@ -298,7 +298,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val facts = Seq((1L, 210L, "f1")).toDF("user_id", "tsec", "fact")
     val pit = graft.ops.EventOps.pointInTimeJoin(facts, hist,
         "user_id", "tsec", "event_type")
-      .select(col("asof_event_type"), col("asof_version")).head
+      .select(col("asof_event_type"), col("asof_version")).head()
     assert(pit.isNullAt(0), "the matched version's NULL attr must be served as NULL")
     assert(pit.getLong(1) === 2L)
   }
@@ -422,9 +422,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     // interpolated percentile
     val small = (0 to 99).map(v => ("g", v.toLong)).toDF("g", "v")
     val se = Quantiles.histogramQuantiles(small, Seq("g"), "v",
-      Seq(0.5 -> "p50", 0.9 -> "p90")).head
+      Seq(0.5 -> "p50", 0.9 -> "p90")).head()
     val sx = Quantiles.exactInterpolated(small, Seq("g"), "v",
-      Seq(0.5 -> "p50", 0.9 -> "p90")).head
+      Seq(0.5 -> "p50", 0.9 -> "p90")).head()
     assert(se.getDouble(1) === sx.getDouble(1))
     assert(se.getDouble(2) === sx.getDouble(2))
 
@@ -432,9 +432,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val big = (1 to 2000).map(i => ("g", ((i.toLong * 7919) % 99000) + 100))
       .toDF("g", "v")
     val be = Quantiles.histogramQuantiles(big, Seq("g"), "v",
-      Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99")).head
+      Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99")).head()
     val bx = Quantiles.exactInterpolated(big, Seq("g"), "v",
-      Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99")).head
+      Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99")).head()
     (1 to 3).foreach { i =>
       val (est, exact) = (be.getDouble(i), bx.getDouble(i))
       assert(math.abs(est - exact) <= 0.1 * exact + 1.0,
@@ -445,8 +445,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     // negative values land in mirrored decades, rank order preserved
     val neg = (1 to 500).map(i => ("g", -(((i.toLong * 104729) % 900) + 100)))
       .toDF("g", "v")
-    val ne = Quantiles.histogramQuantiles(neg, Seq("g"), "v", Seq(0.5 -> "p50")).head
-    val nx = Quantiles.exactInterpolated(neg, Seq("g"), "v", Seq(0.5 -> "p50")).head
+    val ne = Quantiles.histogramQuantiles(neg, Seq("g"), "v", Seq(0.5 -> "p50")).head()
+    val nx = Quantiles.exactInterpolated(neg, Seq("g"), "v", Seq(0.5 -> "p50")).head()
     assert(math.abs(ne.getDouble(1) - nx.getDouble(1)) <= 0.1 * math.abs(nx.getDouble(1)) + 10.0,
       s"neg: est=${ne.getDouble(1)} exact=${nx.getDouble(1)}")
   }

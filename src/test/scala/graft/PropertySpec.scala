@@ -98,7 +98,7 @@ class PropertySpec extends AnyFunSuite {
       val st = graft.ops.Quantiles.sampleQuantileState(df, Seq("g"), "part", "id", "v", k)
       val folded = graft.ops.Quantiles.sampleQuantileMerge(st, Seq("g"), "part", k, specs)
         .orderBy("g").collect()
-      val direct = graft.ops.Quantiles.sampleQuantiles(df, Seq("g"), "id", "v", k, specs)
+      val direct = graft.ops.QuantilesRef.sampleQuantiles(df, Seq("g"), "id", "v", k, specs)
         .orderBy("g").collect()
       // lossless merge: folding per-part states is BIT-identical to the
       // direct global bottom-k, at any partitioning of the input
@@ -274,7 +274,7 @@ class PropertySpec extends AnyFunSuite {
         .orderBy("session_date")
         .select("symbol", "session_date", "or_start", "or_end", "or_high", "or_low",
           "break_dir", "break_ts", "retest_ts", "retest_price").collect()
-      val viaTyped = graft.ops.OrLevels.buildTyped(days, tz, "09:00-10:00")
+      val viaTyped = graft.ops.OrLevelsRef.buildTyped(days, tz, "09:00-10:00")
         .orderBy("session_date")
         .select("symbol", "session_date", "or_start", "or_end", "or_high", "or_low",
           "break_dir", "break_ts", "retest_ts", "retest_price").collect()
@@ -347,11 +347,11 @@ class PropertySpec extends AnyFunSuite {
         pmod(hour(col("ts")) * 60 + minute(col("ts")), lit(stride)) =!= lit(0))
         .select(col("ts"))
       val gaps = Gaps.dayScopedMinuteGaps(observed)
-      val totalMissing = gaps.agg(sum(col("n_missing"))).head.getLong(0)
+      val totalMissing = gaps.agg(sum(col("n_missing"))).head().getLong(0)
       val expected = days.select("ts").except(observed).where(
         // boundary minutes outside [observed min, observed max] are invisible
-        col("ts") >= observed.agg(min(col("ts"))).head.getTimestamp(0) &&
-        col("ts") <= observed.agg(max(col("ts"))).head.getTimestamp(0)).count()
+        col("ts") >= observed.agg(min(col("ts"))).head().getTimestamp(0) &&
+        col("ts") <= observed.agg(max(col("ts"))).head().getTimestamp(0)).count()
       assert(totalMissing === expected, s"seed=$seed")
       // islands are disjoint, within one day, and sorted ranges
       val rows = gaps.orderBy("gap_start").collect()

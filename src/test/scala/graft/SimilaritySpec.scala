@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Similarity
+import graft.ops.{Similarity, SimilarityRef}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +18,7 @@ class SimilaritySpec extends AnyFunSuite {
     // agreeing), voiding the bucket join's selectivity. The splitmix64
     // finalizer must spread them over a healthy share of the 2^8 keyspace.
     val dim = 64
-    val planes = Similarity.hyperplanes(8, dim)
+    val planes = SimilarityRef.hyperplanes(8, dim)
     def vecOf(s: Long): Array[Double] =
       Array.tabulate(dim) { j =>
         var h = s * 0x9e3779b97f4a7c15L + j * 0xbf58476d1ce4e5b9L
@@ -51,8 +51,8 @@ class SimilaritySpec extends AnyFunSuite {
         graft.functions.VectorFunctions.bandedLshKeys(col("vec"), bands, ppb, dim).as("k"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val composed = vecs.select(col("id") +: (0 until bands).map(b =>
-        Similarity.lshKey(col("vec"),
-          Similarity.hyperplanes(ppb, dim, seed = 42L + b)).as(s"b$b")): _*)
+        SimilarityRef.lshKey(col("vec"),
+          SimilarityRef.hyperplanes(ppb, dim, seed = 42L + b)).as(s"b$b")): _*)
       .collect().map(r => r.getLong(0) -> (1 to bands).map(r.getLong(_))).toMap
     kernel.foreach { case (id, ks) => assert(ks === composed(id), s"id=$id") }
     // dimension mismatch fails loudly, like DotProduct
@@ -246,7 +246,7 @@ class SimilaritySpec extends AnyFunSuite {
     // (with 39 live vectors over >= 3 live centroids, some query pair must
     // be SEPARATED — impossible under the one-giant-cell bug where every
     // query ranks against all others)
-    val perQuery = got.groupBy("query_id").count().agg(max("count")).head.getLong(0)
+    val perQuery = got.groupBy("query_id").count().agg(max("count")).head().getLong(0)
     assert(perQuery <= 2)
     assert(got.count() > 0)
   }

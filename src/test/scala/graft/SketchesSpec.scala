@@ -238,7 +238,7 @@ class SketchesSpec extends AnyFunSuite {
       (60 until 100).map(i => ("a", i.toLong)))
     val input = MemoryStream[(String, Long)]
     chunks.foreach(c => input.addData(c)) // three micro-batches, overlapping values
-    val streamed = graft.streaming.SketchStream
+    val streamed = graft.streaming.StreamDrains
       .kmvFinal(input.toDF().toDF("g", "v"), "g", "v", k = 8, queryName = "kmv_out")
       .orderBy("group").as[(String, Long, Long, Long)].collect().toSeq
     val batch = Sketches.kmvDistinct(chunks.flatten.toDF("g", "v"), "g", "v", k = 8)
@@ -258,7 +258,7 @@ class SketchesSpec extends AnyFunSuite {
       (3000 until 5000).map(i => ("a", i.toLong)))
     val input = MemoryStream[(String, Long)]
     chunks.foreach(c => input.addData(c)) // three micro-batches, overlapping values
-    val streamed = graft.streaming.SketchStream
+    val streamed = graft.streaming.StreamDrains
       .hllFinal(input.toDF().toDF("g", "v"), "g", "v", p = 10, queryName = "hll_out")
       .orderBy("group").as[(String, Long, Long, Long)].collect().toSeq
     val batch = Sketches.hllDistinct(chunks.flatten.toDF("g", "v"), "g", "v", p = 10)
@@ -278,7 +278,7 @@ class SketchesSpec extends AnyFunSuite {
       (0 until 300).map(i => i.toLong % 11))
     val input = MemoryStream[Long]
     chunks.foreach(c => input.addData(c))
-    val streamed = graft.streaming.SketchStream
+    val streamed = graft.streaming.StreamDrains
       .countMinFinal(input.toDF().toDF("k"), "k", depth = 4, width = 64,
         queryName = "cm_out")
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
@@ -296,7 +296,7 @@ class SketchesSpec extends AnyFunSuite {
       (0 until 200).map(i => Some(i.toLong % 13)) ++ Seq.fill(40)(None)
     val input = MemoryStream[Option[Long]]
     input.addData(vals)
-    val streamed = graft.streaming.SketchStream
+    val streamed = graft.streaming.StreamDrains
       .countMinFinal(input.toDF().toDF("k"), "k", depth = 4, width = 64,
         queryName = "cm_null_out")
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
@@ -338,7 +338,7 @@ class SketchesSpec extends AnyFunSuite {
     val docs = docsDf.as[(Long, String)].collect().toSeq
     val input = MemoryStream[(Long, String)]
     docs.grouped(math.max(1, docs.size / 2 + 1)).foreach(c => input.addData(c))
-    val streamed = graft.streaming.DedupStream
+    val streamed = graft.streaming.StreamDrains
       .bucketsFinal(input.toDF().toDF("doc_id", "text"), "doc_id", "text",
         queryName = "sh_buckets48", bits = 48)
       .orderBy("chunk", "v").as[(Long, Long, Long, Long)].collect().toSeq
@@ -369,7 +369,7 @@ class SketchesSpec extends AnyFunSuite {
     val st = graft.ops.Quantiles.sampleQuantileState(df, Seq("g"), "part", "id", "v", k = 2)
     val folded = graft.ops.Quantiles.sampleQuantileMerge(st, Seq("g"), "part", 2, specs)
       .collect().map(_.toSeq).toSeq
-    val direct = graft.ops.Quantiles.sampleQuantiles(df, Seq("g"), "id", "v", 2, specs)
+    val direct = graft.ops.QuantilesRef.sampleQuantiles(df, Seq("g"), "id", "v", 2, specs)
       .collect().map(_.toSeq).toSeq
     assert(folded === direct)
     val r = folded.head
@@ -391,12 +391,12 @@ class SketchesSpec extends AnyFunSuite {
     val chunks = rows.grouped(700).toSeq
     val input = MemoryStream[(String, Long, Double)]
     chunks.foreach(c => input.addData(c))
-    val streamed = graft.streaming.SketchStream
+    val streamed = graft.streaming.StreamDrains
       .sampleQuantilesFinal(input.toDF().toDF("g", "id", "v"), "g", "id", "v",
         k = 128, queryName = "sq_out")
       .orderBy("group")
       .as[(String, Long, Long, Double, Double, Double)].collect().toSeq
-    val batch = graft.ops.Quantiles
+    val batch = graft.ops.QuantilesRef
       .sampleQuantiles(rows.toDF("g", "id", "v"), Seq("g"), "id", "v", k = 128,
         Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99"))
       .orderBy("g")
@@ -442,7 +442,7 @@ class SketchesSpec extends AnyFunSuite {
     val docs = docsDf.as[(Long, String)].collect().toSeq.sortBy(_._1)
     val input = MemoryStream[(Long, String)]
     docs.grouped(math.max(1, docs.size / 4 + 1)).foreach(c => input.addData(c))
-    val streamed = graft.streaming.DedupStream
+    val streamed = graft.streaming.StreamDrains
       .anchorCandidatesFinal(input.toDF().toDF("doc_id", "text"), "doc_id",
         "text", maxHamming = 3, queryName = "anchor_cand")
       .orderBy("doc_id", "anchor_id")
@@ -466,7 +466,7 @@ class SketchesSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     // three micro-batches: anchors and counts must fold order-insensitively
     docs.grouped(math.max(1, docs.size / 3 + 1)).foreach(c => input.addData(c))
-    val streamed = graft.streaming.DedupStream
+    val streamed = graft.streaming.StreamDrains
       .bucketsFinal(input.toDF().toDF("doc_id", "text"), "doc_id", "text",
         queryName = "sh_buckets")
       .orderBy("chunk", "v").as[(Long, Long, Long, Long)].collect().toSeq
@@ -584,7 +584,7 @@ class SketchesSpec extends AnyFunSuite {
     assert(foldedRe === direct)
     // state cells are bounded by k
     val cellMax = Sketches.kmvState(df, "grp", "day", "v", k = 16)
-      .groupBy("grp", "day").count().agg(max("count")).head.getLong(0)
+      .groupBy("grp", "day").count().agg(max("count")).head().getLong(0)
     assert(cellMax <= 16L)
   }
 }

@@ -82,7 +82,7 @@ class SpecContractSpec extends AnyFunSuite {
     // (measure-zero half-way) or report at the exact grain of its sum.
     val spark = SparkTestSession.spark
     def one(expr: String): String =
-      spark.sql(s"SELECT CAST(($expr) AS STRING)").head.getString(0)
+      spark.sql(s"SELECT CAST(($expr) AS STRING)").head().getString(0)
     // (a) half-way pins — the post-mortem value, both as the exact decimal
     // sum and as the double a divergent engine would carry
     assert(one("round(CAST(0.0040785 AS DECIMAL(38,7)), 6)") === "0.004079",

@@ -86,7 +86,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     val chunks = ev.grouped((ev.size + 2) / 3).toSeq
     val in = MemoryStream[(Long, Long, String, Timestamp)]
     chunks.foreach(c => in.addData(c: _*))
-    val streamed = graft.streaming.TransitionStream
+    val streamed = graft.streaming.StreamDrains
       .transitionsFinal(in.toDF().toDF("user_id", "event_id", "event_type", "ts"),
         gapSeconds = 1800L, queryName = "trans_out")
       .orderBy(col("from_type"), col("to_type"))
@@ -203,7 +203,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     val chunks = ev.grouped((ev.size + 2) / 3).toSeq
     val in = MemoryStream[(Long, Long, String, Timestamp, Double)]
     chunks.foreach(c => in.addData(c: _*))
-    val streamed = graft.streaming.TransitionStream
+    val streamed = graft.streaming.StreamDrains
       .attributionsFinal(in.toDF().toDF("user_id", "event_id", "event_type", "ts", "value"),
         gapSeconds = 1800L, targetType = "purchase", queryName = "attr_out")
       .orderBy(col("attributed"))
@@ -223,7 +223,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     val chunks = ev.grouped((ev.size + 2) / 3).toSeq
     val in = MemoryStream[(Long, Long, String, Timestamp)]
     chunks.foreach(c => in.addData(c: _*))
-    val closed = graft.streaming.Scd2Stream
+    val closed = graft.streaming.StreamDrains
       .historyFinal(in.toDF().toDF("key", "id", "attr", "ts"), queryName = "scd2_out")
     val streamed = graft.streaming.Scd2Stream
       .withOpenVersions(closed, ev.toDF("key", "id", "attr", "ts"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Similarity, TextAnalysis}
+import graft.ops.{Dedup, DedupRef, Similarity, TextAnalysis, TextAnalysisRef}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("fingerprint matches the portable polynomial value") {
     val fp = Seq("hello world abc").toDF("text")
-      .select(TextAnalysis.fingerprint(col("text"))).head.getLong(0)
+      .select(TextAnalysis.fingerprint(col("text"))).head().getLong(0)
     assert(fp === 88643107L) // independently computed: ((...*31+c)%1e9+7)
   }
 
@@ -21,7 +21,7 @@ class TextOpsSpec extends AnyFunSuite {
     val df = samples.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text")
     // fingerprint: native PolyHash vs interpreted fold
     val fps = df.select(TextAnalysis.fingerprint(col("text")).as("a"),
-      TextAnalysis.fingerprintHof(col("text")).as("b")).collect()
+      TextAnalysisRef.fingerprintHof(col("text")).as("b")).collect()
     fps.foreach(r => assert(r.getLong(0) === r.getLong(1), samples))
     // shingles: native kernel vs relational spec (ngram over split words)
     val kernel = graft.functions.TextFunctions.wordShingles(col("text"), 3)
@@ -37,15 +37,15 @@ class TextOpsSpec extends AnyFunSuite {
     sh.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
     // simhash: native one-pass kernel vs 32-pass HOF reference form
     val sims = df.select(Dedup.simhash(col("text")).as("a"),
-      Dedup.simhashHof(col("text")).as("b")).collect()
+      DedupRef.simhashHof(col("text")).as("b")).collect()
     sims.foreach(r => assert(r.getLong(0) === r.getLong(1), samples))
     // textStats: native one-pass struct vs the HOF spec forms, field by field
     val t = col("text")
     val st = df.select(
-      TextAnalysis.tokenCount(t).as("a1"), TextAnalysis.tokenCountHof(t).cast("long").as("b1"),
-      TextAnalysis.meanWordLen(t).as("a2"), TextAnalysis.meanWordLenHof(t).as("b2"),
-      TextAnalysis.punctRatio(t).as("a3"), TextAnalysis.punctRatioHof(t).as("b3"),
-      TextAnalysis.stopwordRatio(t).as("a4"), TextAnalysis.stopwordRatioHof(t).as("b4")).collect()
+      TextAnalysis.tokenCount(t).as("a1"), TextAnalysisRef.tokenCountHof(t).cast("long").as("b1"),
+      TextAnalysis.meanWordLen(t).as("a2"), TextAnalysisRef.meanWordLenHof(t).as("b2"),
+      TextAnalysis.punctRatio(t).as("a3"), TextAnalysisRef.punctRatioHof(t).as("b3"),
+      TextAnalysis.stopwordRatio(t).as("a4"), TextAnalysisRef.stopwordRatioHof(t).as("b4")).collect()
     st.foreach { r =>
       assert(r.getLong(0) === r.getLong(1), samples)
       assert(r.getDouble(2) === r.getDouble(3), samples)
@@ -53,7 +53,7 @@ class TextOpsSpec extends AnyFunSuite {
       assert(r.getDouble(6) === r.getDouble(7), samples)
     }
     val ls = df.select(
-      (TextAnalysis.langScores(t).map(_._2) ++ TextAnalysis.langScoresHof(t).map(_._2)): _*).collect()
+      (TextAnalysis.langScores(t).map(_._2) ++ TextAnalysisRef.langScoresHof(t).map(_._2)): _*).collect()
     ls.foreach(r => (0 until 5).foreach(i => assert(r.getInt(i) === r.getInt(i + 5), samples)))
   }
 
@@ -297,7 +297,7 @@ class TextOpsSpec extends AnyFunSuite {
     // the native kernel tokenizes identically (tokenCount = HOF count)
     val k = Seq(("a b\n"), ("\tx"), ("\n"), ("")).toDF("text")
       .select(TextAnalysis.tokenCount(col("text")).as("a"),
-        TextAnalysis.tokenCountHof(col("text")).cast("long").as("b")).collect()
+        TextAnalysisRef.tokenCountHof(col("text")).cast("long").as("b")).collect()
     k.foreach(r => assert(r.getLong(0) === r.getLong(1)))
     assert(k(0).getLong(0) === 2L) // not 3: the "" token is gone
   }

@@ -54,16 +54,16 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     // writer B's commit SURVIVED (A aborted before publishing)...
     val readBack = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(readBack.where(col("ts") === lit("2025-08-01 09:00:00"))
-      .head.getAs[Double]("close") === 777.0)
+      .head().getAs[Double]("close") === 777.0)
     // ...and the documented repair — re-run the aborted upsert — lands A's
     // update on top of the now-current cell, preserving B's
     LakeWriter.upsert(spark, root, patchA)
     val after = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(after.count() === 1440)
     assert(after.where(col("ts") === lit("2025-08-01 09:00:00"))
-      .head.getAs[Double]("close") === 777.0)
+      .head().getAs[Double]("close") === 777.0)
     assert(after.where(col("ts") === lit("2025-08-01 10:00:00"))
-      .head.getAs[Double]("close") === 111.0)
+      .head().getAs[Double]("close") === 111.0)
   }
 
   test("same-cell detection survives partition values that need path escaping") {
@@ -86,7 +86,7 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     assert(e.getMessage.contains("concurrent commit detected"))
     val readBack = LakeReader.readRange(spark, root, "synth", "EUR/USD", "M1", None, None)
     assert(readBack.where(col("ts") === lit("2025-08-01 09:00:00"))
-      .head.getAs[Double]("close") === 777.0)
+      .head().getAs[Double]("close") === 777.0)
   }
 
   test("a DIFFERENT-cell commit mid-upsert does NOT trip the detector") {
@@ -107,9 +107,9 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val all = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(all.count() === 2880)
     assert(all.where(col("ts") === lit("2025-01-10 10:00:00"))
-      .head.getAs[Double]("close") === 111111.0)
+      .head().getAs[Double]("close") === 111111.0)
     assert(all.where(col("ts") === lit("2025-02-10 10:00:00"))
-      .head.getAs[Double]("close") === 222222.0)
+      .head().getAs[Double]("close") === 222222.0)
   }
 
   test("two TRULY concurrent different-cell mergeWrites both publish; " +
@@ -142,9 +142,9 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val all = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(all.count() === 2880)
     assert(all.where(col("ts") === lit("2025-01-10 10:00:00"))
-      .head.getAs[Double]("close") === 333333.0)
+      .head().getAs[Double]("close") === 333333.0)
     assert(all.where(col("ts") === lit("2025-02-10 10:00:00"))
-      .head.getAs[Double]("close") === 444444.0)
+      .head().getAs[Double]("close") === 444444.0)
   }
 
   test("the >maxTouched fallback DETECTS a conflict landing in a sampled cell (r15)") {
@@ -181,11 +181,11 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val after = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(after.count() === 2880)
     assert(after.where(col("ts") === lit("2025-01-10 10:00:00"))
-      .head.getAs[Double]("close") === 111.0)
+      .head().getAs[Double]("close") === 111.0)
     assert(after.where(col("ts") === lit("2025-02-10 10:00:00"))
-      .head.getAs[Double]("close") === 111.0)
+      .head().getAs[Double]("close") === 111.0)
     assert(after.where(col("ts") === lit("2025-01-10 09:00:00"))
-      .head.getAs[Double]("close") === 777.0, "B's commit must survive the abort+retry")
+      .head().getAs[Double]("close") === 777.0, "B's commit must survive the abort+retry")
   }
 
   test("the >maxTouched fallback DETECTS a conflict in EVERY touched cell " +
@@ -221,9 +221,9 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val after = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(after.count() === 2880)
     assert(after.where(col("ts") === lit("2025-02-10 10:00:00"))
-      .head.getAs[Double]("close") === 111.0)
+      .head().getAs[Double]("close") === 111.0)
     assert(after.where(col("ts") === lit("2025-02-10 09:00:00"))
-      .head.getAs[Double]("close") === 777.0,
+      .head().getAs[Double]("close") === 777.0,
       "a conflict past maxTouched but within the snapshot budget must abort, not lose B")
   }
 
@@ -252,11 +252,11 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val after = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(after.count() === 2880)
     assert(after.where(col("ts") === lit("2025-02-10 10:00:00"))
-      .head.getAs[Double]("close") === 111.0)
+      .head().getAs[Double]("close") === 111.0)
     val origB = feb.where(col("ts") === lit("2025-02-10 09:00:00"))
-      .head.getAs[Double]("close")
+      .head().getAs[Double]("close")
     assert(after.where(col("ts") === lit("2025-02-10 09:00:00"))
-      .head.getAs[Double]("close") === origB,
+      .head().getAs[Double]("close") === origB,
       "beyond-budget unsampled-cell conflict is documented to be lost — " +
       "if preserved, the contract improved: update the docs")
   }
@@ -311,7 +311,7 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     LakeWriter.upsert(spark, root, jan)
     LakeWriter.upsert(spark, root, feb)
     val origJan = jan.where(col("ts") === lit("2025-01-10 10:00:00"))
-      .head.getAs[Double]("close")
+      .head().getAs[Double]("close")
     val poisoned = jan.where(col("ts") === lit("2025-01-10 10:00:00"))
       .unionByName(feb.where(col("ts") === lit("2025-02-10 10:00:00")))
       .withColumn("close",
@@ -325,7 +325,7 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val after = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(after.count() === 2880, "crash mid-publish must not lose or duplicate rows")
     assert(after.where(col("ts") === lit("2025-01-10 10:00:00"))
-      .head.getAs[Double]("close") === origJan,
+      .head().getAs[Double]("close") === origJan,
       "January's cell must keep its OLD contents even if its tasks finished first")
     // and the documented repair — re-run without the failure — heals
     val healthy = jan.where(col("ts") === lit("2025-01-10 10:00:00"))
@@ -335,9 +335,9 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val healed = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(healed.count() === 2880)
     assert(healed.where(col("ts") === lit("2025-01-10 10:00:00"))
-      .head.getAs[Double]("close") === 111.0)
+      .head().getAs[Double]("close") === 111.0)
     assert(healed.where(col("ts") === lit("2025-02-10 10:00:00"))
-      .head.getAs[Double]("close") === 111.0)
+      .head().getAs[Double]("close") === 111.0)
   }
 
   test("a repair flow whose lineage READS the partitions it overwrites publishes cleanly") {
@@ -361,13 +361,13 @@ class UpsertConcurrencySpec extends AnyFunSuite {
     val back = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
     assert(back.count() === 1440, "no row loss, no duplicates")
     val orig = day.where(col("ts") === lit("2025-08-01 10:30:00"))
-      .head.getAs[Double]("close")
+      .head().getAs[Double]("close")
     assert(back.where(col("ts") === lit("2025-08-01 10:30:00"))
-      .head.getAs[Double]("close") === orig + 5.0)
+      .head().getAs[Double]("close") === orig + 5.0)
     // rows outside the patched hour kept their original values
     val orig2 = day.where(col("ts") === lit("2025-08-01 12:00:00"))
-      .head.getAs[Double]("close")
+      .head().getAs[Double]("close")
     assert(back.where(col("ts") === lit("2025-08-01 12:00:00"))
-      .head.getAs[Double]("close") === orig2)
+      .head().getAs[Double]("close") === orig2)
   }
 }

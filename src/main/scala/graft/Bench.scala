@@ -369,11 +369,9 @@ object Bench {
     // ~5.5 s (plan codegen + AQE + committer paths specific to its chain)
     // against a 0.3-1 s cost to run the same chain once at sf0.001. Only
     // queries with a cost hint >= 3 s warm (7 of 137): for the cheap tail
-    // a tiny-SF run costs about what it saves. Budget-guarded like the
-    // full warm pass below.
+    // a tiny-SF run costs about what it saves. Budget-guarded.
     val headWarmDir = "/root/testdata/sf0.001"
-    if (sys.env.get("SPARK_GRAFT_WARM_DIR").isEmpty &&
-        new java.io.File(headWarmDir).isDirectory) {
+    if (new java.io.File(headWarmDir).isDirectory) {
       val it = queries.iterator.filter { case (n, _) => costHint.getOrElse(n, 0.0) >= 3.0 }
       var warmCut = false
       while (it.hasNext && !warmCut) {
@@ -385,23 +383,6 @@ object Bench {
         catch { case _: Throwable => () }
         if (elapsed > budget * 0.15) warmCut = true // warm is optional work:
         // shedding it is not degradation, pass 1 still covers everything
-      }
-    }
-    // Optional separate warmup pass at a SMALL scale factor (JMH-style
-    // steady state). OFF by default since the suite crossed ~100 queries: a
-    // full extra pass costs more budget than it buys — the coverage pass
-    // below already compiles each query's generated code, and min-of-N discards
-    // that first inflated sample. Enable with SPARK_GRAFT_WARM_DIR=<dir>.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "")
-    if (warmDir.nonEmpty && warmDir != sfDir &&
-        new java.io.File(warmDir).isDirectory) {
-      val it = queries.iterator
-      var warmCut = false
-      while (it.hasNext && !warmCut) {
-        val (_, fn) = it.next()
-        try { fn(spark, warmDir).queryExecution.toRdd.count(); () }
-        catch { case _: Throwable => () } // warm failures don't mark `failed`
-        if (elapsed > budget * 0.3) { warmCut = true; degraded = true }
       }
     }
     def timeOnce(name: String,

@@ -436,11 +436,11 @@ object Cli {
                            // write — bounded (anchors ∪ one batch), so
                            // materialize once instead of three shuffles
       val routed = graft.ops.Dedup.simhashRoute(newDocs, "doc_id", "text",
-          mergedReg, maxHamming = 3, bits = stateBits)
+          mergedReg, bits = stateBits)
         .where(col("is_dup") === 1L).select(col("doc_id"), col("best_anchor"))
         .localCheckpoint() // feeds verify + the report count, once
       val newPairs = graft.ops.Dedup.verifyRoutedPairs(routed, newDocs,
-          anchorTexts, "doc_id", "text", n = 3, threshold = 0.5)
+          anchorTexts, "doc_id", "text", threshold = 0.5)
         .localCheckpoint() // feeds the fold + the report count, once
       val folded = graft.ops.Dedup
         .incrementalClusters(comps, newPairs, Some(newDocs.select(col("doc_id"))),

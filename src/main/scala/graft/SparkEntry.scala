@@ -121,27 +121,6 @@ object SparkEntry {
     root
   }
 
-  /** Spread an under-parallel scan across the session's cores (optimization
-    * guide §2.5 "input skew: one huge unsplittable file — repartition
-    * immediately after the read"): parquet row groups are the split floor,
-    * so a file with fewer row groups than the session has cores scans as
-    * that many tasks and everything fused above the scan (here: the
-    * per-row decimal rounding the dsum determinism contract requires,
-    * ~µs/row) serializes behind it. Gated on the ACTUAL scan parallelism —
-    * when the scan already yields at least half the session's cores (any
-    * healthy multi-row-group layout, i.e. every at-scale input), this is
-    * the identity and no exchange is added. Callers pass the NARROW
-    * projection so the exchange moves only the aggregated columns (§2.3).
-    * Keyless round-robin repartition: deterministic under Spark's
-    * sort-before-repartition default, and every consumer below is an
-    * order-insensitive aggregate (decimal sums / counts / min-max).
-    */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame = {
-    val cores = s.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions * 2 >= cores) df
-    else df.repartition(cores)
-  }
-
   /** Run INDEPENDENT physical-write stages of a pipeline query concurrently
     * (optimization guide §2.6 "overlap independent jobs"): Spark's scheduler
     * runs several jobs at once inside one application — stages that touch
@@ -184,7 +163,7 @@ object SparkEntry {
     // over the full corpus, DECIMAL-exact score reduction, WindowGroupLimit
     // top-k (graft.ops.Retrieval.bm25TopK)
     "q109_bm25_topk" -> ((s, dir) => {
-      Retrieval.bm25TopK(tbl(s, dir, "documents"), bm25Queries, k = 10)
+      Retrieval.bm25TopK(tbl(s, dir, "documents"), bm25Queries)
         .orderBy(col("query_id"), col("rank"))
     }),
 
@@ -236,7 +215,7 @@ object SparkEntry {
     // WindowGroupLimit (graft.ops.Corpus.chiSquareTerms)
     "q114_chi2_terms" -> ((s, dir) => {
       Corpus.chiSquareTerms(tbl(s, dir, "documents"), "lang", "text",
-          k = 10, minCount = 5L)
+          k = 10)
         .orderBy(col("lang"), col("rank"))
     }),
 
@@ -257,7 +236,7 @@ object SparkEntry {
       val d = tbl(s, dir, "documents")
         .withColumn("score", round(TextAnalysis.qualityScore(col("text")), 4))
         .withColumn("is_en", col("lang") === "en")
-      Eval.calibration(d, Seq("source"), "score", "is_en", bins = 10)
+      Eval.calibration(d, Seq("source"), "score", "is_en")
         .orderBy(col("source"), col("bin"))
     }),
 
@@ -302,8 +281,7 @@ object SparkEntry {
     // (measured exp 0.66 vs 1.02 over sf0.1→sf1; crossover ≈ 5·10⁴ docs,
     // so the bench-scale run pays ~0.5 s for the decade-up sanity)
     "q133_simhash_wide_pairs" -> ((s, dir) => {
-      Dedup.simhashCandidates(tbl(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 3, bits = 48)
+      Dedup.simhashCandidates(tbl(s, dir, "documents"), "doc_id", "text", bits = 48)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -331,8 +309,7 @@ object SparkEntry {
     // pass; DedupStream.anchorCandidates is the live twin
     // (graft.ops.Dedup.simhashAnchorCandidates)
     "q135_simhash_anchor_candidates" -> ((s, dir) => {
-      Dedup.simhashAnchorCandidates(tbl(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 3)
+      Dedup.simhashAnchorCandidates(tbl(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("anchor_id"))
     }),
 
@@ -358,7 +335,7 @@ object SparkEntry {
       val reg = Dedup.simhashBucketRegistrySigs(
         docs.where(col("doc_id") % 3 =!= 0), "doc_id", "text")
       Dedup.simhashRoute(docs.where(col("doc_id") % 3 === 0), "doc_id",
-          "text", reg, maxHamming = 3)
+          "text", reg)
         .orderBy(col("doc_id"))
     }),
 
@@ -373,8 +350,7 @@ object SparkEntry {
     // day-1 edges, only the (id, label) table + the new day's pairs.
     "q138_incremental_clusters" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").where(col("doc_id") % 2 === 0)
-      val pairs = Dedup.verifiedNearDups(docs, "doc_id", "text",
-        n = 3, k = 16, bands = 4, threshold = 0.1)
+      val pairs = Dedup.verifiedNearDups(docs, "doc_id", "text", threshold = 0.1)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint() // feeds both day splits; lineage = the whole
                            // LSH+verify pipeline, must not run twice
@@ -416,21 +392,20 @@ object SparkEntry {
       inParallel(
         () => Dedup.simhashBucketRegistrySigs(day1, "doc_id", "text")
           .write.mode("overwrite").parquet(s"$root/registry"),
-        () => Dedup.nearDupClusters(day1, "doc_id", "text",
-            n = 3, k = 16, bands = 4, threshold = 0.1)
+        () => Dedup.nearDupClusters(day1, "doc_id", "text", threshold = 0.1)
           .select(col("doc_id"), col("cluster_id"))
           .write.mode("overwrite").parquet(s"$root/components"))
       // ---- day-2 increment: route -> verify -> fold -> report ----
       val reg = s.read.parquet(s"$root/registry")
       val comps = s.read.parquet(s"$root/components")
-      val routed = Dedup.simhashRoute(day2, "doc_id", "text", reg, maxHamming = 3)
+      val routed = Dedup.simhashRoute(day2, "doc_id", "text", reg)
         .where(col("is_dup") === 1L)
         .select(col("doc_id"), col("best_anchor"))
       // shared verify stage (graft.ops.Dedup.verifyRoutedPairs) — ONE
       // definition of "verified" across this gate and Cli dedup-ingest,
       // with the empty-shingle guard matching the oracle's inner joins
       val newPairs = Dedup.verifyRoutedPairs(routed, docs, docs,
-        "doc_id", "text", n = 3, threshold = 0.1)
+        "doc_id", "text", threshold = 0.1)
       val folded = Dedup.incrementalClusters(comps, newPairs,
         Some(day2.select(col("doc_id"))))
       folded.join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
@@ -665,17 +640,14 @@ object SparkEntry {
       val withTs = docs.withColumn("ts",
         timestamp_seconds(lit(1704067200L) + col("doc_id") * 60L))
       val ref = graft.streaming.DriftStream.reference(docs, "text", vocab = 200)
-      val counts = graft.streaming.DriftStream.termCounts(withTs, ref,
-        windowSize = "1 hour")
+      val counts = graft.streaming.DriftStream.termCounts(withTs, ref)
       graft.streaming.DriftStream.klByWindow(counts, ref)
         .orderBy(col("win_sec"))
     }),
 
     // A1/A7-style pricing summary (scan + hash agg; partial agg map-side)
     "q01_pricing_summary" -> ((s, dir) => {
-      spread(s, tbl(s, dir, "lineitem")
-          .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
-            col("l_extendedprice"), col("l_discount")))
+      tbl(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           dsum(col("l_quantity")).as("sum_qty"),
@@ -839,13 +811,13 @@ object SparkEntry {
     "q16_jaccard_pairs" -> ((s, dir) => {
       Dedup.jaccardPairs(
           tbl(s, dir, "documents").where(col("doc_id") % 2 === 0),
-          "doc_id", "text", 3, 0.1)
+          "doc_id", "text", 0.1)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
     // MinHash+LSH near-dup candidates, k=16 sigs in 4 bands (graft.ops.Dedup)
     "q17_minhash_candidates" -> ((s, dir) => {
-      Dedup.minhashCandidates(tbl(s, dir, "documents"), "doc_id", "text", 3, 16, 4)
+      Dedup.minhashCandidates(tbl(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1040,7 +1012,7 @@ object SparkEntry {
     "q144_ivfpq_topk" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       Similarity.ivfPqTopK(emb.where(col("vec_id") < 5), emb,
-          "vec_id", "embedding", k = 10, nCentroids = 16)
+          "vec_id", "embedding", k = 10)
         .orderBy(col("query_id"), col("rank"))
     }),
 
@@ -1123,7 +1095,7 @@ object SparkEntry {
     "q27_simhash_pairs" -> ((s, dir) => {
       Dedup.simhashCandidates(
           tbl(s, dir, "documents").where(col("doc_id") % 4 === 0),
-          "doc_id", "text", maxHamming = 3, bits = 32)
+          "doc_id", "text", bits = 32)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1215,7 +1187,7 @@ object SparkEntry {
     // (graft.ops.TextAnalysis.topNgrams — WindowGroupLimit pushdown keeps
     // the shuffle at O(groups*k) rows per map task, not the vocabulary)
     "q33_top_ngrams" -> ((s, dir) => {
-      TextAnalysis.topNgrams(tbl(s, dir, "documents"), "lang", "text", n = 2, k = 5)
+      TextAnalysis.topNgrams(tbl(s, dir, "documents"), "lang", "text", k = 5)
         .orderBy(col("lang"), col("rank"))
     }),
 
@@ -1244,8 +1216,7 @@ object SparkEntry {
     // the canonical dedup composition: LSH candidates -> exact Jaccard
     // verify on candidates only (graft.ops.Dedup.verifiedNearDups)
     "q36_verified_near_dups" -> ((s, dir) => {
-      Dedup.verifiedNearDups(tbl(s, dir, "documents"), "doc_id", "text",
-          n = 3, k = 16, bands = 4, threshold = 0.1)
+      Dedup.verifiedNearDups(tbl(s, dir, "documents"), "doc_id", "text", threshold = 0.1)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1253,8 +1224,7 @@ object SparkEntry {
     // canonical selection (graft.ops.Dedup.nearDupClusters; min-label
     // propagation, deterministic smallest-id cluster labels)
     "q40_dedup_clusters" -> ((s, dir) => {
-      Dedup.nearDupClusters(tbl(s, dir, "documents"), "doc_id", "text",
-          n = 3, k = 16, bands = 4, threshold = 0.1)
+      Dedup.nearDupClusters(tbl(s, dir, "documents"), "doc_id", "text", threshold = 0.1)
         .orderBy(col("doc_id"))
     }),
 
@@ -1262,7 +1232,7 @@ object SparkEntry {
     // fraction + top-bigram share per doc (graft.ops.TextAnalysis)
     "q39_repetition" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val top = TextAnalysis.topNgramShare(docs, "doc_id", "text", n = 2)
+      val top = TextAnalysis.topNgramShare(docs, "doc_id", "text")
       docs.select(col("doc_id"),
           round(TextAnalysis.dupWordFraction(col("text")), 4).as("dup_word_frac"))
         .join(top, "doc_id")
@@ -1522,8 +1492,7 @@ object SparkEntry {
     // count, cross-document duplicated windows, and first-occurrence-owned
     // windows (graft.ops.Dedup.duplicateSpans)
     "q60_duplicate_spans" -> ((s, dir) => {
-      Dedup.duplicateSpans(tbl(s, dir, "documents"), "doc_id", "text",
-          window = 20, stride = 10)
+      Dedup.duplicateSpans(tbl(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -1536,7 +1505,7 @@ object SparkEntry {
       Sketches.bloomDecontaminate(
           docs.where(col("doc_id") % 10 =!= 0),
           docs.where(col("doc_id") % 10 === 0),
-          "doc_id", "text", n = 3)
+          "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -1548,7 +1517,7 @@ object SparkEntry {
       Corpus.contaminationRate(
           docs.where(col("doc_id") % 10 =!= 0),
           docs.where(col("doc_id") % 10 === 0),
-          "doc_id", "text", n = 3)
+          "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -1730,8 +1699,7 @@ object SparkEntry {
     // post-reweight effective token budget. Domain-grain agg + 1-row
     // broadcast total; the corpus never shuffles.
     "q104_mixture_weights" -> ((s, dir) => {
-      Corpus.mixtureWeights(tbl(s, dir, "documents"), "lang", "text",
-        maxWeight = 5.0)
+      Corpus.mixtureWeights(tbl(s, dir, "documents"), "lang", "text")
         .orderBy(col("lang"))
     }),
 
@@ -1740,7 +1708,7 @@ object SparkEntry {
     // explicit missing-history encoding ('none'/-1) — one user-keyed
     // window sort shared by all four lag columns.
     "q106_lag_features" -> ((s, dir) => {
-      EventOps.lagFeatures(tbl(s, dir, "events"), k = 2)
+      EventOps.lagFeatures(tbl(s, dir, "events"))
         .orderBy(col("event_id"))
     }),
 
@@ -1765,8 +1733,7 @@ object SparkEntry {
     // by pointwise mutual information over within-window co-occurrence —
     // pair generation is per-row array expressions, no self-join.
     "q107_pmi_pairs" -> ((s, dir) => {
-      TextAnalysis.pmiPairs(tbl(s, dir, "documents"), "text",
-        window = 3, minPairCount = 5L, k = 30)
+      TextAnalysis.pmiPairs(tbl(s, dir, "documents"), "text", minPairCount = 5L, k = 30)
         .orderBy(col("rank"))
     }),
 
@@ -1998,7 +1965,7 @@ object SparkEntry {
     "q87_prefix_jaccard" -> ((s, dir) => {
       Dedup.prefixJaccardPairs(
           tbl(s, dir, "documents").where(col("doc_id") % 2 === 0),
-          "doc_id", "text", 3, 0.5)
+          "doc_id", "text", 0.5)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -2186,7 +2153,7 @@ object SparkEntry {
     // retention cohorts: users by first-activity UTC day x day offset 0-7,
     // distinct active users per cell (graft.ops.EventOps.retentionCohorts)
     "q69_retention_cohorts" -> ((s, dir) => {
-      EventOps.retentionCohorts(tbl(s, dir, "events"), maxOffsetDays = 7)
+      EventOps.retentionCohorts(tbl(s, dir, "events"))
         .orderBy(col("cohort_day"), col("day_offset"))
     }),
 
@@ -2227,11 +2194,11 @@ object SparkEntry {
     // (graft.ops.Sketches.countMinSketch/countMinEstimate)
     "q64_countmin_freq" -> ((s, dir) => {
       val ev = tbl(s, dir, "events")
-      val sketch = Sketches.countMinSketch(ev, "user_id", depth = 4, width = 1024)
+      val sketch = Sketches.countMinSketch(ev, "user_id", width = 1024)
       val keys = ev.select(col("user_id")).where(col("user_id") < 100).distinct()
       val exact = ev.where(col("user_id") < 100)
         .groupBy(col("user_id")).agg(count(lit(1)).as("exact_count"))
-      Sketches.countMinEstimate(sketch, keys, "user_id", depth = 4, width = 1024)
+      Sketches.countMinEstimate(sketch, keys, "user_id", width = 1024)
         .join(exact, "user_id")
         .select(col("user_id"), col("est_count"), col("exact_count"))
         .orderBy(col("user_id"))
@@ -2387,7 +2354,7 @@ object SparkEntry {
            | n AS (SELECT count(*)::BIGINT AS n_docs, sum(dl)::DOUBLE / count(*) AS avgdl FROM dl),
            | post AS (SELECT tf.* FROM tf JOIN (SELECT DISTINCT term FROM q) qt USING (term)),
            | dfq AS (SELECT term, count(*)::BIGINT AS df FROM post GROUP BY 1),
-           | sc AS (SELECT q.query_id, p.doc_id, ${graft.ops.Retrieval.bm25ContribSql()} AS contrib
+           | sc AS (SELECT q.query_id, p.doc_id, ${graft.ops.Retrieval.bm25ContribSql} AS contrib
            |        FROM q JOIN post p USING (term) JOIN dfq USING (term)
            |        JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN n),
            | agg AS (SELECT query_id, doc_id,

@@ -352,9 +352,8 @@ object VectorFunctions {
   def normNative(a: Column): Column = org.apache.spark.sql.functions.sqrt(dotNative(a, a))
 
   /** All banded LSH bucket keys in one compiled pass (see [[BandedLshKeys]]). */
-  def bandedLshKeys(vec: Column, bands: Int, planesPerBand: Int, dim: Int,
-                    seed: Long = 42L): Column =
-    GraftColumnBridge.toColumn(BandedLshKeys(expr(vec), bands, planesPerBand, dim, seed))
+  def bandedLshKeys(vec: Column, bands: Int, planesPerBand: Int, dim: Int): Column =
+    GraftColumnBridge.toColumn(BandedLshKeys(expr(vec), bands, planesPerBand, dim, 42L))
 
   /** One PQ subspace's argmin code (see [[PqEncodeCode]]). */
   def pqEncodeCode(vec: Column, offset: Int, sub: Int, dimTotal: Int,

@@ -26,16 +26,15 @@ object Aggregates {
   /** Materialize resampled candles into the aggregates tree (idempotent
     * upsert, same merge-dedupe semantics as the data tree).
     */
-  def materialize(spark: SparkSession, root: String, m1: DataFrame, tf: Timeframe,
-                  keys: Seq[String] = Seq("source", "symbol")): Unit = {
+  def materialize(spark: SparkSession, root: String, m1: DataFrame, tf: Timeframe): Unit = {
     // carry market through the resample whenever the base HAS it (r14): a
     // multi-market lake holds the same (source, symbol) under several
     // markets, and a market-less groupBy would blend their bars into one
     // fabricated aggregate that enforce() then misfiles under the default
     // market. Bases without the column (pre-enforce candle frames) keep
-    // the declared keys and take enforce's default as before.
-    val fullKeys = if (m1.columns.contains("market") && !keys.contains("market"))
-      keys :+ "market" else keys
+    // (source, symbol) and take enforce's default as before.
+    val fullKeys = if (m1.columns.contains("market")) Seq("source", "symbol", "market")
+      else Seq("source", "symbol")
     val agg = Resample.ohlcv(m1, tf, fullKeys)
       .withColumn("timeframe", lit(tf.code))
     LakeWriter.upsertCandles(spark, LakeLayout.aggregatesRoot(root), agg)
@@ -55,8 +54,7 @@ object Aggregates {
     * silently produce torn boundary bars.
     */
   def refreshMonths(spark: SparkSession, root: String, tf: Timeframe,
-                    months: Seq[(Int, Int)],
-                    keys: Seq[String] = Seq("source", "symbol")): Unit = {
+                    months: Seq[(Int, Int)]): Unit = {
     require(86400L % tf.seconds == 0,
       s"refreshMonths needs a day-aligned timeframe; ${tf.code} (${tf.seconds}s) is not")
     if (months.isEmpty) return
@@ -66,7 +64,7 @@ object Aggregates {
       }.reduce(_ || _)
       val m1 = base.where(col("timeframe") === "M1").where(touched)
         .drop("year", "month")
-      materialize(spark, root, m1, tf, keys)
+      materialize(spark, root, m1, tf)
     }
   }
 }

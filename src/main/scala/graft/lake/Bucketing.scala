@@ -1,7 +1,6 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Bucketed-table support for co-located joins.
   *
@@ -37,6 +36,6 @@ object Bucketing {
     * counts this plans shuffle-free.
     */
   def coLocatedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                    on: Seq[String], joinType: String = "inner"): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), on, joinType)
+                    on: Seq[String]): DataFrame =
+    spark.table(leftTable).join(spark.table(rightTable), on, "inner")
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `dir` (all Spark parquet datasets):
   *   - `centroids.parquet` (cent_id, vec, norm): the frozen IVF coarse
-  *     quantizer — ≤ nCentroids rows, broadcast at query time;
+  *     quantizer — ≤ 16 rows, broadcast at query time;
   *   - `codebook.parquet`  (c, vec): the frozen PQ seed vectors — `codes`
   *     rows, array<double> (exact for float corpora);
   *   - `codes.parquet`     (neighbor_id, cell, _code0.._code{m-1}): the
@@ -48,9 +48,11 @@ object AnnIndex {
   private def hfs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  def build(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-            nCentroids: Int = 16, m: Int = 4, codes: Int = 16,
-            dim: Int = 64): Unit = {
+  /** Build the index at [[Similarity.ivfPqTopK]]'s layout (`Similarity.IvfCells`
+    * cells, `PqSubspaces` × `PqCodes` codes over `PqDim`-dim vectors).
+    */
+  def build(corpus: DataFrame, idCol: String, vecCol: String, dir: String): Unit = {
+    import Similarity.{IvfCells, PqCodes, PqDim, PqSubspaces}
     val spark = corpus.sparkSession
     import spark.implicits._
     // REBUILD INVALIDATION: drop the whole index — meta included — BEFORE
@@ -59,9 +61,9 @@ object AnnIndex {
     // with the delete-first order every crash window leaves either the
     // intact old index gone (loud: no meta) or nothing, never a lie.
     hfs(spark, dir).delete(new Path(dir), true)
-    val cents = Similarity.ivfCentroids(corpus, idCol, vecCol, nCentroids)
-    val seeds = Similarity.collectPqSeeds(corpus, idCol, vecCol, codes)
-    val pq = Similarity.pqFromSeeds(seeds, m, codes, dim)
+    val cents = Similarity.ivfCentroids(corpus, idCol, vecCol, IvfCells)
+    val seeds = Similarity.collectPqSeeds(corpus, idCol, vecCol, PqCodes)
+    val pq = Similarity.pqFromSeeds(seeds, PqSubspaces, PqCodes, PqDim)
     // the three artifact writes are mutually independent (codes needs only
     // the already-derived cents/pq, both driver-resident) — overlap them
     // (guide §2.6); only meta, the build's commit marker, must come LAST,
@@ -88,12 +90,12 @@ object AnnIndex {
         })),
       scala.concurrent.duration.Duration.Inf): Unit
     finally pool.shutdown()
-    Seq((nCentroids, m, codes, dim)).toDF("n_centroids", "m", "codes", "dim")
+    Seq((IvfCells, PqSubspaces, PqCodes, PqDim)).toDF("n_centroids", "m", "codes", "dim")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
   }
 
   private def meta(spark: SparkSession, dir: String): (Int, Int, Int, Int) = {
-    require(new java.io.File(s"$dir/meta.parquet").isDirectory,
+    require(hfs(spark, dir).exists(new Path(s"$dir/meta.parquet")),
       s"no index meta at $dir — build incomplete or missing")
     val r = spark.read.parquet(s"$dir/meta.parquet").head()
     (r.getAs[Int]("n_centroids"), r.getAs[Int]("m"),

@@ -86,17 +86,14 @@ object AsofJoin {
     * floor(left.ts / ctxTf), which Catalyst plans as a broadcast hash join
     * when ctx is small — no sort, no big shuffle.
     */
-  def bucketJoin(left: DataFrame, right: DataFrame, ctxTf: Timeframe,
-                 on: String = "ts", partitionCols: Seq[String] = Nil): DataFrame = {
+  def bucketJoin(left: DataFrame, right: DataFrame, ctxTf: Timeframe): DataFrame = {
     // same API safety as backward()/directed(): collisions error HERE, not
     // as an AMBIGUOUS_REFERENCE at the caller's next select
-    val collide = right.columns.toSeq
-      .filterNot(c => c == on || partitionCols.contains(c))
-      .intersect(left.columns.toSeq)
+    val collide = right.columns.toSeq.filterNot(_ == "ts").intersect(left.columns.toSeq)
     require(collide.isEmpty, s"column collision: ${collide.mkString(",")}")
-    val l = left.withColumn("_bkt", Resample.bucket(on, ctxTf))
-    val r = right.withColumnRenamed(on, "_bkt")
-    l.join(broadcast(r), partitionCols :+ "_bkt", "left").drop("_bkt")
+    val l = left.withColumn("_bkt", Resample.bucket("ts", ctxTf))
+    val r = right.withColumnRenamed("ts", "_bkt")
+    l.join(broadcast(r), Seq("_bkt"), "left").drop("_bkt")
   }
 
   /** Directional as-of join with an optional match tolerance — the full
@@ -108,7 +105,7 @@ object AsofJoin {
     *  - `forward`:  earliest right with right.ts >= left.ts
     *  - `nearest`:  whichever of the two is closer; exact ties prefer the
     *    backward match (documented, deterministic)
-    *  - `tolerance` (units of `on` cast to long): matches farther than this
+    *  - `tolerance` (units of `ts` cast to long): matches farther than this
     *    yield nulls for that row — the row itself is kept (left-join shape)
     *
     * One pass for ALL directions: union-tag both sides, then [[Fill.biFill]]
@@ -116,19 +113,19 @@ object AsofJoin {
     * as one struct (matched ts + values), so tolerance and nearest-selection
     * are pure per-row expression work afterwards and always row-atomic.
     *
-    * `chunk` is in `on`-CAST-LONG units: the 86400 default assumes a
+    * `chunk` is in `ts`-CAST-LONG units: the 86400 default assumes a
     * seconds-grained column (TimestampType casts to epoch seconds). For a
     * raw ns column pass an ns-scaled chunk (a day = 86400L·10⁹) — the
     * default would otherwise split a day of ns data into ~10⁹ chunks and
     * the phase-2 carry summary becomes data-sized, reintroducing exactly
     * the collapse Fill exists to avoid.
     */
-  def directed(left: DataFrame, right: DataFrame, on: String = "ts",
+  def directed(left: DataFrame, right: DataFrame,
                partitionCols: Seq[String] = Nil, direction: String = "backward",
                tolerance: Option[Long] = None, chunk: Long = 86400L): DataFrame = {
     require(Set("backward", "forward", "nearest")(direction),
       s"direction must be backward|forward|nearest, got $direction")
-    val rightVals = right.columns.toSeq.filterNot(c => c == on || partitionCols.contains(c))
+    val rightVals = right.columns.toSeq.filterNot(c => c == "ts" || partitionCols.contains(c))
     val leftCols = left.columns.toSeq
     require(rightVals.intersect(leftCols).isEmpty,
       s"column collision: ${rightVals.intersect(leftCols).mkString(",")}")
@@ -143,13 +140,13 @@ object AsofJoin {
     // values always come from the SAME row. The previous per-column fills
     // could pass the tolerance on the matched ts while serving a value
     // filled through that row's null from a row beyond the tolerance.
-    val rowStruct = struct(col(on).as("_mts") +: rightVals.map(col): _*)
+    val rowStruct = struct(col("ts").as("_mts") +: rightVals.map(col): _*)
     val rowType = right.select(rowStruct.as("_x")).schema("_x").dataType
     val dirCols = (if (needP) Seq("_p") else Nil) ++ (if (needN) Seq("_n") else Nil)
     val leftSide = dirCols.foldLeft(left.withColumn("_side", lit(1))) { (d, c) =>
       d.withColumn(c, lit(null).cast(rowType))
     }
-    val rightSide = leftCols.filterNot(c => c == on || partitionCols.contains(c))
+    val rightSide = leftCols.filterNot(c => c == "ts" || partitionCols.contains(c))
       .foldLeft(dirCols.foldLeft(right.withColumn("_side", lit(0))) { (d, c) =>
         d.withColumn(c, rowStruct)
       }.drop(rightVals: _*)) { (d, c) =>
@@ -158,10 +155,10 @@ object AsofJoin {
     val unioned = leftSide.unionByName(rightSide)
     val filled = Fill.biFill(unioned,
       if (needP) Seq("_p") else Nil, if (needN) Seq("_n") else Nil,
-      partitionCols, on, chunk, tie = Some("_side"))
+      partitionCols, chunk, tie = Some("_side"))
     val execRows = filled.where(col("_side") === 1)
 
-    val lts = col(on).cast("long")
+    val lts = col("ts").cast("long")
     val pTs = col("_p").getField("_mts").cast("long")
     val nTs = col("_n").getField("_mts").cast("long")
     def ok(m: org.apache.spark.sql.Column, dist: org.apache.spark.sql.Column) =

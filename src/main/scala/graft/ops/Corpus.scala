@@ -61,23 +61,23 @@ object Corpus {
       .agg(count(lit(1)).as("n_overlap"))
   }
 
-  /** Keep only corpus documents with NO n-gram overlap against the
+  /** Keep only corpus documents with NO word 3-gram overlap against the
     * benchmark (the filter form of [[decontaminate]]).
     */
   def decontaminated(corpus: DataFrame, benchmark: DataFrame,
-                     idCol: String, textCol: String, n: Int = 3): DataFrame =
-    corpus.join(decontaminate(corpus, benchmark, idCol, textCol, n),
+                     idCol: String, textCol: String): DataFrame =
+    corpus.join(decontaminate(corpus, benchmark, idCol, textCol, Dedup.ShingleWords),
       Seq(idCol), "left_anti")
 
   /** Graded contamination report: for every corpus document WITH AT LEAST
-    * ONE `n`-shingle (including the clean ones [[decontaminate]] omits),
+    * ONE word 3-shingle (including the clean ones [[decontaminate]] omits),
     * the distinct-shingle count, the eval-set overlap count, and the
     * contamination rate in integer basis points (n_overlap · 10000 ÷
     * n_shingles, floor division — exact across engines, no floating
-    * point). Documents shorter than `n` words produce no shingle evidence
+    * point). Documents shorter than 3 words produce no shingle evidence
     * and are ABSENT from the report (their rate would be 0/0); a consumer
     * joining on it should treat absence as "no evidence", i.e. 0 bps —
-    * they cannot be contaminated at this `n`. The boolean decontamination
+    * they cannot be contaminated at this width. The boolean decontamination
     * filter drops a doc over a single 3-gram hit; pipelines that instead
     * threshold on the RATE (e.g. quarantine > 500 bps) need this graded
     * form.
@@ -89,10 +89,12 @@ object Corpus {
     * convention (long-lived services `clearCache()` between jobs).
     */
   def contaminationRate(corpus: DataFrame, benchmark: DataFrame,
-                        idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val csh = Dedup.shingles(corpus, idCol, textCol, n).cache() // two aggregates below
+                        idCol: String, textCol: String): DataFrame = {
+    // cached: feeds the two aggregates below
+    val csh = Dedup.shingles(corpus, idCol, textCol, Dedup.ShingleWords).cache()
     val bsh = benchmark
-      .select(explode(graft.functions.TextFunctions.wordShingles(col(textCol), n)).as("shingle"))
+      .select(explode(graft.functions.TextFunctions.wordShingles(col(textCol), Dedup.ShingleWords))
+        .as("shingle"))
       .distinct()
     val totals = csh.groupBy(col(idCol)).agg(count(lit(1)).as("n_shingles"))
     val overlap = csh.join(broadcast(bsh), "shingle")
@@ -111,9 +113,9 @@ object Corpus {
     * stratum).
     */
   def stratifiedSample(df: DataFrame, stratumCol: String, idCol: String,
-                       k: Int, hashSeed: Long = 11L): DataFrame = {
+                       k: Int): DataFrame = {
     val w = Window.partitionBy(col(stratumCol))
-      .orderBy(idHash(col(idCol), hashSeed), col(idCol))
+      .orderBy(idHash(col(idCol), 11L), col(idCol))
     // null ids are dropped (the sampleQuantileState convention): a NULL id
     // hashes to a NULL rank key that sorts FIRST, stealing top-k slots from
     // real rows — nondeterministically when several NULL-id rows tie
@@ -145,9 +147,8 @@ object Corpus {
     * Output: every input column + (priority, rn), rn = 1..k per stratum.
     */
   def weightedSample(df: DataFrame, stratumCol: String, idCol: String,
-                     weightCol: String, k: Int,
-                     hashSeed: Long = 37L): DataFrame = {
-    val u = pmod(idHash(col(idCol), hashSeed), lit(1000000L)) + lit(1L)
+                     weightCol: String, k: Int): DataFrame = {
+    val u = pmod(idHash(col(idCol), 37L), lit(1000000L)) + lit(1L)
     // priority defined ONLY for w > 0 (the documented precondition): a
     // bare division let a NULL weight sort first under asc-nulls-first
     // and a negative weight produce a negative (always-winning) priority —
@@ -209,12 +210,12 @@ object Corpus {
     * rather than silently dropped.
     */
   def rebalanced(df: DataFrame, stratumCol: String, idCol: String,
-                 target: Double, hashSeed: Long = 17L): DataFrame = {
+                 target: Double): DataFrame = {
     val before = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("n_before"))
       .withColumnRenamed(stratumCol, "_stratum")
     val rate = least(lit(1.0), lit(target) / col("n_before"))
     df.join(broadcast(before), col(stratumCol) <=> col("_stratum"))
-      .where(keepRow(idCol, rate, hashSeed))
+      .where(keepRow(idCol, rate, 17L))
       .drop("_stratum", "n_before")
   }
 
@@ -231,9 +232,9 @@ object Corpus {
     * aggregated, broadcast back onto the data for the thinning filter.
     */
   def rebalance(df: DataFrame, stratumCol: String, idCol: String,
-                target: Double, hashSeed: Long = 17L): DataFrame = {
+                target: Double): DataFrame = {
     val before = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("n_before"))
-    val kept = rebalanced(df, stratumCol, idCol, target, hashSeed)
+    val kept = rebalanced(df, stratumCol, idCol, target)
       .groupBy(col(stratumCol)).agg(count(lit(1)).as("n_after"))
       .withColumnRenamed(stratumCol, "_stratum")
     before.join(kept, col(stratumCol) <=> col("_stratum"), "left")
@@ -242,15 +243,15 @@ object Corpus {
   }
 
   /** Temperature-flattened mixture sampling — the standard training-mix
-    * reweighting (multinomial sampling with weights w_s = n_s^alpha,
-    * alpha < 1 flattens the stratum distribution toward uniform; alpha=0.5
-    * is the classic sqrt temperature). Stratum s with n_s documents is
+    * reweighting (multinomial sampling with weights w_s = n_s^0.5, the
+    * classic sqrt temperature that flattens the stratum distribution
+    * toward uniform). Stratum s with n_s documents is
     * kept at rate min(1, T * w_s / (W * n_s)) where W = sum of all w_s and
     * `totalTarget` T is the desired total sample size. Selection is the
     * same hash-Bernoulli predicate as [[rebalanced]], so the SAME rows
     * survive on every run and cluster layout.
     *
-    * Cross-engine parity: alpha=0.5 uses sqrt (IEEE-exact in every engine,
+    * Cross-engine parity: the weight uses sqrt (IEEE-exact in every engine,
     * unlike libm pow which may differ at the last ulp); per-stratum weights
     * are rounded to 6 decimals and W is summed as DECIMAL so the total is
     * independent of stratum iteration order.
@@ -259,18 +260,17 @@ object Corpus {
     * broadcast back onto the data — the corpus-sized side never shuffles.
     */
   def temperatureSampled(df: DataFrame, stratumCol: String, idCol: String,
-                         totalTarget: Double, alpha: Double = 0.5,
-                         hashSeed: Long = 29L): DataFrame = {
-    val w0 = if (alpha == 0.5) sqrt(col("n_before")) else pow(col("n_before"), alpha)
+                         totalTarget: Double): DataFrame = {
     val strata = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("n_before"))
-      .withColumn("_w", round(w0, 6).cast(org.apache.spark.sql.types.DecimalType(28, 6)))
+      .withColumn("_w",
+        round(sqrt(col("n_before")), 6).cast(org.apache.spark.sql.types.DecimalType(28, 6)))
     val tot = strata.agg(sum(col("_w")).as("_totW"))
     val rates = strata.crossJoin(broadcast(tot))
       .select(col(stratumCol).as("_stratum"),
         least(lit(1.0), lit(totalTarget) * col("_w").cast("double") /
           (col("_totW").cast("double") * col("n_before"))).as("_rate"))
     df.join(broadcast(rates), col(stratumCol) <=> col("_stratum"))
-      .where(keepRow(idCol, col("_rate"), hashSeed))
+      .where(keepRow(idCol, col("_rate"), 29L))
       .drop("_stratum", "_rate")
   }
 
@@ -278,10 +278,9 @@ object Corpus {
     * (stratumCol, n_before, n_after). Derived from the SAME predicate.
     */
   def temperatureSample(df: DataFrame, stratumCol: String, idCol: String,
-                        totalTarget: Double, alpha: Double = 0.5,
-                        hashSeed: Long = 29L): DataFrame = {
+                        totalTarget: Double): DataFrame = {
     val before = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("n_before"))
-    val kept = temperatureSampled(df, stratumCol, idCol, totalTarget, alpha, hashSeed)
+    val kept = temperatureSampled(df, stratumCol, idCol, totalTarget)
       .groupBy(col(stratumCol)).agg(count(lit(1)).as("n_after"))
       .withColumnRenamed(stratumCol, "_stratum")
     before.join(kept, col(stratumCol) <=> col("_stratum"), "left")
@@ -392,16 +391,16 @@ object Corpus {
   }
 
   /** The trained unigram LM as a reusable STATIC artifact — (word, logp)
-    * rows for the kept vocabulary plus the shared OOV log-probability.
+    * rows for the vocabulary of words with >= 5 occurrences plus the
+    * shared OOV log-probability.
     * This is what an online/streaming scorer loads: train offline on the
     * corpus snapshot, broadcast-join the stream against it
     * ([[graft.streaming.DocumentStream.scored]]). The OOV scalar is one
     * bounded driver action (a 1-row first(), same class as the repo's
     * other documented bounded collects).
     */
-  def unigramLm(docs: DataFrame, textCol: String,
-                minCount: Long = 5L): (DataFrame, Double) = {
-    val (lm, oov) = lmParts(docs, textCol, minCount)
+  def unigramLm(docs: DataFrame, textCol: String): (DataFrame, Double) = {
+    val (lm, oov) = lmParts(docs, textCol, 5L)
     (lm, oov.first().getDouble(0))
   }
 
@@ -455,7 +454,7 @@ object Corpus {
   /** Domain-mixture reweighting: given a domain column and a target share
     * per domain (uniform by default), compute the sampling weight that
     * moves the corpus' token mixture toward the target —
-    * weight = min(target_share / actual_share, maxWeight), the cap
+    * weight = min(target_share / actual_share, 5), the cap
     * acknowledging that up-sampling a tiny domain beyond a few epochs
     * repeats data rather than adding it. This is the mixture step of
     * DoReMi/Pile-style training-data recipes.
@@ -470,8 +469,7 @@ object Corpus {
     * half-way point where engines disagree, the q117 class; at the
     * weight's own grain the round is effectively the identity).
     */
-  def mixtureWeights(docs: DataFrame, domainCol: String, textCol: String,
-                     maxWeight: Double = 5.0): DataFrame = {
+  def mixtureWeights(docs: DataFrame, domainCol: String, textCol: String): DataFrame = {
     val perDomain = docs
       .select(col(domainCol), TextAnalysis.tokenCount(col(textCol)).as("_nt"))
       .groupBy(col(domainCol))
@@ -483,7 +481,7 @@ object Corpus {
       .withColumn("share", round(col("n_tokens") / col("tot_tokens"), 6))
       .withColumn("weight",
         round(least((col("tot_tokens") / col("n_domains")) / col("n_tokens"),
-          lit(maxWeight)), 6))
+          lit(5.0)), 6))
       .withColumn("eff_tokens", round(col("n_tokens") * col("weight"), 6))
       .select(col(domainCol), col("n_docs"), col("n_tokens"),
         col("share"), col("weight"), col("eff_tokens"))
@@ -606,7 +604,7 @@ object Corpus {
     * oracle: every product of counts ≤ 2^53 is exact, the square rounds
     * identically under IEEE, so round(chi2, 4) is engine-portable. Only
     * over-represented terms are reported (ad > bc — chi2 alone is
-    * two-sided), with a `minCount` floor on a to keep rare-term noise out.
+    * two-sided), with a floor of 5 on a to keep rare-term noise out.
     *
     * Scale shape: identical to [[sliceDivergence]] — one data-sized
     * (class, term) count shuffle, vocab-grain totals joined back (AQE
@@ -617,7 +615,7 @@ object Corpus {
     * Output: (classCol, rank 1..k, term, chi2 r4) by (chi2 desc, term).
     */
   def chiSquareTerms(docs: DataFrame, classCol: String, textCol: String,
-                     k: Int = 10, minCount: Long = 5L): DataFrame = {
+                     k: Int = 10): DataFrame = {
     val tok = docs.select(col(classCol),
       explode(TextAnalysis.words(col(textCol))).as("term"))
     val byClass = tok.groupBy(col(classCol), col("term"))
@@ -638,7 +636,7 @@ object Corpus {
     val den = (col("_w").cast("double") * (col("_n") - col("_w")).cast("double")) *
       (col("_s").cast("double") * (col("_n") - col("_s")).cast("double"))
     val scored = joined
-      .where(col("_a") >= minCount && col("_ad") > col("_bc") && den > 0.0)
+      .where(col("_a") >= 5L && col("_ad") > col("_bc") && den > 0.0)
       .withColumn("chi2", round(
         (col("_n").cast("double") * ((col("_ad") - col("_bc")) * (col("_ad") - col("_bc")))) / den,
         4))

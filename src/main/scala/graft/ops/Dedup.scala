@@ -74,8 +74,19 @@ object Dedup {
     */
   val DefaultSimhashBits: Int = 48
 
+  /** Word-shingle width of every exact-Jaccard face (the pair joins, the
+    * routed verify, the cluster endgame, and Corpus/Sketches'
+    * decontamination n-grams).
+    */
+  private[graft] val ShingleWords = 3
+
+  /** SimHash near-dup radius of the candidate, anchor and routing faces:
+    * the 4-chunk pigeonhole covers hamming <= 3.
+    */
+  private val MaxHamming = 3
+
   /** Corpus size where the same-length PassJoin overtakes the blocked
-    * all-pairs join in [[fuzzyPairs]]' default-length-blocking mode ON
+    * all-pairs join in [[fuzzyPairs]]' length-blocking mode ON
     * HIGH-ENTROPY corpora — the measured same-phase A/B crossover
     * (PLANS.md round 15, entropy corpus: blocked/segmented
     * 0.29/0.36 s at 2k rows, 0.69/0.34 at 4k, 37.9/0.53 at 32k — blocked
@@ -206,19 +217,19 @@ object Dedup {
   }
 
   /** LSH candidate pairs: docs sharing at least one identical band of the
-    * MinHash signature (k hashes, `bands` bands of k/bands rows). Pair
-    * output is (id_a < id_b) distinct. Buckets wider than `maxBucket` are
-    * dropped (degenerate-band skew cap; see object scaladoc).
+    * MinHash signature over word 3-shingles (16 hashes, `bands` bands of
+    * 16/bands rows). Pair output is (id_a < id_b) distinct. Buckets wider
+    * than `maxBucket` are dropped (degenerate-band skew cap; see object
+    * scaladoc).
     */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, k: Int = 16, bands: Int = 4,
-                        maxBucket: Int = 100000): DataFrame = {
-    // a non-dividing bands would silently DROP the trailing k % bands
+                        bands: Int = 4, maxBucket: Int = 100000): DataFrame = {
+    // a non-dividing bands would silently DROP the trailing 16 % bands
     // hashes — the effective scheme (and its recall curve) would not be
     // the one the parameters imply; fail loudly instead
-    require(bands >= 1 && k % bands == 0, s"bands ($bands) must divide k ($k)")
-    val rows = k / bands
-    val sig = minhashSignature(shingles(docs, idCol, textCol, n), idCol, k)
+    require(bands >= 1 && 16 % bands == 0, s"bands ($bands) must divide the 16 hashes")
+    val rows = 16 / bands
+    val sig = minhashSignature(shingles(docs, idCol, textCol, ShingleWords), idCol, 16)
     // band signature: ordered fold over the band's slice of the signature —
     // per-row expression work, no extra shuffle
     val banded = sig.select(
@@ -250,10 +261,10 @@ object Dedup {
     * default never binds at oracle-test scale, keeping the result exact.
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3, threshold: Double = 0.5,
+                   threshold: Double = 0.5,
                    maxDf: Int = 100000): DataFrame = {
     val arr = docs.select(col(idCol),
-      graft.functions.TextFunctions.wordShingles(col(textCol), n).as("_arr"))
+      graft.functions.TextFunctions.wordShingles(col(textCol), ShingleWords).as("_arr"))
       .cache() // feeds the inverted index AND the per-doc sizes (see object
                // scaladoc for the cache lifecycle)
     val sh0 = arr.select(col(idCol), explode(col("_arr")).as("shingle"))
@@ -307,7 +318,7 @@ object Dedup {
     * the two windows; the pair join runs on prefixes only.
     */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                         n: Int = 3, threshold: Double = 0.5): DataFrame = {
+                         threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold < 1.0, "need 0 < threshold < 1")
     // basis points, FLOORED — rounding could round UP (t = 2/3 -> 6667 >
     // t·10000), making every prefix/length/positional filter STRICTER than
@@ -316,7 +327,7 @@ object Dedup {
     // candidates reach the exact verify below, which decides membership.
     val tBp = (threshold * 10000).toInt
     val arr = docs.select(col(idCol),
-      graft.functions.TextFunctions.wordShingles(col(textCol), n).as("_arr"))
+      graft.functions.TextFunctions.wordShingles(col(textCol), ShingleWords).as("_arr"))
       .cache() // feeds index and verify (object cache convention)
     val sh = arr.select(col(idCol), explode(col("_arr")).as("shingle"))
     // prefix = the (sz - ceil(t*sz) + 1) rarest shingles per doc; integer
@@ -368,16 +379,15 @@ object Dedup {
     * join ("Supplier#000000001" vs "Supplier#000000010") that exact keys
     * and token-set similarity both miss. See [[fuzzyPairsSegmented]] for
     * the EXACT (no recall loss, insert/delete-covering) PassJoin form —
-    * this heuristic-blocking form remains for corpora where a
-    * high-entropy blockKey is acceptable and cheaper.
+    * this same-length form remains for corpora where substitution-only
+    * matches suffice and it is cheaper.
     *
-    * Classic blocking: candidates form only WITHIN a block key (default:
-    * string length — a pair at distance <= maxDist can differ by at most
+    * Classic blocking: candidates form only WITHIN a block of equal
+    * string length (a pair at distance <= maxDist can differ by at most
     * maxDist in length, so same-length blocking catches the substitution-
-    * only matches; pass a phonetic/q-gram key for higher recall — any
-    * blocking is recall-lossy by design and the key's selectivity is what
-    * distributes the pair join at scale). With default length blocking
-    * the op is SIZE-ADAPTIVE (r15): at or above [[FuzzyCrossoverRows]]
+    * only matches — any blocking is recall-lossy by design and the key's
+    * selectivity is what distributes the pair join at scale). For
+    * 1 <= maxDist <= 4 the op is SIZE-ADAPTIVE (r15): at or above [[FuzzyCrossoverRows]]
     * rows the identical same-length pair set is generated by the
     * same-length PassJoin (segment agreement prunes inside a length
     * block, where the blocked join is quadratic). The route comes from
@@ -392,10 +402,10 @@ object Dedup {
     * Output: (id_a, id_b, dist) with 0 <= dist <= maxDist, id_a < id_b.
     */
   def fuzzyPairs(df: DataFrame, idCol: String, strCol: String,
-                 maxDist: Int, blockKey: Option[Column] = None): DataFrame = {
+                 maxDist: Int): DataFrame = {
     require(maxDist >= 0, "need maxDist >= 0")
     // SIZE-ADAPTIVE routing (r15, the q133/MihCrossoverDocs pattern): with
-    // default length blocking the all-pairs-within-a-length-block join is
+    // length blocking the all-pairs-within-a-length-block join is
     // quadratic in the block width (measured exp 1.44 over sf0.1→sf1 on
     // the supplier corpus, whose names share ONE length) — past the
     // measured crossover AND the segment-entropy probe, the identical
@@ -409,9 +419,7 @@ object Dedup {
     // below); past the crossover the one-row entropy aggregate runs on
     // it too — a blind route onto a degenerate corpus would cost 10x
     // the probe.
-    // Custom blockKeys always take the blocked join: the caller chose the
-    // blocking entropy, and a phonetic/q-gram key has no PassJoin twin.
-    if (blockKey.isEmpty && maxDist >= 1 && maxDist <= 4) {
+    if (maxDist >= 1 && maxDist <= 4) {
       val proj = df.where(col(strCol).isNotNull)
         .select(col(idCol).as("_id"), col(strCol).as("_s"),
           length(col(strCol)).as("_len"))
@@ -434,9 +442,8 @@ object Dedup {
           col("_len").as("_blk")), maxDist)
       }
     } else {
-      val key = blockKey.getOrElse(length(col(strCol)))
       blockedFuzzyPairs(df.select(col(idCol).as("_id"), col(strCol).as("_s"),
-        key.as("_blk")), maxDist)
+        length(col(strCol)).as("_blk")), maxDist)
     }
   }
 
@@ -453,7 +460,7 @@ object Dedup {
   /** Same-length PassJoin: [[fuzzyPairsSegmented]]'s machinery with the
     * probe side's source-length range pinned to the probe string's OWN
     * length, so candidates form only between equal-length strings — the
-    * exact pair set of default-length-blocked [[fuzzyPairs]] (pigeonhole
+    * exact pair set of length-blocked [[fuzzyPairs]] (pigeonhole
     * still needs the ±maxDist segment-position shifts: same-length pairs
     * at distance d can involve insert+delete combos that displace
     * segments). Input must have (_id, _s, _len).
@@ -493,7 +500,6 @@ object Dedup {
     * Output: (doc_id, anchor_id, hamming), doc != anchor, distinct.
     */
   def simhashAnchorCandidates(docs: DataFrame, idCol: String, textCol: String,
-                              maxHamming: Int = 3,
                               bits: Int = DefaultSimhashBits): DataFrame = {
     require(bits % 4 == 0, "bits must split into 4 equal chunks")
     val chunks = 4
@@ -519,7 +525,7 @@ object Dedup {
       .select(col("doc_id"), col("anchor_id"),
         hamming(col("_sig"), col("_asig")).cast("long").as("hamming"))
       .distinct()
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= MaxHamming)
   }
 
   /** [[simhashBucketRegistry]] extended with each anchor's signature —
@@ -547,7 +553,7 @@ object Dedup {
     * [[verifiedNearDups]]' verify: each (doc, anchor) pair joins to the
     * two sides' shingle ARRAYS and intersects per-row.
     *
-    * Docs with FEWER than n words shingle to an empty array; such a pair
+    * Docs with FEWER than 3 words shingle to an empty array; such a pair
     * has a 0/0 jaccard, and both engines order NaN above every threshold —
     * a vacuous pass. The relational oracle form (inner join on the shingle
     * TABLE) instead drops those pairs outright, so this helper filters
@@ -559,9 +565,9 @@ object Dedup {
     */
   def verifyRoutedPairs(routed: DataFrame, left: DataFrame, right: DataFrame,
                         idCol: String, textCol: String,
-                        n: Int = 3, threshold: Double = 0.1): DataFrame = {
+                        threshold: Double = 0.1): DataFrame = {
     def sh(d: DataFrame) = d.select(col(idCol).as("doc_id"),
-      graft.functions.TextFunctions.wordShingles(col(textCol), n).as("_arr"))
+      graft.functions.TextFunctions.wordShingles(col(textCol), ShingleWords).as("_arr"))
     routed
       .join(sh(left).select(col("doc_id"), col("_arr").as("_arr_d")), "doc_id")
       .join(sh(right).select(col("doc_id").as("best_anchor"),
@@ -619,7 +625,7 @@ object Dedup {
     * nullable) — one row per NEW doc.
     */
   def simhashRoute(newDocs: DataFrame, idCol: String, textCol: String,
-                   registry: DataFrame, maxHamming: Int = 3,
+                   registry: DataFrame,
                    bits: Int = DefaultSimhashBits): DataFrame = {
     require(bits % 4 == 0, "bits must split into 4 equal chunks")
     val chunks = 4
@@ -642,7 +648,7 @@ object Dedup {
       // No-op for the disjoint day-1/day-2 case (q137's oracle).
       .where(col("doc_id") =!= col("anchor_id"))
       .withColumn("_h", hamming(col("_sig"), col("anchor_sig")).cast("long"))
-      .where(col("_h") <= maxHamming)
+      .where(col("_h") <= MaxHamming)
       .groupBy(col("doc_id"))
       .agg(min(struct(col("_h"), col("anchor_id"))).as("_b"))
       .select(col("doc_id"), col("_b._h").as("best_hamming"),
@@ -678,8 +684,8 @@ object Dedup {
     * candidates stay near-linear; a corpus sharing one long constant
     * prefix degenerates to the prefix-segment bucket (= the data's real
     * pairwise similarity — no exact method can block what genuinely
-    * matches; cap or switch to a recall-lossy entropy blockKey via
-    * [[fuzzyPairs]] when that is acceptable).
+    * matches; cap, or take [[fuzzyPairs]]' recall-lossy same-length
+    * blocking when that is acceptable).
     *
     * Output: (id_a, id_b, dist), 0 <= dist <= maxDist, id_a < id_b.
     */
@@ -842,14 +848,14 @@ object Dedup {
     * WIDTH, not a different 32-bit blocking: pass `bits = 48` (the q133
     * face — same contract, exp 0.69 over the same triple decade).
     *
-    * NOTE (eager construction): on the wide path (bits > 32, maxHamming ≤ 3)
+    * NOTE (eager construction): on the wide path (bits > 32)
     * the size-adaptive routing counts the corpus, so building the returned
     * DataFrame runs the scan+sign Spark job — even if the caller never
     * executes the result. Both generators also collect their over-cap
     * bucket keys (a keyspace-bounded aggregate) at construction.
     */
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        maxHamming: Int = 3, maxBucket: Int = 100000,
+                        maxBucket: Int = 100000,
                         bits: Int = DefaultSimhashBits): DataFrame = {
     require(bits % 4 == 0, "bits must split into 4 equal chunks")
     // self-joined below: cache the (id, sig) projection so the scan+sign
@@ -873,10 +879,10 @@ object Dedup {
     // recall-under-cap sets differ — the two schemes cap at different
     // granularities (2^(bits/4)-value chunk buckets vs 2^(bits/2)-value
     // half buckets), see the scaladoc's cap contract.
-    if (bits > 32 && maxHamming <= 3 && withSig.count() >= MihCrossoverDocs)
-      simhashCandidatesMih(withSig, idCol, "simhash", maxHamming, maxBucket, bits)
+    if (bits > 32 && withSig.count() >= MihCrossoverDocs)
+      simhashCandidatesMih(withSig, idCol, "simhash", MaxHamming, maxBucket, bits)
     else
-      simhashCandidatesFromSignatures(withSig, idCol, "simhash", maxHamming,
+      simhashCandidatesFromSignatures(withSig, idCol, "simhash", MaxHamming,
         maxBucket, chunkBits = bits / 4)
   }
 
@@ -974,17 +980,16 @@ object Dedup {
     * join), so total cost is O(corpus signing) + O(candidates·shingles) —
     * the shape that survives 100 TB, where all-pairs-sharing-a-shingle
     * explodes but LSH candidates stay ~linear in the true-duplicate count.
+    * Candidates come from 16 minhashes in 4 bands over word 3-shingles.
     */
   def verifiedNearDups(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, k: Int = 16, bands: Int = 4,
-                       threshold: Double = 0.5,
-                       maxBucket: Int = 100000): DataFrame = {
+                       threshold: Double = 0.5): DataFrame = {
     val arr = docs.select(col(idCol),
-      graft.functions.TextFunctions.wordShingles(col(textCol), n).as("_arr"))
+      graft.functions.TextFunctions.wordShingles(col(textCol), ShingleWords).as("_arr"))
       .cache() // feeds BOTH sides of the candidate join (object cache
       // convention — prefixJaccardPairs caches the identical projection);
       // without it the scan+shingle pipeline runs twice
-    val cands = minhashCandidates(docs, idCol, textCol, n, k, bands, maxBucket)
+    val cands = minhashCandidates(docs, idCol, textCol)
     val a = arr.select(col(idCol).as("id_a"), col("_arr").as("_arr_a"))
     val b = arr.select(col(idCol).as("id_b"), col("_arr").as("_arr_b"))
     cands.join(a, "id_a").join(b, "id_b")
@@ -1006,12 +1011,12 @@ object Dedup {
     * sees only a one-row convergence flag per round, and `localCheckpoint`
     * cuts the lineage so plan depth stays constant across rounds. Rounds
     * needed = component diameter (near-dup clusters are dense, so small);
-    * `maxIter` bounds pathological chains and failure to converge throws
+    * 50 rounds bound pathological chains and failure to converge throws
     * rather than returning wrong labels.
+    *
+    * Input: nodes (id), edges (src, dst). Output: (id, component).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          idCol: String = "id", srcCol: String = "src",
-                          dstCol: String = "dst", maxIter: Int = 50,
                           maxLocalNodes: Int = 200000): DataFrame = {
     // Driver-local union-find (LocalFold's contract): the dedup pipelines'
     // cluster graphs are pair-grain, not corpus-grain. The converged
@@ -1020,17 +1025,17 @@ object Dedup {
     // endpoints share one integral id type. Other types (e.g. strings,
     // whose UTF8-byte `least` ordering the fold does not replicate) run
     // distributed.
-    val idT = nodes.schema(idCol).dataType
+    val idT = nodes.schema("id").dataType
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
     val local =
-      if (!integral(idT) || edges.schema(srcCol).dataType != idT ||
-          edges.schema(dstCol).dataType != idT) None
+      if (!integral(idT) || edges.schema("src").dataType != idT ||
+          edges.schema("dst").dataType != idT) None
       else for {
-        nh <- LocalFold.rows(nodes.select(col(idCol).cast("long")), maxLocalNodes)
-        eh <- LocalFold.rows(edges.select(col(srcCol).cast("long"),
-          col(dstCol).cast("long")), maxLocalNodes)
+        nh <- LocalFold.rows(nodes.select(col("id").cast("long")), maxLocalNodes)
+        eh <- LocalFold.rows(edges.select(col("src").cast("long"),
+          col("dst").cast("long")), maxLocalNodes)
       } yield LocalFold.frame(nodes.sparkSession, componentsLocal(nh, eh),
-        StructType(Seq(StructField(idCol, LongType), StructField("component", LongType))),
+        StructType(Seq(StructField("id", LongType), StructField("component", LongType))),
         Seq(idT, idT))
     if (local.isDefined) return local.get
     // materialize the edge list ONCE: in nearDupClusters its lineage is the
@@ -1039,15 +1044,15 @@ object Dedup {
     // sym on _b, and a checkpointed Dataset keeps its outputPartitioning —
     // so the (at scale, data-sized) edge table is shuffled ONCE here instead
     // of once per round; each round's join shuffles only the labels side.
-    val sym = edges.select(col(srcCol).as("_a"), col(dstCol).as("_b"))
-      .unionByName(edges.select(col(dstCol).as("_a"), col(srcCol).as("_b")))
+    val sym = edges.select(col("src").as("_a"), col("dst").as("_b"))
+      .unionByName(edges.select(col("dst").as("_a"), col("src").as("_b")))
       .repartition(col("_b"))
       .localCheckpoint()
-    var labels = nodes.select(col(idCol).as("_id"))
+    var labels = nodes.select(col("id").as("_id"))
       .distinct().withColumn("_comp", col("_id")).localCheckpoint()
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < 50) {
       val nb = sym.join(labels.select(col("_id").as("_b"), col("_comp").as("_nc")), "_b")
         .groupBy(col("_a").as("_id")).agg(min(col("_nc")).as("_nbmin"))
       // LAZY checkpoint + count (r16): the convergence probe and the
@@ -1064,8 +1069,8 @@ object Dedup {
       labels = updated.select(col("_id"), col("_new").as("_comp"))
       i += 1
     }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    labels.select(col("_id").as(idCol), col("_comp").as("component"))
+    require(converged, "connectedComponents did not converge in 50 rounds")
+    labels.select(col("_id").as("id"), col("_comp").as("component"))
   }
 
   /** Driver-local union-find — called only under [[connectedComponents]]'s
@@ -1111,10 +1116,8 @@ object Dedup {
     * id). Every doc appears exactly once; singletons are their own cluster.
     */
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, k: Int = 16, bands: Int = 4,
-                      threshold: Double = 0.5,
-                      maxBucket: Int = 100000): DataFrame = {
-    val pairs = verifiedNearDups(docs, idCol, textCol, n, k, bands, threshold, maxBucket)
+                      threshold: Double = 0.5): DataFrame = {
+    val pairs = verifiedNearDups(docs, idCol, textCol, threshold)
     val comp = connectedComponents(
       docs.select(col(idCol).as("id")), pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
     val w = Window.partitionBy(col("component"))
@@ -1152,15 +1155,12 @@ object Dedup {
     * in `frontier` mode untouched components pass through verbatim, so an
     * arbitrary representative labeling would survive un-normalized.
     *
-    * Output: (idCol, cluster_id, cluster_size, is_canonical) — same shape
+    * Output: (doc_id, cluster_id, cluster_size, is_canonical) — same shape
     * as [[nearDupClusters]], one row per doc in components ∪ newNodes ∪
     * pair endpoints.
     */
   def incrementalClusters(components: DataFrame, newPairs: DataFrame,
                           newNodes: Option[DataFrame] = None,
-                          idCol: String = "doc_id",
-                          labelCol: String = "cluster_id",
-                          maxIter: Int = 50,
                           frontier: Boolean = false,
                           withSizes: Boolean = true): DataFrame = {
     // Two cost shapes, identical output (both spec-gated fold == rebuild):
@@ -1184,46 +1184,46 @@ object Dedup {
     val addEdges = newPairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val (propNodes, propEdges, untouched) =
       if (!frontier) {
-        val nodes = components.select(col(idCol).as("id"))
+        val nodes = components.select(col("doc_id").as("id"))
           .unionByName(newPairs.select(col("id_a").as("id")))
           .unionByName(newPairs.select(col("id_b").as("id")))
-          .unionByName(newNodes.map(_.select(col(idCol).as("id")))
-            .getOrElse(components.select(col(idCol).as("id")).limit(0)))
-        val oldEdges = components.select(col(idCol).as("src"), col(labelCol).as("dst"))
+          .unionByName(newNodes.map(_.select(col("doc_id").as("id")))
+            .getOrElse(components.select(col("doc_id").as("id")).limit(0)))
+        val oldEdges = components.select(col("doc_id").as("src"), col("cluster_id").as("dst"))
         (nodes, oldEdges.unionByName(addEdges), components.limit(0))
       } else {
         // endpoint ids feed both the touched-label probe and the node set
-        val endpointIds = newPairs.select(col("id_a").as(idCol))
-          .unionByName(newPairs.select(col("id_b").as(idCol)))
+        val endpointIds = newPairs.select(col("id_a").as("doc_id"))
+          .unionByName(newPairs.select(col("id_b").as("doc_id")))
           .distinct().localCheckpoint()
         val touchedLabels = components
-          .join(endpointIds, Seq(idCol), "left_semi")
-          .select(col(labelCol)).distinct()
-        val affected = components.join(touchedLabels, Seq(labelCol), "left_semi")
-        val untouchedRows = components.join(touchedLabels, Seq(labelCol), "left_anti")
+          .join(endpointIds, Seq("doc_id"), "left_semi")
+          .select(col("cluster_id")).distinct()
+        val affected = components.join(touchedLabels, Seq("cluster_id"), "left_semi")
+        val untouchedRows = components.join(touchedLabels, Seq("cluster_id"), "left_anti")
         // ids entering the graph that the component table does not hold
         val extraNew = endpointIds
-          .unionByName(newNodes.map(_.select(col(idCol))).getOrElse(endpointIds.limit(0)))
-          .join(components, Seq(idCol), "left_anti")
-        val nodes = affected.select(col(idCol).as("id"))
-          .unionByName(extraNew.select(col(idCol).as("id")))
-        val oldEdges = affected.select(col(idCol).as("src"), col(labelCol).as("dst"))
+          .unionByName(newNodes.map(_.select(col("doc_id"))).getOrElse(endpointIds.limit(0)))
+          .join(components, Seq("doc_id"), "left_anti")
+        val nodes = affected.select(col("doc_id").as("id"))
+          .unionByName(extraNew.select(col("doc_id").as("id")))
+        val oldEdges = affected.select(col("doc_id").as("src"), col("cluster_id").as("dst"))
         (nodes, oldEdges.unionByName(addEdges), untouchedRows)
       }
-    val comp = connectedComponents(propNodes, propEdges, maxIter = maxIter)
-    val merged = comp.select(col("id").as(idCol), col("component").as(labelCol))
-      .unionByName(untouched.select(col(idCol), col(labelCol)))
+    val comp = connectedComponents(propNodes, propEdges)
+    val merged = comp.select(col("id").as("doc_id"), col("component").as("cluster_id"))
+      .unionByName(untouched.select(col("doc_id"), col("cluster_id")))
     // withSizes = false: labels only — skips the corpus-wide size window,
     // which in frontier mode would otherwise be the one remaining O(corpus)
     // shuffle of the daily fold (the persisted state needs only (id, label);
     // sizes/canonical flags are a report-time derivation)
-    if (!withSizes) merged.select(col(idCol), col(labelCol))
+    if (!withSizes) merged.select(col("doc_id"), col("cluster_id"))
     else {
-      val w = Window.partitionBy(col(labelCol))
+      val w = Window.partitionBy(col("cluster_id"))
       merged
         .withColumn("cluster_size", count(lit(1)).over(w))
-        .select(col(idCol), col(labelCol),
-          col("cluster_size"), (col(idCol) === col(labelCol)).as("is_canonical"))
+        .select(col("doc_id"), col("cluster_id"),
+          col("cluster_size"), (col("doc_id") === col("cluster_id")).as("is_canonical"))
     }
   }
 
@@ -1383,8 +1383,8 @@ object Dedup {
 
   /** Span-level exact-substring duplication report (the signal behind
     * "Deduplicating Training Data Makes Language Models Better"-style
-    * exact substring dedup): slide a `window`-token window every `stride`
-    * tokens over each document, fingerprint each window, and attribute
+    * exact substring dedup): slide a 20-token window every 10 tokens over
+    * each document, fingerprint each window, and attribute
     * every fingerprint to its first-occurrence document (smallest id).
     *
     * Output, one row per document that produced at least one window:
@@ -1409,15 +1409,12 @@ object Dedup {
     * the fingerprint (high-cardinality; a ubiquitous span fingerprint
     * aggregates to ONE stats row before the join, and the deduped grain
     * bounds its join fan-out at one row per touching doc). The span table
-    * is len/stride × input rows — the same bounded explosion
+    * is len/10 × input rows — the same bounded explosion
     * chunkDocuments already pays.
     */
-  def duplicateSpans(docs: DataFrame, idCol: String, textCol: String,
-                     window: Int = 20, stride: Int = 10): DataFrame = {
-    require(stride >= 1 && stride <= window, "need 1 <= stride <= window")
+  def duplicateSpans(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spans = TextAnalysis
-      .chunkDocuments(docs, idCol, textCol, maxTokens = window,
-        overlap = window - stride)
+      .chunkDocuments(docs, idCol, textCol, maxTokens = 20, overlap = 10)
       .select(col(idCol), TextAnalysis.fingerprint(col("chunk_text")).as("fp"))
     // (fp, doc) grain with the doc's span multiplicity — the one
     // data-sized exchange; both downstream branches hang off it, so the

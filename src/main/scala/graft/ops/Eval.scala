@@ -172,7 +172,7 @@ object Eval {
   }
 
   /** Per-group calibration table + Brier decomposition inputs: scores
-    * bucketed into `bins` equal-width cells over [0, 1] (scores outside
+    * bucketed into 10 equal-width cells over [0, 1] (scores outside
     * clamp to the edge cells), per cell the count, decimal-exact mean
     * score and observed positive rate — the reliability-diagram table, and
     * the per-group Brier score (mean squared error of the probability
@@ -182,17 +182,15 @@ object Eval {
     * groups-sized window-free rollup for the Brier term. Nothing shuffles
     * twice.
     *
-    * Output: (groupCols, bin 0..bins-1, n, mean_score r6, frac_pos r6,
+    * Output: (groupCols, bin 0..9, n, mean_score r6, frac_pos r6,
     * brier r6 — repeated per group row for hash-gate visibility).
     */
   def calibration(df: DataFrame, groupCols: Seq[String], scoreCol: String,
-                  labelCol: String, bins: Int = 10): DataFrame = {
-    require(bins >= 2, "need bins >= 2")
+                  labelCol: String): DataFrame = {
     val g = groupCols.map(col)
     val s = col(scoreCol).cast("double")
     val lbl = when(col(labelCol).cast("boolean"), 1L).otherwise(0L)
-    val bin = least(lit(bins - 1L), greatest(lit(0L),
-      floor(s * bins).cast("long")))
+    val bin = least(lit(9L), greatest(lit(0L), floor(s * 10).cast("long")))
     val dec = org.apache.spark.sql.types.DecimalType(38, 6)
     val cells = df.where(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .withColumn("_bin", bin)

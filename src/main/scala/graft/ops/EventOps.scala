@@ -44,17 +44,14 @@ object EventOps {
     * combined aggregate; the shape [[graft.streaming.RateStream]] twins with
     * a watermark-bounded streaming window.
     */
-  def hourlyCounts(events: DataFrame, bucketSeconds: Long = 3600L,
-                   typeCol: String = "event_type",
-                   tsCol: String = "ts"): DataFrame =
-    events.groupBy(col(typeCol).as("event_type"),
-        expr(s"(CAST(`$tsCol` AS LONG) DIV $bucketSeconds) * $bucketSeconds")
-          .as("hour_sec"))
+  def hourlyCounts(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type").as("event_type"),
+        expr("(CAST(`ts` AS LONG) DIV 3600) * 3600").as("hour_sec"))
       .agg(count(lit(1)).as("n"))
 
   /** Z-score anomaly gate over a [[hourlyCounts]]-shaped table: each
     * bucket's count scored against its own type's mean/std across buckets;
-    * |z| >= `threshold` rows survive. Variance comes from exact integer
+    * |z| >= 2 rows survive. Variance comes from exact integer
     * sums (count, sum n, sum n² — n² through decimal so a 3e9-events hour
     * cannot overflow BIGINT under ANSI), so the doubles that reach the
     * division are identical across engines. Stats are one tiny per-type
@@ -62,7 +59,7 @@ object EventOps {
     * Types with fewer than 2 buckets or zero variance have no z-score and
     * drop out (both engines take the same branch).
     */
-  def rateAnomalies(hourly: DataFrame, threshold: Double = 2.0): DataFrame = {
+  def rateAnomalies(hourly: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val stats = hourly.groupBy(col("event_type"))
       .agg(count(lit(1)).as("_h"),
@@ -75,7 +72,7 @@ object EventOps {
       .select(col("event_type").as("_et"), col("_mean"), col("_var"))
     hourly.join(broadcast(stats), col("event_type") === col("_et"))
       .withColumn("z", round((col("n") - col("_mean")) / sqrt(col("_var")), 4))
-      .where(abs(col("z")) >= threshold)
+      .where(abs(col("z")) >= 2.0)
       .select(col("event_type"), col("hour_sec"), col("n"), col("z"))
   }
 
@@ -116,8 +113,8 @@ object EventOps {
     * time for stage i-1 (the standard ordered-funnel definition — doing
     * the steps out of order does not count).
     *
-    * `stages` maps stage names to event types, in order. `tsCol` should be
-    * an exact integer timestamp (ts_ns) so "at-or-after" has no precision
+    * `stages` maps stage names to event types, in order. Stage times are
+    * the exact integer `ts_ns`, so "at-or-after" has no precision
     * ambiguity. Output: (stage, stage_name, n_users), stage 1-based.
     *
     * Scale: one user-keyed aggregate per stage plus a broadcast-free
@@ -125,10 +122,7 @@ object EventOps {
     * cardinality); stage count is a constant. No windows, no data-sized
     * driver state.
     */
-  def conversionFunnel(events: DataFrame, stages: Seq[(String, String)],
-                       userCol: String = "user_id",
-                       typeCol: String = "event_type",
-                       tsCol: String = "ts_ns"): DataFrame = {
+  def conversionFunnel(events: DataFrame, stages: Seq[(String, String)]): DataFrame = {
     require(stages.nonEmpty, "need at least one funnel stage")
     import events.sparkSession.implicits._
     // reach[i] = (user, first time the user completed stages 0..i in order);
@@ -138,16 +132,16 @@ object EventOps {
     // predecessor once the next stage's count has materialized, and the
     // final stage unpersists before returning (the counts are plain longs
     // by then; the returned frame holds no cached lineage).
-    var reach = events.where(col(typeCol) === stages.head._2)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("_t"))
+    var reach = events.where(col("event_type") === stages.head._2)
+      .groupBy(col("user_id")).agg(min(col("ts_ns")).as("_t"))
       .cache()
     var counts = Vector((1L, stages.head._1, reach.count()))
     stages.drop(1).zipWithIndex.foreach { case ((name, tpe), i) =>
       val prev = reach
-      reach = events.where(col(typeCol) === tpe)
-        .join(prev, userCol)
-        .where(col(tsCol) >= col("_t"))
-        .groupBy(col(userCol)).agg(min(col(tsCol)).as("_t"))
+      reach = events.where(col("event_type") === tpe)
+        .join(prev, "user_id")
+        .where(col("ts_ns") >= col("_t"))
+        .groupBy(col("user_id")).agg(min(col("ts_ns")).as("_t"))
         .cache()
       counts :+= ((i + 2L, name, reach.count()))
       prev.unpersist()
@@ -157,7 +151,7 @@ object EventOps {
   }
 
   /** Retention cohorts: users grouped by first-activity UTC day, with the
-    * count of distinct active users at each day offset 0..`maxOffsetDays`.
+    * count of distinct active users at each day offset 0..7.
     * Output: (cohort_day epoch-day BIGINT, day_offset, n_active).
     *
     * Scale: first-day per user is one user-keyed aggregate; the join back
@@ -166,18 +160,16 @@ object EventOps {
     * bounded by days², tiny. countDistinct(user) shuffles (cohort, offset,
     * user) — the unavoidable distinct at this grain.
     */
-  def retentionCohorts(events: DataFrame, maxOffsetDays: Int = 7,
-                       userCol: String = "user_id",
-                       tsCol: String = "ts"): DataFrame = {
-    val day = expr(s"CAST(`$tsCol` AS LONG) DIV 86400")
-    val firstDay = events.select(col(userCol), day.as("_d"))
-      .groupBy(col(userCol)).agg(min(col("_d")).as("cohort_day"))
-    events.select(col(userCol), day.as("_d"))
-      .join(firstDay, userCol)
+  def retentionCohorts(events: DataFrame): DataFrame = {
+    val day = expr("CAST(`ts` AS LONG) DIV 86400")
+    val firstDay = events.select(col("user_id"), day.as("_d"))
+      .groupBy(col("user_id")).agg(min(col("_d")).as("cohort_day"))
+    events.select(col("user_id"), day.as("_d"))
+      .join(firstDay, "user_id")
       .withColumn("day_offset", col("_d") - col("cohort_day"))
-      .where(col("day_offset") <= maxOffsetDays)
+      .where(col("day_offset") <= 7)
       .groupBy(col("cohort_day"), col("day_offset"))
-      .agg(countDistinct(col(userCol)).as("n_active"))
+      .agg(countDistinct(col("user_id")).as("n_active"))
   }
 
   /** Markov transition (bigram) counts over each user's event stream: how
@@ -195,28 +187,24 @@ object EventOps {
     * user like [[sessionize]]/q12) then a map-side-combined count whose
     * shuffle is bounded by |event types|² rows. Counts are exact integers,
     * so the output is oracle-portable bit-for-bit. Ordering is
-    * second-grain (the same truncation the gap rule uses) with `idCol` as
-    * a stable tiebreaker, so same-second events order identically in any
+    * second-grain (the same truncation the gap rule uses) with `event_id`
+    * as a stable tiebreaker, so same-second events order identically in any
     * engine instead of by sub-second digits one side may not retain.
     */
-  def transitions(events: DataFrame, gapSeconds: Long,
-                  userCol: String = "user_id",
-                  typeCol: String = "event_type",
-                  tsCol: String = "ts",
-                  idCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col("_tsec"), col(idCol))
+  def transitions(events: DataFrame, gapSeconds: Long): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("_tsec"), col("event_id"))
     events
-      .withColumn("_tsec", col(tsCol).cast("long"))
+      .withColumn("_tsec", col("ts").cast("long"))
       .withColumn("_prev_ts", lag(col("_tsec"), 1).over(w))
-      .withColumn("_prev_type", lag(col(typeCol), 1).over(w))
+      .withColumn("_prev_type", lag(col("event_type"), 1).over(w))
       .where(col("_prev_type").isNotNull &&
         col("_tsec") - col("_prev_ts") <= gapSeconds)
-      .groupBy(col("_prev_type").as("from_type"), col(typeCol).as("to_type"))
+      .groupBy(col("_prev_type").as("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Last-touch attribution: credit each `targetType` event (a purchase)
+  /** Last-touch attribution: credit each purchase event
     * to the user's most recent OTHER event within `gapSeconds` before it,
     * or to `"direct"` when none qualifies — the marketing-attribution
     * aggregate behind "which activity drives conversions".
@@ -228,28 +216,22 @@ object EventOps {
     * id tiebreak ([[transitions]]' convention). Counts and decimal-path
     * revenue per attributed type — a |types|-bounded aggregate.
     */
-  def lastTouchAttribution(events: DataFrame, gapSeconds: Long,
-                           targetType: String = "purchase",
-                           userCol: String = "user_id",
-                           typeCol: String = "event_type",
-                           tsCol: String = "ts",
-                           idCol: String = "event_id",
-                           valueCol: String = "value"): DataFrame = {
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col("_tsec"), col(idCol))
+  def lastTouchAttribution(events: DataFrame, gapSeconds: Long): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("_tsec"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val nonTarget = col(typeCol) =!= targetType
+    val nonTarget = col("event_type") =!= "purchase"
     events
-      .withColumn("_tsec", col(tsCol).cast("long"))
+      .withColumn("_tsec", col("ts").cast("long"))
       .withColumn("_lt_ts", last(when(nonTarget, col("_tsec")), ignoreNulls = true).over(w))
-      .withColumn("_lt_ty", last(when(nonTarget, col(typeCol)), ignoreNulls = true).over(w))
-      .where(col(typeCol) === targetType)
+      .withColumn("_lt_ty", last(when(nonTarget, col("event_type")), ignoreNulls = true).over(w))
+      .where(col("event_type") === "purchase")
       .withColumn("attributed",
         when(col("_lt_ty").isNull || col("_tsec") - col("_lt_ts") > gapSeconds,
           lit("direct")).otherwise(col("_lt_ty")))
       .groupBy(col("attributed"))
       .agg(count(lit(1)).as("n_conversions"),
-        sum(round(col(valueCol), 4).cast(org.apache.spark.sql.types.DecimalType(28, 4)))
+        sum(round(col("value"), 4).cast(org.apache.spark.sql.types.DecimalType(28, 4)))
           .cast("double").as("revenue"))
   }
 
@@ -269,10 +251,9 @@ object EventOps {
     *
     * Output: (day, dau, wau, stickiness_bp) for every day with activity.
     */
-  def dauWau(events: DataFrame, userCol: String = "user_id",
-             tsCol: String = "ts"): DataFrame = {
+  def dauWau(events: DataFrame): DataFrame = {
     val du = events
-      .select(expr(s"CAST(`$tsCol` AS LONG) DIV 86400").as("day"), col(userCol).as("_u"))
+      .select(expr("CAST(`ts` AS LONG) DIV 86400").as("day"), col("user_id").as("_u"))
       .distinct()
     val dau = du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     // empty/all-null-ts input: max(day) is NULL — return the empty frame
@@ -310,11 +291,9 @@ object EventOps {
     * data-sized unpartitioned stage; ordering is second-grain with the id
     * tiebreak ([[transitions]]' convention).
     */
-  def scd2History(df: DataFrame, keyCol: String, attrCol: String,
-                  tsCol: String = "ts",
-                  idCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("_tsec"), col(idCol))
-    val w2 = Window.partitionBy(col(keyCol)).orderBy(col("valid_from"), col(idCol))
+  def scd2History(df: DataFrame, keyCol: String, attrCol: String): DataFrame = {
+    val w = Window.partitionBy(col(keyCol)).orderBy(col("_tsec"), col("event_id"))
+    val w2 = Window.partitionBy(col(keyCol)).orderBy(col("valid_from"), col("event_id"))
     // the change detector must be NULL-SAFE (r14): lag the attr inside a
     // struct, so "no previous row" (null struct) is distinguishable from
     // "previous attr was NULL" (struct with null field). A bare
@@ -322,7 +301,7 @@ object EventOps {
     // predicate is NULL) and failed to compact consecutive NULLs — the
     // streaming face's Scala != has always been null-correct, so the two
     // faces disagreed exactly on NULL attribute versions.
-    df.withColumn("_tsec", col(tsCol).cast("long"))
+    df.withColumn("_tsec", col("ts").cast("long"))
       .withColumn("_prev", lag(struct(col(attrCol).as("a")), 1).over(w))
       .where(col("_prev").isNull ||
         !(col("_prev").getField("a") <=> col(attrCol)))
@@ -392,21 +371,20 @@ object EventOps {
     *
     * Output: (rank 1..k, path, n).
     */
-  def topPaths(events: DataFrame, gapSeconds: Long, k: Int,
-               userCol: String = "user_id", typeCol: String = "event_type",
-               tsCol: String = "ts", idCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(col(userCol)).orderBy(col("_tsec"), col(idCol))
+  def topPaths(events: DataFrame, gapSeconds: Long, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("_tsec"), col("event_id"))
     val paths = events
-      .withColumn("_tsec", col(tsCol).cast("long"))
+      .withColumn("_tsec", col("ts").cast("long"))
       .withColumn("_prev", lag(col("_tsec"), 1).over(w))
       .withColumn("_new", when(col("_prev").isNull ||
         col("_tsec") - col("_prev") > gapSeconds, 1).otherwise(0))
       .withColumn("_sid", sum(col("_new")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col(userCol), col("_sid"))
+      .groupBy(col("user_id"), col("_sid"))
       .agg(array_join(
         transform(
-          array_sort(collect_list(struct(col("_tsec"), col(idCol), col(typeCol).as("_ty")))),
+          array_sort(collect_list(
+            struct(col("_tsec"), col("event_id"), col("event_type").as("_ty")))),
           x => x.getField("_ty")), ">").as("path"))
     val counted = paths.groupBy(col("path")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path"))
@@ -417,35 +395,32 @@ object EventOps {
   }
 
   /** Next-event-prediction feature matrix: for every event, the previous
-    * `k` event types and inter-event gaps within the user's history — the
+    * two event types and inter-event gaps within the user's history — the
     * lag-feature export a sequence model (or feature store) trains on,
     * with the current type as the label. Missing history is encoded
     * explicitly ('none' / -1) so the matrix is fully non-null — no NULL
     * cells to trip downstream consumers (or the gate's hasher).
     *
     * Scale shape: ONE user-keyed window sort feeds every lag column
-    * (k bounded-frame `lag`s share the single Exchange+Sort); no joins,
+    * (the bounded-frame `lag`s share the single Exchange+Sort); no joins,
     * no unpartitioned window, output is event-grain like the input.
     */
-  def lagFeatures(events: DataFrame, k: Int = 2,
-                  userCol: String = "user_id", typeCol: String = "event_type",
-                  idCol: String = "event_id"): DataFrame = {
-    require(k >= 1, "lagFeatures needs k >= 1")
+  def lagFeatures(events: DataFrame): DataFrame = {
     // second-grain ordering with the id tiebreak — the engine-portable
     // event order (sub-second ts precision differs per engine; seconds +
     // unique id do not), same convention as sessionize's consumers
-    val base = events.select(col(idCol), col(userCol),
-      col("ts").cast("long").as("_tsec"), col(typeCol).as("label"))
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col("_tsec"), col(idCol))
-    val withLags = (1 to k).foldLeft(base) { (df, i) =>
+    val base = events.select(col("event_id"), col("user_id"),
+      col("ts").cast("long").as("_tsec"), col("event_type").as("label"))
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("_tsec"), col("event_id"))
+    val withLags = (1 to 2).foldLeft(base) { (df, i) =>
       df.withColumn(s"prev_type_$i",
           coalesce(lag(col("label"), i).over(w), lit("none")))
         .withColumn(s"gap_secs_$i",
           coalesce(col("_tsec") - lag(col("_tsec"), i).over(w), lit(-1L)))
     }
-    withLags.select(col(idCol) +: col(userCol) +: col("label") +:
-      (1 to k).flatMap(i => Seq(col(s"prev_type_$i"), col(s"gap_secs_$i"))): _*)
+    withLags.select(col("event_id") +: col("user_id") +: col("label") +:
+      (1 to 2).flatMap(i => Seq(col(s"prev_type_$i"), col(s"gap_secs_$i"))): _*)
   }
 
   /** Sessionization: split each user's event stream at inactivity gaps >

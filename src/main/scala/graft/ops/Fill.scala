@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,19 +38,20 @@ import org.apache.spark.sql.functions._
   */
 object Fill {
 
-  /** Forward-fill `cols` (last non-null wins) ordered by `ts` within `keys`
-    * groups. `ts` must be unique per key group (a resample/grid output is).
-    * `chunkSeconds` is in the native unit of `ts` cast to long (seconds for
-    * timestamps; pass ns-scaled chunks for raw ts_ns columns).
+  /** Forward-fill `cols` (last non-null wins) ordered by the `ts` column
+    * within `keys` groups. `ts` must be unique per key group (a
+    * resample/grid output is). `chunkSeconds` is in `ts` cast to long
+    * (seconds).
     */
   def ffill(df: DataFrame, cols: Seq[String], keys: Seq[String] = Nil,
-            ts: String = "ts", chunkSeconds: Long = 86400L): DataFrame =
-    biFill(df, cols, Nil, keys, ts, chunkSeconds)
+            chunkSeconds: Long = 86400L): DataFrame =
+    biFill(df, cols, Nil, keys, chunkSeconds)
 
-  /** Backward-fill `cols` (next non-null wins). */
-  def bfill(df: DataFrame, cols: Seq[String], keys: Seq[String] = Nil,
-            ts: String = "ts", chunkSeconds: Long = 86400L): DataFrame =
-    biFill(df, Nil, cols, keys, ts, chunkSeconds)
+  /** Backward-fill `cols` (next non-null wins) ordered by `ts`, over the
+    * whole frame.
+    */
+  def bfill(df: DataFrame, cols: Seq[String], chunkSeconds: Long = 86400L): DataFrame =
+    biFill(df, Nil, cols, Nil, chunkSeconds)
 
   /** Forward-fill `fcols` AND backward-fill `bcols` in one two-phase pass.
     * `ts` must be unique per key group unless a `tie` column makes (ts, tie)
@@ -64,19 +65,19 @@ object Fill {
     * global-window bit-equality holds.
     */
   def biFill(df: DataFrame, fcols: Seq[String], bcols: Seq[String],
-             keys: Seq[String] = Nil, ts: String = "ts",
+             keys: Seq[String] = Nil,
              chunkSeconds: Long = 86400L, tie: Option[String] = None): DataFrame = {
     require(fcols.nonEmpty || bcols.nonEmpty, "no columns to fill")
     val dirs: Seq[(String, Boolean)] = fcols.map(_ -> false) ++ bcols.map(_ -> true)
     val withChunk = df.withColumn("_chunk",
-      floor(col(ts).cast("long") / chunkSeconds).cast("long"))
+      floor(col("ts").cast("long") / chunkSeconds).cast("long"))
     // tie semantics: at equal ts, SMALLER tie is the donor and is visible
     // to larger-tie rows in BOTH traversal directions (ascending for
     // forward fill, descending for backward fill) — which is exactly what
     // an as-of join needs for exact-timestamp matches in either direction.
     // Hence tie sorts ASC in the desc traversal too.
-    val ordAsc = col(ts) +: tie.map(col).toSeq
-    val ordDesc = col(ts).desc +: tie.map(col(_).asc).toSeq
+    val ordAsc = col("ts") +: tie.map(col).toSeq
+    val ordDesc = col("ts").desc +: tie.map(col(_).asc).toSeq
 
     // phase 1: within-chunk fill (parallel across (keys, chunk)). Forward
     // cols run on the ascending order; backward cols on the fully REVERSED
@@ -96,7 +97,7 @@ object Fill {
     // summary value = the chunk's last (first) non-null per column, picked
     // with a struct max/min ordered by ts (null when the chunk has none).
     val sumAggs = dirs.map { case (c, backward) =>
-      val ordFields = (col(ts).as("t") +: tie.map(t => col(t).as("t2")).toSeq) :+ col(c).as("v")
+      val ordFields = (col("ts").as("t") +: tie.map(t => col(t).as("t2")).toSeq) :+ col(c).as("v")
       val tagged = when(col(c).isNotNull, struct(ordFields: _*))
       (if (backward) min(tagged) else max(tagged)).as(s"_s_$c")
     }

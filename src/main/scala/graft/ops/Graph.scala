@@ -22,8 +22,18 @@ import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType
   */
 object Graph {
 
+  /** PageRank's damping factor, shared by [[pagerank]] and its oracle SQL
+    * [[pagerankSql]] so the two cannot drift.
+    */
+  private val Damping = 0.85
+
+  /** Rank output grain: the iteration grain (see [[pagerank]]), and the
+    * only grain [[pagerankSql]] emits.
+    */
+  private val RankScale = 12
+
   /** Weighted PageRank over an edge list by `iters` rounds of power
-    * iteration with teleport probability 1−`damping`.
+    * iteration with teleport probability 1−d, d = 0.85.
     *
     *   r₀(v)    = 1/N
     *   rᵢ₊₁(v) = (1−d)/N + d·( Σ_{u→v} rᵢ(u)·w(u,v)/out(u)  +  dmᵢ/N )
@@ -38,7 +48,7 @@ object Graph {
     * carries is reproducible bit-for-bit across engines and partitionings.
     *
     * Output: (node, rank) with rank rounded to `outScale` decimals.
-    * `outScale` defaults to 12 — the ITERATION grain, where the re-round is
+    * `outScale` defaults to 12 (`RankScale`) — the ITERATION grain, where the re-round is
     * the identity: each round's rank lies exactly on the 1e-12 grid, so a
     * coarser final round can land exactly on a .5 boundary of that grid,
     * where Spark's decimal-string HALF_UP and a binary-double-rounding
@@ -47,10 +57,9 @@ object Graph {
     * any cross-engine comparison.
     */
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
-               weightCol: String, iters: Int = 10, damping: Double = 0.85,
-               outScale: Int = 12, maxLocalEdges: Int = 100000): DataFrame = {
+               weightCol: String, iters: Int = 10,
+               outScale: Int = RankScale, maxLocalEdges: Int = 100000): DataFrame = {
     require(iters >= 1 && iters <= 100, "iters must be in [1, 100]")
-    require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
     // Eagerly truncate the EDGE lineage too, not just the rank vector's:
     // outW/trans/nodes are consumed once per iteration (dangling anti-join +
     // contribution join), and each of those actions would otherwise
@@ -91,7 +100,7 @@ object Graph {
     // distributed path's semantics define.
     val local = LocalFold.rows(e, maxLocalEdges, _.getLong(2) > 0)
     if (local.isDefined)
-      return pagerankLocal(edges.sparkSession, local.get, nodeT, iters, damping, outScale)
+      return pagerankLocal(edges.sparkSession, local.get, nodeT, iters, outScale)
     // nodes / outW / trans are loop INVARIANTS — checkpoint them once
     // (r16, guide §1.2): each is consumed every round (dangling anti-join,
     // contribution join, rank restore), and un-pinned they re-ran their
@@ -139,8 +148,8 @@ object Graph {
         .crossJoin(broadcast(nrow))
         .crossJoin(broadcast(dm))
         .select(col("node"),
-          round(lit(1.0 - damping) / col("_n") +
-            lit(damping) * (coalesce(col("_c"), lit(0.0)) +
+          round(lit(1.0 - Damping) / col("_n") +
+            lit(Damping) * (coalesce(col("_c"), lit(0.0)) +
               col("_dm") / col("_n")), 12).as("rank"))
     }
     ranks.select(col("node"), round(col("rank"), outScale).as("rank"))
@@ -163,7 +172,7 @@ object Graph {
     *    IEEE divisions on the same operands.
     */
   private def pagerankLocal(spark: SparkSession, edgeRows: Array[Row],
-                            nodeT: DataType, iters: Int, damping: Double,
+                            nodeT: DataType, iters: Int,
                             outScale: Int): DataFrame = {
     def rnd(x: Double, s: Int): Double =
       if (x.isNaN || x.isInfinite) x
@@ -194,8 +203,8 @@ object Graph {
           .reduce(_.add(_)).doubleValue()
       }
       rank = nodes.map { v =>
-        v -> rnd((1.0 - damping) / n.toDouble +
-          damping * (contribs.getOrElse(v, 0.0) + dm / n.toDouble), 12)
+        v -> rnd((1.0 - Damping) / n.toDouble +
+          Damping * (contribs.getOrElse(v, 0.0) + dm / n.toDouble), 12)
       }.toMap
     }
     LocalFold.frame(spark, nodes.map(v => Row(v, rnd(rank(v), outScale))),
@@ -209,10 +218,9 @@ object Graph {
     * literal must carry those bits). `edgesSql` must yield
     * (src, dst, w BIGINT) columns with exactly those names.
     */
-  def pagerankSql(edgesSql: String, iters: Int, damping: Double = 0.85,
-                  outScale: Int = 12): String = {
-    val d = damping.toString
-    val tel = (1.0 - damping).toString
+  def pagerankSql(edgesSql: String, iters: Int): String = {
+    val d = Damping.toString
+    val tel = (1.0 - Damping).toString
     // MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and each
     // iteration references the previous one twice (dangling + contribs) —
     // un-materialized, the planner sees 2^iters copies of the whole chain
@@ -234,6 +242,6 @@ object Graph {
        | tr AS MATERIALIZED (SELECT src, dst, w::DOUBLE / ow::DOUBLE AS p FROM e JOIN ow USING (src)),
        | r0 AS MATERIALIZED (SELECT node, round(1.0 / n, 12) AS r FROM nodes CROSS JOIN nn),
        |$iterCtes
-       |SELECT node, round(r, $outScale) AS rank FROM r$iters ORDER BY node""".stripMargin
+       |SELECT node, round(r, $RankScale) AS rank FROM r$iters ORDER BY node""".stripMargin
   }
 }

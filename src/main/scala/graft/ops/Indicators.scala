@@ -88,16 +88,16 @@ object Indicators {
     round(num / den, 6)
   }
 
-  /** Bollinger bands over the trailing `n` rows: (mid, upper, lower) with
-    * `k` standard deviations (sample variance; std treated as 0 when
+  /** Bollinger bands over the trailing `n` rows: (mid, upper, lower) at
+    * two standard deviations (sample variance; std treated as 0 when
     * cnt <= 1 or variance <= 0, so the first row yields zero-width bands
     * equal to mid — never null). Like [[smaCols]], NULL handling is pinned
     * to SQL AVG/VAR semantics (r15): cnt counts NON-NULL `c` rows, so
     * mean and sample variance range over the real values only (an
     * all-null frame yields NULL bands).
     */
-  def bollingerCols(keys: Seq[String], orderCol: String, c: Column, n: Int,
-                    k: Double = 2.0): (Column, Column, Column) = {
+  def bollingerCols(keys: Seq[String], orderCol: String, c: Column,
+                    n: Int): (Column, Column, Column) = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol))
       .rowsBetween(-(n - 1), 0)
     val cnt = count(c).over(w)
@@ -106,7 +106,7 @@ object Indicators {
     val mid = s1 / cnt
     val variance = (s2 - s1 * s1 / cnt) / (cnt - 1)
     val std = when(cnt > 1 && variance > 0.0, sqrt(variance)).otherwise(lit(0.0))
-    (round(mid, 6), round(mid + lit(k) * std, 6), round(mid - lit(k) * std, 6))
+    (round(mid, 6), round(mid + lit(2.0) * std, 6), round(mid - lit(2.0) * std, 6))
   }
 
   /** RSI over the trailing `n` diffs (SMA flavor). 100 when there are no
@@ -205,7 +205,7 @@ object Indicators {
     * twa = Σ (t_i − t_{i−1}) · (v_i + v_{i−1})/2 over consecutive
     * observations within the day, divided by the observed span
     * (t_last − t_first); NULL when the day has one observation or zero
-    * span. Ordering is second-grain with `idCol` as a stable tiebreaker
+    * span. Ordering is second-grain with `event_id` as a stable tiebreaker
     * (same convention as EventOps.transitions): same-second neighbors
     * contribute zero width, but WHICH value pairs with the next real
     * interval depends on order, so the tiebreak is part of the contract.
@@ -218,16 +218,15 @@ object Indicators {
     *
     * Output: keys ++ (day, n, span_sec, twa).
     */
-  def twa(df: DataFrame, keys: Seq[String], tsCol: String = "ts",
-          valueCol: String = "value", idCol: String = "event_id"): DataFrame = {
+  def twa(df: DataFrame, keys: Seq[String]): DataFrame = {
     val w = Window.partitionBy((keys :+ "_day").map(col): _*)
-      .orderBy(col("_tsec"), col(idCol))
-    val v = col(valueCol)
+      .orderBy(col("_tsec"), col("event_id"))
+    val v = col("value")
     val pv = lag(v, 1).over(w)
     val dt = col("_tsec") - lag(col("_tsec"), 1).over(w)
     val term = when(dt.isNull, lit(null).cast("double"))
       .otherwise(dt.cast("double") * (v + pv) / 2.0)
-    df.withColumn("_tsec", col(tsCol).cast("long"))
+    df.withColumn("_tsec", col("ts").cast("long"))
       .withColumn("_day", expr("_tsec DIV 86400"))
       .withColumn("_term", term)
       .groupBy((keys :+ "_day").map(col): _*)
@@ -242,21 +241,19 @@ object Indicators {
   }
 
   /** MACD with signal line — the canonical TWO-LAYER window composition:
-    * macd = EMA(fast) − EMA(slow) of close (layer 1), signal = EMA of the
+    * macd = EMA(12) − EMA(26) of close (layer 1), signal = EMA(9) of the
     * macd COLUMN (layer 2 — a window over a window-derived column),
     * histogram = macd − signal. Truncated EMAs throughout, so both layers
     * stay pure lag-chain expressions and the whole thing remains exactly
     * reproducible in any engine.
     */
-  def withMacd(candles: DataFrame, keys: Seq[String], fast: Int = 12,
-               slow: Int = 26, signal: Int = 9): DataFrame = {
-    require(fast < slow, "need fast < slow")
+  def withMacd(candles: DataFrame, keys: Seq[String]): DataFrame = {
     val c = col("close")
     val macd = round(
-      emaCols(keys, "ts", c, fast) - emaCols(keys, "ts", c, slow), 6)
+      emaCols(keys, "ts", c, 12) - emaCols(keys, "ts", c, 26), 6)
     candles
       .withColumn("macd", macd)
-      .withColumn("macd_signal", emaCols(keys, "ts", col("macd"), signal))
+      .withColumn("macd_signal", emaCols(keys, "ts", col("macd"), 9))
       .withColumn("macd_hist", round(col("macd") - col("macd_signal"), 6))
   }
 
@@ -301,22 +298,21 @@ object Indicators {
   }
 
   /** Convenience: enrich a candle table (keys + ts/open/high/low/close/
-    * volume) with the standard indicator set.
+    * volume) with the standard indicator set: SMA(10), EMA(10),
+    * Bollinger(20), RSI(14), ATR(14), stochastic %K(14), day VWAP.
     */
-  def enrich(candles: DataFrame, keys: Seq[String], smaN: Int = 10,
-             emaN: Int = 10, bbN: Int = 20, rsiN: Int = 14,
-             atrN: Int = 14, stochN: Int = 14): DataFrame = {
+  def enrich(candles: DataFrame, keys: Seq[String]): DataFrame = {
     val c = col("close")
-    val (mid, up, lo) = bollingerCols(keys, "ts", c, bbN)
+    val (mid, up, lo) = bollingerCols(keys, "ts", c, 20)
     candles
-      .withColumn("sma", smaCols(keys, "ts", c, smaN))
-      .withColumn("ema", emaCols(keys, "ts", c, emaN))
+      .withColumn("sma", smaCols(keys, "ts", c, 10))
+      .withColumn("ema", emaCols(keys, "ts", c, 10))
       .withColumn("bb_mid", mid)
       .withColumn("bb_up", up)
       .withColumn("bb_lo", lo)
-      .withColumn("rsi", rsiCols(keys, "ts", c, rsiN))
-      .withColumn("atr", atrCols(keys, "ts", col("high"), col("low"), c, atrN))
-      .withColumn("stoch_k", stochKCols(keys, "ts", col("high"), col("low"), c, stochN))
+      .withColumn("rsi", rsiCols(keys, "ts", c, 14))
+      .withColumn("atr", atrCols(keys, "ts", col("high"), col("low"), c, 14))
+      .withColumn("stoch_k", stochKCols(keys, "ts", col("high"), col("low"), c, 14))
       .withColumn("vwap_day", vwapDayCols(keys, "ts", c, col("volume")))
   }
 }

@@ -15,16 +15,16 @@ import org.apache.spark.sql.functions._
   */
 object JsonOps {
 
-  /** Project one scalar JSON field out of `jsonCol` as a typed column
+  /** Project one scalar JSON field out of `jsonCol` as a BIGINT column
     * `as`. Extraction is null-safe end to end under ANSI mode: an absent
     * path, malformed document, or non-castable value yields NULL (via
     * `try_cast`), never a runtime error — corrupt payloads at scale are
     * data, not exceptions.
     */
   def withJsonField(df: DataFrame, jsonCol: String, path: String,
-                    as: String, castTo: String = "bigint"): DataFrame =
+                    as: String): DataFrame =
     df.withColumn(as,
-      expr(s"try_cast(get_json_object($jsonCol, '$path') AS $castTo)"))
+      expr(s"try_cast(get_json_object($jsonCol, '$path') AS bigint)"))
 
   /** Per-group stats + payload-health report over one numeric JSON field:
     * (group, n, n_missing, min_v, max_v, sum_v) where `n_missing` counts

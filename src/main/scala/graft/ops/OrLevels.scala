@@ -36,13 +36,12 @@ object LiquidityProfiles {
 
   val defaultCrypto: String = "us_equity_open"
 
-  /** OR levels for a named profile. */
-  def apply(df: DataFrame, name: String = defaultCrypto,
-            keys: Seq[String] = Seq("symbol")): DataFrame = {
+  /** OR levels for a named profile, per symbol. */
+  def apply(df: DataFrame, name: String = defaultCrypto): DataFrame = {
     val p = crypto.getOrElse(name,
       throw new IllegalArgumentException(
         s"unknown liquidity profile '$name' (have: ${crypto.keys.mkString(", ")})"))
-    OrLevels.build(df, p.tz, p.window, keys)
+    OrLevels.build(df, p.tz, p.window)
   }
 }
 

@@ -72,7 +72,7 @@ object RangeJoin {
     */
   def intervalOverlap(left: DataFrame, lStart: String, lEnd: String,
                       right: DataFrame, rStart: String, rEnd: String,
-                      chunkWidth: Long, keys: Seq[String] = Nil): DataFrame = {
+                      chunkWidth: Long): DataFrame = {
     require(chunkWidth > 0, "chunkWidth must be positive")
     def chunked(df: DataFrame, s: String, e: String): DataFrame = df
       .withColumn("_chunk", explode(sequence(
@@ -85,7 +85,7 @@ object RangeJoin {
     // exploded a row for it — the pair's unique meeting point
     val overlapStartChunk =
       expr(s"greatest(`$lStart`, `$rStart`) DIV ${chunkWidth}L")
-    a.join(b, keys :+ "_chunk")
+    a.join(b, Seq("_chunk"))
       .where(col(lStart) < col(rEnd) && col(rStart) < col(lEnd) &&
         col("_chunk") === overlapStartChunk)
       .drop("_chunk")

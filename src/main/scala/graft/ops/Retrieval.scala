@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,10 +24,16 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** BM25 parameters, shared by [[bm25TopK]] and its oracle SQL
+    * [[bm25ContribSql]] so the two cannot drift.
+    */
+  private val K1 = 1.2
+  private val B = 0.75
+
   /** BM25 top-k documents per query.
     *
     * `queries` is a small literal list (query_id, terms). Scores use the
-    * standard Robertson/Sparck-Jones BM25 with parameters `k1`, `b`:
+    * standard Robertson/Sparck-Jones BM25 with k1 = 1.2, b = 0.75:
     *   idf(t)   = ln(1 + (N - df + 0.5) / (df + 0.5))
     *   score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))
     * Per-term contributions are rounded to 6 decimals and summed as
@@ -39,18 +45,17 @@ object Retrieval {
     * ~1 in 100 scores, where Spark's decimal-string HALF_UP and a
     * binary-double-rounding engine legitimately disagree (the q117 lesson).
     *
-    * Output: (query_id, rank, idCol, score), rank 1-based by
-    * (score DESC, id) within each query, rank <= k.
+    * Output: (query_id, rank, doc_id, score), rank 1-based by
+    * (score DESC, doc_id) within each query, rank <= 10, over the
+    * (doc_id, text) columns of `docs`.
     */
-  def bm25TopK(docs: DataFrame, queries: Seq[(String, Seq[String])],
-               idCol: String = "doc_id", textCol: String = "text",
-               k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25TopK(docs: DataFrame, queries: Seq[(String, Seq[String])]): DataFrame = {
     require(queries.nonEmpty, "need at least one query")
     val spark = docs.sparkSession
     import spark.implicits._
     val tf = docs
-      .select(col(idCol), explode(TextAnalysis.words(col(textCol))).as("term"))
-      .groupBy(col(idCol), col("term"))
+      .select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("term"))
+      .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     // doc length from the SAME tokenization (sum of term frequencies), so
     // empty/degenerate documents are measured exactly as they were indexed.
@@ -60,7 +65,7 @@ object Retrieval {
     // contributions — the window shares tf's pipeline and rides into the
     // postings for free (frame = one doc's terms, never data-sized).
     val tfdl = tf.withColumn("dl",
-      sum(col("tf")).over(Window.partitionBy(col(idCol))))
+      sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
     // N and avgdl as a one-row broadcast; the long sum is exact, the single
     // division is the only float born here. Computed from a direct per-doc
     // token count (r17, guide §1.2): per-doc dl = count of exploded terms =
@@ -71,8 +76,8 @@ object Retrieval {
     // corpus-sized tf table to make it one pass is a data-sized
     // materialization, deliberately avoided.
     val nrow = docs
-      .select(col(idCol), explode(TextAnalysis.words(col(textCol))).as("term"))
-      .groupBy(col(idCol)).agg(count(lit(1)).as("dl"))
+      .select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("term"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
       .agg(count(lit(1)).as("n_docs"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     val qdf = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
@@ -93,25 +98,25 @@ object Retrieval {
       .crossJoin(broadcast(nrow))
       .withColumn("contrib", round(
         log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))), 6))
-    val scored = contrib.groupBy(col("query_id"), col(idCol))
+          (col("tf") * lit(K1 + 1.0)) /
+          (col("tf") + lit(K1) *
+            (lit(1.0 - B) + lit(B) * col("dl").cast("double") / col("avgdl"))), 6))
+    val scored = contrib.groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("contrib").cast("decimal(38,6)")).cast("double"), 6)
         .as("score"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col(idCol))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("doc_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(idCol), col("score"))
+      .where(col("rank") <= 10)
+      .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 
   /** SQL fragments for [[bm25TopK]]'s score expression, generated from the
     * SAME Scala doubles the DataFrame plan uses (Double.toString round-trips
     * exactly, so the literals parse to identical bits in DuckDB).
     */
-  def bm25ContribSql(k1: Double = 1.2, b: Double = 0.75): String =
+  val bm25ContribSql: String =
     s"round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-      s"(tf * ${k1 + 1.0}) / (tf + $k1 * (${1.0 - b} + $b * dl / avgdl)), 6)"
+      s"(tf * ${K1 + 1.0}) / (tf + $K1 * (${1.0 - B} + $B * dl / avgdl)), 6)"
 
   /** Vocabulary coverage curve over word bigrams: for each probe vocabulary
     * size v, the fraction of all bigram OCCURRENCES covered by the top-v

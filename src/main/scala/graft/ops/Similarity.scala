@@ -148,11 +148,10 @@ object Similarity {
       .drop("_d", "_rn", "_cent", "_centn", "_vn0")
 
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-              k: Int, nCentroids: Int = 16, nprobe: Int = 1): DataFrame = {
-    require(nprobe >= 1 && nprobe <= nCentroids, s"nprobe $nprobe out of range")
+              k: Int, nCentroids: Int = 16): DataFrame = {
     val cents = ivfCentroids(corpus, idCol, vecCol, nCentroids)
     def assign(df: DataFrame, vec: String): DataFrame = ivfAssign(df, idCol, vec, cents)
-    val q = ivfAssign(queries.select(col(idCol), col(vecCol)), idCol, vecCol, cents, nprobe)
+    val q = assign(queries.select(col(idCol), col(vecCol)), vecCol)
       .select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
         normNative(col(vecCol)).as("_qn"), col("cent_id").as("cell"))
     val c = assign(corpus.select(col(idCol), col(vecCol)), vecCol)
@@ -194,15 +193,14 @@ object Similarity {
     */
   def planeCollisionProb(t: Double): Double = 1.0 - math.acos(t) / math.Pi
 
-  /** Bands needed for ≥ `target` recall of a pair AT the threshold, given
+  /** Bands needed for ≥ [[NearDupTargetRecall]] recall of a pair AT the threshold, given
     * r sign bits per band: recall = 1 − (1 − p^r)^B. Floors at 32 (the
     * measured defaults), caps at 128 — at the cap the per-row key work is
     * 128·r dots, still linear and far under the quadratic it replaces.
     */
-  def bandsForRecall(threshold: Double, planesPerBand: Int,
-                     target: Double = NearDupTargetRecall): Int = {
+  def bandsForRecall(threshold: Double, planesPerBand: Int): Int = {
     val pr = math.pow(planeCollisionProb(threshold), planesPerBand)
-    val b = math.ceil(math.log(1.0 - target) / math.log(1.0 - pr))
+    val b = math.ceil(math.log(1.0 - NearDupTargetRecall) / math.log(1.0 - pr))
     math.min(128, math.max(32, if (b.isNaN || b.isInfinite) 128 else b.toInt))
   }
 
@@ -568,8 +566,8 @@ object Similarity {
     * Why this is THE 100 TB shape: the ADC scan side carries
     * `(neighbor_id, cell, m codes)` — at m=4/dim=64 float that is 64×
     * smaller than the corpus — and the cell equi-join prunes it a further
-    * nCentroids× per query, so per-query probe cost is
-    * O(n·m / nCentroids) byte-cheap code lookups instead of O(n·d) vector
+    * 16× (the cell count) per query, so per-query probe cost is
+    * O(n·m / 16) byte-cheap code lookups instead of O(n·d) vector
     * dots. Full vectors are touched exactly twice: once at encode time and
     * once for the k surviving rows per query (the re-rank join, k·|queries|
     * rows broadcast against the corpus). Codes are encoded against the
@@ -584,11 +582,10 @@ object Similarity {
     * (adist, neighbor_id) per query, ranked WITHIN the probed cell.
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-                vecCol: String, k: Int, nCentroids: Int = 16, m: Int = 4,
-                codes: Int = 16, dim: Int = 64, nprobe: Int = 1): DataFrame = {
-    require(nprobe >= 1 && nprobe <= nCentroids, s"nprobe $nprobe out of range")
-    val cents = ivfCentroids(corpus, idCol, vecCol, nCentroids)
-    val pq = fitPq(corpus, idCol, vecCol, m, codes, dim)
+                vecCol: String, k: Int, nprobe: Int = 1): DataFrame = {
+    require(nprobe >= 1 && nprobe <= IvfCells, s"nprobe $nprobe out of range")
+    val cents = ivfCentroids(corpus, idCol, vecCol, IvfCells)
+    val pq = fitPq(corpus, idCol, vecCol, PqSubspaces, PqCodes, PqDim)
     // the inverted file: cell + m codes per corpus row — vectors DROPPED
     val codeTable = pq.withCodes(
       ivfAssign(corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
@@ -596,12 +593,20 @@ object Similarity {
     // query side: cell + codes-entry ADC table per subspace (broadcast —
     // queries are a small batch by contract, as in pqTopK); nprobe > 1
     // probes the query's nprobe nearest cells (recall knob, scan cost
-    // nprobe/nCentroids of the code table per query)
+    // nprobe/16 of the code table per query)
     val q0 = pq.withAdcTables(
       ivfAssign(queries.select(col(idCol), col(vecCol)), idCol, vecCol, cents, nprobe),
       vecCol, Seq(col(idCol).as("query_id"), col("cent_id").as("cell")))
     ivfPqScan(q0, codeTable, pq, queries, corpus, idCol, vecCol, k)
   }
+
+  /** The IVF-PQ layout of [[ivfPqTopK]] and the persisted [[AnnIndex]]:
+    * 16 coarse cells, 4 subspaces of 16 codes each, over 64-dim vectors.
+    */
+  private[ops] val IvfCells = 16
+  private[ops] val PqSubspaces = 4
+  private[ops] val PqCodes = 16
+  private[ops] val PqDim = 64
 
   /** The ADC probe + exact-re-rank tail shared by [[ivfPqTopK]] and
     * [[AnnIndex.query]]: `q0` = (query_id, cell, ADC tables), `codeTable` =

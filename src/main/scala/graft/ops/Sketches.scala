@@ -297,6 +297,9 @@ object Sketches {
   // Count-min frequency sketch
   // ---------------------------------------------------------------------
 
+  /** Hash rows of the batch count-min sketch. */
+  private val CmsDepth = 4
+
   /** Cell index of a key under hash row i: ((key mod P)·a_i + b_i) mod P
     * mod width.
     */
@@ -304,15 +307,14 @@ object Sketches {
     longHash(key, a, b) % width
 
   /** Build a count-min sketch over a long key column. Output:
-    * (row, cell, cnt) with at most depth × width rows. The groupBy key
+    * (row, cell, cnt) with at most 4 × width rows. The groupBy key
     * space is bounded, so map-side combine caps every partition's shuffle
-    * contribution at depth × width partial counts regardless of input
+    * contribution at 4 × width partial counts regardless of input
     * size or key skew — this is the whole point of the sketch at 100 TB.
     */
-  def countMinSketch(df: DataFrame, keyCol: String,
-                     depth: Int = 4, width: Int = 1024): DataFrame = {
-    require(depth >= 1 && width >= 2, "need depth >= 1, width >= 2")
-    val rows = mixConsts(depth).zipWithIndex.map { case ((a, b), i) =>
+  def countMinSketch(df: DataFrame, keyCol: String, width: Int = 1024): DataFrame = {
+    require(width >= 2, "need width >= 2")
+    val rows = mixConsts(CmsDepth).zipWithIndex.map { case ((a, b), i) =>
       struct(lit(i).as("row"), cellOf(col(keyCol), a, b, width).as("cell"))
     }
     // NULL keys hash to NULL cells — unprobeable rows that only bloat the
@@ -326,12 +328,12 @@ object Sketches {
   /** Point-estimate frequencies for `keys` (a one-column DataFrame of long
     * keys) against a built sketch: est(key) = min over rows of the key's
     * cell counter (the classic upward-biased count-min estimate). The
-    * sketch is at most depth × width rows, so it broadcasts; the probe
+    * sketch is at most 4 × width rows, so it broadcasts; the probe
     * never shuffles the keys.
     */
   def countMinEstimate(sketch: DataFrame, keys: DataFrame, keyCol: String,
-                       depth: Int = 4, width: Int = 1024): DataFrame = {
-    val rows = mixConsts(depth).zipWithIndex.map { case ((a, b), i) =>
+                       width: Int = 1024): DataFrame = {
+    val rows = mixConsts(CmsDepth).zipWithIndex.map { case ((a, b), i) =>
       struct(lit(i).as("row"), cellOf(col(keyCol), a, b, width).as("cell"))
     }
     // same NULL contract as the build side: a NULL key has no identity —
@@ -348,9 +350,8 @@ object Sketches {
     * `keys` in one call.
     */
   def countMinFrequencies(df: DataFrame, keyCol: String, keys: DataFrame,
-                          depth: Int = 4, width: Int = 1024): DataFrame =
-    countMinEstimate(countMinSketch(df, keyCol, depth, width), keys, keyCol,
-      depth, width)
+                          width: Int = 1024): DataFrame =
+    countMinEstimate(countMinSketch(df, keyCol, width), keys, keyCol, width)
 
   // ---------------------------------------------------------------------
   // Bloom membership filter
@@ -442,12 +443,22 @@ object Sketches {
       bsh.select(Dedup.shingleHash(col("shingle")).as("h")), "h", mBits, k))
   }
 
+  /** Bloom size and hash count of the benchmark filter, shared by the
+    * batch ([[bloomDecontaminate]]) and streaming
+    * (`DocumentStream.decontaminated`) faces.
+    */
+  private[graft] val BloomBits = 65536
+  private[graft] val BloomHashes = 4
+
+  /** Batch decontamination through the benchmark bloom filter over word
+    * 3-shingles.
+    */
   def bloomDecontaminate(corpus: DataFrame, benchmark: DataFrame,
-                         idCol: String, textCol: String, n: Int = 3,
-                         mBits: Int = 65536, k: Int = 4): DataFrame = {
-    val (bsh, bits) = benchmarkBloom(benchmark, textCol, n, mBits, k)
-    Dedup.shingles(corpus, idCol, textCol, n)
-      .where(bloomContains(bits, mBits, k)(Dedup.shingleHash(col("shingle"))))
+                         idCol: String, textCol: String): DataFrame = {
+    val (bsh, bits) =
+      benchmarkBloom(benchmark, textCol, Dedup.ShingleWords, BloomBits, BloomHashes)
+    Dedup.shingles(corpus, idCol, textCol, Dedup.ShingleWords)
+      .where(bloomContains(bits, BloomBits, BloomHashes)(Dedup.shingleHash(col("shingle"))))
       .join(broadcast(bsh), "shingle")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_overlap"))

@@ -146,17 +146,17 @@ object TextAnalysis {
         }, lit(re))
     }.reduce(_ + _)
 
-  /** Top-`k` word n-grams per group by DOCUMENT frequency (each doc counts
-    * an n-gram once — [[graft.functions.WordShingles]] emits per-doc
+  /** Top-`k` word bigrams per group by DOCUMENT frequency (each doc counts
+    * a bigram once — [[graft.functions.WordShingles]] emits per-doc
     * distinct shingles). The rank filter is `row_number <= k`, which Spark
     * plans with WindowGroupLimit: every map task keeps only its local top-k
     * per group before the shuffle, so the exchange carries O(groups·k) rows
     * per task, not the full vocabulary.
     */
   def topNgrams(docs: DataFrame, groupCol: String, textCol: String,
-                n: Int = 2, k: Int = 5): DataFrame = {
+                k: Int = 5): DataFrame = {
     val df = docs.select(col(groupCol),
-      explode(graft.functions.TextFunctions.wordShingles(col(textCol), n)).as("ngram"))
+      explode(graft.functions.TextFunctions.wordShingles(col(textCol), 2)).as("ngram"))
       .groupBy(col(groupCol), col("ngram"))
       .agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col(groupCol)).orderBy(col("df").desc, col("ngram"))
@@ -180,13 +180,11 @@ object TextAnalysis {
       .otherwise(lit(0.0))
   }
 
-  /** Per doc: the most frequent word n-gram (ties broken by n-gram text,
-    * ascending), its count, and its share of the doc's n-gram occurrences.
-    * Docs with fewer than n words have no n-gram and are omitted.
+  /** Per doc: the most frequent word bigram (ties broken by bigram text,
+    * ascending), its count, and its share of the doc's bigram occurrences.
+    * Docs with fewer than 2 words have no bigram and are omitted.
     */
-  def topNgramShare(docs: DataFrame, idCol: String, textCol: String,
-                    n: Int = 2): DataFrame = {
-    require(n == 2, "topNgramShare currently supports bigrams (n=2)")
+  def topNgramShare(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = docs.select(col(idCol),
       posexplode(words(col(textCol))).as(Seq("pos", "w")))
     val w = Window.partitionBy(col(idCol)).orderBy(col("pos"))
@@ -211,14 +209,13 @@ object TextAnalysis {
     * the document's content fingerprint, so it is stable across runs,
     * cluster sizes, and re-shuffles, and near-identical documents land via
     * their own hash (use near-dup clustering upstream when exact-hash
-    * stability is not enough). Pure per-row arithmetic; no shuffle.
+    * stability is not enough). Buckets 80/10/10. Pure per-row arithmetic;
+    * no shuffle.
     */
-  def datasetSplit(text: Column, trainPct: Int = 80, valPct: Int = 10): Column = {
-    require(trainPct >= 0 && valPct >= 0 && trainPct + valPct <= 100,
-      s"need 0 <= trainPct + valPct <= 100, got trainPct=$trainPct valPct=$valPct")
+  def datasetSplit(text: Column): Column = {
     val bucket = pmod(fingerprint(text), lit(100L))
-    when(bucket < trainPct, lit("train"))
-      .when(bucket < trainPct + valPct, lit("val"))
+    when(bucket < 80, lit("train"))
+      .when(bucket < 90, lit("val"))
       .otherwise(lit("test"))
   }
 
@@ -270,23 +267,21 @@ object TextAnalysis {
     * curation pipeline publishes per snapshot so a filter regression (one
     * stage suddenly eating the corpus) is visible at a glance.
     *
-    * Stages: total → nonempty → ≥ minTokens tokens → punctuation ratio ≤
-    * maxPunct → duplicate-word fraction ≤ maxDupWords → quality score ≥
-    * minQuality. Thresholds compare the same round-4 values the profile
-    * queries export, so the funnel is bit-consistent with them.
+    * Stages: total → nonempty → ≥ 10 tokens → punctuation ratio ≤ 0.1 →
+    * duplicate-word fraction ≤ 0.3 → quality score ≥ 0.5. Thresholds
+    * compare the same round-4 values the profile queries export, so the
+    * funnel is bit-consistent with them.
     *
     * One pass, one 1-row aggregate (conditional sums), exploded to a
     * 6-row report — no shuffle of document rows at any width.
     */
-  def filterFunnel(docs: DataFrame, textCol: String, minTokens: Int = 10,
-                   maxPunct: Double = 0.1, maxDupWords: Double = 0.3,
-                   minQuality: Double = 0.5): DataFrame = {
+  def filterFunnel(docs: DataFrame, textCol: String): DataFrame = {
     val t = col(textCol)
     val c1 = nonEmpty(t)
-    val c2 = c1 && tokenCount(t) >= minTokens
-    val c3 = c2 && round(punctRatio(t), 4) <= maxPunct
-    val c4 = c3 && round(dupWordFraction(t), 4) <= maxDupWords
-    val c5 = c4 && qualityScore(t) >= minQuality
+    val c2 = c1 && tokenCount(t) >= 10
+    val c3 = c2 && round(punctRatio(t), 4) <= 0.1
+    val c4 = c3 && round(dupWordFraction(t), 4) <= 0.3
+    val c5 = c4 && qualityScore(t) >= 0.5
     def n(c: String): Column = sum(col(c).cast("long"))
     val names = Seq("total", "nonempty", "min_tokens", "low_punct",
       "low_dup_words", "min_quality")
@@ -304,9 +299,9 @@ object TextAnalysis {
       .select(col("s.stage"), col("s.stage_name"), col("s.n_pass"))
   }
 
-  /** Convenience: full per-document profile. */
-  def profile(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  /** Convenience: full per-document profile of the `text` column. */
+  def profile(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs
       .withColumn("n_tokens", tokenCount(t).cast("long"))
       .withColumn("mean_word_len", round(meanWordLen(t), 4))
@@ -319,7 +314,7 @@ object TextAnalysis {
 
   /** PMI word-association mining (the co-occurrence statistic behind
     * word2vec-era embeddings and collocation extraction): unordered
-    * within-window pairs (each token with its next `window` neighbors,
+    * within-window pairs (each token with its next 3 neighbors,
     * self-pairs excluded), scored by pointwise mutual information
     * pmi = ln p(x,y) − ln p(x) − ln p(y), computed as a sum of logs so no
     * intermediate product can overflow at any corpus size.
@@ -331,12 +326,12 @@ object TextAnalysis {
     * counts reduce to vocab grain; N/P normalizers are 1-row broadcasts;
     * selection is the limit-bounded top-k pattern.
     */
-  def pmiPairs(docs: DataFrame, textCol: String, window: Int = 3,
+  def pmiPairs(docs: DataFrame, textCol: String,
                minPairCount: Long = 5L, k: Int = 30): DataFrame = {
     val toks = docs.select(words(col(textCol)).as("l"))
     val pairs = toks.select(explode(flatten(
         transform(col("l"), (w, i) =>
-          transform(slice(col("l"), i + lit(2), lit(window)),
+          transform(slice(col("l"), i + lit(2), lit(3)),
             w2 => struct(least(w, w2).as("a"), greatest(w, w2).as("b"))))))
         .as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))

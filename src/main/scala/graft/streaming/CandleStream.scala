@@ -35,9 +35,9 @@ object CandleStream {
     * order, not a replay bug. Bars whose ticks have unique timestamps are
     * unaffected.
     */
-  def m1Bars(ticks: DataFrame, watermark: String = "2 minutes"): DataFrame = {
+  def m1Bars(ticks: DataFrame): DataFrame = {
     ticks
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "2 minutes")
       .groupBy(window(col("ts"), "1 minute"), col("symbol"))
       .agg(
         // struct tiebreak: a tick feed can carry several ticks in the same

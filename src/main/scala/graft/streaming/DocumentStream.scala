@@ -28,28 +28,25 @@ import org.apache.spark.sql.functions._
 object DocumentStream {
 
   /** docs(ts, doc_id, text) -> deduped, annotated, quality-filtered stream.
-    * Event-time column `ts` drives the watermark. `bits` is the corpus-
-    * scale signature dial (see `Dedup.simhashCandidatesFromSignatures`) —
-    * land 48-bit signatures when the downstream batch blocking uses
-    * 12-bit chunks.
+    * Event-time column `ts` drives a 10-minute watermark. Signatures are
+    * `Dedup.DefaultSimhashBits` wide, the width the downstream batch
+    * blocking uses (see `Dedup.simhashCandidatesFromSignatures`).
     */
-  def cleaned(docs: DataFrame, watermark: String = "10 minutes",
-              minQuality: Double = 0.3,
-              bits: Int = Dedup.DefaultSimhashBits): DataFrame = {
+  def cleaned(docs: DataFrame, minQuality: Double = 0.3): DataFrame = {
     docs
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "10 minutes")
       .withColumn("text_hash", md5(col("text")))
       .dropDuplicatesWithinWatermark("text_hash")
       .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")).cast("long"))
       .withColumn("quality_score", TextAnalysis.qualityScore(col("text")))
       .withColumn("lang_guess", TextAnalysis.langId(col("text")))
-      .withColumn("simhash", Dedup.simhash(col("text"), bits))
+      .withColumn("simhash", Dedup.simhash(col("text"), Dedup.DefaultSimhashBits))
       .where(col("quality_score") >= minQuality)
   }
 
   /** Streaming twin of [[graft.ops.Sketches.bloomDecontaminate]] (q61):
     * flag documents overlapping a FROZEN benchmark suite as they arrive.
-    * The bloom bit array (mBits/8 bytes) rides into every task as a
+    * The bloom bit array (8 KiB) rides into every task as a
     * literal inside codegen — most shingles die there with zero join — and
     * only survivors pay the stream-static broadcast probe against the
     * exact benchmark shingle set, so the confirmed overlap counts carry NO
@@ -62,23 +59,24 @@ object DocumentStream {
     * CONTAMINATED doc finalized when the watermark passes its window
     * (clean documents emit nothing, like the batch op).
     */
-  def decontaminated(docs: DataFrame, benchmark: DataFrame, n: Int = 3,
-                     mBits: Int = 65536, k: Int = 4,
-                     watermark: String = "10 minutes",
-                     windowSize: String = "10 minutes"): DataFrame = {
-    import graft.ops.{Dedup, Sketches}
+  def decontaminated(docs: DataFrame, benchmark: DataFrame,
+                     watermark: String = "10 minutes"): DataFrame = {
+    import graft.ops.Sketches
+    import graft.ops.Sketches.{BloomBits, BloomHashes}
     // shared prelude with the batch face — one definition of the benchmark
     // artifact (Sketches.benchmarkBloom), so q61 parity holds by
     // construction
-    val (bsh, bits) = Sketches.benchmarkBloom(benchmark, "text", n, mBits, k)
+    val (bsh, bits) = Sketches.benchmarkBloom(benchmark, "text", Dedup.ShingleWords,
+      BloomBits, BloomHashes)
     docs
       .withWatermark("ts", watermark)
       .select(col("ts"), col("doc_id"),
-        explode(graft.functions.TextFunctions.wordShingles(col("text"), n))
+        explode(graft.functions.TextFunctions.wordShingles(col("text"), Dedup.ShingleWords))
           .as("shingle"))
-      .where(Sketches.bloomContains(bits, mBits, k)(Dedup.shingleHash(col("shingle"))))
+      .where(Sketches.bloomContains(bits, BloomBits, BloomHashes)(
+        Dedup.shingleHash(col("shingle"))))
       .join(broadcast(bsh), Seq("shingle"))
-      .groupBy(window(col("ts"), windowSize), col("doc_id"))
+      .groupBy(window(col("ts"), "10 minutes"), col("doc_id"))
       .agg(count(lit(1)).as("n_overlap"))
       .select(col("doc_id"), col("n_overlap"))
   }
@@ -95,8 +93,7 @@ object DocumentStream {
     * beyond the per-doc aggregation, mirroring the batch shape.
     */
   def scored(docs: DataFrame, lm: DataFrame, oovLogp: Double,
-             watermark: String = "10 minutes",
-             windowSize: String = "10 minutes"): DataFrame = {
+             watermark: String = "10 minutes"): DataFrame = {
     docs
       .withWatermark("ts", watermark)
       .select(col("ts"), col("doc_id"),
@@ -104,7 +101,7 @@ object DocumentStream {
       .join(broadcast(lm), Seq("w"), "left")
       .select(col("ts"), col("doc_id"),
         coalesce(col("logp"), lit(oovLogp)).as("logp"))
-      .groupBy(window(col("ts"), windowSize), col("doc_id"))
+      .groupBy(window(col("ts"), "10 minutes"), col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), round(-avg(col("logp")), 6).as("nll"))
       .select(col("doc_id"), col("n_tokens"), col("nll"))
   }

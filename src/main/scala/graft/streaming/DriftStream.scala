@@ -55,23 +55,23 @@ object DriftStream {
       .groupBy(col("term")).agg(count(lit(1)).as("c_ref"))
       .orderBy(col("c_ref").desc, col("term")).limit(vocab)
 
-  /** Streaming (or batch — the plan is mode-agnostic) windowed term
-    * counts against a static reference: (win_sec, term, c) with off-vocab
-    * terms collapsed to [[OovTerm]] BEFORE the stateful aggregation. The
+  /** Streaming (or batch — the plan is mode-agnostic) hourly term counts
+    * of `docs(ts, text)` against a static reference: (win_sec, term, c)
+    * with off-vocab terms collapsed to [[OovTerm]] BEFORE the stateful
+    * aggregation. The
     * reference joins as a broadcast stream-static hash join, so the
     * stream side never shuffles except for the windowed aggregation
     * itself.
     */
-  def termCounts(docs: DataFrame, ref: DataFrame, tsCol: String = "ts",
-                 textCol: String = "text", windowSize: String = "1 hour",
+  def termCounts(docs: DataFrame, ref: DataFrame,
                  delay: String = "30 minutes"): DataFrame = {
-    val tagged = (if (docs.isStreaming) docs.withWatermark(tsCol, delay) else docs)
-      .select(col(tsCol), explode(TextAnalysis.words(col(textCol))).as("_t"))
+    val tagged = (if (docs.isStreaming) docs.withWatermark("ts", delay) else docs)
+      .select(col("ts"), explode(TextAnalysis.words(col("text"))).as("_t"))
       .join(broadcast(ref.select(col("term").as("_rt"))),
         col("_t") === col("_rt"), "left")
-      .select(col(tsCol), coalesce(col("_rt"), lit(OovTerm)).as("term"))
+      .select(col("ts"), coalesce(col("_rt"), lit(OovTerm)).as("term"))
     tagged
-      .groupBy(window(col(tsCol), windowSize), col("term"))
+      .groupBy(window(col("ts"), "1 hour"), col("term"))
       .agg(count(lit(1)).as("c"))
       .select(unix_timestamp(col("window.start")).as("win_sec"),
         col("term"), col("c"))

@@ -25,8 +25,8 @@ object EnrichStream {
   /** Pair every point row with every opener row of the same `keys` whose
     * half-open window [openTs, openTs + windowSeconds) contains the point's
     * `ptsTs`. Both inputs must be streaming DataFrames with TIMESTAMP
-    * event-time columns; `delay` is the watermark (late-data allowance) for
-    * both. Output carries the columns of both sides (keys once).
+    * event-time columns, each with a 1-minute watermark (late-data
+    * allowance). Output carries the columns of both sides (keys once).
     *
     * The join carries the SAME chunk equi-key as the batch operator
     * ([[graft.ops.RangeJoin.pointInInterval]]): each opener explodes to the
@@ -41,8 +41,7 @@ object EnrichStream {
     */
   def pointsInWindows(points: DataFrame, ptsTs: String,
                       opens: DataFrame, openTs: String,
-                      windowSeconds: Long, keys: Seq[String],
-                      delay: String = "1 minute"): DataFrame = {
+                      windowSeconds: Long, keys: Seq[String]): DataFrame = {
     require(windowSeconds > 0, "windowSeconds must be positive")
     require(ptsTs != openTs,
       "rename one of the event-time columns: both sides in one output")
@@ -52,9 +51,9 @@ object EnrichStream {
     require(!points.columns.contains("_chunk") && !opens.columns.contains("_chunk"),
       "inputs must not carry a `_chunk` column (reserved working name)")
     val cwMicros = windowSeconds * 1000000L
-    val p = points.withWatermark(ptsTs, delay)
+    val p = points.withWatermark(ptsTs, "1 minute")
       .withColumn("_chunk", expr(s"unix_micros(`$ptsTs`) DIV ${cwMicros}L"))
-    val o = opens.withWatermark(openTs, delay)
+    val o = opens.withWatermark(openTs, "1 minute")
       .withColumn("_chunk", explode(sequence(
         expr(s"unix_micros(`$openTs`) DIV ${cwMicros}L"),
         expr(s"(unix_micros(`$openTs`) + ${cwMicros}L - 1) DIV ${cwMicros}L"))))

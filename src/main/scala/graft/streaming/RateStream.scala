@@ -29,12 +29,10 @@ object RateStream {
     * pre-1970 events differently. Pre-epoch event times are out of
     * contract here — assert/filter upstream if a corpus can carry them.
     */
-  def hourlyCounts(events: DataFrame, bucketSeconds: Long = 3600L,
-                   typeCol: String = "event_type", tsCol: String = "ts",
-                   delay: String = "30 minutes"): DataFrame =
-    events.withWatermark(tsCol, delay)
-      .groupBy(col(typeCol).as("event_type"),
-        window(col(tsCol), s"$bucketSeconds seconds"))
+  def hourlyCounts(events: DataFrame, delay: String = "30 minutes"): DataFrame =
+    events.withWatermark("ts", delay)
+      .groupBy(col("event_type").as("event_type"),
+        window(col("ts"), "3600 seconds"))
       .agg(count(lit(1)).as("n"))
       .select(col("event_type"),
         unix_timestamp(col("window.start")).as("hour_sec"), col("n"))

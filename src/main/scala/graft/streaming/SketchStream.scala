@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming KMV distinct-count — the streaming twin of the batch
   * `Sketches.kmvDistinct` (q63).

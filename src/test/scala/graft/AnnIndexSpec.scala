@@ -39,7 +39,6 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("append encodes against the FROZEN quantizers and is probe-visible") {
-    import spark.implicits._
     val sf = "/root/testdata/sf0.01"
     assume(new java.io.File(sf).isDirectory)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -68,7 +67,6 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("append protocol: uncommitted batch invisible; committed retry no-op; rebuild clears appends") {
-    import spark.implicits._
     val sf = "/root/testdata/sf0.01"
     assume(new java.io.File(sf).isDirectory)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -103,6 +101,22 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.build(emb.where(col("vec_id") < 100), "vec_id", "embedding", dir)
     assert(!new java.io.File(s"$dir/append").exists())
     assert(twinCount() === 0L)
+  }
+
+  test("an index under a scheme-qualified dir (file:) appends and queries") {
+    val sf = "/root/testdata/sf0.01"
+    assume(new java.io.File(sf).isDirectory)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val dir = "file:" + tmpDir()
+    AnnIndex.build(emb.where(col("vec_id") < 100), "vec_id", "embedding", dir)
+    val batch = emb.where(col("vec_id") >= 100 && col("vec_id") < 120)
+    AnnIndex.append(batch, "vec_id", "embedding", dir, batchId = "b1")
+    // the 16 centroid vectors probe every cell (see the append-protocol test)
+    val seen = AnnIndex.query(emb.where(col("vec_id") < 16), emb, "vec_id", "embedding",
+        dir, k = 100000)
+      .where(col("neighbor_id") >= 100).select("neighbor_id").distinct().count()
+    assert(seen === batch.count())
   }
 
   test("query and append refuse an index without meta (meta-last commit)") {

@@ -24,7 +24,7 @@ class CorpusSpec extends AnyFunSuite {
     val got = Corpus.decontaminate(docs, bench, "doc_id", "text", 3)
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
     assert(got === Seq((1L, 2L), (3L, 2L)))
-    val clean = Corpus.decontaminated(docs, bench, "doc_id", "text", 3)
+    val clean = Corpus.decontaminated(docs, bench, "doc_id", "text")
       .select("doc_id").as[Long].collect().sorted
     assert(clean === Seq(2L, 4L, 5L, 6L))
   }
@@ -275,7 +275,7 @@ class CorpusSpec extends AnyFunSuite {
       (2L, Seq.fill(10)("w").mkString(" "), "es"),
       (3L, Seq.fill(2)("w").mkString(" "), "zh"),
     ).toDF("doc_id", "text", "lang")
-    val rows = Corpus.mixtureWeights(d, "lang", "text", maxWeight = 5.0)
+    val rows = Corpus.mixtureWeights(d, "lang", "text")
       .orderBy("lang").collect()
       .map(r => (r.getString(0), r.getLong(2), r.getDouble(3), r.getDouble(4)))
     assert(rows.map(_._2).toSeq === Seq(30L, 10L, 2L))
@@ -414,7 +414,7 @@ class CorpusSpec extends AnyFunSuite {
       (3L, "shared shared other tokens here", "en"),
       (4L, "shared other tokens here too", "en"))
       .toDF("doc_id", "text", "lang")
-    val got = Corpus.chiSquareTerms(df, "lang", "text", k = 3, minCount = 5L)
+    val got = Corpus.chiSquareTerms(df, "lang", "text", k = 3)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getDouble(3)))
     val de = got.filter(_._1 == "de")
     assert(de.nonEmpty && de.head._3 === "nur") // top salient term for de

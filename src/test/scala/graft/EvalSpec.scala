@@ -82,7 +82,7 @@ class EvalSpec extends AnyFunSuite {
       ("a", -0.2, false), ("a", 0.05, false), ("a", 1.0, true), ("a", 0.95, true),
       ("a", 0.55, true), ("a", 0.55, false),
     ).toDF("g", "score", "label")
-    val got = Eval.calibration(df, Seq("g"), "score", "label", bins = 10)
+    val got = Eval.calibration(df, Seq("g"), "score", "label")
       .collect().map(r => (r.getLong(1), (r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))))
       .toMap
     assert(got.keySet === Set(0L, 5L, 9L)) // -0.2 and 1.0 clamp to edge bins

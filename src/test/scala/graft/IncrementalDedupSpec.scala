@@ -200,8 +200,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sf/documents.parquet").exists())
     val docsDf = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val batch = Dedup.simhashAnchorCandidates(docsDf, "doc_id", "text",
-        maxHamming = 3, bits = 48)
+    val batch = Dedup.simhashAnchorCandidates(docsDf, "doc_id", "text", bits = 48)
       .orderBy("doc_id", "anchor_id").as[(Long, Long, Long)].collect().toSeq
     // brute-force the contract from the wide signatures
     val sigs = docsDf.select(col("doc_id"), Dedup.simhash(col("text"), 48).as("s"))
@@ -272,7 +271,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val day1 = docs.where(col("doc_id") % 3 =!= 0)
     val day2 = docs.where(col("doc_id") % 3 === 0)
     val reg = Dedup.simhashBucketRegistrySigs(day1, "doc_id", "text", bits = 48)
-    val got = Dedup.simhashRoute(day2, "doc_id", "text", reg, maxHamming = 3,
+    val got = Dedup.simhashRoute(day2, "doc_id", "text", reg,
         bits = 48)
       .orderBy("doc_id")
       .as[(Long, Long, Option[Long], Option[Long])].collect().toSeq
@@ -328,11 +327,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val mergedReg = Dedup.mergeBucketRegistries(
       Dedup.simhashBucketRegistrySigs(day1, "doc_id", "text"),
       Dedup.simhashBucketRegistrySigs(day2, "doc_id", "text"))
-    val routed = Dedup.simhashRoute(day2, "doc_id", "text", mergedReg,
-        maxHamming = 3)
+    val routed = Dedup.simhashRoute(day2, "doc_id", "text", mergedReg)
       .where(col("is_dup") === 1L).select(col("doc_id"), col("best_anchor"))
     val pairs = Dedup.verifyRoutedPairs(routed, day2, docs,
-      "doc_id", "text", n = 3, threshold = 0.5)
+      "doc_id", "text", threshold = 0.5)
     val expected = Dedup.incrementalClusters(
         Dedup.nearDupClusters(day1, "doc_id", "text", threshold = 0.5)
           .select(col("doc_id"), col("cluster_id")),
@@ -406,8 +404,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       (10L, "alpha beta gamma delta"), (11L, "alpha beta gamma delta"),
       (20L, "alpha beta gamma delta epsilon zeta eta")).toDF("doc_id", "text")
     val routed = Seq((2L, 1L), (11L, 10L), (20L, 10L)).toDF("doc_id", "best_anchor")
-    val got = Dedup.verifyRoutedPairs(routed, docs, docs, "doc_id", "text",
-        n = 3, threshold = 0.5)
+    val got = Dedup.verifyRoutedPairs(routed, docs, docs, "doc_id", "text", threshold = 0.5)
       .orderBy("id_a", "id_b").as[(Long, Long)].collect().toSeq
     // (1,2) dropped by the guard; (10,11) identical -> jaccard 1.0 passes;
     // (10,20) overlaps 2 of (2 + 5) distinct shingles -> 0.4 < 0.5 fails
@@ -748,9 +745,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // into n_exact/n_candidates/n_tp + round-6 precision/recall — rebuild
     // that ENGINE-SIDE composition verbatim and pin it against a
     // plain-collections recomputation from the collected sets
-    val exactDf = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.1)
+    val exactDf = Dedup.jaccardPairs(corpus, "doc_id", "text", 0.1)
       .select("id_a", "id_b")
-    val candDf = Dedup.minhashCandidates(corpus, "doc_id", "text", 3, 16, 4)
+    val candDf = Dedup.minhashCandidates(corpus, "doc_id", "text")
       .select("id_a", "id_b")
     val ne = exactDf.agg(count(lit(1)).as("n_exact"))
     val nc = candDf.agg(count(lit(1)).as("n_candidates"))
@@ -803,8 +800,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("ex-q58 composition: compaction rollup over nearDupClusters (clusters + chars saved per size)") {
-    val cl = Dedup.nearDupClusters(corpus, "doc_id", "text",
-      n = 3, k = 16, bands = 4, threshold = 0.5)
+    val cl = Dedup.nearDupClusters(corpus, "doc_id", "text", threshold = 0.5)
     val got = cl.join(corpus.select(col("doc_id"), col("n_chars")), "doc_id")
       .groupBy(col("cluster_size"))
       .agg(countDistinct(col("cluster_id")).as("n_clusters"),
@@ -820,8 +816,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("ex-q56 composition: cross-source rollup over verifiedNearDups (unordered source pairs, mean jaccard)") {
-    val pairs = Dedup.verifiedNearDups(corpus, "doc_id", "text",
-      n = 3, k = 16, bands = 4, threshold = 0.5)
+    val pairs = Dedup.verifiedNearDups(corpus, "doc_id", "text", threshold = 0.5)
     val src = corpus.select(col("doc_id"), col("source"))
     val got = pairs
       .join(src.select(col("doc_id").as("id_a"), col("source").as("_sa")), "id_a")

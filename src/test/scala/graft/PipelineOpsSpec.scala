@@ -41,7 +41,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (2, "en", "a b a b"), // distinct per doc: "a b", "b a"
       (3, "en", "b c"),
       (4, "de", "x y")).toDF("doc_id", "lang", "text")
-    val got = TextAnalysis.topNgrams(docs, "lang", "text", n = 2, k = 2)
+    val got = TextAnalysis.topNgrams(docs, "lang", "text", k = 2)
       .orderBy(col("lang"), col("rank"))
       .as[(String, String, Long, Long)].collect()
     // en: "a b" df=2 rank1; "b c" df=2... both df=2 -> tie broken by ngram asc
@@ -153,16 +153,15 @@ class PipelineOpsSpec extends AnyFunSuite {
       (2, "the quick brown fox jumps over the lazy dog tonight"),
       (3, "completely different words about spark and catalyst planning"),
       (4, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")
-    val got = Dedup.verifiedNearDups(docs, "doc_id", "text", n = 3, k = 16,
-        bands = 4, threshold = 0.3)
+    val got = Dedup.verifiedNearDups(docs, "doc_id", "text", threshold = 0.3)
       .orderBy(col("id_a"), col("id_b"))
       .as[(Int, Int, Long, Double)].collect()
     // the contract: exactly the LSH candidates that pass exact-jaccard
     // verification (LSH recall < 1 by construction, so near-but-not-identical
     // pairs may legitimately be absent from the candidate set)
-    val cands = Dedup.minhashCandidates(docs, "doc_id", "text", 3, 16, 4)
+    val cands = Dedup.minhashCandidates(docs, "doc_id", "text")
       .as[(Int, Int)].collect().toSet
-    val exact = graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3)
+    val exact = graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .as[(Int, Int, Double)].collect()
       .map(t => (t._1, t._2) -> t._3).toMap
@@ -221,7 +220,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (2L, t(1, 0)), (2L, t(3, 0)), (2L, t(3, 60)), // same-day repeat counts once
       (3L, t(0, 50)),
     ).toDF("user_id", "ts")
-    val got = graft.ops.EventOps.retentionCohorts(ev, maxOffsetDays = 7)
+    val got = graft.ops.EventOps.retentionCohorts(ev)
       .orderBy("cohort_day", "day_offset").as[(Long, Long, Long)].collect().toSeq
     assert(got === Seq((0L, 0L, 2L), (0L, 1L, 1L), (1L, 0L, 1L), (1L, 2L, 1L)))
   }
@@ -493,7 +492,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (12L, 1L, ts(1200), "buy"),
       (20L, 2L, ts(5000), "view"),
     ).toDF("event_id", "user_id", "ts", "event_type")
-    val got = graft.ops.EventOps.lagFeatures(ev, k = 2)
+    val got = graft.ops.EventOps.lagFeatures(ev)
       .orderBy("event_id").collect()
       .map(r => (r.getLong(0), r.getString(2), r.getString(3), r.getLong(4),
         r.getString(5), r.getLong(6)))
@@ -502,7 +501,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (11L, "click", "view", 100L, "none", -1L),
       (12L, "buy", "click", 100L, "view", 200L),
       (20L, "view", "none", -1L, "none", -1L)))
-    val again = graft.ops.EventOps.lagFeatures(ev.repartition(3), k = 2)
+    val again = graft.ops.EventOps.lagFeatures(ev.repartition(3))
       .collect().map(r => (r.getLong(0), r.getString(2), r.getString(3),
         r.getLong(4), r.getString(5), r.getLong(6))).toSet
     assert(again === got.toSet)

@@ -683,8 +683,7 @@ class PipelineSpec extends AnyFunSuite {
       val input = MemoryStream[(Timestamp, String, Double, Double)]
       input.addData(ticks)
       input.addData((t("2025-08-01 00:10:00"), "X", 1.0, 1.0)) // advance watermark
-      val q = CandleStream.m1Bars(input.toDF().toDF("ts", "symbol", "price", "size"),
-          watermark = "2 minutes")
+      val q = CandleStream.m1Bars(input.toDF().toDF("ts", "symbol", "price", "size"))
         .writeStream.outputMode("append").format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()
       spark.table(name).where(col("ts") === lit("2025-08-01 00:00:00"))
@@ -709,7 +708,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val input = MemoryStream[(Timestamp, String, Double, Double)]
     val ticks = input.toDF().toDF("ts", "symbol", "price", "size")
-    val q = CandleStream.m1Bars(ticks, watermark = "2 minutes")
+    val q = CandleStream.m1Bars(ticks)
       .writeStream.outputMode("append").format("memory").queryName("late_out").start()
     try {
       def t(s: String) = Timestamp.valueOf(s)

@@ -267,7 +267,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: expression OrLevels == typed flatMapGroups OrLevels across seeds/tzs") {
-    import org.apache.spark.sql.functions.col
     for (seed <- seeds; tz <- Seq("UTC", "Asia/Tokyo")) {
       val days = SynthSource.m1(spark, s"S$seed", "2025-08-01", "2025-08-03", seed)
       val viaExpr = graft.ops.OrLevels.build(days, tz, "09:00-10:00")
@@ -455,8 +454,8 @@ class PropertySpec extends AnyFunSuite {
         df.select("id_a", "id_b", "inter", "jaccard").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
           .toSeq.sorted
-      val full = norm(graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", 3, t))
-      val pref = norm(graft.ops.Dedup.prefixJaccardPairs(docs, "doc_id", "text", 3, t))
+      val full = norm(graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", t))
+      val pref = norm(graft.ops.Dedup.prefixJaccardPairs(docs, "doc_id", "text", t))
       assert(pref === full, s"seed=$seed t=$t: prefix plan diverged from full join")
       assert(full.nonEmpty, s"seed=$seed t=$t: degenerate corpus, no pairs")
     }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{Graph, Quantiles, Retrieval}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class RetrievalGraphSpec extends AnyFunSuite {
@@ -21,7 +20,7 @@ class RetrievalGraphSpec extends AnyFunSuite {
   ).toDF("doc_id", "text")
 
   test("bm25: higher tf ranks higher at equal doc length, and non-matching docs are absent") {
-    val got = Retrieval.bm25TopK(corpus, Seq("q" -> Seq("join")), k = 10)
+    val got = Retrieval.bm25TopK(corpus, Seq("q" -> Seq("join")))
       .orderBy("rank").select("doc_id").as[Long].collect()
     // docs 1 and 2 match; doc 1 has tf=2 (longer, but tf dominates here)
     assert(got.toSeq === Seq(1L, 2L))
@@ -34,15 +33,15 @@ class RetrievalGraphSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "table x y"), (2L, "spark x y"), (3L, "spark z w")
     ).toDF("doc_id", "text")
-    val scores = Retrieval.bm25TopK(docs, Seq("q" -> Seq("table", "spark")), k = 10)
+    val scores = Retrieval.bm25TopK(docs, Seq("q" -> Seq("table", "spark")))
       .select("doc_id", "score").as[(Long, Double)].collect().toMap
     assert(scores(1L) > scores(2L))
   }
 
   test("bm25: partition-invariant (decimal-exact score reduction)") {
-    val a = Retrieval.bm25TopK(corpus, Seq("q" -> Seq("join", "hash")), k = 10)
+    val a = Retrieval.bm25TopK(corpus, Seq("q" -> Seq("join", "hash")))
       .orderBy("rank").collect().toSeq
-    val b = Retrieval.bm25TopK(corpus.repartition(7), Seq("q" -> Seq("join", "hash")), k = 10)
+    val b = Retrieval.bm25TopK(corpus.repartition(7), Seq("q" -> Seq("join", "hash")))
       .orderBy("rank").collect().toSeq
     assert(a === b)
   }

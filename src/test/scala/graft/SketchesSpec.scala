@@ -136,8 +136,7 @@ class SketchesSpec extends AnyFunSuite {
     val df = keys.toDF("k")
     val exact = keys.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     val queryKeys = exact.keys.toSeq.toDF("k")
-    val est = Sketches.countMinFrequencies(df, "k", queryKeys,
-        depth = 4, width = 1024)
+    val est = Sketches.countMinFrequencies(df, "k", queryKeys, width = 1024)
       .as[(Long, Long)].collect().toMap
     assert(est.keySet === exact.keySet)
     exact.foreach { case (k, c) =>
@@ -153,7 +152,7 @@ class SketchesSpec extends AnyFunSuite {
     val df = keys.toDF("k")
     val exact = keys.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     val est = Sketches.countMinFrequencies(df, "k", exact.keys.toSeq.toDF("k"),
-        depth = 4, width = 64) // 211 keys >> 64 cells: forced collisions
+        width = 64) // 211 keys >> 64 cells: forced collisions
       .as[(Long, Long)].collect().toMap
     exact.foreach { case (k, c) => assert(est(k) >= c) }
     assert(est.values.sum > exact.values.sum, "collisions must inflate some estimate")
@@ -193,7 +192,7 @@ class SketchesSpec extends AnyFunSuite {
     val bench = Seq((100L, "the quick brown fox is a benchmark item")).toDF("doc_id", "text")
     val plain = Corpus.decontaminate(corpus, bench, "doc_id", "text", 3)
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    val bloom = Sketches.bloomDecontaminate(corpus, bench, "doc_id", "text", 3)
+    val bloom = Sketches.bloomDecontaminate(corpus, bench, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
     assert(bloom === plain)
     assert(plain.nonEmpty)
@@ -214,7 +213,7 @@ class SketchesSpec extends AnyFunSuite {
       (2L, thirty),                 // identical: both duplicated, none owned
       (3L, "u1 u2 u3 u4 u5"),       // 1 unique span
     ).toDF("doc_id", "text")
-    val got = Dedup.duplicateSpans(docs, "doc_id", "text", window = 20, stride = 10)
+    val got = Dedup.duplicateSpans(docs, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Long, Long)].collect().toSeq
     assert(got === Seq(
       (1L, 2L, 2L, 2L), // both spans shared with doc 2; doc 1 owns them (min id)
@@ -282,8 +281,7 @@ class SketchesSpec extends AnyFunSuite {
       .countMinFinal(input.toDF().toDF("k"), "k", depth = 4, width = 64,
         queryName = "cm_out")
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
-    val batch = Sketches.countMinSketch(chunks.flatten.toDF("k"), "k",
-        depth = 4, width = 64)
+    val batch = Sketches.countMinSketch(chunks.flatten.toDF("k"), "k", width = 64)
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
     assert(streamed === batch)
     assert(streamed.map(_._3).sum === 1500L * 4, "every event lands in every row")
@@ -300,8 +298,7 @@ class SketchesSpec extends AnyFunSuite {
       .countMinFinal(input.toDF().toDF("k"), "k", depth = 4, width = 64,
         queryName = "cm_null_out")
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
-    val batch = Sketches.countMinSketch(vals.toDF("k"), "k",
-        depth = 4, width = 64)
+    val batch = Sketches.countMinSketch(vals.toDF("k"), "k", width = 64)
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
     assert(streamed === batch, "null keys must not produce phantom cells")
     assert(streamed.map(_._3).sum === 200L * 4, "only the non-null events count")
@@ -448,7 +445,7 @@ class SketchesSpec extends AnyFunSuite {
       .orderBy("doc_id", "anchor_id")
       .as[(Long, Long, Long)].collect().toSeq
     val batch = graft.ops.Dedup
-      .simhashAnchorCandidates(docsDf, "doc_id", "text", maxHamming = 3)
+      .simhashAnchorCandidates(docsDf, "doc_id", "text")
       .orderBy("doc_id", "anchor_id")
       .as[(Long, Long, Long)].collect().toSeq
     assert(streamed === batch)
@@ -558,7 +555,7 @@ class SketchesSpec extends AnyFunSuite {
       (2L, "x y z w"),              // 2 shingles, no overlap
     ).toDF("doc_id", "text")
     val bench = Seq((9L, "a b c d q")).toDF("doc_id", "text") // shares "a b c","b c d"
-    val got = Corpus.contaminationRate(corpus, bench, "doc_id", "text", 3)
+    val got = Corpus.contaminationRate(corpus, bench, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Long, Long)].collect().toSeq
     assert(got === Seq(
       (1L, 3L, 2L, 6666L), // 2*10000 DIV 3

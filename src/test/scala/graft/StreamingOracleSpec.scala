@@ -282,7 +282,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     val docsB = spark.read.parquet(s"$sf/documents.parquet")
     // the frozen artifact: trained once on the batch snapshot, then only
     // broadcast — exactly what the stream scores against
-    val (lm, oov) = graft.ops.Corpus.unigramLm(docsB, "text", minCount = 5L)
+    val (lm, oov) = graft.ops.Corpus.unigramLm(docsB, "text")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val rows = docsB.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq
@@ -334,7 +334,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     val in = MemoryStream[(Timestamp, Long, String)]
     val q = graft.streaming.DocumentStream
       .decontaminated(in.toDF().toDF("ts", "doc_id", "text"), benchmark,
-        n = 3, watermark = "0 seconds")
+        watermark = "0 seconds")
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$outDir/_ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>

@@ -63,7 +63,7 @@ class TextOpsSpec extends AnyFunSuite {
       (2L, "the quick brown fox jumps over the lazy dog again and again"),
       (3L, "completely unrelated words about spark catalyst execution engines"),
     ).toDF("doc_id", "text")
-    val jac = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5).collect()
+    val jac = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5).collect()
     assert(jac.length === 1)
     assert(jac.head.getAs[Long]("id_a") === 1L && jac.head.getAs[Long]("id_b") === 2L)
     assert(jac.head.getAs[Double]("jaccard") === 1.0)
@@ -92,8 +92,8 @@ class TextOpsSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSeq.sorted
     Seq(0.2, 0.5, 0.8).foreach { t =>
-      val full = norm(Dedup.jaccardPairs(docs, "doc_id", "text", 3, t))
-      val pref = norm(Dedup.prefixJaccardPairs(docs, "doc_id", "text", 3, t))
+      val full = norm(Dedup.jaccardPairs(docs, "doc_id", "text", t))
+      val pref = norm(Dedup.prefixJaccardPairs(docs, "doc_id", "text", t))
       assert(pref === full, s"prefix plan diverged from full join at t=$t")
       assert(full.nonEmpty, s"degenerate fixture: no pairs at t=$t")
     }
@@ -106,8 +106,8 @@ class TextOpsSpec extends AnyFunSuite {
       (2L, "a b c d")    // shingles: "a b c","b c d" -> jaccard 2/3
     ).toDF("doc_id", "text")
     val t23 = 2.0 / 3
-    val fullB = norm(Dedup.jaccardPairs(boundary, "doc_id", "text", 3, t23))
-    val prefB = norm(Dedup.prefixJaccardPairs(boundary, "doc_id", "text", 3, t23))
+    val fullB = norm(Dedup.jaccardPairs(boundary, "doc_id", "text", t23))
+    val prefB = norm(Dedup.prefixJaccardPairs(boundary, "doc_id", "text", t23))
     assert(fullB === Seq((1L, 2L, 2L, 0.6667)) && prefB === fullB,
       "pair at exactly t=2/3 must survive the prefix filters")
   }
@@ -115,7 +115,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("minhashCandidates rejects a bands that does not divide k (silent hash drop)") {
     val docs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {
-      Dedup.minhashCandidates(docs, "doc_id", "text", 3, 16, 5)
+      Dedup.minhashCandidates(docs, "doc_id", "text", bands = 5)
     }
   }
 
@@ -215,7 +215,7 @@ class TextOpsSpec extends AnyFunSuite {
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pairs(Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 10)) === Seq((100L, 101L)))
     assert(pairs(Dedup.simhashCandidates(docs, "doc_id", "text", maxBucket = 10)) === Seq((100L, 101L)))
-    assert(pairs(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, maxDf = 10)) === Seq((100L, 101L)))
+    assert(pairs(Dedup.jaccardPairs(docs, "doc_id", "text", 0.5, maxDf = 10)) === Seq((100L, 101L)))
     // and with the cap above the bucket width, the degenerate pairs return
     assert(Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 100).count() === 40L * 39 / 2 + 1)
     // precomputed-signature entry point == text entry point
@@ -476,7 +476,7 @@ class TextOpsSpec extends AnyFunSuite {
     val docs = (Seq.fill(4)("alpha beta filler1 filler2") :+
       "alpha filler3 filler4 filler5 zeta").zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val got = TextAnalysis.pmiPairs(docs, "text", window = 3,
+    val got = TextAnalysis.pmiPairs(docs, "text",
       minPairCount = 1L, k = 100).collect()
       .map(r => ((r.getString(1), r.getString(2)), (r.getLong(0), r.getLong(3), r.getDouble(4))))
       .toMap
@@ -494,7 +494,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(math.abs(got(("alpha", "beta"))._3 - expAB) < 1e-6)
     assert(math.abs(got(("beta", "filler2"))._3 - expBF) < 1e-6)
     assert(got(("beta", "filler2"))._1 < got(("alpha", "beta"))._1)
-    val again = TextAnalysis.pmiPairs(docs.repartition(3), "text", window = 3,
+    val again = TextAnalysis.pmiPairs(docs.repartition(3), "text",
       minPairCount = 1L, k = 100).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     val first = got.map { case ((a, b), (rk, _, _)) => (rk, a, b) }.toSet

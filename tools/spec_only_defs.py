@@ -1,13 +1,25 @@
 #!/usr/bin/env python3
-"""List public defs in src/main/scala that nothing outside src/test calls.
+"""Two checks on the defs of src/main/scala.
 
-A def that is not private, protected or override is reported when its name
-occurs nowhere in src/main/scala + lakebench/src except at def sites, after
-comments and string literals are blanked (`${...}` and `$name` splices are
-kept). `main` and `apply` are skipped: the JVM and `Name(...)` call them.
-Exits 1 on any hit not in ALLOW.
+1. Spec-only defs. A def that is not private, protected or override is
+   reported when its name occurs nowhere in src/main/scala + lakebench/src
+   except at def sites. `main` and `apply` are skipped: the JVM and
+   `Name(...)` call them.
+2. One-value defaults. A defaulted parameter of a src/main/scala def is
+   reported when no call in src/main/scala, lakebench/src or src/test/scala
+   passes it a value other than its default: the option has one value in
+   use and belongs in the operator body as a constant. Calls are matched by
+   def name (`Owner.name(...)` only to the def of that object, when it has
+   one), and arguments by parameter name or position; an argument equal to
+   the default (same text up to whitespace, or the same number) does not
+   count as a second value. Constructor parameters are not scanned, and
+   `Name(...)` calls of an `apply` are invisible to the name match.
 
-Usage, from the repo root: python3 tools/spec_only_defs.py [repo_dir]
+Both checks blank comments and string literals first (`${...}` and `$name`
+splices are kept) and exit 1 on any hit not in their allowlist.
+
+Usage, from the repo root: python3 tools/spec_only_defs.py [repo_dir] [--per-file]
+(--per-file also prints each file's defaulted and one-value counts.)
 """
 import pathlib
 import re
@@ -33,53 +45,208 @@ REASONS = {
 }
 ALLOW = {key: why for why, keys in REASONS.items() for key in keys.split()}
 
+# reason -> the File.def.param entries whose one value in use stays settable
+PARAM_REASONS = {
+    "a deployment setting: the connector venue or contract field":
+        "Connectors.cryptoContract.exchange Connectors.fetch.exchange "
+        "Connectors.fetchDay.exchange Connectors.withAggTradesDowngrade.whatToShow",
+    "a deployment setting: the lake partition value the caller owns":
+        "Levels.upsert.market CandleStream.writeToLake.source",
+    "the reference's columns= projection (SURVEY S5)":
+        "Lake.readRangeClosed.columns Lake.readUnified.columns",
+    "a lakebench call spells it out, so the parameter stays for that call":
+        "Gaps.minuteGaps.stepSeconds Gaps.synthFill.stepSeconds OrLevels.build.keys",
+    "an apply parameter, checked by hand: RawBarFrame(...) passes 0 and 60000":
+        "Connectors.apply.tsShiftMs",
+    "an apply parameter, checked by hand: LiquidityProfiles(...) callers name the profile":
+        "OrLevels.apply.name",
+}
+PARAM_ALLOW = {key: why for why, keys in PARAM_REASONS.items() for key in keys.split()}
+
 TOKEN = re.compile(r'//[^\n]*|/\*|(\b[a-z]\w*)?("""|")|\'(?:\\.[^\']*|[^\'\\\n])\'')
 SPLICE = re.compile(r"\$(?:\{|([A-Za-z_]\w*))")
 
 
 def strip(src):
-    """Blank comments and string literals, keeping newlines and splices."""
-    out, i = [], 0
+    """Blank comments and string literals, keeping splices, newlines and offsets."""
+    out, i = list(src), 0
+
+    def blank(a, b):
+        for k in range(a, b):
+            if out[k] != "\n":
+                out[k] = " "
+
     while m := TOKEN.search(src, i):
-        out.append(src[i:m.start()])
         i = m.end()
         if not m.group(2):  # comment or char literal
             depth = m.group() == "/*"
             while depth and i < len(src):
                 depth += src.startswith("/*", i) - src.startswith("*/", i)
                 i += 2 if src.startswith(("/*", "*/"), i) else 1
-            out.append(" " + "\n" * src.count("\n", m.start(), i))
+            blank(m.start(), i)
             continue
+        blank(m.start(), i)
         quote, interp = m.group(2), m.group(1) is not None
         while i < len(src) and not src.startswith(quote, i):
             s = SPLICE.match(src, i) if interp else None
-            if s and s.group(1):
-                out.append(f" {s.group(1)} ")
+            if interp and src.startswith("$$", i):
+                blank(i, i + 2)
+                i += 2
+            elif s and s.group(1):  # $name: keep the name
+                blank(i, i + 1)
                 i = s.end()
             elif s:  # ${ ... }: keep the expression, matching braces
                 depth, j = 1, s.end()
                 while depth and j < len(src):
                     depth += {"{": 1, "}": -1}.get(src[j], 0)
                     j += 1
-                out.append(f" {strip(src[s.end():j - 1])} ")
+                blank(i, s.end())
+                out[s.end():j - 1] = strip(src[s.end():j - 1])
+                blank(j - 1, j)
                 i = j
             else:
-                out.append("\n" if src[i] == "\n" else "")
-                i += 2 if src[i] == "\\" and quote == '"' else 1
+                step = 2 if src[i] == "\\" and quote == '"' else 1
+                blank(i, i + step)
+                i += step
+        blank(i, i + len(quote))
         i += len(quote)
-        out.append(" ")
-    return "".join(out) + src[i:]
+    return "".join(out)
 
 
 DEF = re.compile(r"^[ \t]*((?:@\w+\s+|\w+(?:\[\w+\])?\s+)*)def\s+([A-Za-z_]\w*)", re.M)
+CLOSE = {"(": ")", "[": "]", "{": "}"}
+
+
+def match_close(text, i):
+    """Index just past the bracket group that opens at text[i]."""
+    depth = 0
+    for j in range(i, len(text)):
+        if text[j] in "([{":
+            depth += 1
+        elif text[j] in ")]}":
+            depth -= 1
+            if not depth:
+                return j + 1
+    return len(text)
+
+
+def split_top(text, a, b, src):
+    """(start, end) spans of the top-level comma-separated parts of text[a:b]."""
+    spans, depth, s = [], 0, a
+    for j in range(a, b):
+        c = text[j]
+        depth += (c in "([{") - (c in ")]}")
+        if c == "," and not depth:
+            spans.append((s, j))
+            s = j + 1
+    if src[s:b].strip():
+        spans.append((s, b))
+    return spans
+
+
+LINE_GAP = re.compile(r"[ \t]*\n?[ \t]*")
+GAP = re.compile(r"\s*")
+
+
+def groups(text, i, blocks):
+    """(start, end) spans inside the argument or parameter groups that follow
+    text[i:], past any type arguments; `blocks` also takes `{ ... }` groups."""
+    out, j = [], LINE_GAP.match(text, i).end()
+    if text.startswith("[", j):
+        j = match_close(text, j)
+    while True:
+        k = (GAP if out else LINE_GAP).match(text, j).end()
+        if k < len(text) and (text[k] == "(" or (blocks and text[k] == "{")):
+            j = match_close(text, k)
+            out.append((k + 1, j - 1))
+        else:
+            return out
+
+
+EQ = re.compile(r"(?<![=<>!:])=(?![=>])")
+PARAM = re.compile(r"\s*(?:implicit\s+)?(?:(?:val|var|final|private|override)\s+)*"
+                   r"([A-Za-z_]\w*)\s*:")
+NAMED = re.compile(r"\s*([A-Za-z_]\w*)\s*=(?![=>])")
+NUM = re.compile(r"-?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?[lLdDfF]?")
+
+
+def norm(v):
+    v = " ".join(v.split())
+    if NUM.fullmatch(v):
+        return float(v.rstrip("lLdDfF"))
+    return v
+
+
+def defaulted(text, src, name_end):
+    """[(group, index, param, default text)] for the def whose name ends at name_end."""
+    out = []
+    for g, (a, b) in enumerate(groups(text, name_end, blocks=False)):
+        for k, (s, e) in enumerate(split_top(text, a, b, src)):
+            p = PARAM.match(text, s)
+            eq = EQ.search(text, s, e)
+            if p and eq:
+                out.append((g, k, p.group(1), src[eq.end():e].strip()))
+    return out
+
+
+OBJECT = re.compile(r"^(?:private\[\w+\] |final )*(?:case )?(?:object|class|trait)\s+(\w+)", re.M)
+QUALIFIER = re.compile(r"\b([A-Z]\w*)\s*\.\s*$")
+
+
+def param_check(root, main_files, trees):
+    params = []  # (path, line, owner, def, group, index, param, default)
+    owned = set()  # (owner, def) of every def in src/main/scala
+    sources = {p: (p.read_text(),) for p in trees}
+    for p in sources:
+        sources[p] += (strip(sources[p][0]),)
+    for p in main_files:
+        src, text = sources[p]
+        owners = [(m.start(), m.group(1)) for m in OBJECT.finditer(text)]
+        for m in DEF.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            owner = max(((i, o) for i, o in owners if i < m.start()), default=(0, None))[1]
+            owned.add((owner, m.group(2)))
+            for g, k, par, d in defaulted(text, src, m.end()):
+                params.append((p, line, owner, m.group(2), g, k, par, d))
+    names = {d[3] for d in params}
+    # (owner or None, def, group, param or index) -> set of normalized values;
+    # `Owner.name(...)` counts for that owner's def when it has one, any
+    # other call for every def of the name
+    values = {}
+    call = re.compile(r"\b(" + "|".join(sorted(names)) + r")\b")
+    for p, (src, text) in sources.items():
+        for m in call.finditer(text):
+            before = text[max(0, m.start() - 80):m.start()]
+            if re.search(r"\bdef\s+$", before):
+                continue
+            q = QUALIFIER.search(before)
+            owner = q.group(1) if q and (q.group(1), m.group(1)) in owned else None
+            for g, (a, b) in enumerate(groups(text, m.end(), blocks=True)):
+                for k, (s, e) in enumerate(split_top(text, a, b, src)):
+                    n = NAMED.match(text, s)
+                    key = (owner, m.group(1), g, n.group(1) if n else k)
+                    values.setdefault(key, set()).add(norm(src[n.end() if n else s:e]))
+    hits, by_file = [], {}
+    for p, line, owner, d, g, k, par, dflt in params:
+        seen = set().union(*(values.get((o, d, g, x), set())
+                             for o in (None, owner) for x in (par, k)))
+        one = not (seen - {norm(dflt)})
+        stem = p.relative_to(root / "src/main/scala")
+        tally = by_file.setdefault(str(stem), [0, 0])
+        tally[0] += 1
+        if one:
+            tally[1] += 1
+            hits.append((p, line, d, par, dflt, "unset" if not seen else "default only"))
+    return params, hits, by_file
 
 
 def main(root):
     root = pathlib.Path(root)
     main_files = sorted((root / "src/main/scala").rglob("*.scala"))
-    files = main_files + sorted((root / "lakebench/src").rglob("*.scala"))
+    bench_files = sorted((root / "lakebench/src").rglob("*.scala"))
+    test_files = sorted((root / "src/test/scala").rglob("*.scala"))
     uses, defs = {}, []
-    for p in files:
+    for p in main_files + bench_files:
         text = strip(p.read_text())
         for name in re.findall(r"\b[A-Za-z_]\w*\b", text):
             uses[name] = uses.get(name, 0) + 1
@@ -87,15 +254,29 @@ def main(root):
             uses[m.group(2)] -= 1
             if p in main_files and not re.search(r"\b(private|protected|override)\b", m.group(1)):
                 defs.append((p, text.count("\n", 0, m.start()) + 1, m.group(2)))
-    hits = [d for d in defs if uses[d[2]] == 0 and d[2] not in ("main", "apply")]
+    spec_only = [d for d in defs if uses[d[2]] == 0 and d[2] not in ("main", "apply")]
     new = 0
-    for p, line, name in hits:
+    for p, line, name in spec_only:
         why = ALLOW.get(f"{p.stem}.{name}")
         new += why is None
         print(f"{p.relative_to(root)}:{line}: {name}" + (f"  [allowed: {why}]" if why else ""))
-    print(f"{len(hits)} spec-only defs, {new} not allowlisted")
-    return 1 if new else 0
+    print(f"{len(spec_only)} spec-only defs, {new} not allowlisted")
+
+    params, hits, by_file = param_check(root, main_files, main_files + bench_files + test_files)
+    new_params = 0
+    for p, line, d, par, dflt, how in hits:
+        why = PARAM_ALLOW.get(f"{p.stem}.{d}.{par}")
+        new_params += why is None
+        print(f"{p.relative_to(root)}:{line}: {d}({par} = {dflt}) {how}"
+              + (f"  [allowed: {why}]" if why else ""))
+    if "--per-file" in sys.argv:
+        for f, (n, one) in sorted(by_file.items()):
+            print(f"  {f}: {n} defaulted, {one} one-value")
+    print(f"{len(params)} defaulted parameters, {len(hits)} with one value in use, "
+          f"{new_params} not allowlisted")
+    return 1 if new or new_params else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else "."))
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    sys.exit(main(args[0] if args else "."))

@@ -502,7 +502,7 @@ object SparkEntry {
       val stacked = ev.select(explode(array(cols.map { case (n, c) =>
           struct(lit(n).as("col_name"), c.as("v")) }: _*)).as("s"))
         .select(col("s.col_name").as("col_name"), col("s.v").as("v"))
-      val est = Sketches.hllDistinct(stacked, "col_name", "v", p = 10)
+      val est = Sketches.hllDistinct(stacked, "col_name", "v")
       val exact = stacked.groupBy(col("col_name"))
         .agg(countDistinct(col("v")).as("exact_distinct"))
       est.join(exact, "col_name").orderBy(col("col_name"))
@@ -1276,7 +1276,7 @@ object SparkEntry {
       Corpus.decontaminate(
           d.where(pmod(col("doc_id"), lit(10L)) =!= 0),
           d.where(pmod(col("doc_id"), lit(10L)) === 0),
-          "doc_id", "text", n = 3)
+          "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -1573,7 +1573,7 @@ object SparkEntry {
     // ESTIMATE itself is under the hash gate.
     "q80_hll_distinct" -> ((s, dir) => {
       val ev = tbl(s, dir, "events")
-      Sketches.hllDistinct(ev, "event_type", "user_id", p = 10)
+      Sketches.hllDistinct(ev, "event_type", "user_id")
         .join(ev.groupBy(col("event_type"))
           .agg(countDistinct(col("user_id")).as("exact_distinct")), "event_type")
         .orderBy(col("event_type"))
@@ -3784,7 +3784,7 @@ object SparkEntry {
            | x AS (SELECT col_name, count(DISTINCT v)::BIGINT AS exact_distinct
            |       FROM stk GROUP BY 1)
            |SELECT z.col_name, n_buckets_hit, z_scaled,
-           | CAST(floor(${Sketches.hllNumerSql(10)} / z_scaled) AS BIGINT) AS est_distinct,
+           | CAST(floor(${Sketches.hllNumerSql} / z_scaled) AS BIGINT) AS est_distinct,
            | x.exact_distinct
            |FROM z JOIN x ON z.col_name = x.col_name
            |ORDER BY 1""".stripMargin,
@@ -4229,7 +4229,7 @@ object SparkEntry {
           | x AS (SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_distinct
           |       FROM events GROUP BY 1)
           |SELECT z.event_type, n_buckets_hit, z_scaled,
-          | CAST(floor(${Sketches.hllNumerSql(10)} / z_scaled) AS BIGINT) AS est_distinct,
+          | CAST(floor(${Sketches.hllNumerSql} / z_scaled) AS BIGINT) AS est_distinct,
           | x.exact_distinct
           |FROM z JOIN x ON z.event_type = x.event_type
           |ORDER BY 1""".stripMargin,

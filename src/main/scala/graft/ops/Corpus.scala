@@ -41,7 +41,7 @@ object Corpus {
   def idHash(id: Column, b: Long): Column =
     (pmod(id, lit(P)) * 2654435761L + b) % P
 
-  /** Documents of `corpus` sharing at least one word n-gram with
+  /** Documents of `corpus` sharing at least one word 3-gram with
     * `benchmark` (the eval set being protected), with the count of distinct
     * overlapping shingles — the standard n-gram-overlap decontamination
     * signal. Output: (idCol, n_overlap >= 1 rows only).
@@ -51,10 +51,11 @@ object Corpus {
     * map-side without a shuffle, and the per-doc count aggregates on idCol.
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                    idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val csh = Dedup.shingles(corpus, idCol, textCol, n)
+                    idCol: String, textCol: String): DataFrame = {
+    val csh = Dedup.shingles(corpus, idCol, textCol, Dedup.ShingleWords)
     val bsh = benchmark
-      .select(explode(graft.functions.TextFunctions.wordShingles(col(textCol), n)).as("shingle"))
+      .select(explode(graft.functions.TextFunctions.wordShingles(col(textCol),
+        Dedup.ShingleWords)).as("shingle"))
       .distinct()
     csh.join(broadcast(bsh), "shingle")
       .groupBy(col(idCol))
@@ -66,7 +67,7 @@ object Corpus {
     */
   def decontaminated(corpus: DataFrame, benchmark: DataFrame,
                      idCol: String, textCol: String): DataFrame =
-    corpus.join(decontaminate(corpus, benchmark, idCol, textCol, Dedup.ShingleWords),
+    corpus.join(decontaminate(corpus, benchmark, idCol, textCol),
       Seq(idCol), "left_anti")
 
   /** Graded contamination report: for every corpus document WITH AT LEAST

@@ -83,7 +83,7 @@ object Dedup {
   /** SimHash near-dup radius of the candidate, anchor and routing faces:
     * the 4-chunk pigeonhole covers hamming <= 3.
     */
-  private val MaxHamming = 3
+  private[graft] val MaxHamming = 3
 
   /** Corpus size where the same-length PassJoin overtakes the blocked
     * all-pairs join in [[fuzzyPairs]]' length-blocking mode ON
@@ -481,7 +481,7 @@ object Dedup {
   /** Anchor-candidate routing over the SimHash bucket registry: for every
     * document and each of its 4 blocking buckets, the pair (doc, bucket
     * anchor = the bucket's min id) with its true hamming distance, kept
-    * when <= maxHamming — the candidate LOOKUP an incremental near-dup
+    * when <= `MaxHamming` — the candidate LOOKUP an incremental near-dup
     * pipeline serves per new document against the standing
     * [[simhashBucketRegistry]] (vs [[simhashCandidates]]' all-pairs-in-
     * bucket join, this is the O(1)-candidates-per-doc form a streaming
@@ -613,7 +613,7 @@ object Dedup {
   /** Incremental-ingest routing: disposition a batch of NEW documents
     * against a persisted day-1 [[simhashBucketRegistrySigs]] registry —
     * per new doc, whether any of its 4 bucket anchors is within
-    * `maxHamming` (near-dup of known content) and the best such anchor
+    * `MaxHamming` (near-dup of known content) and the best such anchor
     * (smallest hamming, then smallest anchor id). The day-1 corpus is
     * never re-read: the whole decision is sign + explode + ONE broadcast
     * equi-join against a keyspace-bounded artifact (≤ 16384 rows at the
@@ -818,7 +818,7 @@ object Dedup {
     * Cost model (measured, PLANS.md round 13): chunk-blocked candidate
     * pairs within the FIXED 4·2^(bits/4)-bucket keyspace grow
     * ~n²/2^(bits/4) — measured exp ~1.0 over sf0.1→sf1 at 48 bits. Wide
-    * signatures (bits > 32, maxHamming ≤ 3) therefore route to the
+    * signatures (bits > 32, radius ≤ 3) therefore route to the
     * two-half multi-index generator ([[simhashCandidatesMih]]): identical
     * exact output, candidates ~n²/2^(bits/2) (a 2^(bits/4)× smaller
     * quadratic term) for a constant (1 + bits/2)× probe fan-out — measured
@@ -880,7 +880,7 @@ object Dedup {
     // granularities (2^(bits/4)-value chunk buckets vs 2^(bits/2)-value
     // half buckets), see the scaladoc's cap contract.
     if (bits > 32 && withSig.count() >= MihCrossoverDocs)
-      simhashCandidatesMih(withSig, idCol, "simhash", MaxHamming, maxBucket, bits)
+      simhashCandidatesMih(withSig, idCol, "simhash", maxBucket, bits)
     else
       simhashCandidatesFromSignatures(withSig, idCol, "simhash", MaxHamming,
         maxBucket, chunkBits = bits / 4)
@@ -917,12 +917,9 @@ object Dedup {
     */
   def simhashCandidatesMih(sigs: DataFrame, idCol: String,
                            sigCol: String = "simhash",
-                           maxHamming: Int = 3,
                            maxBucket: Int = 100000,
                            bits: Int = 48): DataFrame = {
     require(bits % 2 == 0 && bits >= 8 && bits <= 60, s"need even 8 <= bits <= 60, got $bits")
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "two-half pigeonhole covers maxHamming <= 3; use the chunked form beyond")
     val halfBits = bits / 2
     val mask = (1L << halfBits) - 1L
     val span = 1L << halfBits
@@ -965,7 +962,7 @@ object Dedup {
       // within 1 bit on EITHER half — die before the distinct() exchange,
       // and the exchange carries 24-byte triples, not (id, sig)² structs.
       .withColumn("hamming", hamming(col("sig_i"), col("sig_p")))
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= MaxHamming)
       .select(least(col("id_i"), col("id_p")).as("id_a"),
         greatest(col("id_i"), col("id_p")).as("id_b"), col("hamming"))
       .distinct()

@@ -27,12 +27,12 @@ import org.apache.spark.sql.functions._
   *    k smallest hashes before the shuffle, so the shuffle carries
   *    O(groups × k), not O(distinct values).
   *  - count-min: the only shuffle is keyed on (row, cell) — at most
-  *    depth × width distinct keys, so map-side combine collapses each
+  *    4 × width distinct keys, so map-side combine collapses each
   *    partition's contribution to a bounded partial no matter how many
   *    input rows (or how skewed the keys). The finished sketch is
-  *    depth × width rows and broadcasts for estimate joins.
-  *  - bloom: the bit array is fixed-size (mBits), built with one bounded
-  *    aggregation (bit_or over ≤ mBits/64 word rows) and carried to the
+  *    4 × width rows and broadcasts for estimate joins.
+  *  - bloom: the bit array is fixed-size (BloomBits), built with one bounded
+  *    aggregation (bit_or over ≤ BloomBits/64 word rows) and carried to the
   *    probe side as a literal array inside codegen — membership tests are
   *    pure per-row expression work, no join, no shuffle.
   */
@@ -134,6 +134,11 @@ object Sketches {
   // HyperLogLog distinct-count estimate
   // ---------------------------------------------------------------------
 
+  /** HLL precision: m = 2^10 registers, read by the batch and streaming
+    * faces and by the oracle's [[hllNumerSql]].
+    */
+  private[graft] val HllP = 10
+
   /** Per-group HyperLogLog distinct-count estimate (Flajolet, Fusy,
     * Gandouet & Meunier 2007) — the register-merge complement to
     * [[kmvDistinct]].
@@ -160,7 +165,7 @@ object Sketches {
     *     max intermediate (P-1)·a ≈ 2.7e18 < 2^63;
     *  3. g2 = (g << 33) div P ∈ [0, 2^33) — exact multiply-shift rescale
     *     onto a full power-of-two domain (g·2^33 ≤ 8.6e18 < 2^63);
-    *  4. bucket = g2 mod m; suffix = g2 div m ∈ [0, 2^w), w = 33 - p;
+    *  4. bucket = g2 mod m; suffix = g2 div m ∈ [0, 2^w), w = 33 - HllP;
     *     rho = (leading zeros of the w-bit suffix) + 1
     *         = (w+1) - length(bin(suffix)), EXACT via the binary-string
     *     length — never log2, whose last ulp differs across libm builds.
@@ -179,11 +184,9 @@ object Sketches {
     *
     * Output: (groupCol, n_buckets_hit, z_scaled, est_distinct).
     */
-  def hllDistinct(df: DataFrame, groupCol: String, valueCol: String,
-                  p: Int = 10): DataFrame = {
-    require(p >= 7 && p <= 14, "need 7 <= p <= 14 (alpha assumes m >= 128)")
-    val m = 1 << p
-    val w = 33 - p
+  def hllDistinct(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
+    val m = 1 << HllP
+    val w = 33 - HllP
     val kMax = w + 1
     // see kmvDistinct's null contract: a NULL value would register a
     // phantom NULL bucket (counted in n_buckets_hit, absent from _zhit),
@@ -194,7 +197,7 @@ object Sketches {
         expr(s"shiftleft((_h * _h % ${P}L * 2654435761L + 11L) % ${P}L, 33)" +
           s" DIV ${P}L").as("_g"))
       .select(col(groupCol), (col("_g") % m).as("_bkt"),
-        shiftright(col("_g"), p).as("_sfx"))
+        shiftright(col("_g"), HllP).as("_sfx"))
       .withColumn("_rho",
         when(col("_sfx") === 0L, lit(kMax))
           .otherwise(lit(kMax) - length(bin(col("_sfx")))))
@@ -206,7 +209,7 @@ object Sketches {
       .withColumn("z_scaled",
         col("_zhit") + (lit(m.toLong) - col("n_buckets_hit")) * lit(1L << kMax))
       .select(col(groupCol), col("n_buckets_hit"), col("z_scaled"),
-        floor(lit(hllNumer(p)) / col("z_scaled")).cast("long").as("est_distinct"))
+        floor(lit(hllNumer) / col("z_scaled")).cast("long").as("est_distinct"))
   }
 
   /** The constant numerator alpha_m · m² · 2^K of the HLL estimator, as a
@@ -214,17 +217,17 @@ object Sketches {
     * oracle can reproduce it bit-for-bit from its %.17E rendering (see
     * [[hllNumerSql]]).
     */
-  def hllNumer(p: Int): Double = {
-    val m = 1 << p
+  def hllNumer: Double = {
+    val m = 1 << HllP
     0.7213 / (1.0 + 1.079 / m) * m.toDouble * m.toDouble *
-      (1L << (33 - p + 1)).toDouble
+      (1L << (33 - HllP + 1)).toDouble
   }
 
   /** SQL double literal (E-notation, 17 significant digits — guaranteed
     * round-trip) of [[hllNumer]] for oracle generation.
     */
-  def hllNumerSql(p: Int): String =
-    "%.17E".formatLocal(java.util.Locale.ROOT, hllNumer(p))
+  def hllNumerSql: String =
+    "%.17E".formatLocal(java.util.Locale.ROOT, hllNumer)
 
   // ---------------------------------------------------------------------
   // KMV set-overlap (intersection / Jaccard) estimate
@@ -298,7 +301,7 @@ object Sketches {
   // ---------------------------------------------------------------------
 
   /** Hash rows of the batch count-min sketch. */
-  private val CmsDepth = 4
+  private[graft] val CmsDepth = 4
 
   /** Cell index of a key under hash row i: ((key mod P)·a_i + b_i) mod P
     * mod width.
@@ -362,8 +365,8 @@ object Sketches {
     * future change to its overflow-safety arithmetic reaches the bloom
     * paths too instead of silently diverging the bit positions.
     */
-  private def bloomPos(h: Column, a: Long, b: Long, mBits: Int): Column =
-    longHash(h, a, b) % mBits
+  private def bloomPos(h: Column, a: Long, b: Long): Column =
+    longHash(h, a, b) % BloomBits
 
   /** 1L << bits with a COLUMN shift amount (the public `shiftleft` only
     * takes a constant Int shift).
@@ -373,18 +376,16 @@ object Sketches {
       GraftColumnBridge.toExpression(lit(1L)),
       GraftColumnBridge.toExpression(bits.cast("int"))))
 
-  /** Build the bloom bit array (as mBits/64 longs) from a column of long
+  /** Build the bloom bit array (as BloomBits/64 longs) from a column of long
     * hash values. The aggregation output is bounded by the FIXED word
-    * keyspace (mBits/64 rows — e.g. 1024 longs for 64 Kbit), so the
+    * keyspace (BloomBits/64 rows — 1024 longs for 64 Kbit), so the
     * `collect()` is safe at any input scale, same argument as the bounded
     * bucket collect in [[Dedup]].
     */
-  def bloomBits(items: DataFrame, hashCol: String, mBits: Int = 65536,
-                k: Int = 4): Array[Long] = {
-    require(mBits % 64 == 0 && mBits > 0, "mBits must be a positive multiple of 64")
-    val words = new Array[Long](mBits / 64)
-    val positions = mixConsts(k).map { case (a, b) =>
-      bloomPos(col(hashCol), a, b, mBits)
+  def bloomBits(items: DataFrame, hashCol: String): Array[Long] = {
+    val words = new Array[Long](BloomBits / 64)
+    val positions = mixConsts(BloomHashes).map { case (a, b) =>
+      bloomPos(col(hashCol), a, b)
     }
     // a NULL hash yields a NULL position/word, and the driver-side
     // getInt(0) below would NPE on it — nulls set no bits
@@ -398,49 +399,34 @@ object Sketches {
     words
   }
 
-  /** Membership predicate: all k bloom bits set for hash column `h`.
+  /** Membership predicate: all BloomHashes bloom bits set for hash column `h`.
     * The bit array rides into codegen as a literal array — element_at +
     * mask tests, no join, no shuffle, no UDF.
     */
-  def bloomContains(bits: Array[Long], mBits: Int, k: Int)(h: Column): Column = {
+  def bloomContains(bits: Array[Long])(h: Column): Column = {
     val arr = lit(bits)
-    mixConsts(k).map { case (a, b) =>
-      val p = bloomPos(h, a, b, mBits)
+    mixConsts(BloomHashes).map { case (a, b) =>
+      val p = bloomPos(h, a, b)
       (element_at(arr, shiftright(p, 6).cast("int") + 1)
         .bitwiseAND(shl1(p % 64)) =!= 0L)
     }.reduce(_ && _)
   }
 
-  /** Bloom-accelerated decontamination: same exact output as
-    * [[Corpus.decontaminate]] (per-doc count of distinct eval-set shingle
-    * overlaps) but the corpus side is pre-filtered by a bloom built from
-    * the benchmark's shingle hashes BEFORE the verifying join. Bloom
-    * filters have no false negatives, so the verify join sees every true
-    * overlap and the result is exact — the sketch only prunes work.
-    *
-    * At 100 TB this is the shape that matters: the bit array (mBits/8
-    * bytes, e.g. 8 KiB at the default) goes to every task as a literal,
-    * and only the tiny surviving fraction of corpus shingles pays the
-    * broadcast-join probe. With a large eval suite the full shingle set
-    * may be too big to broadcast comfortably — the bloom stays fixed-size
-    * no matter what.
-    */
-  /** Shared decontamination prelude: the benchmark's distinct shingle set
-    * and its bloom bit array — ONE construction for the batch
+  /** Shared decontamination prelude: the benchmark's distinct word
+    * 3-shingle set and its bloom bit array — ONE construction for the batch
     * ([[bloomDecontaminate]]) and streaming
     * (`DocumentStream.decontaminated`) faces, so a change to shingle
     * normalization or the hash cannot silently diverge their q61 parity.
     */
-  def benchmarkBloom(benchmark: DataFrame, textCol: String, n: Int,
-                     mBits: Int, k: Int): (DataFrame, Array[Long]) = {
+  def benchmarkBloom(benchmark: DataFrame, textCol: String): (DataFrame, Array[Long]) = {
     val bsh = benchmark
-      .select(explode(graft.functions.TextFunctions.wordShingles(col(textCol), n))
+      .select(explode(graft.functions.TextFunctions.wordShingles(col(textCol), Dedup.ShingleWords))
         .as("shingle"))
       .distinct()
       .cache() // feeds the eager bloomBits collect AND the caller's verify
                // join — without it the shingle-distinct plan runs twice
     (bsh, bloomBits(
-      bsh.select(Dedup.shingleHash(col("shingle")).as("h")), "h", mBits, k))
+      bsh.select(Dedup.shingleHash(col("shingle")).as("h")), "h"))
   }
 
   /** Bloom size and hash count of the benchmark filter, shared by the
@@ -450,15 +436,24 @@ object Sketches {
   private[graft] val BloomBits = 65536
   private[graft] val BloomHashes = 4
 
-  /** Batch decontamination through the benchmark bloom filter over word
-    * 3-shingles.
+  /** Bloom-accelerated decontamination: same exact output as
+    * [[Corpus.decontaminate]] (per-doc count of distinct eval-set word
+    * 3-shingle overlaps) but the corpus side is pre-filtered by a bloom
+    * built from the benchmark's shingle hashes BEFORE the verifying join.
+    * Bloom filters have no false negatives, so the verify join sees every
+    * true overlap and the result is exact — the sketch only prunes work.
+    *
+    * At 100 TB this is the shape that matters: the bit array (BloomBits/8
+    * bytes, 8 KiB) goes to every task as a literal, and only the tiny
+    * surviving fraction of corpus shingles pays the broadcast-join probe.
+    * With a large eval suite the full shingle set may be too big to
+    * broadcast comfortably — the bloom stays fixed-size no matter what.
     */
   def bloomDecontaminate(corpus: DataFrame, benchmark: DataFrame,
                          idCol: String, textCol: String): DataFrame = {
-    val (bsh, bits) =
-      benchmarkBloom(benchmark, textCol, Dedup.ShingleWords, BloomBits, BloomHashes)
+    val (bsh, bits) = benchmarkBloom(benchmark, textCol)
     Dedup.shingles(corpus, idCol, textCol, Dedup.ShingleWords)
-      .where(bloomContains(bits, BloomBits, BloomHashes)(Dedup.shingleHash(col("shingle"))))
+      .where(bloomContains(bits)(Dedup.shingleHash(col("shingle"))))
       .join(broadcast(bsh), "shingle")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_overlap"))

@@ -118,17 +118,16 @@ object DedupStream {
     * lake's live-view/batch-repair split again.
     */
   def anchorCandidates(docs: DataFrame, idCol: String, textCol: String,
-                       maxHamming: Int = 3,
                        bits: Int = graft.ops.Dedup.DefaultSimhashBits): Dataset[Candidate] = {
     import docs.sparkSession.implicits._
     signedBuckets(docs, idCol, textCol, bits, keepSig = true)
       .as[SigRow]
       .groupByKey(_.bucket)
       .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        GroupStateTimeout.NoTimeout)(candidateFn(maxHamming))
+        GroupStateTimeout.NoTimeout)(candidateFn)
   }
 
-  private def candidateFn(maxHamming: Int)(
+  private def candidateFn(
       bucket: Long, rows: Iterator[SigRow],
       state: org.apache.spark.sql.streaming.GroupState[AnchorState]): Iterator[Candidate] = {
     var anchor = state.getOption.orNull
@@ -139,7 +138,7 @@ object DedupStream {
       // which must not emit a self-pair
       if (d.doc_id == a.anchorId) return
       val h = java.lang.Long.bitCount(d.sig ^ a.anchorSig).toLong
-      if (h <= maxHamming) out += Candidate(d.doc_id, a.anchorId, h)
+      if (h <= graft.ops.Dedup.MaxHamming) out += Candidate(d.doc_id, a.anchorId, h)
     }
     rows.toSeq.sortBy(_.doc_id).foreach { r =>
       if (anchor == null) anchor = AnchorState(r.doc_id, r.sig)

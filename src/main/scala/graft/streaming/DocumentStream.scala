@@ -62,18 +62,16 @@ object DocumentStream {
   def decontaminated(docs: DataFrame, benchmark: DataFrame,
                      watermark: String = "10 minutes"): DataFrame = {
     import graft.ops.Sketches
-    import graft.ops.Sketches.{BloomBits, BloomHashes}
     // shared prelude with the batch face — one definition of the benchmark
     // artifact (Sketches.benchmarkBloom), so q61 parity holds by
     // construction
-    val (bsh, bits) = Sketches.benchmarkBloom(benchmark, "text", Dedup.ShingleWords,
-      BloomBits, BloomHashes)
+    val (bsh, bits) = Sketches.benchmarkBloom(benchmark, "text")
     docs
       .withWatermark("ts", watermark)
       .select(col("ts"), col("doc_id"),
         explode(graft.functions.TextFunctions.wordShingles(col("text"), Dedup.ShingleWords))
           .as("shingle"))
-      .where(Sketches.bloomContains(bits, BloomBits, BloomHashes)(
+      .where(Sketches.bloomContains(bits)(
         Dedup.shingleHash(col("shingle"))))
       .join(broadcast(bsh), Seq("shingle"))
       .groupBy(window(col("ts"), "10 minutes"), col("doc_id"))

@@ -95,9 +95,7 @@ object SketchStream {
     * batch formulas term for term, and the only float op is the same one
     * IEEE division.
     */
-  def hllDistinct(events: DataFrame, groupCol: String, valueCol: String,
-                  p: Int = 10): Dataset[HllEstimate] = {
-    require(p >= 7 && p <= 14, "need 7 <= p <= 14 (alpha assumes m >= 128)")
+  def hllDistinct(events: DataFrame, groupCol: String, valueCol: String): Dataset[HllEstimate] = {
     import events.sparkSession.implicits._
     events
       // NULL values count nothing — the batch twin's contract (see
@@ -113,12 +111,13 @@ object SketchStream {
           s" DIV ${P}L AS hv")
       .as[Keyed]
       .groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(hllStateFn(p))
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(hllStateFn)
   }
 
-  private def hllStateFn(p: Int)(
+  private def hllStateFn(
       group: String, rows: Iterator[Keyed],
       state: GroupState[HllState]): HllEstimate = {
+    val p = graft.ops.Sketches.HllP
     val m = 1 << p
     val kMax = 33 - p + 1
     val regs = state.getOption.map(_.regs).getOrElse(new Array[Byte](m))
@@ -144,7 +143,7 @@ object SketchStream {
       else { hit += 1; z += 1L << (kMax - r) }
       i += 1
     }
-    val est = math.floor(graft.ops.Sketches.hllNumer(p) / z).toLong
+    val est = math.floor(graft.ops.Sketches.hllNumer / z).toLong
     HllEstimate(group, hit, z, est)
   }
 
@@ -155,31 +154,30 @@ object SketchStream {
   /** Streaming count-min sketch — the streaming twin of the batch
     * `Sketches.countMinSketch` (q64), and deliberately the SIMPLEST twin
     * in this file: a count-min sketch IS a streaming aggregation with
-    * bounded state. Each event maps to `depth` (row, cell) coordinates
+    * bounded state. Each event maps to one (row, cell) per hash row (`CmsDepth` = 4)
     * through the same portable hash family as batch; `groupBy(row,
     * cell).count()` in Update mode maintains the counters incrementally
-    * with state bounded by depth × width cells FOREVER, no custom
+    * with state bounded by 4 × width cells FOREVER, no custom
     * `mapGroupsWithState` needed. Counter cells are exact integers, so
     * the final cells over a bounded input are BIT-IDENTICAL to the batch
     * sketch's (asserted by the parity spec) — and any cell's point
     * estimate (min over rows) therefore matches too.
     */
   def countMin(events: DataFrame, keyCol: String,
-               depth: Int = 4, width: Int = 1024): DataFrame = {
+               width: Int = 1024): DataFrame = {
     // same guard as the batch twin (Sketches.countMinSketch): width < 2
     // makes cellOf a modulo-by-zero/one (all-null or single-cell sketch)
-    // and depth < 1 an empty explode that drops every event — both
     // silently, so fail loudly instead
-    require(depth >= 1 && width >= 2, "need depth >= 1 and width >= 2")
+    require(width >= 2, "need width >= 2")
     import org.apache.spark.sql.functions._
-    val rows = graft.ops.Sketches.mixConsts(depth).zipWithIndex.map {
+    val rows = graft.ops.Sketches.mixConsts(graft.ops.Sketches.CmsDepth).zipWithIndex.map {
       case ((a, b), i) =>
         struct(lit(i).as("row"),
           graft.ops.Sketches.cellOf(col(keyCol), a, b, width).as("cell"))
     }
     // NULL keys set no cells, mirroring the batch twin's filter
     // (Sketches.countMinSketch — "unprobeable rows that only bloat the
-    // sketch"): without it cellOf(NULL) lands depth phantom NULL-cell
+    // sketch"): without it cellOf(NULL) lands 4 phantom NULL-cell
     // rows per null event and the documented bit-parity breaks
     events.where(col(keyCol).isNotNull)
       .select(explode(array(rows: _*)).as("rc"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** Streaming Markov transition mining — the streaming twin of the batch
   * `EventOps.transitions` (q84): emit a (from_type, to_type) pair for every
-  * consecutive same-user event pair at most `gapSeconds` apart.
+  * consecutive same-user event pair at most `GapSeconds` (30 min) apart.
   *
   * Batch gets consecutiveness from a lag window; a stream keeps the ONE
   * row lag needs as state: per user, the last seen (second, id, type) —
@@ -38,20 +38,23 @@ object TransitionStream {
 
   case class Transition(user_id: Long, from_type: String, to_type: String)
 
+  /** Session gap of both faces, the batch twins' q84/q92 value. */
+  private val GapSeconds = 1800L
+
   /** events(user_id, event_id, event_type, ts) -> stream of transition
     * pairs, one per qualifying consecutive event pair.
     */
-  def transitions(events: DataFrame, gapSeconds: Long = 1800L): Dataset[Transition] = {
+  def transitions(events: DataFrame): Dataset[Transition] = {
     import events.sparkSession.implicits._
     events
       .selectExpr("user_id", "event_id", "event_type", "ts")
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(gapSeconds))
+        stateFn)
   }
 
-  private def stateFn(gapSeconds: Long)(
+  private def stateFn(
       userId: Long, events: Iterator[Ev],
       state: GroupState[LastEv]): Iterator[Transition] = {
     val sorted = events
@@ -65,13 +68,13 @@ object TransitionStream {
           // cross-batch LATE arrival: an event ordered before the stored
           // lag row (impossible within a batch — the sort above — so the
           // stored row is from an earlier micro-batch). Without this guard
-          // the negative delta passes <= gapSeconds, emitting an INVERTED
+          // the negative delta passes <= GapSeconds, emitting an INVERTED
           // pair (from an event that happened after the to-event) and
           // regressing the state so the next pair is wrong too. Dropping
           // it is the same monotone-per-user contract attributionFn
           // enforces; batch (total-order lag) never faces the case.
           ()
-        case Some(p) if e.tsec - p.tsec <= gapSeconds =>
+        case Some(p) if e.tsec - p.tsec <= GapSeconds =>
           out += Transition(userId, p.typ, e.typ)
           last = Some(e)
         case _ => // first event, or the gap broke the session: no pair
@@ -87,24 +90,23 @@ object TransitionStream {
 
   /** Streaming last-touch attribution — the streaming twin of the batch
     * `EventOps.lastTouchAttribution` (q92), sharing [[transitions]]' state
-    * shape: per user the last NON-target (second, id, type) row. A target
+    * shape: per user the last NON-target (second, id, type) row. A target ("purchase")
     * event emits its attribution the moment it arrives ("direct" when the
     * last touch is absent or stale); non-target events just refresh the
     * state. Same ordering contract and micro-batch assumptions as
     * [[transitions]].
     */
-  def attributions(events: DataFrame, gapSeconds: Long = 1800L,
-                   targetType: String = "purchase"): Dataset[AttributedConversion] = {
+  def attributions(events: DataFrame): Dataset[AttributedConversion] = {
     import events.sparkSession.implicits._
     events
       .selectExpr("user_id", "event_id", "event_type", "ts", "value")
       .as[(Long, Long, String, Timestamp, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        attributionFn(gapSeconds, targetType))
+        attributionFn)
   }
 
-  private def attributionFn(gapSeconds: Long, targetType: String)(
+  private def attributionFn(
       userId: Long, events: Iterator[(Long, Long, String, Timestamp, Double)],
       state: GroupState[LastEv]): Iterator[AttributedConversion] = {
     val sorted = events
@@ -113,15 +115,15 @@ object TransitionStream {
     val out = Vector.newBuilder[AttributedConversion]
     var last = state.getOption
     sorted.foreach { case (tsec, id, ty, v) =>
-      if (ty == targetType) {
+      if (ty == "purchase") {
         val attributed = last match {
           // tsec >= p.tsec: a conversion that arrived in a LATER micro-
           // batch than a touch that happened AFTER it (cross-batch late
           // arrival) must not be credited to that future touch — the
-          // negative delta trivially passes <= gapSeconds without the
+          // negative delta trivially passes <= GapSeconds without the
           // lower bound, and "direct" is the batch operator's answer for
           // a conversion with no prior touch in the gap
-          case Some(p) if tsec >= p.tsec && tsec - p.tsec <= gapSeconds => p.typ
+          case Some(p) if tsec >= p.tsec && tsec - p.tsec <= GapSeconds => p.typ
           case _ => "direct"
         }
         out += AttributedConversion(userId, attributed, v)

@@ -21,7 +21,7 @@ class CorpusSpec extends AnyFunSuite {
     // benchmark shares the "the quick brown fox" 4 words = two 3-gram
     // shingles with doc 1 and doc 3
     val bench = Seq((100L, "the quick brown fox is a benchmark item")).toDF("doc_id", "text")
-    val got = Corpus.decontaminate(docs, bench, "doc_id", "text", 3)
+    val got = Corpus.decontaminate(docs, bench, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
     assert(got === Seq((1L, 2L), (3L, 2L)))
     val clean = Corpus.decontaminated(docs, bench, "doc_id", "text")

@@ -47,7 +47,7 @@ class DedupCapSpec extends AnyFunSuite {
   test("MIH generator: >InlineKeyCap dropped keys -> broadcast anti-join form, literal-form semantics") {
     // 3005 groups x 2 halves = 6010 over-cap half buckets > 4096
     val cands = Dedup.simhashCandidatesMih(sigs, "doc_id", "sig",
-      maxHamming = 3, maxBucket = 2, bits = bits)
+      maxBucket = 2, bits = bits)
     val plan = cands.queryExecution.executedPlan.toString
     assert(plan.contains("LeftAnti"),
       "over-cap MIH must use the broadcast anti-join, not an isin literal list")

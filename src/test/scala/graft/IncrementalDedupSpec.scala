@@ -173,7 +173,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     def got(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("id_a", "id_b").as[(Long, Long, Long)].collect().toSeq
     val mih = got(Dedup.simhashCandidatesMih(sigs, "doc_id", "sig",
-      maxHamming = 3, bits = 48))
+      bits = 48))
     val chunked = got(Dedup.simhashCandidatesFromSignatures(sigs, "doc_id", "sig",
       maxHamming = 3, chunkBits = 12))
     val brute = (for {
@@ -189,9 +189,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // bucket width -> every path capped, zero candidates; default cap keeps
     // the full clique
     val same = (0 until 40).map(i => (i.toLong, 123456789L)).toDF("doc_id", "sig")
-    assert(Dedup.simhashCandidatesMih(same, "doc_id", "sig", 3, maxBucket = 10,
+    assert(Dedup.simhashCandidatesMih(same, "doc_id", "sig", maxBucket = 10,
       bits = 48).count() === 0L)
-    assert(Dedup.simhashCandidatesMih(same, "doc_id", "sig", 3,
+    assert(Dedup.simhashCandidatesMih(same, "doc_id", "sig",
       bits = 48).count() === 40L * 39L / 2L)
   }
 
@@ -228,7 +228,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     docs.grouped(math.max(1, docs.size / 4 + 1)).foreach(c => input.addData(c))
     val streamed = graft.streaming.StreamDrains
       .anchorCandidatesFinal(input.toDF().toDF("doc_id", "text"), "doc_id",
-        "text", maxHamming = 3, queryName = "anchor_cand_w48", bits = 48)
+        "text", queryName = "anchor_cand_w48", bits = 48)
       .orderBy("doc_id", "anchor_id").as[(Long, Long, Long)].collect().toSeq
     assert(streamed === batch)
   }

@@ -429,7 +429,7 @@ class PropertySpec extends AnyFunSuite {
       } yield (ia, ib, d.toLong)).sortBy(p => (p._1, p._2))
       assert(brute.nonEmpty, s"seed $seed bits $bits: degenerate corpus, no pairs to test")
       assert(got(graft.ops.Dedup.simhashCandidatesMih(sigs, "doc_id", "sig",
-        maxHamming = 3, bits = bits)) === brute, s"MIH at seed $seed bits $bits")
+        bits = bits)) === brute, s"MIH at seed $seed bits $bits")
       assert(got(graft.ops.Dedup.simhashCandidatesFromSignatures(sigs, "doc_id", "sig",
         maxHamming = 3, chunkBits = bits / 4)) === brute, s"chunked at seed $seed bits $bits")
     }

@@ -58,16 +58,16 @@ class SketchesSpec extends AnyFunSuite {
   test("hllDistinct: estimate near truth at p=10; partition-invariant; duplicates free") {
     val n = 5000
     val df = (0 until n).map(i => ("g", i.toLong)).toDF("g", "v")
-    val est = Sketches.hllDistinct(df, "g", "v", p = 10)
+    val est = Sketches.hllDistinct(df, "g", "v")
       .select("est_distinct").as[Long].head()
     // standard error ~1.04/sqrt(1024) ~ 3.3%; allow ~3 sigma
     assert(math.abs(est - n) < n * 0.10, s"HLL estimate $est too far from $n")
-    val est1 = Sketches.hllDistinct(df.repartition(13), "g", "v", p = 10)
+    val est1 = Sketches.hllDistinct(df.repartition(13), "g", "v")
       .select("est_distinct").as[Long].head()
     assert(est === est1, "HLL must not depend on partitioning")
     // registers are max-aggregates: duplicated input changes NOTHING —
     // the property KMV only gets by paying a distinct-shuffle first
-    val est2 = Sketches.hllDistinct(df.union(df).union(df), "g", "v", p = 10)
+    val est2 = Sketches.hllDistinct(df.union(df).union(df), "g", "v")
       .select("est_distinct").as[Long].head()
     assert(est === est2, "HLL must absorb duplicates without drift")
   }
@@ -75,7 +75,7 @@ class SketchesSpec extends AnyFunSuite {
   test("hllDistinct: per-group sketches, z_scaled integer-exact invariants") {
     val df = Seq.tabulate(3000)(i => (s"g${i % 3}", (i / 3).toLong * (i % 3 + 1)))
       .toDF("g", "v")
-    val rows = Sketches.hllDistinct(df, "g", "v", p = 10)
+    val rows = Sketches.hllDistinct(df, "g", "v")
       .select("g", "n_buckets_hit", "z_scaled", "est_distinct")
       .as[(String, Long, Long, Long)].collect()
     assert(rows.map(_._1).sorted === Array("g0", "g1", "g2"))
@@ -164,13 +164,12 @@ class SketchesSpec extends AnyFunSuite {
 
   test("bloom: no false negatives; false-positive rate is small at the default sizing") {
     val members = (0 until 1000).map(i => i.toLong * 7919L)
-    val bits = Sketches.bloomBits(
-      members.toDF("h"), "h", mBits = 65536, k = 4)
+    val bits = Sketches.bloomBits(members.toDF("h"), "h")
     val probe = ((0 until 1000).map(i => i.toLong * 7919L) ++ // members
       (0 until 1000).map(i => i.toLong * 7919L + 1L))         // non-members
       .toDF("h")
     val got = probe
-      .select(col("h"), Sketches.bloomContains(bits, 65536, 4)(col("h")).as("m"))
+      .select(col("h"), Sketches.bloomContains(bits)(col("h")).as("m"))
       .as[(Long, Boolean)].collect()
     val memberSet = members.toSet
     got.filter(r => memberSet(r._1)).foreach { case (h, m) =>
@@ -190,7 +189,7 @@ class SketchesSpec extends AnyFunSuite {
       (6L, "completely unrelated content about spark engines"),
     ).toDF("doc_id", "text")
     val bench = Seq((100L, "the quick brown fox is a benchmark item")).toDF("doc_id", "text")
-    val plain = Corpus.decontaminate(corpus, bench, "doc_id", "text", 3)
+    val plain = Corpus.decontaminate(corpus, bench, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
     val bloom = Sketches.bloomDecontaminate(corpus, bench, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
@@ -258,9 +257,9 @@ class SketchesSpec extends AnyFunSuite {
     val input = MemoryStream[(String, Long)]
     chunks.foreach(c => input.addData(c)) // three micro-batches, overlapping values
     val streamed = graft.streaming.StreamDrains
-      .hllFinal(input.toDF().toDF("g", "v"), "g", "v", p = 10, queryName = "hll_out")
+      .hllFinal(input.toDF().toDF("g", "v"), "g", "v", queryName = "hll_out")
       .orderBy("group").as[(String, Long, Long, Long)].collect().toSeq
-    val batch = Sketches.hllDistinct(chunks.flatten.toDF("g", "v"), "g", "v", p = 10)
+    val batch = Sketches.hllDistinct(chunks.flatten.toDF("g", "v"), "g", "v")
       .orderBy("g").as[(String, Long, Long, Long)].collect().toSeq
     assert(streamed === batch)
     // sanity: "a" saw 5000 distincts through 1 KiB of state, within ~3 sigma
@@ -278,7 +277,7 @@ class SketchesSpec extends AnyFunSuite {
     val input = MemoryStream[Long]
     chunks.foreach(c => input.addData(c))
     val streamed = graft.streaming.StreamDrains
-      .countMinFinal(input.toDF().toDF("k"), "k", depth = 4, width = 64,
+      .countMinFinal(input.toDF().toDF("k"), "k", width = 64,
         queryName = "cm_out")
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
     val batch = Sketches.countMinSketch(chunks.flatten.toDF("k"), "k", width = 64)
@@ -295,7 +294,7 @@ class SketchesSpec extends AnyFunSuite {
     val input = MemoryStream[Option[Long]]
     input.addData(vals)
     val streamed = graft.streaming.StreamDrains
-      .countMinFinal(input.toDF().toDF("k"), "k", depth = 4, width = 64,
+      .countMinFinal(input.toDF().toDF("k"), "k", width = 64,
         queryName = "cm_null_out")
       .orderBy("row", "cell").as[(Int, Long, Long)].collect().toSeq
     val batch = Sketches.countMinSketch(vals.toDF("k"), "k", width = 64)
@@ -441,7 +440,7 @@ class SketchesSpec extends AnyFunSuite {
     docs.grouped(math.max(1, docs.size / 4 + 1)).foreach(c => input.addData(c))
     val streamed = graft.streaming.StreamDrains
       .anchorCandidatesFinal(input.toDF().toDF("doc_id", "text"), "doc_id",
-        "text", maxHamming = 3, queryName = "anchor_cand")
+        "text", queryName = "anchor_cand")
       .orderBy("doc_id", "anchor_id")
       .as[(Long, Long, Long)].collect().toSeq
     val batch = graft.ops.Dedup

@@ -88,7 +88,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     chunks.foreach(c => in.addData(c: _*))
     val streamed = graft.streaming.StreamDrains
       .transitionsFinal(in.toDF().toDF("user_id", "event_id", "event_type", "ts"),
-        gapSeconds = 1800L, queryName = "trans_out")
+        queryName = "trans_out")
       .orderBy(col("from_type"), col("to_type"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
     val batch = SparkEntry.queries("q84_session_paths")(spark, sf)
@@ -128,8 +128,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     def t(sec: Long) = new Timestamp(sec * 1000L)
     val in = MemoryStream[(Long, Long, String, Timestamp, Double)]
     val q = graft.streaming.TransitionStream
-      .attributions(in.toDF().toDF("user_id", "event_id", "event_type", "ts", "value"),
-        gapSeconds = 1800L, targetType = "purchase")
+      .attributions(in.toDF().toDF("user_id", "event_id", "event_type", "ts", "value"))
       .writeStream.outputMode("append").format("memory")
       .queryName("attr_late").start()
     try {
@@ -152,8 +151,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     def t(sec: Long) = new Timestamp(sec * 1000L)
     val in = MemoryStream[(Long, Long, String, Timestamp)]
     val q = graft.streaming.TransitionStream
-      .transitions(in.toDF().toDF("user_id", "event_id", "event_type", "ts"),
-        gapSeconds = 1800L)
+      .transitions(in.toDF().toDF("user_id", "event_id", "event_type", "ts"))
       .writeStream.outputMode("append").format("memory")
       .queryName("trans_late").start()
     try {
@@ -177,8 +175,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     def t(sec: Long) = new Timestamp(sec * 1000L)
     val in = MemoryStream[(Long, Long, String, Timestamp, Double)]
     val q = graft.streaming.TransitionStream
-      .attributions(in.toDF().toDF("user_id", "event_id", "event_type", "ts", "value"),
-        gapSeconds = 1800L, targetType = "purchase")
+      .attributions(in.toDF().toDF("user_id", "event_id", "event_type", "ts", "value"))
       .writeStream.outputMode("append").format("memory")
       .queryName("attr_regress").start()
     try {
@@ -205,7 +202,7 @@ class StreamingOracleSpec extends AnyFunSuite {
     chunks.foreach(c => in.addData(c: _*))
     val streamed = graft.streaming.StreamDrains
       .attributionsFinal(in.toDF().toDF("user_id", "event_id", "event_type", "ts", "value"),
-        gapSeconds = 1800L, targetType = "purchase", queryName = "attr_out")
+        queryName = "attr_out")
       .orderBy(col("attributed"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     val batch = SparkEntry.queries("q92_attribution")(spark, sf)

@@ -20,9 +20,9 @@ object StreamDrains {
     * batch op before ITS distinct).
     */
   def anchorCandidatesFinal(docs: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int, queryName: String,
+                            queryName: String,
                             bits: Int = graft.ops.Dedup.DefaultSimhashBits): DataFrame =
-    StreamRun.toCompletion(anchorCandidates(docs, idCol, textCol, maxHamming, bits),
+    StreamRun.toCompletion(anchorCandidates(docs, idCol, textCol, bits),
       "update", queryName).distinct()
 
   /** Run the stream to completion over a bounded input and return the
@@ -53,7 +53,7 @@ object StreamDrains {
     * HLL estimate per group — the batch-parity surface used by the spec.
     */
   def hllFinal(events: DataFrame, groupCol: String, valueCol: String,
-               p: Int, queryName: String): DataFrame = {
+               queryName: String): DataFrame = {
     // Registers only grow, so across a group's update rows n_buckets_hit
     // only grows and z_scaled only shrinks — the final state is the row
     // with (max hit, min z), no sink ordering assumed.
@@ -61,7 +61,7 @@ object StreamDrains {
     import org.apache.spark.sql.functions._
     val w = Window.partitionBy(col("group"))
       .orderBy(col("n_buckets_hit").desc, col("z_scaled").asc)
-    StreamRun.toCompletion(hllDistinct(events, groupCol, valueCol, p),
+    StreamRun.toCompletion(hllDistinct(events, groupCol, valueCol),
         "update", queryName)
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1)
@@ -71,12 +71,12 @@ object StreamDrains {
   /** Run the stream to completion over a bounded input and return the
     * final sketch cells — the batch-parity surface used by the spec.
     */
-  def countMinFinal(events: DataFrame, keyCol: String, depth: Int,
+  def countMinFinal(events: DataFrame, keyCol: String,
                     width: Int, queryName: String): DataFrame = {
     // Update mode re-emits a cell's row whenever its count grows; the
     // final value per cell is simply the max count ever emitted
     import org.apache.spark.sql.functions._
-    StreamRun.toCompletion(countMin(events, keyCol, depth, width),
+    StreamRun.toCompletion(countMin(events, keyCol, width),
         "update", queryName)
       .groupBy(col("row"), col("cell"))
       .agg(max(col("cnt")).as("cnt"))
@@ -124,10 +124,9 @@ object StreamDrains {
     * return (attributed, n_conversions, revenue) — q92's aggregate shape,
     * the batch-parity surface used by the spec.
     */
-  def attributionsFinal(events: DataFrame, gapSeconds: Long,
-                        targetType: String, queryName: String): DataFrame = {
+  def attributionsFinal(events: DataFrame, queryName: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    StreamRun.toCompletion(attributions(events, gapSeconds, targetType),
+    StreamRun.toCompletion(attributions(events),
         "append", queryName)
       .groupBy(col("attributed"))
       .agg(count(lit(1)).as("n_conversions"),
@@ -140,10 +139,9 @@ object StreamDrains {
     * final (from_type, to_type, n) counts — the batch-parity surface used
     * by the spec.
     */
-  def transitionsFinal(events: DataFrame, gapSeconds: Long,
-                       queryName: String): DataFrame = {
+  def transitionsFinal(events: DataFrame, queryName: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    StreamRun.toCompletion(transitions(events, gapSeconds), "append", queryName)
+    StreamRun.toCompletion(transitions(events), "append", queryName)
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
   }

@@ -12,8 +12,14 @@
    def name (`Owner.name(...)` only to the def of that object, when it has
    one), and arguments by parameter name or position; an argument equal to
    the default (same text up to whitespace, or the same number) does not
-   count as a second value. Constructor parameters are not scanned, and
-   `Name(...)` calls of an `apply` are invisible to the name match.
+   count as a second value. A bare-identifier argument counts as the values
+   it stands for: a parameter of the enclosing def forwards what that def's
+   callers pass (or its default), a `val` its right-hand side, a generator
+   or lambda over `Seq(...)` each element; an identifier with no binding in
+   sight counts as no value and the hit says so. Arguments inside an
+   `intercept[...]` block are values the operator rejects, not values in
+   use. Constructor parameters are not scanned, and `Name(...)` calls of an
+   `apply` are invisible to the name match.
 
 Both checks blank comments and string literals first (`${...}` and `$name`
 splices are kept) and exit 1 on any hit not in their allowlist.
@@ -60,6 +66,8 @@ PARAM_REASONS = {
         "Connectors.apply.tsShiftMs",
     "an apply parameter, checked by hand: LiquidityProfiles(...) callers name the profile":
         "OrLevels.apply.name",
+    "set only by its own guard test (a spec checks that the require rejects bands = 5)":
+        "Dedup.minhashCandidates.bands",
 }
 PARAM_ALLOW = {key: why for why, keys in PARAM_REASONS.items() for key in keys.split()}
 
@@ -177,47 +185,100 @@ def norm(v):
     return v
 
 
-def defaulted(text, src, name_end):
-    """[(group, index, param, default text)] for the def whose name ends at name_end."""
+def body_end(text, start):
+    """Offset where the def starting at text[start] ends: the first later line
+    indented no deeper than the def, past it when it only closes a bracket."""
+    indent = len(text[start:]) - len(text[start:].lstrip(" \t"))
+    for m in re.finditer(r"\n([ \t]*)(\S)", text[start:]):
+        if len(m.group(1)) <= indent:
+            j = start + m.end()
+            return text.find("\n", j) % (len(text) + 1) if m.group(2) in ")}]" else j - 1
+    return len(text)
+
+
+def params_of(text, src, name_end):
+    """[(group, index, param, default text or None)] for the def whose name
+    ends at name_end."""
     out = []
     for g, (a, b) in enumerate(groups(text, name_end, blocks=False)):
         for k, (s, e) in enumerate(split_top(text, a, b, src)):
             p = PARAM.match(text, s)
             eq = EQ.search(text, s, e)
-            if p and eq:
-                out.append((g, k, p.group(1), src[eq.end():e].strip()))
+            if p:
+                out.append((g, k, p.group(1), src[eq.end():e].strip() if eq else None))
     return out
 
 
 OBJECT = re.compile(r"^(?:private\[\w+\] |final )*(?:case )?(?:object|class|trait)\s+(\w+)", re.M)
 QUALIFIER = re.compile(r"\b([A-Z]\w*)\s*\.\s*$")
+IDENT = re.compile(r"[A-Za-z_]\w*(?:\s*\.\s*[A-Za-z_]\w*)*")
+WORDS = {"true", "false", "null", "None", "Nil"}
+INTERCEPT = re.compile(r"\bintercept\s*\[")
+# a local name bound by `val x =`, by a generator `x <-`, by a lambda `x =>`
+# or by a `case (...) =>` pattern
+BIND = re.compile(r"\bva[lr]\s+([A-Za-z_]\w*)\s*(?::[^=\n]*)?=(?![=>])"
+                  r"|\b([A-Za-z_]\w*)\s*<-|(?<![\w)])([A-Za-z_]\w*)\s*=>"
+                  r"|\bcase\s*(\([^=]*?\))\s*=>")
+SEQ = re.compile(r"(?:Seq|List|Array|Set)\s*\(")
 
 
 def param_check(root, main_files, trees):
-    params = []  # (path, line, owner, def, group, index, param, default)
-    owned = set()  # (owner, def) of every def in src/main/scala
+    """Defaulted parameters of src/main/scala defs, and those with one value
+    in use (see the module docstring for how arguments resolve)."""
     sources = {p: (p.read_text(),) for p in trees}
     for p in sources:
         sources[p] += (strip(sources[p][0]),)
-    for p in main_files:
-        src, text = sources[p]
+    defs = {}  # file -> [(start, body end, owner, name, params)] in file order
+    owned = set()  # (owner, def) of every def in the three trees
+    binds = {}  # file -> [(start, name, kind, value start, value end)] in file order
+    for p, (src, text) in sources.items():
         owners = [(m.start(), m.group(1)) for m in OBJECT.finditer(text)]
         for m in DEF.finditer(text):
-            line = text.count("\n", 0, m.start()) + 1
             owner = max(((i, o) for i, o in owners if i < m.start()), default=(0, None))[1]
             owned.add((owner, m.group(2)))
-            for g, k, par, d in defaulted(text, src, m.end()):
-                params.append((p, line, owner, m.group(2), g, k, par, d))
-    names = {d[3] for d in params}
-    # (owner or None, def, group, param or index) -> set of normalized values;
+            defs.setdefault(p, []).append((m.start(), body_end(text, m.start()), owner,
+                                           m.group(2), params_of(text, src, m.end())))
+        for m in BIND.finditer(text):
+            if m.group(1):  # val: the rest of its line, or its bracket group
+                j = GAP.match(text, m.end()).end()
+                end = (match_close(text, j) if text[j:j + 1] in "([{"
+                       else text.find("\n", j) % (len(text) + 1))
+                binds.setdefault(p, []).append((m.start(), m.group(1), "val", j, end))
+            elif m.group(2):  # generator: the collection after `<-`
+                j = GAP.match(text, m.end()).end()
+                end = re.compile(r"[;)\n]|\bif\b").search(text, j)
+                binds.setdefault(p, []).append(
+                    (m.start(), m.group(2), "each", j, end.start() if end else len(text)))
+            elif m.group(4):  # case pattern: each name it binds, values unknown
+                for n in re.findall(r"\b[a-z]\w*", m.group(4)):
+                    binds.setdefault(p, []).append((m.start(), n, "each", m.start(), m.start()))
+            else:  # lambda: the collection of a `coll.foreach { x =>` call
+                c = re.search(r"([\w.]*(?:\([^()]*\))?)\s*\.\s*\w+\s*[({]\s*(?:case\s+)?$",
+                              text[max(0, m.start() - 200):m.start()])
+                j = m.start() - len(c.group()) + c.start(1) if c else m.start()
+                binds.setdefault(p, []).append(
+                    (m.start(), m.group(3), "each", j, j + len(c.group(1)) if c else j))
+    params = []  # (path, line, owner, def, group, index, param, default)
+    for p in main_files:
+        text = sources[p][1]
+        for start, _, owner, d, ps in defs.get(p, []):
+            line = text.count("\n", 0, start) + 1
+            params += [(p, line, owner, d, g, k, par, dflt)
+                       for g, k, par, dflt in ps if dflt is not None]
+    # (owner or None, def, group, param or index) -> [(file, offset, argument)];
     # `Owner.name(...)` counts for that owner's def when it has one, any
     # other call for every def of the name
-    values = {}
+    args = {}
+    names = {d for ds in defs.values() for _, _, _, d, _ in ds}
     call = re.compile(r"\b(" + "|".join(sorted(names)) + r")\b")
     for p, (src, text) in sources.items():
+        rejected = []
+        for m in INTERCEPT.finditer(text):
+            body = groups(text, match_close(text, m.end() - 1), blocks=True)
+            rejected += body[:1]
         for m in call.finditer(text):
             before = text[max(0, m.start() - 80):m.start()]
-            if re.search(r"\bdef\s+$", before):
+            if re.search(r"\bdef\s+$", before) or any(a <= m.start() < b for a, b in rejected):
                 continue
             q = QUALIFIER.search(before)
             owner = q.group(1) if q and (q.group(1), m.group(1)) in owned else None
@@ -225,18 +286,75 @@ def param_check(root, main_files, trees):
                 for k, (s, e) in enumerate(split_top(text, a, b, src)):
                     n = NAMED.match(text, s)
                     key = (owner, m.group(1), g, n.group(1) if n else k)
-                    values.setdefault(key, set()).add(norm(src[n.end() if n else s:e]))
+                    args.setdefault(key, []).append((p, s, src[n.end() if n else s:e]))
+
+    memo = {}
+
+    def received(owner, d, g, k, par, dflt):
+        """The values a def's parameter receives: its default and every
+        resolved argument of the calls that reach it."""
+        key = (owner, d, g, k)
+        if key not in memo:
+            memo[key] = set()  # a forwarding cycle adds nothing
+            got = {norm(dflt)} if dflt is not None else set()
+            for o in (None, owner):
+                for x in (par, k):
+                    for p, at, arg in args.get((o, d, g, x), []):
+                        got |= resolve(p, at, arg)
+            memo[key] = got
+        return memo[key]
+
+    def resolve(p, at, arg, depth=0):
+        """Normalized values an argument can take; empty when unresolved."""
+        src, text = sources[p]
+        v = " ".join(arg.split())
+        if NUM.fullmatch(v) or not IDENT.fullmatch(v) or v in WORDS or depth > 8:
+            return {norm(v)}
+        name = v.split(".")[-1].strip()
+        if "." not in v:  # the nearest binding before the argument
+            near = [(start, "param", x) for start, end, owner, d, ps in defs.get(p, [])
+                    for x in [(owner, d) + t for t in ps if t[2] == v] if start < at < end]
+            near += [(start, kind, (a, b)) for start, n, kind, a, b in binds.get(p, [])
+                     if n == v and start < at]
+            if near:
+                start, kind, x = max(near, key=lambda t: t[0])
+                if kind == "param":
+                    owner, d, g, k, par, dflt = x
+                    return received(owner, d, g, k, par, dflt)
+                a, b = x
+                if kind == "val":
+                    return resolve(p, a, src[a:b], depth + 1)
+                seq = SEQ.match(text, a)
+                if seq and match_close(text, seq.end() - 1) == b:
+                    return set().union(*(resolve(p, s, src[s:e], depth + 1)
+                                         for s, e in split_top(text, seq.end(), b - 1, src)))
+                # a range, a computed collection or a case pattern
+                return {" ".join(src[a:b].split()) or f"<{v} at {start}>"}
+        # a val of that name elsewhere in the file, else the one val of that name
+        for where in ([p], list(sources)):
+            vals = [(q, a, b) for q in where for _, n, kind, a, b in binds.get(q, [])
+                    if n == name and kind == "val"]
+            if vals:
+                got = set().union(*(resolve(q, a, sources[q][0][a:b], depth + 1)
+                                    for q, a, b in vals))
+                if where == [p] or len(got) == 1:
+                    return got
+        return set()
+
     hits, by_file = [], {}
     for p, line, owner, d, g, k, par, dflt in params:
-        seen = set().union(*(values.get((o, d, g, x), set())
-                             for o in (None, owner) for x in (par, k)))
+        calls = [a for o in (None, owner) for x in (par, k) for a in args.get((o, d, g, x), [])]
+        got = [resolve(*a) for a in calls]
+        seen = set().union(*got)
         one = not (seen - {norm(dflt)})
         stem = p.relative_to(root / "src/main/scala")
         tally = by_file.setdefault(str(stem), [0, 0])
         tally[0] += 1
         if one:
             tally[1] += 1
-            hits.append((p, line, d, par, dflt, "unset" if not seen else "default only"))
+            lost = sum(not x for x in got)
+            hits.append((p, line, d, par, dflt, "unset" if not calls else "default only"
+                         + (f", {lost} argument(s) unresolved" if lost else "")))
     return params, hits, by_file
 
 

@@ -167,7 +167,7 @@ object Cli {
       // embedding-space QC: per-label centroid cohesion (q57 shape)
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       println("[cli] per-label centroid cohesion (mean/min cosine to own centroid):")
-      graft.ops.Similarity.labelCentroidStats(emb, "vec_id", "embedding", "label")
+      graft.ops.Similarity.labelCentroidStats(emb, "embedding", "label")
         .orderBy("label").show(50, truncate = false)
 
     case "xsource" :: docsParquet :: Nil =>

@@ -29,7 +29,9 @@ import org.apache.spark.sql.functions._
   */
 object ScaleGen {
   def main(args: Array[String]): Unit = {
-    val Array(srcDir, outDir, repsStr) = args
+    require(args.length == 3,
+      s"args must be <srcSfDir> <outDir> <replicas>, got ${args.length}: ${args.mkString(" ")}")
+    val (srcDir, outDir, repsStr) = (args(0), args(1), args(2))
     val reps = repsStr.toInt
     require(reps >= 1, "need replicas >= 1")
     require(!outDir.startsWith("/root/testdata"), "never write to testdata")

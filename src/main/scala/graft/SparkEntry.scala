@@ -176,7 +176,7 @@ object SparkEntry {
     // same count, and the bench budget is the binding constraint (PLANS.md
     // round 11); the operator itself takes iters as a dial.
     "q110_pagerank" -> ((s, dir) => {
-      val edges = EventOps.transitions(tbl(s, dir, "events"), gapSeconds = 1800L)
+      val edges = EventOps.transitions(tbl(s, dir, "events"))
       Graph.pagerank(edges, "from_type", "to_type", "n", iters = 6)
         .orderBy(col("node"))
     }),
@@ -1482,8 +1482,7 @@ object SparkEntry {
     // (mean/min cosine to own centroid) — flags mislabeled or collapsed
     // classes before training (graft.ops.Similarity.labelCentroidStats)
     "q57_label_centroids" -> ((s, dir) => {
-      Similarity.labelCentroidStats(tbl(s, dir, "embeddings"),
-          "vec_id", "embedding", "label")
+      Similarity.labelCentroidStats(tbl(s, dir, "embeddings"), "embedding", "label")
         .orderBy(col("label"))
     }),
 
@@ -1629,7 +1628,7 @@ object SparkEntry {
     // user-keyed window then a |types|^2-bounded count
     // (graft.ops.EventOps.transitions)
     "q84_session_paths" -> ((s, dir) => {
-      EventOps.transitions(tbl(s, dir, "events"), gapSeconds = 1800L)
+      EventOps.transitions(tbl(s, dir, "events"))
         .orderBy(col("from_type"), col("to_type"))
     }),
 
@@ -1879,7 +1878,7 @@ object SparkEntry {
     // running last(ignoreNulls) window, |types|-bounded aggregate
     // (graft.ops.EventOps.lastTouchAttribution)
     "q92_attribution" -> ((s, dir) => {
-      EventOps.lastTouchAttribution(tbl(s, dir, "events"), gapSeconds = 1800L)
+      EventOps.lastTouchAttribution(tbl(s, dir, "events"))
         .orderBy(col("attributed"))
     }),
 
@@ -2251,7 +2250,6 @@ object SparkEntry {
     val wsSql = wsSqlWhere("")
     val shingleSql = shingleSqlWhere("")
     val wsSqlQ = wsSqlWhere(" WHERE doc_id % 4 = 0")
-    val shingleSqlQ = shingleSqlWhere(" WHERE doc_id % 4 = 0")
     val wsSqlH = wsSqlWhere(" WHERE doc_id % 2 = 0")
     val shingleSqlH = shingleSqlWhere(" WHERE doc_id % 2 = 0")
     val deconSql =

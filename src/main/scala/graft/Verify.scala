@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length == 2, s"args must be <sfDir> <outDir>, got ${args.length}: ${args.mkString(" ")}")
+    val (sfDir, outDir) = (args(0), args(1))
     // machine cores by default (see Bench): unset env should not mean a
     // 4-thread run on a 32-core box
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",

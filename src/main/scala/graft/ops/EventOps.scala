@@ -172,6 +172,10 @@ object EventOps {
       .agg(countDistinct(col("user_id")).as("n_active"))
   }
 
+  /** The session gap of [[transitions]] and [[lastTouchAttribution]], and
+    * of their streaming faces (`TransitionStream`). */
+  private[graft] val SessionGapSeconds = 1800L
+
   /** Markov transition (bigram) counts over each user's event stream: how
     * often `from_type` is immediately followed by `to_type` within the
     * same session — the path-mining aggregate behind "what do users do
@@ -179,7 +183,7 @@ object EventOps {
     *
     * Session semantics match [[sessionize]]'s gap rule without needing its
     * session ids: a pair is counted iff the two events are consecutive for
-    * the user AND at most `gapSeconds` apart, which is exactly
+    * the user AND at most [[SessionGapSeconds]] apart, which is exactly
     * "consecutive within one session" (a wider gap would have started a
     * new session, and the first event of a session has no predecessor).
     *
@@ -191,7 +195,7 @@ object EventOps {
     * as a stable tiebreaker, so same-second events order identically in any
     * engine instead of by sub-second digits one side may not retain.
     */
-  def transitions(events: DataFrame, gapSeconds: Long): DataFrame = {
+  def transitions(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("_tsec"), col("event_id"))
     events
@@ -199,13 +203,13 @@ object EventOps {
       .withColumn("_prev_ts", lag(col("_tsec"), 1).over(w))
       .withColumn("_prev_type", lag(col("event_type"), 1).over(w))
       .where(col("_prev_type").isNotNull &&
-        col("_tsec") - col("_prev_ts") <= gapSeconds)
+        col("_tsec") - col("_prev_ts") <= SessionGapSeconds)
       .groupBy(col("_prev_type").as("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
   }
 
   /** Last-touch attribution: credit each purchase event
-    * to the user's most recent OTHER event within `gapSeconds` before it,
+    * to the user's most recent OTHER event within [[SessionGapSeconds]] before it,
     * or to `"direct"` when none qualifies — the marketing-attribution
     * aggregate behind "which activity drives conversions".
     *
@@ -216,7 +220,7 @@ object EventOps {
     * id tiebreak ([[transitions]]' convention). Counts and decimal-path
     * revenue per attributed type — a |types|-bounded aggregate.
     */
-  def lastTouchAttribution(events: DataFrame, gapSeconds: Long): DataFrame = {
+  def lastTouchAttribution(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("_tsec"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -227,7 +231,7 @@ object EventOps {
       .withColumn("_lt_ty", last(when(nonTarget, col("event_type")), ignoreNulls = true).over(w))
       .where(col("event_type") === "purchase")
       .withColumn("attributed",
-        when(col("_lt_ty").isNull || col("_tsec") - col("_lt_ts") > gapSeconds,
+        when(col("_lt_ty").isNull || col("_tsec") - col("_lt_ts") > SessionGapSeconds,
           lit("direct")).otherwise(col("_lt_ty")))
       .groupBy(col("attributed"))
       .agg(count(lit(1)).as("n_conversions"),

@@ -3,8 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Exact interpolated percentiles as a distributed plan instead of Spark's
   * `percentile()` ObjectAggregate.
@@ -330,7 +329,7 @@ object Quantiles {
     * table. One probe builds it (one evaluation of `df`, one
     * map-side-combined aggregate, values cast to double) and
     * [[LocalFold]]'s gate admits it at most `MaxLocalRows` rows, with
-    * non-null non-binary keys and finite values; the driver then folds
+    * non-null [[LocalFold.exactKeys]] and finite values; the driver then folds
     * both percentiles with [[exactInterpolated]]'s arithmetic — a few jobs
     * where the distributed plan pays ~40 at any size. Otherwise the
     * distributed twin runs unchanged: two [[exactInterpolated]] passes
@@ -350,7 +349,7 @@ object Quantiles {
       .groupBy(groupCols.map(col) :+ col(valueCol).cast("double").as("_madv"): _*)
       .agg(count(lit(1)).as("_madc"))
     val local =
-      if (keys.exists(f => bytesIn(f.dataType))) None
+      if (!keys.forall(f => LocalFold.exactKeys(f.dataType))) None
       else LocalFold.rows(hist, MaxLocalRows, r => java.lang.Double.isFinite(r.getDouble(nk)))
         .flatMap(madLocal(_, nk, k))
     local match {
@@ -371,15 +370,6 @@ object Quantiles {
   private def requireKeys(groupCols: Seq[String]): Unit =
     require(groupCols.nonEmpty,
       "madOutliers: groupCols must be non-empty (a global report groups by a literal)")
-
-  /** Binary keys come back as arrays, whose equality and hash are by
-    * reference: the driver cannot group on them. */
-  private def bytesIn(t: DataType): Boolean = t match {
-    case BinaryType => true
-    case a: ArrayType => bytesIn(a.elementType)
-    case s: StructType => s.exists(f => bytesIn(f.dataType))
-    case _ => false
-  }
 
   /** Median of a value-sorted (value, count) table with Spark's
     * `Percentile.getPercentile` arithmetic — the same floor/ceil ranks,

@@ -318,8 +318,7 @@ object Similarity {
     * final per-label aggregate is again map-side combined. The vectors
     * themselves never shuffle.
     */
-  def labelCentroidStats(emb: DataFrame, idCol: String, vecCol: String,
-                         labelCol: String): DataFrame = {
+  def labelCentroidStats(emb: DataFrame, vecCol: String, labelCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val elems = emb
       .select(col(labelCol).as("label"), posexplode(col(vecCol)).as(Seq("pos", "x")))

@@ -32,7 +32,7 @@ object Skew {
     * salt on the rest of its content. A frame whose EVERY column is
     * map-typed cannot be content-salted and is rejected up front.
     */
-  def saltLarge(df: DataFrame, keyCols: Seq[String], factor: Int): DataFrame = {
+  def saltLarge(df: DataFrame, factor: Int): DataFrame = {
     def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: org.apache.spark.sql.types.MapType => false
       case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
@@ -56,7 +56,7 @@ object Skew {
     */
   def saltedJoin(large: DataFrame, small: DataFrame, keyCols: Seq[String],
                  factor: Int): DataFrame =
-    saltLarge(large, keyCols, factor)
+    saltLarge(large, factor)
       .join(replicateSmall(small, factor), keyCols :+ "_salt")
       .drop("_salt")
 

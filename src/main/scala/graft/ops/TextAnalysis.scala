@@ -136,7 +136,7 @@ object TextAnalysis {
 
   /** Count of PII matches a scrub would redact (pre-scrub). */
   def piiCount(text: Column): Column =
-    piiPatterns.map { case (re, repl) =>
+    piiPatterns.map { case (re, _) =>
       // count each pattern on the text as the scrub chain sees it: with the
       // EARLIER patterns already applied, so an email's digits are not
       // double-counted as a digit run

@@ -20,10 +20,18 @@ object SymbolMap {
     val specials = Map("BTC-USD" -> "BTCUSDT", "ETH-USD" -> "ETHUSDT")
     specials.getOrElse(s,
       if (s.contains("-")) {
-        val Array(base, quote0) = s.split("-", 2)
+        val (base, quote0) = dashed(logical, s)
         val quote = if (quote0 == "USD") "USDT" else quote0
         base + quote
       } else s)
+  }
+
+  /** `s` (the normalized form of the argument `symbol`) split at its first
+    * dash into a non-empty base and quote. */
+  private def dashed(symbol: String, s: String): (String, String) = {
+    val i = s.indexOf('-')
+    require(i > 0 && i < s.length - 1, s"symbol must be BASE-QUOTE, got '$symbol'")
+    (s.take(i), s.drop(i + 1))
   }
 
   /** 'BTC-USD' | 'BTC:USD' | 'BTCUSD' | 'BTCUSDT' -> (base, quote)
@@ -32,10 +40,8 @@ object SymbolMap {
     */
   def splitSymbol(symbol: String): (String, String) = {
     val s = symbol.replace(":", "-").replace("/", "-").toUpperCase
-    if (s.contains("-")) {
-      val Array(base, quote) = s.split("-", 2)
-      (base, quote)
-    } else if (s.endsWith("USDT")) (s.dropRight(4), "USDT")
+    if (s.contains("-")) dashed(symbol, s)
+    else if (s.endsWith("USDT")) (s.dropRight(4), "USDT")
     else if (s.endsWith("USD")) (s.dropRight(3), "USD")
     else throw new IllegalArgumentException(s"cannot infer quote in symbol: $symbol")
   }

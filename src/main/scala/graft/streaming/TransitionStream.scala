@@ -38,8 +38,8 @@ object TransitionStream {
 
   case class Transition(user_id: Long, from_type: String, to_type: String)
 
-  /** Session gap of both faces, the batch twins' q84/q92 value. */
-  private val GapSeconds = 1800L
+  /** Session gap of both faces, the batch twins' own. */
+  private val GapSeconds = graft.ops.EventOps.SessionGapSeconds
 
   /** events(user_id, event_id, event_type, ts) -> stream of transition
     * pairs, one per qualifying consecutive event pair.

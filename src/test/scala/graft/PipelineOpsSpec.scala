@@ -317,7 +317,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (7L, 4L, "click", t(1000), 0.0), (8L, 4L, "purchase", t(1010), 5.0),
       (9L, 4L, "purchase", t(1020), 7.0),
     ).toDF("event_id", "user_id", "event_type", "ts", "value")
-    val got = graft.ops.EventOps.lastTouchAttribution(ev, gapSeconds = 1800L)
+    val got = graft.ops.EventOps.lastTouchAttribution(ev)
       .orderBy("attributed").as[(String, Long, Double)].collect().toSeq
     assert(got === Seq(
       ("click", 2L, 12.0), ("direct", 2L, 50.0), ("view", 1L, 10.0)))
@@ -334,7 +334,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       // user 3: single event, no pair
       (8L, 3L, "a", t(900)),
     ).toDF("event_id", "user_id", "event_type", "ts")
-    val got = graft.ops.EventOps.transitions(ev, gapSeconds = 1800L)
+    val got = graft.ops.EventOps.transitions(ev)
       .orderBy("from_type", "to_type").as[(String, String, Long)].collect().toSeq
     assert(got === Seq(("a", "b", 1L), ("b", "a", 1L), ("c", "a", 1L)))
   }

@@ -27,6 +27,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(SymbolMap.splitSymbol("ADAUSDT") === ("ADA", "USDT"))
     assert(SymbolMap.cryptoContract("BTC-USD")("exchange") === "PAXOS")
     assertThrows[IllegalArgumentException](SymbolMap.splitSymbol("XYZ"))
+    // a dash with nothing on one side fails loudly, naming the symbol
+    for (bad <- Seq("BTC-", "-USD")) {
+      val e = intercept[IllegalArgumentException](SymbolMap.splitSymbol(bad))
+      assert(e.getMessage.contains(s"'$bad'"))
+      assertThrows[IllegalArgumentException](SymbolMap.toBinanceSymbol(bad))
+    }
   }
 
   test("binance connector paginates, clips, and normalizes to canonical candles") {
@@ -485,12 +491,12 @@ class PipelineSpec extends AnyFunSuite {
     // rejects MapType at analysis time — saltLarge excludes it and hashes
     // the rest of the row)
     val withMap = large.withColumn("m", map(col("k"), col("v")))
-    val saltedMap = graft.ops.Skew.saltLarge(withMap, Seq("k"), factor = 8)
+    val saltedMap = graft.ops.Skew.saltLarge(withMap, factor = 8)
     assert(saltedMap.select("_salt").distinct().count() > 1,
       "salt must still split the hot key from the non-map content")
     // but an all-map frame has no content to hash deterministically
     intercept[IllegalArgumentException](
-      graft.ops.Skew.saltLarge(withMap.select("m"), Seq("m"), factor = 8))
+      graft.ops.Skew.saltLarge(withMap.select("m"), factor = 8))
   }
 
   test("streaming writeToLake: bars land in the lake via the idempotent upsert sink") {

@@ -170,7 +170,6 @@ class PlanAuditSpec extends AnyFunSuite {
   // a block-manager resident set proportional to the corpus) fails here
   // instead of surfacing as executor memory pressure at scale.
   private val declaredCached: Map[String, String] = Map(
-    "q06_or_levels" -> "OrLevels.build base: 3 consumers (OR-range agg, after-window agg, retest join) of a session-day-bounded read; MEMORY_AND_DISK, documented lifecycle",
     "q16_jaccard_pairs" -> "Dedup shingle projections: one narrow (id, shingles) row per doc, read by both sides of the index join",
     "q17_minhash_candidates" -> "Dedup signature projection: one (id, sig) row per doc, read by both band-join sides",
     "q20_ffill_resample" -> "ohlcvFfill's resampled aggregate: bucket-grain (smaller than input), 4 consumers (grid bounds, grid join, both fill phases)",

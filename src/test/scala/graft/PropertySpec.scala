@@ -392,11 +392,11 @@ class PropertySpec extends AnyFunSuite {
       }
       val base = rows.toDF("vec_id", "embedding", "label")
       val a = graft.ops.Similarity
-        .labelCentroidStats(base.repartition(1), "vec_id", "embedding", "label")
+        .labelCentroidStats(base.repartition(1), "embedding", "label")
         .orderBy("label").collect().toSeq
       val b = graft.ops.Similarity
         .labelCentroidStats(
-          base.orderBy(col("vec_id").desc).repartition(13), "vec_id", "embedding", "label")
+          base.orderBy(col("vec_id").desc).repartition(13), "embedding", "label")
         .orderBy("label").collect().toSeq
       assert(a === b, s"seed=$seed")
     }

@@ -414,7 +414,7 @@ class TextOpsSpec extends AnyFunSuite {
       (1L, Seq(1f, 0f, 0f), 0L), (2L, Seq(1f, 0f, 0f), 0L),
       (3L, Seq(0f, 1f, 0f), 1L), (4L, Seq(0f, 0f, 1f), 1L))
       .toDF("vec_id", "embedding", "label")
-    val st = Similarity.labelCentroidStats(vecs, "vec_id", "embedding", "label")
+    val st = Similarity.labelCentroidStats(vecs, "embedding", "label")
       .orderBy("label").collect()
     assert(st.length === 2)
     assert(st(0).getAs[Long]("n") === 2L)

@@ -61,7 +61,7 @@ PARAM_REASONS = {
     "the reference's columns= projection (SURVEY S5)":
         "Lake.readRangeClosed.columns Lake.readUnified.columns",
     "a lakebench call spells it out, so the parameter stays for that call":
-        "Gaps.minuteGaps.stepSeconds Gaps.synthFill.stepSeconds OrLevels.build.keys",
+        "Gaps.minuteGaps.stepSeconds Gaps.synthFill.stepSeconds",
     "an apply parameter, checked by hand: RawBarFrame(...) passes 0 and 60000":
         "Connectors.apply.tsShiftMs",
     "an apply parameter, checked by hand: LiquidityProfiles(...) callers name the profile":

@@ -98,11 +98,18 @@ object LakeReader {
   def readRange(spark: SparkSession, root: String, source: String, symbol: String,
                 timeframe: String, from: Option[Timestamp], to: Option[Timestamp],
                 columns: Seq[String] = Nil): DataFrame = {
-    // sort BEFORE the caller's projection: a columns list without "ts" must
-    // still read back ts-ordered (the reference sorts then projects,
-    // api.py:67-74) — ordering by a column the projection already dropped is
-    // an AnalysisException, not a contract
-    val sorted = readRangeUnsorted(spark, root, source, symbol, timeframe, from, to)
+    // one range exchange on ts serves the keep-first dedupe and the sort:
+    // every row of a key shares its ts, so RangePartitioning(ts) already
+    // clusters the dedupe window (no hash exchange), and orderBy(ts) then
+    // sorts within those partitions. The file-order id is taken below the
+    // exchange.
+    val scan = scanRange(spark, root, source, symbol, timeframe, from, to)
+      .withColumn("_mid", monotonically_increasing_id())
+    val sorted = keepFirstById(scan.repartitionByRange(col("ts")), rangeKey)
+      // sort BEFORE the caller's projection: a columns list without "ts"
+      // must still read back ts-ordered (the reference sorts then projects,
+      // api.py:67-74) — ordering by a column the projection already dropped
+      // is an AnalysisException, not a contract
       .orderBy(col("ts"))
     if (columns.nonEmpty) sorted.select(columns.map(col): _*) else sorted
   }
@@ -114,21 +121,29 @@ object LakeReader {
     */
   private def readRangeUnsorted(spark: SparkSession, root: String, source: String,
                 symbol: String, timeframe: String,
-                from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
+                from: Option[Timestamp], to: Option[Timestamp]): DataFrame =
+    dedupeKeepFirst(scanRange(spark, root, source, symbol, timeframe, from, to), rangeKey)
+
+  /** The range reads' dedupe key. It INCLUDES market: the tree is
+    * partitioned by it, and a symbol legitimately present under two markets
+    * must keep both rows — a market-less key would collapse them to one
+    * arbitrary market's bar. */
+  private val rangeKey = Seq("source", "market", "symbol", "timeframe", "ts")
+
+  /** The partition-pruned scan of one (source, symbol, timeframe) range,
+    * before the dedupe. */
+  private def scanRange(spark: SparkSession, root: String, source: String,
+                        symbol: String, timeframe: String,
+                        from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
     val path = LakeLayout.dataRoot(root)
     // empty-lake short-circuit: an absent tree reads as an empty canonical
     // frame, not an error (reference: api.py:23-24, tests/test_read_api.py)
     if (!LakeFs.exists(spark, path))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], partitionedSchema)
-    val df = applyRange(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], partitionedSchema)
+    else applyRange(
       spark.read.schema(partitionedSchema).parquet(path)
         .where(col("source") === source && col("symbol") === symbol && col("timeframe") === timeframe),
       from, to)
-    // dedupe key INCLUDES market: the tree is partitioned by it, and a
-    // symbol legitimately present under two markets must keep both rows —
-    // a market-less key would collapse them to one arbitrary market's bar
-    dedupeKeepFirst(df, Seq("source", "market", "symbol", "timeframe", "ts"))
   }
 
   /** Legacy closed-range read [from, to] — implemented as [from, to+1s) per
@@ -176,9 +191,13 @@ object LakeReader {
   /** keep-first dedupe with a deterministic tiebreaker (SURVEY §7.5 item 4:
     * bare dropDuplicates keeps an arbitrary row).
     */
-  def dedupeKeepFirst(df: DataFrame, key: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(monotonically_increasing_id())
-    df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
+  def dedupeKeepFirst(df: DataFrame, key: Seq[String]): DataFrame =
+    keepFirstById(df.withColumn("_mid", monotonically_increasing_id()), key)
+
+  /** The row of each `key` with the least `_mid`, without `_mid`. */
+  private def keepFirstById(df: DataFrame, key: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(key.map(col): _*).orderBy(col("_mid"))
+    df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn", "_mid")
   }
 
   /** Lambda read: the batch tree unioned with a streaming APPEND directory

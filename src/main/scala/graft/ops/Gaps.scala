@@ -189,7 +189,10 @@ object Gaps {
     * On the driver when [[localGrid]] admits `df` with its open and close
     * (and `df` has DOUBLE high, low and volume): the synthetic bars fold
     * from the probe and come back as a local relation unioned under `df`'s
-    * own rows, each real row passing through with is_synth = false. A
+    * own rows, each real row passing through with is_synth = false, as one
+    * partition: the gate bounds the rows, and the stages above a fill would
+    * otherwise run a task per partition of `df` plus one (the distributed
+    * fill ends in an AQE-coalesced shuffle). A
     * duplicate (key, ts), which [[Fill.biFill]] rules out too, refuses;
     * otherwise [[synthFillDistributed]] runs.
     */
@@ -221,6 +224,7 @@ object Gaps {
             case c if schema.fieldNames.contains(c) => col(c)
             case c => lit(null).cast(s(c).dataType).as(c)
           }: _*))
+          .coalesce(1)
       case None => synthFillDistributed(df, keys, stepSeconds, gridBounds)
     }
   }

@@ -1,9 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, Metadata, StructField,
+  StructType, TimestampType}
+
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 /** Technical indicators over candle tables — the feature layer a
   * backtesting user of the reference lake computes on every series
@@ -14,7 +17,9 @@ import org.apache.spark.sql.types.DecimalType
   * series keys (symbol) and ordered by ts with a bounded row frame — the
   * canonical distributed time-series shape (state per partition is the
   * frame, shuffle is one exchange on the series key). Nothing here uses an
-  * unpartitioned window or per-group collection.
+  * unpartitioned window or per-group collection. A day or a month of bars
+  * is far below that scale: [[enrich]] folds on the driver behind
+  * [[LocalFold]]'s gate and keeps the window plan as [[enrichDistributed]].
   *
   * Determinism contract (DuckDB-oracle parity, the repo-wide rules):
   *  - frame sums of doubles go through round-4 DECIMAL terms, so they are
@@ -75,9 +80,7 @@ object Indicators {
     */
   def emaCols(keys: Seq[String], orderCol: String, c: Column, n: Int): Column = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol))
-    val alpha = 2.0 / (n + 1)
-    val b = 1.0 - alpha
-    val weights = Iterator.iterate(alpha)(_ * b).take(n).toSeq
+    val weights = emaWeights(n)
     val lags = (0 until n).map(k => lag(c, k).over(w))
     val num = weights.zip(lags).map { case (wt, l) =>
       when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0))
@@ -86,6 +89,13 @@ object Indicators {
       when(l.isNotNull, lit(wt)).otherwise(lit(0.0))
     }.reduce(_ + _)
     round(num / den, 6)
+  }
+
+  /** The truncated EMA's weights w_k = α·(1-α)^k, k < n, α = 2/(n+1). */
+  private def emaWeights(n: Int): Seq[Double] = {
+    val alpha = 2.0 / (n + 1)
+    val b = 1.0 - alpha
+    Iterator.iterate(alpha)(_ * b).take(n).toSeq
   }
 
   /** Bollinger bands over the trailing `n` rows: (mid, upper, lower) at
@@ -300,8 +310,14 @@ object Indicators {
   /** Convenience: enrich a candle table (keys + ts/open/high/low/close/
     * volume) with the standard indicator set: SMA(10), EMA(10),
     * Bollinger(20), RSI(14), ATR(14), stochastic %K(14), day VWAP.
+    *
+    * On the driver when the gate admits `candles` (see [[enrichLocal]]),
+    * else [[enrichDistributed]]; both return one schema and one row set.
     */
-  def enrich(candles: DataFrame, keys: Seq[String]): DataFrame = {
+  def enrich(candles: DataFrame, keys: Seq[String]): DataFrame =
+    enrichLocal(candles, keys).getOrElse(enrichDistributed(candles, keys))
+
+  private[graft] def enrichDistributed(candles: DataFrame, keys: Seq[String]): DataFrame = {
     val c = col("close")
     val (mid, up, lo) = bollingerCols(keys, "ts", c, 20)
     candles
@@ -314,5 +330,148 @@ object Indicators {
       .withColumn("atr", atrCols(keys, "ts", col("high"), col("low"), c, 14))
       .withColumn("stoch_k", stochKCols(keys, "ts", col("high"), col("low"), c, 14))
       .withColumn("vwap_day", vwapDayCols(keys, "ts", c, col("volume")))
+  }
+
+  /** The columns [[enrichDistributed]] appends, in order. */
+  private val Appended = Seq("sma", "ema", "bb_mid", "bb_up", "bb_lo", "rsi", "atr", "stoch_k", "vwap_day")
+
+  /** Rows above which [[enrich]] runs distributed (the pagerank and
+    * madOutliers cap). */
+  private val MaxLocalRows = 100000
+
+  /** The largest |10^4 · round(x, 4)| the fold takes as an [[l4]] term:
+    * 2^58, so the cast to long is exact and no frame sum (at most 20 terms)
+    * reaches 2^63, where ANSI mode would raise. */
+  private val MaxTerm = math.pow(2, 58)
+
+  /** The largest |round(x, 4)| the fold takes as a [[dec]] VWAP term, far
+    * below DECIMAL(28, 4)'s 10^24, so neither the cast nor a day's sum
+    * (DECIMAL(38, 4), at most `MaxLocalRows` terms) overflows. */
+  private val MaxDecimalTerm = 1e20
+
+  private val Name = "[A-Za-z_][A-Za-z0-9_]*".r
+
+  /** [[enrichDistributed]] as a driver fold, or None when the gate refuses.
+    * `candles` is probed with every column in place and ts as
+    * `unix_micros(ts)` through [[LocalFold.rows]], capped at
+    * `MaxLocalRows`. It refuses keys that are not [[LocalFold.exactKeys]], a
+    * ts that is not a TIMESTAMP, high/low/close/volume that are not DOUBLE,
+    * null fields, non-finite prices or volumes, a duplicate (keys, ts) (the
+    * windows' tie order is not defined), terms past `MaxTerm` or
+    * `MaxDecimalTerm` (bounds below the magnitudes at which ANSI mode
+    * raises), and a day whose volume sums to 0 (a division by zero); the
+    * distributed path then raises where Catalyst does. So that the probe
+    * and the result can name every column, it also refuses column names
+    * that are not plain identifiers, that repeat or that [[enrich]] appends
+    * (case-insensitively), and fields with metadata.
+    */
+  private def enrichLocal(candles: DataFrame, keys: Seq[String]): Option[DataFrame] = {
+    val s = candles.schema
+    val lower = s.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT))
+    val plain = lower.distinct.length == lower.length && !lower.exists(Appended.contains) &&
+      s.forall(f => f.metadata == Metadata.empty && Name.matches(f.name)) &&
+      LocalFold.columnsAre(candles, keys,
+        ("ts" -> TimestampType) +: Seq("high", "low", "close", "volume").map(_ -> DoubleType))
+    if (!plain) return None
+    val at = s.fieldNames.zipWithIndex.toMap
+    val probe = candles.select(s.fieldNames.toSeq.map(n =>
+      if (n == "ts") unix_micros(col(n)).as(n) else col(n)): _*)
+    val prices = Seq("high", "low", "close", "volume").map(at)
+    LocalFold.rows(probe, MaxLocalRows, r => prices.forall(i => java.lang.Double.isFinite(r.getDouble(i))))
+      .flatMap { rows =>
+        val ki = keys.map(at)
+        val series = rows.groupBy(r => ki.map(r.get)).values.toSeq
+          .map(rs => seriesLocal(rs.sortBy(_.getLong(at("ts"))), at))
+        if (series.forall(_.isDefined)) Some(series.flatMap(_.get)) else None
+      }
+      .map { out =>
+        val schema = StructType(s.map(f => if (f.name == "ts") f.copy(dataType = LongType) else f) ++
+          Appended.map(StructField(_, DoubleType)))
+        LocalFold.frame(candles.sparkSession, out, schema, s.map(_.dataType) ++ Appended.map(_ => DoubleType))
+      }
+  }
+
+  /** Catalyst's `round(x, scale)` on a double: HALF_UP over the double's
+    * shortest decimal form; NaN and ±Infinity pass through. */
+  private def roundHalfUp(x: Double, scale: Int): Double =
+    if (!java.lang.Double.isFinite(x)) x
+    else JBigDecimal.valueOf(x).setScale(scale, RoundingMode.HALF_UP).doubleValue
+
+  /** [[l4]] before its long cast. */
+  private def l4Local(x: Double): Double = roundHalfUp(roundHalfUp(x, 4) * 10000.0, 0)
+
+  /** [[dec]]: the DECIMAL(28, 4) Catalyst casts round(x, 4) to. */
+  private def decLocal(x: Double): JBigDecimal =
+    new JBigDecimal(java.lang.Double.toString(roundHalfUp(x, 4))).setScale(4, RoundingMode.HALF_UP)
+
+  /** [[enrichDistributed]]'s columns over one series, its probe rows in ts
+    * order (`at` gives each column's place), each row coming back with the
+    * appended columns; None on a refusal named at [[enrichLocal]]. Every
+    * step is the window plan's, in its order: frame sums of scaled longs,
+    * the same IEEE operations on doubles, Catalyst's round and decimal casts.
+    */
+  private def seriesLocal(rows: Array[Row], at: Map[String, Int]): Option[Seq[Row]] = {
+    val n = rows.length
+    val ts = rows.map(_.getLong(at("ts")))
+    def doubles(name: String) = rows.map(_.getDouble(at(name)))
+    val (h, l, c, v) = (doubles("high"), doubles("low"), doubles("close"), doubles("volume"))
+    // Catalyst's greatest and max keep the first of equal values
+    def greatest(xs: Seq[Double]) = xs.reduce((m, x) => if (x > m) x else m)
+    // the first row has no diff (its gain and loss terms are null, which a
+    // zero term sums like) and a true range of high - low
+    val diff = Array.tabulate(n)(i => if (i == 0) 0.0 else c(i) - c(i - 1))
+    val tr = Array.tabulate(n)(i =>
+      if (i == 0) h(i) - l(i)
+      else greatest(Seq(h(i) - l(i), Math.abs(h(i) - c(i - 1)), Math.abs(l(i) - c(i - 1)))))
+    // l4 terms before the long cast, each exact in a double under MaxTerm
+    val lc = c.map(l4Local)
+    val lcc = c.map(x => l4Local(x * x))
+    val lgain = diff.map(x => l4Local(if (x > 0.0) x else 0.0))
+    val lloss = diff.map(x => l4Local(if (x < 0.0) -x else 0.0))
+    val ltr = tr.map(l4Local)
+    val pv = Array.tabulate(n)(i => c(i) * v(i))
+    val tooLarge = Seq(lc, lcc, lgain, lloss, ltr).exists(_.exists(q => !(Math.abs(q) <= MaxTerm))) ||
+      (pv ++ v).exists(x => !(Math.abs(roundHalfUp(x, 4)) <= MaxDecimalTerm))
+    if (tooLarge || (1 until n).exists(i => ts(i) == ts(i - 1))) return None
+    val day = ts.map(t => Math.floorDiv(t, 1000000L) / 86400L) // CAST(ts AS LONG) DIV 86400
+    def decSum(xs: Array[Double], is: Seq[Int]) = is.map(i => decLocal(xs(i))).reduce(_ add _)
+    val vwap = day.indices.groupBy(i => day(i)).map { case (d, is) => d -> (decSum(pv, is), decSum(v, is)) }
+    if (vwap.values.exists(_._2.signum == 0)) return None
+
+    /** The frame sum of the `w` terms up to row i, as fsum's double. */
+    def fsum(a: Array[Double], i: Int, w: Int): Double =
+      (math.max(0, i - w + 1) to i).map(a(_).toLong).sum.toDouble / 10000.0
+    val weights = emaWeights(10)
+    Some(rows.indices.map { i =>
+      val sma = roundHalfUp(fsum(lc, i, 10) / math.min(i + 1, 10), 6)
+      // the lag chain, summed left to right; a missing lag adds 0.0
+      val lags = weights.indices.map(k => if (i >= k) Some(c(i - k)) else None)
+      val num = weights.zip(lags).map { case (w, p) => p.fold(0.0)(_ * w) }.reduce(_ + _)
+      val den = weights.zip(lags).map { case (w, p) => p.fold(0.0)(_ => w) }.reduce(_ + _)
+      val cnt = math.min(i + 1, 20).toLong
+      val (s1, s2) = (fsum(lc, i, 20), fsum(lcc, i, 20))
+      val mid = s1 / cnt
+      val std =
+        if (cnt <= 1) 0.0
+        else {
+          val variance = (s2 - s1 * s1 / cnt) / (cnt - 1)
+          if (variance > 0.0) Math.sqrt(variance) else 0.0
+        }
+      val rsi =
+        if (i == 0) null
+        else {
+          val (g, lo) = (fsum(lgain, i, 14), fsum(lloss, i, 14))
+          if (lo == 0.0) 100.0 else roundHalfUp(100.0 - 100.0 / (1.0 + g / lo), 4)
+        }
+      val frame14 = math.max(0, i - 13) to i
+      val hh = greatest(frame14.map(h))
+      val ll = frame14.map(l).reduce((m, x) => if (x < m) x else m)
+      val (dpv, dv) = vwap(day(i))
+      Row.fromSeq(rows(i).toSeq ++ Seq[Any](sma, roundHalfUp(num / den, 6), roundHalfUp(mid, 6),
+        roundHalfUp(mid + 2.0 * std, 6), roundHalfUp(mid - 2.0 * std, 6), rsi,
+        roundHalfUp(fsum(ltr, i, 14) / frame14.length, 6),
+        if (hh == ll) 50.0 else roundHalfUp((c(i) - ll) / (hh - ll) * 100.0, 4),
+        roundHalfUp(dpv.doubleValue / dv.doubleValue, 6)))
+    })
   }
 }

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
   * fold replicates the distributed arithmetic exactly.
   *
   * Contract, shared by every fold ([[Graph.pagerank]],
-  * [[Dedup.connectedComponents]], [[Quantiles.madOutliers]], and the
+  * [[Dedup.connectedComponents]], [[Quantiles.madOutliers]], the
   * day-sized ingest operators [[Gaps.minuteGaps]], [[Gaps.synthFill]] and
-  * [[OrLevels.build]]):
+  * [[OrLevels.build]], and the indicator set [[Indicators.enrich]]):
   *  - Cap: the input is probed with `take(cap + 1)`; more than `cap` rows,
   *    or `cap <= 0`, refuses the fold. On an over-cap input that wastes the
   *    probe (one partial scan wave, plus the shuffle of an aggregate

@@ -146,6 +146,7 @@ class DayFoldsLocalSpec extends AnyFunSuite {
       expectFold = true)
     val filled = Gaps.synthFill(gapInputs.head._2, Seq("symbol"), 60L, day)
     assert(filled.count() === 1440 && filled.where(col("is_synth")).count() === 13)
+    assert(filled.rdd.getNumPartitions === 1, "the folded fill is one partition")
     // the first slot has no prior bar: it takes the next open
     val first = filled.where(at("2025-08-01 00:00:00")).head()
     val next = gapInputs.head._2.where(at("2025-08-01 00:01:00")).head()

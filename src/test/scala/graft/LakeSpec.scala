@@ -4,6 +4,8 @@ import graft.core.Timeframe
 import graft.lake.{LakeProvider, LakeReader, LakeWriter}
 import graft.ops.{Gaps, OrLevels, OrLevelsRef}
 import graft.sources.SynthSource
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +40,15 @@ class LakeSpec extends AnyFunSuite {
     assert(day1.count() === 1440)
     // open upper bound: nothing from 08-02 included
     assert(day1.agg(max(col("ts"))).head().getTimestamp(0).before(ts("2025-08-02 00:00:00")))
+    val order = day1.collect().map(_.getAs[Timestamp]("ts").getTime)
+    assert(order.toSeq === order.sorted.toSeq, "read back in ts order")
+    // one range exchange on ts serves both the keep-first dedupe and the sort
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val exchanges =
+      try LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1", None, None)
+        .queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert(exchanges.length === 1 && exchanges.head.isInstanceOf[RangePartitioning], exchanges)
     // re-upsert the same batch: idempotent (O8); re-read from the fresh listing
     LakeWriter.upsert(spark, root, bars)
     val again = LakeReader.readRange(spark, root, "synth", "BTC-USD", "M1",

@@ -368,7 +368,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(got.map(_._2) === Seq(5L, 5L, 5L, 4L, 4L))
     assert(got.head._3 === 0.0 && got.last._4 === 6.0)
     // bins tile the sorted order: each bin's hi <= the next bin's lo
-    got.sliding(2).foreach { case Seq(a, b) => assert(a._4 <= b._3) }
+    got.zip(got.tail).foreach { case (a, b) => assert(a._4 <= b._3) }
     val again = Quantiles.ntileBins(df.repartition(9), Seq("g"), "v", 5, "id")
       .orderBy("bin").select("bin", "n", "lo", "hi")
       .as[(Long, Long, Double, Double)].collect().toSeq

@@ -1,6 +1,8 @@
 package graft
 
+import graft.ops.Indicators
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,6 +77,23 @@ class PlanAuditSpec extends AnyFunSuite {
         }
         assert(bad.isEmpty, s"$name plans a single-partition window over unreduced input")
       }
+    }
+  }
+
+  test("Indicators.enrichDistributed keys every window and shuffles once, on the series key") {
+    // enrich folds on the driver below its row cap (q72 does at this sf),
+    // so the sweep above no longer sees the window plan that runs above
+    // the cap: audit it on a keyed input of its own
+    import spark.implicits._
+    withStaticPlans {
+      val bars = (0 until 300).map { i =>
+        (s"S${i % 3}", new java.sql.Timestamp(1709251200000L + i * 60000L), 1.0 + i, 2.0 + i, 0.5 + i, 1.5 + i, 10.0)
+      }.toDF("symbol", "ts", "open", "high", "low", "close", "volume")
+      val plan = Indicators.enrichDistributed(bars, Seq("symbol")).queryExecution.executedPlan
+      val windows = plan.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty), plan.treeString)
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length === 1, plan.treeString)
     }
   }
 

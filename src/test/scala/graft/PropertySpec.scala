@@ -414,7 +414,7 @@ class PropertySpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed * 31 + bits)
       val mask = (1L << bits) - 1L
       val baseSigs = (0 until 120).map(_ => rnd.nextLong() & mask)
-      val derived = (0 until 120).map { i =>
+      val derived = (0 until 120).map { _ =>
         var s = baseSigs(rnd.nextInt(baseSigs.size))
         (0 until rnd.nextInt(6)).foreach(_ => s ^= 1L << rnd.nextInt(bits))
         s

@@ -238,9 +238,21 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("id", "vec")
     val got = Similarity.ivfTopK(corpus, corpus, "id", "vec", k = 2, nCentroids = 4)
     // the live rows must distribute over the LIVE centroids: with the NaN
-    // bug every row lands in cell 1 and every query sees the whole corpus
-    val cells = corpus
-      .select(col("id"), col("vec"))
+    // bug every row lands in cell 1 and every query sees the whole corpus.
+    // Reference cells: the most cosine-similar live seed (the seeds are the
+    // 4 smallest ids; the nearest wins by a margin of 0.06 here). Every
+    // returned pair must share one, and the live rows must span at least 2.
+    val vecs = corpus.as[(Long, Array[Float])].collect().toMap
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      def dot(x: Array[Float], y: Array[Float]) = x.zip(y).map { case (p, q) => p.toDouble * q }.sum
+      dot(a, b) / math.sqrt(dot(a, a) * dot(b, b))
+    }
+    val seeds = vecs.keys.toSeq.sorted.take(4).filter(id => vecs(id).exists(_ != 0f))
+    val cell = vecs.collect { case (id, v) if v.exists(_ != 0f) => id -> seeds.maxBy(s => cos(v, vecs(s))) }
+    assert(cell.values.toSet.size >= 2, s"live rows in one cell: $cell")
+    val pairs = got.select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    assert(pairs.nonEmpty && pairs.forall { case (q, n) => cell(q) == cell(n) },
+      "a returned pair crosses the live cells")
     assert(got.where(col("cosine").isNull).count() === 0)
     // every live query gets neighbors, and no single cell held all rows
     // (with 39 live vectors over >= 3 live centroids, some query pair must

@@ -113,9 +113,11 @@ class SketchesSpec extends AnyFunSuite {
     // a = {0..3999}, b = {2000..5999}: union 6000, intersection 2000
     val df = ((0 until 4000).map(("a", _)) ++ (2000 until 6000).map(("b", _)))
       .map { case (g, v) => (g, v.toLong) }.toDF("g", "v")
-    val Seq((u, c, eu, ei)) = Sketches.kmvOverlap(df, "g", "v", k = 512)
+    val got = Sketches.kmvOverlap(df, "g", "v", k = 512)
       .select("n_union_seen", "n_common", "est_union", "est_intersection")
-      .as[(Long, Long, Long, Long)].collect().toSeq
+      .as[(Long, Long, Long, Long)].collect()
+    assert(got.length === 1)
+    val (u, c, eu, ei) = got.head
     assert(u === 512L)
     // KMV standard error ~1/sqrt(k) ~ 4.4%; allow ~3 sigma on the union,
     // wider on the intersection (rho adds binomial noise)

@@ -327,7 +327,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(got.map(t => (t._1, t._2)).toSeq === Seq((0L, 5L), (1L, 5L), (2L, 5L), (3L, 4L)))
     assert(got.last._3 === "w10 w11 w12 w13")
     // no chunk is a substring-contained repeat of its predecessor
-    got.sliding(2).foreach { case Array(a, b) =>
+    got.zip(got.tail).foreach { case (a, b) =>
       assert(!a._3.endsWith(b._3), s"chunk ${b._1} contained in ${a._1}")
     }
     // every token still covered

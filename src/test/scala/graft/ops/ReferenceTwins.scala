@@ -134,10 +134,10 @@ object OrLevelsRef {
     * in memory per group.
     */
   def buildTyped(df: DataFrame, tz: String = "UTC", orWindow: String = "00:00-01:00"): DataFrame = {
-    val Array(startHm, endHm) = orWindow.split("-")
+    val hms = orWindow.split("-")
     def hm(s: String): (Int, Int) = { val a = s.split(":"); (a(0).toInt, a(1).toInt) }
-    val (sh, sm) = hm(startHm)
-    val (eh, em) = hm(endHm)
+    val (sh, sm) = hm(hms(0))
+    val (eh, em) = hm(hms(1))
     val spark = df.sparkSession
     import spark.implicits._
 
